@@ -141,10 +141,6 @@ def _maybe_spread(
     key = _SPREAD_KEYS.get(name)
     if key is None:
         return df
-    # Parameterized kill-switch (r19): lets cold A/B probes and non-local
-    # deployments turn the input-parallelism floor off without code edits.
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") in ("0", "off", "false"):
-        return df
     nbytes = _table_disk_bytes(table_path(sf_dir, name))
     if nbytes < _SPREAD_MIN_BYTES:
         return df

@@ -1567,10 +1567,10 @@ def similarity_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # Each leg feeds two aggregates below (hits + its per-query count);
     # unmaterialized, the whole leg plan evaluated twice per run — one
-    # in-plan materialization per leg halves the audit's cost (round-18;
-    # Q·k rows each). cache(), not localCheckpoint (ADVICE r18 fixed the
-    # comment): lazy, built once inside the timed action, and its
-    # post-materialization stats are visible to AQE.
+    # materialization per leg halves the audit's cost (Q·k rows each).
+    # Eager localCheckpoint (round 19): each leg runs its own jobs at build
+    # time, once per call — nothing is cached across calls — and both
+    # aggregates read the checkpointed rows.
     exact = (
         similarity_topk(spark, sf_dir)
         .select("query_id", "neighbor_id")
@@ -1583,8 +1583,8 @@ def similarity_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Explicit broadcasts: unconditional by design, justified by the
     # sampled-query contract (Q·k <= N_QUERIES*TOP_K rows per leg — see the
-    # docstring) rather than by the planner's threshold, which the lazy
-    # cached legs carry no size estimate for at plan time.
+    # docstring) rather than by the planner's threshold, which sees only
+    # the legs' plan-time size estimates, not their row counts.
     hits = (
         exact.join(F.broadcast(approx), ["query_id", "neighbor_id"])
         .groupBy("query_id")

@@ -14,9 +14,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+# local[N] core count when SPARK_GRAFT_CPUS is unset; bench.py names its
+# default-sweep detail file after it.
+DEFAULT_CPUS = 32
+
 
 def get_spark(app_name: str = "challenge1-engine") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(DEFAULT_CPUS))
     # local mode runs executors inside the driver JVM — the 1g default heap
     # starves 32 concurrent task threads (OOMs at ~5M-row joins). Size it
     # like a real executor fleet; overridable via SPARK_DRIVER_MEMORY.
@@ -39,11 +43,8 @@ def get_spark(app_name: str = "challenge1-engine") -> SparkSession:
         # stage 5.9 s -> 1.2 s at 32 cores with a 64 KB floor). The floor
         # only binds when post-shuffle data is byte-small, so at
         # production shuffle sizes (partitions ~ advisoryPartitionSize)
-        # it is a no-op — scale-neutral, env-overridable.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
+        # it is a no-op — scale-neutral.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # One shuffle partition per core locally; on a real cluster this would
         # be sized to ~128MB of shuffle data per partition.
         .config("spark.sql.shuffle.partitions", cpus)
@@ -63,10 +64,7 @@ def get_spark(app_name: str = "challenge1-engine") -> SparkSession:
         # strategy. Measured (noop, warmed): order_export_denorm
         # 3.72 -> 3.06 s, events_gapfill_methods 2.94 -> 2.59,
         # dedup_incremental 1.31 -> 1.10.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # Runtime row-level filtering: build bloom filters from the small
         # side of selective joins and push them into the big-side scan —
         # free scan reduction at 100 TB (Spark 3.3+ runtime filters).

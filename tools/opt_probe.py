@@ -65,19 +65,24 @@ def _cold_one(name: str) -> None:
                       "cold_sec": round(time.perf_counter() - t0, 3)}))
 
 
-def _cold_median(name: str) -> float | None:
+def _cold_median(name: str) -> float:
+    """Median of fresh-JVM cold runs. A failed run is fatal: it prints the
+    name, return code and stderr tail to stderr and exits nonzero, so a
+    crashed probe never reads as "not measured"."""
     runs = []
     for _ in range(_COLD_SUBPROC_RUNS):
-        try:
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "_cold1", name],
-                capture_output=True, text=True, timeout=600,
-                env=os.environ.copy(),
-            )
-            last = out.stdout.strip().splitlines()[-1]
-            runs.append(float(json.loads(last)["cold_sec"]))
-        except Exception:
-            return None
+        out = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "_cold1", name],
+            capture_output=True, text=True, timeout=600,
+            env=os.environ.copy(),
+        )
+        if out.returncode != 0 or not out.stdout.strip():
+            tail = "\n".join(out.stderr.strip().splitlines()[-20:])
+            print(f"opt_probe cold: {name} failed (rc={out.returncode})\n"
+                  f"{tail}", file=sys.stderr)
+            sys.exit(1)
+        last = out.stdout.strip().splitlines()[-1]
+        runs.append(float(json.loads(last)["cold_sec"]))
     med = sorted(runs)[len(runs) // 2]
     print(json.dumps({"query": name, "cold_median_sec": med, "runs": runs}))
     return med
@@ -93,9 +98,7 @@ def main() -> int:
     if mode == "cold":
         out = {}
         for name in names:
-            med = _cold_median(name)
-            if med is not None:
-                out[name] = med
+            out[name] = _cold_median(name)
         print(json.dumps({"cold_medians": out}))
         return 0
     if mode in ("explain", "both"):
