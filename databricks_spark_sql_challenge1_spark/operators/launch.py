@@ -47,23 +47,6 @@ _LAUNCH_SQL = """
 """
 
 
-def _launch_counts(spark, sf_dir, launches: DataFrame, abandoned_only: bool) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    facts = lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-    if abandoned_only:
-        facts = facts.where(F.col("o_orderstatus") == "O")
-    return (
-        launches.join(facts, launches.partkey == facts.l_partkey)
-        .where(
-            (F.year("o_orderdate") == F.col("launch_year"))
-            & (F.month("o_orderdate") == F.col("launch_month"))
-        )
-        .groupBy("partkey", "launch_year", "launch_month")
-        .agg(F.countDistinct("o_orderkey").alias("cnt"))
-    )
-
-
 def _launch_query(spark, sf_dir, yearly: bool) -> DataFrame:
     anchor = last_order_datetime(spark, sf_dir)
     y1, m1 = shift_months(anchor, -1)

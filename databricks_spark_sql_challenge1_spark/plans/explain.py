@@ -1,7 +1,7 @@
 """Plan-inspection utilities: capture ``.explain`` output as a string and
 assert the physical properties the 100 TB design depends on (filter/column
 pushdown into the parquet scan, broadcast joins for dims, no cartesian
-products, whole-stage codegen coverage). Used by tests/test_plans.py."""
+products). Used by tests/test_plans.py."""
 
 from __future__ import annotations
 
@@ -19,11 +19,6 @@ def formatted_plan(df: DataFrame) -> str:
 
 def simple_plan(df: DataFrame) -> str:
     return _explain(df, "simple")
-
-
-def has_pushed_filters(df: DataFrame) -> bool:
-    """True when at least one scan has a non-empty PushedFilters list."""
-    return any(f not in ("[]", "") for f in pushed_filters(df))
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
@@ -53,6 +48,3 @@ def has_cartesian(df: DataFrame) -> bool:
     p = simple_plan(df)
     return "CartesianProduct" in p or "BroadcastNestedLoopJoin" in p
 
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")

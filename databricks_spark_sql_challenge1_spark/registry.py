@@ -62,147 +62,42 @@ def query(name: str, oracle: str | None = None):
 #     rotation already produces. tests/test_registry_order.py enforces the
 #     stand-in invariant.
 #
-# Round-18 window, in priority order (spends the r17-committed NEXT_WINDOW
-# exactly as pinned — VERDICT r17 #1 — plus the 3 free slots):
-#   0. streaming_parity_ingest_skew — NEW this round (VERDICT r17 #5: the
-#      key-skew witness's driver-checkable registration — the
-#      gaps-and-islands gold over hot-key-remapped arrivals through the
-#      production landing), zero driver evidence: changed-query rule says
-#      first.
-#   1. the three round-17 integer-log2-changed names (their oracles were
-#      rewritten in 089c69e after the r17 window was spent; 3-scale
-#      parity re-proven at change time AND independently at r17 judge
-#      time, but driver-grade evidence lands here).
-#   2. the committed r18 cohort: the complete 44-name remaining
-#      latest-r15-evidence set.
-#   3. two r16-evidence names pre-refreshed into this round's spare
-#      slots (scd2_customer_history and dedup_semantic_sqrtk — both on
-#      the r17 sweep's idle-adjudication list, so their fresh correctness
-#      rows land alongside the perf adjudication), freeing r19 head
-#      capacity: the r19 cohort shrinks to 47 (see NEXT_WINDOW).
+# Round-20 window, in priority order:
+#   0. the 12 streaming parity twins, changed this round by the one-pipeline
+#      consolidation (each twin now calls the rows-only query it stands in
+#      for; one memory-sink drain, one scratch dir) — changed-query rule
+#      says first.
+#   1. the 9 names changed in r18/r19 whose post-change rows never landed
+#      (ROADMAP carry-over, VERDICT r19 #1).
+#   2. the oldest evidence: 29 of the 45 remaining latest-r16 names.
+# 97 oracle-backed names carry r17-or-older evidence against a 50-row
+# window, so the age gate stays red until CORRECTNESS_r20.json lands; the
+# rest go in NEXT_WINDOW.
 DRIVER_PRIORITY: tuple[str, ...] = (
-    # 0: never-driver-checked round-18 registration
-    "streaming_parity_ingest_skew",
-    # 1: oracle rewritten post-evidence (r17 integer-log2 migration)
-    "dedup_embedding_lsh_adaptive",
-    "dedup_embedding_clusters",
-    "dedup_embedding_incremental",
-    # 2: the committed r18 cohort (registry.NEXT_WINDOW as of r17)
-    "abandonment_by_day",
-    "abandonment_by_month",
-    "abandonment_mom_increase",
-    "abandonment_yoy_increase",
-    "approx_price_percentiles",
-    "approx_topk_products",
-    "copurchase_lift",
-    "copurchase_pagerank",
-    "copurchase_triangles",
-    "corpus_filter_pipeline",
-    "corpus_temperature_mixture",
-    "corpus_vocabulary",
-    "customer_rfm_segments",
-    "dedup_cluster_components",
-    "docs_chunk_windows",
-    "docs_contamination",
-    "docs_lang_rebalance",
-    "docs_repetition_stats",
-    "docs_split_assign",
-    "docs_stratified_sample",
-    "events_hourly_anomaly",
-    "lang_id_heuristic",
-    "lang_stats",
-    "launch_cohort_analysis",
-    "launch_month_orders",
-    "multimodal_audio_pcm_stats",
-    "multimodal_features",
-    "multimodal_flac_roundtrip",
-    "nations_by_customer",
-    "nations_by_expr_key",
-    "nations_by_supplier",
-    "orders_unpivot_metrics",
-    "partkey_skew_histogram",
-    "similarity_pq_rerank",
-    "similarity_recall_audit",
-    "similarity_topk",
+    # 0: changed this round (streaming one-pipeline consolidation)
+    "streaming_parity_tumbling_1h",
+    "streaming_parity_session_30m",
+    "streaming_parity_dedup",
+    "streaming_parity_nation_activity",
+    "streaming_parity_click_attribution",
+    "streaming_parity_user_state",
+    "streaming_parity_gap_monitor",
+    "streaming_parity_incremental_dedup",
     "streaming_parity_lateness",
-    "text_tfidf_top_terms",
-    "tfidf_doc_neighbors",
-    "token_budget_pack",
-    "top_abandoned_pairs",
-    "top_abandoned_products",
-    "top_abandoned_products_salted",
-    "zorder_file_skipping",
-    # 3: r16-evidence pre-refresh (spare slots; frees r19 heads)
-    "scd2_customer_history",
-    "dedup_semantic_sqrtk",
-    # --- window boundary: 50 names above (tests/test_registry_order.py) ---
-)
-
-# Rows-only queries are rotation-exempt: each name's semantics are
-# hash-checked every rotation by the oracle-backed stand-in on the right
-# (the parity twins replay the SAME stateful pipeline against the batch
-# oracle; dedup_minhash_portable is the oracle-exact re-implementation of
-# the spark.ml MinHashLSH demo). tests/test_registry_order.py asserts every
-# rows-only name is listed here and every stand-in is registered WITH an
-# oracle, so the exemption can never silently widen.
-ROWS_ONLY_STAND_INS: dict[str, str] = {
-    "dedup_minhash_lsh": "dedup_minhash_portable",
-    # the production repartitionByRange Z-order writer samples its range
-    # split points (nondeterministic file assignment — not oracle-
-    # reproducible); the ntile audit runs the identical zone-map pruning
-    # arithmetic deterministically and is hash-checked on the rotation
-    "zorder_range_writer": "zorder_file_skipping",
-    "streaming_click_attribution": "streaming_parity_click_attribution",
-    "streaming_dedup_events": "streaming_parity_dedup",
-    "streaming_gap_monitor": "streaming_parity_gap_monitor",
-    "streaming_incremental_dedup": "streaming_parity_incremental_dedup",
-    "streaming_nation_activity": "streaming_parity_nation_activity",
-    "streaming_session_30m": "streaming_parity_session_30m",
-    "streaming_tumbling_1h": "streaming_parity_tumbling_1h",
-    "streaming_user_state": "streaming_parity_user_state",
-}
-
-# Committed round-19 window (the rotation the NEXT round starts from; the
-# phase-aware age gate uses this once CORRECTNESS_r18.json lands): the
-# complete remaining latest-r16-evidence oracle-backed cohort — 47 names,
-# computed from the CORRECTNESS_r01..r17 ledger assuming the r18 window
-# above runs green (the r16 cohort is 50 names; dedup_embedding_incremental
-# refreshes as an r18 head, and scd2_customer_history +
-# dedup_semantic_sqrtk were pre-refreshed into the r18 spare slots,
-# leaving 47).
-#
-# Capacity math: 147 oracle-backed names / 3-round cadence = 49 refresh
-# slots per round — 47 committed left 3 head slots for round-18 changes,
-# now spent (below): the r18 layout-invariance campaign changed the
-# streaming file-source path formulation (events_stream.py:35 — the
-# pathGlobFilter→glob fix; value-invariant on the fixture layout by
-# 3-scale parity re-proof, tools/parity_names.py), so the three most
-# load-bearing changed twins head the r19 window. The other five changed
-# twins (tumbling_1h/session_30m/nation_activity/click_attribution/
-# gap_monitor parities) carry r17 evidence and refresh at r20 on the
-# normal cadence; streaming_parity_lateness sits in the CURRENT r18
-# window and earns its post-change row this round (MUST_VERIFY).
-# multimodal_frame_stats (below, r16 cohort) had its oracle's
-# empty-payload frame floor fixed late-r18 (ASCII multimodal fuzz;
-# value-invariant on every fixture, 3-scale re-proven) — its
-# post-change driver row lands here; its sibling
-# multimodal_audio_pcm_stats sits in the CURRENT r18 window (idx 29).
-# events_json_extract (below, r16 cohort) moved to the integer-grain
-# average formulation late-r18 (the ROUND(AVG(int)) boundary campaign;
-# value-invariant on every fixture, 3-scale re-proven, scale-4 witness
-# pinned) — post-change row lands here; its window-mates lang_stats and
-# orders_unpivot_metrics sit in the CURRENT r18 window.
-# docs_quality_tiers (below, r16 cohort) moved its whole pipeline to
-# integer score units in the same campaign (per-row ROUND(raw, 4)
-# itself rounds apart cross-engine on constructible boundary rationals
-# — witness pinned in test_prerounded_score_boundary_contract);
-# 3-scale re-proven, post-change row lands here.
-NEXT_WINDOW: tuple[str, ...] = (
-    # r18-changed heads (layout-invariance fix, events_stream.py:35)
-    "streaming_parity_dedup",  # the twin that exposed the 0-row bug
-    "streaming_parity_incremental_dedup",  # covers the documents-stream site
-    "streaming_parity_user_state",  # the stateful applyInPandasWithState twin
-    # the latest-r16-evidence cohort
+    "streaming_parity_ingest_e2e",
+    "streaming_parity_ingest_adversarial",
+    "streaming_parity_ingest_skew",
+    # 1: r18/r19-changed carry-over
+    "customers_kmv_setops",
+    "scd2_cdc_apply",
+    "retrieval_rrf_rerank",
+    "dedup_incremental",
+    "dedup_simhash_methods",
+    "similarity_ann_methods",
+    "events_gapfill_methods",
+    "order_export_denorm",
+    "text_simhash",
+    # 2: latest-r16 evidence
     "corpus_bpe_encode",
     "corpus_bpe_merges",
     "corpus_mixture_weights",
@@ -214,7 +109,6 @@ NEXT_WINDOW: tuple[str, ...] = (
     "dedup_embedding_cosine",
     "dedup_ngram_methods",
     "dedup_semantic_ivf",
-    "dedup_simhash_methods",
     "distinct_orders_kmv_rollup",
     "docs_bm25_topk",
     "docs_contamination_bloom",
@@ -233,6 +127,43 @@ NEXT_WINDOW: tuple[str, ...] = (
     "events_range_join",
     "events_retention_cohorts",
     "events_rolling_7d_value",
+    # --- window boundary: 50 names above (tests/test_registry_order.py) ---
+)
+
+# Rows-only queries are rotation-exempt: each name's semantics are
+# hash-checked every rotation by the oracle-backed stand-in on the right.
+# Each streaming twin calls the rows-only query it stands in for (click
+# attribution: the join builder both call) and checks the drained rows
+# against the batch oracle. The one exception is streaming_user_state: its
+# float-state profile is not oracle-exact, so its twin runs the same
+# applyInPandasWithState profile on integer-cents state. dedup_minhash_portable
+# is the oracle-exact re-implementation of the spark.ml MinHashLSH demo.
+# tests/test_registry_order.py asserts every rows-only name is listed here,
+# every stand-in is registered WITH an oracle, and every streaming twin
+# calls its query, so the exemption can never silently widen.
+ROWS_ONLY_STAND_INS: dict[str, str] = {
+    "dedup_minhash_lsh": "dedup_minhash_portable",
+    # the production repartitionByRange Z-order writer samples its range
+    # split points (nondeterministic file assignment — not oracle-
+    # reproducible); the ntile audit runs the identical zone-map pruning
+    # arithmetic deterministically and is hash-checked on the rotation
+    "zorder_range_writer": "zorder_file_skipping",
+    "streaming_click_attribution": "streaming_parity_click_attribution",
+    "streaming_dedup_events": "streaming_parity_dedup",
+    "streaming_gap_monitor": "streaming_parity_gap_monitor",
+    "streaming_incremental_dedup": "streaming_parity_incremental_dedup",
+    "streaming_nation_activity": "streaming_parity_nation_activity",
+    "streaming_session_30m": "streaming_parity_session_30m",
+    "streaming_tumbling_1h": "streaming_parity_tumbling_1h",
+    "streaming_user_state": "streaming_parity_user_state",
+}
+
+# Committed round-21 window (the rotation the NEXT round starts from; the
+# phase-aware age gate uses this once CORRECTNESS_r20.json lands): every
+# stale oracle-backed name the r20 window above leaves out — the 16
+# remaining latest-r16 names, then the 33 latest-r17 names.
+NEXT_WINDOW: tuple[str, ...] = (
+    # latest-r16 evidence
     "events_session_30m",
     "events_sliding_1h_30m",
     "events_time_rollup",
@@ -247,9 +178,42 @@ NEXT_WINDOW: tuple[str, ...] = (
     "orc_roundtrip_checksum",
     "orders_dq_audit",
     "retrieval_hybrid_rrf",
-    "similarity_ann_methods",
     "text_entropy",
     "topk_products_cms",
+    # latest-r17 evidence
+    "calendar_dim",
+    "clean_orders",
+    "copurchase_components",
+    "corpus_dedup_pipeline",
+    "count_distinct_orders",
+    "dashboard_month_assembly",
+    "dedup_exact",
+    "dedup_fingerprint",
+    "dedup_keep_best",
+    "dedup_minhash_portable",
+    "doc_fingerprint_methods",
+    "docs_contamination_incremental",
+    "docs_substring_dedup",
+    "embedding_centroids",
+    "embedding_kmeans_refine",
+    "embedding_profile",
+    "events_json_nested",
+    "launch_year_orders",
+    "monthly_order_trend_lag",
+    "multimodal_avi_frames",
+    "multimodal_gif_roundtrip",
+    "multimodal_h264_nal",
+    "multimodal_jpeg_roundtrip",
+    "multimodal_mp3_frames",
+    "orders_incremental_merge",
+    "orders_no_price",
+    "pivot_status_by_priority",
+    "price_percentiles",
+    "rollup_order_values",
+    "set_ops_customers",
+    "text_quality_stats",
+    "text_token_stats",
+    "valid_orders",
 )
 
 

@@ -71,11 +71,6 @@ def save_table(df: DataFrame, table: str, fmt: str | None = None) -> None:
     df.write.format(fmt).mode("overwrite").saveAsTable(table)
 
 
-def register_temp(df: DataFrame, name: str) -> None:
-    """S7 analog for metastore-less runs."""
-    df.createOrReplaceTempView(name)
-
-
 def write_partitioned(df: DataFrame, path: str, *partition_cols: str) -> None:
     """Hive-style partitioned parquet write (``partitionBy`` layout).
 

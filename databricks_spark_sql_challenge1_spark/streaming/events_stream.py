@@ -15,22 +15,22 @@ a watermark,
 ``availableNow`` trigger draining to a memory sink — the batch-equivalent
 execution mode, so results can be asserted against the batch operators.
 
-Custom stateful processing uses ``applyInPandasWithState``. Its Spark-4
-successor ``transformWithStateInPandas`` (typed state handles, timers) was
-evaluated in round 4 but cannot run in this container: its state-server
-protocol requires the ``protobuf`` Python package, which is not installed
-(verified: the streaming Python runner crashes importing
-``pyspark.sql.streaming.proto.StateMessage_pb2``). The migration is
-mechanical when the dependency exists — same groupBy key, the update
-function becomes a ``StatefulProcessor`` with ``handle.getValueState``.
+Custom stateful processing uses ``applyInPandasWithState`` because it runs
+on every platform, while its Spark-4 successor's state server needs the
+``protobuf`` package.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import uuid
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from databricks_spark_sql_challenge1_spark.catalog import (
     _heal_events_ts,
@@ -39,33 +39,72 @@ from databricks_spark_sql_challenge1_spark.catalog import (
 )
 from databricks_spark_sql_challenge1_spark.registry import query
 
+_SCRATCH_BASE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "spark-warehouse",
+)
+
+
+@contextmanager
+def scratch_dir(prefix: str):
+    """A fresh directory under the repo's ``spark-warehouse/``, removed on
+    exit — anything read lazily from it must be materialized inside the
+    ``with`` block."""
+    os.makedirs(_SCRATCH_BASE, exist_ok=True)
+    scratch = tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_BASE)
+    try:
+        yield scratch
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """readStream over ``{table}.parquet`` with the schema pinned from the
+    static read. Glob path, not pathGlobFilter: the filter matches leaf
+    FILE names only, so a directory-shaped ``{table}.parquet/`` (every
+    production layout) would stream 0 rows; the glob resolves both shapes
+    (module docstring; tests/test_layout_invariance_contract.py)."""
+    ensure_session_confs(spark)
+    path = table_path(sf_dir, table)
+    raw_schema = spark.read.parquet(path).schema
+    return spark.readStream.schema(raw_schema).parquet(path + "*")
+
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over events.parquet (schema pinned from the static read;
-    nanos-long ts converted exactly as in catalog.load_table)."""
-    ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    # Glob path, not pathGlobFilter: the filter matches leaf FILE names
-    # only, so a directory-shaped events.parquet/ (every production
-    # layout) would stream 0 rows; the glob resolves both shapes (module
-    # docstring; tests/test_layout_invariance_contract.py).
-    stream = spark.readStream.schema(raw_schema).parquet(
-        table_path(sf_dir, "events") + "*"
-    )
-    return _heal_events_ts(stream)
+    """The events stream, nanos-long ts converted exactly as in
+    catalog.load_table."""
+    return _heal_events_ts(_table_stream(spark, sf_dir, "events"))
 
 
-def _drain_to_memory(windowed: DataFrame, spark: SparkSession) -> DataFrame:
+def _drain_to_memory(
+    stream: DataFrame,
+    spark: SparkSession,
+    mode: str = "complete",
+    latest: tuple[str, str] | None = None,
+) -> DataFrame:
+    """Run ``stream`` to completion (``availableNow``) into a memory sink in
+    output ``mode`` and return the sink table. Update mode may emit a key
+    once per micro-batch; ``latest=(key, counter)`` keeps each key's final
+    emission — the row with the largest ``counter``, which only grows."""
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     q = (
-        windowed.writeStream.format("memory")
+        stream.writeStream.format("memory")
         .queryName(name)
-        .outputMode("complete")
+        .outputMode(mode)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return spark.table(name)
+    out = spark.table(name)
+    if latest is None:
+        return out
+    key, counter = latest
+    w = Window.partitionBy(key).orderBy(F.col(counter).desc())
+    return (
+        out.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") == 1)
+        .drop("rk")
+    )
 
 
 @query("streaming_tumbling_1h")  # rows-only: streaming not oracle-expressible
@@ -150,123 +189,7 @@ def streaming_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        profiled.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # update mode may emit a row per micro-batch per user; keep the final one
-    out = spark.table(name)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .drop("rk")
-    )
-
-
-def tws_available() -> bool:
-    """``transformWithStateInPandas`` needs the ``protobuf`` Python package
-    for its state-server wire protocol (the streaming Python runner imports
-    ``pyspark.sql.streaming.proto.StateMessage_pb2``); absent in this
-    container — probed here so the capability gap is visible in-tree
-    (tests/test_streaming.py::test_streaming_user_state_tws).
-    Re-checked at round-16 start (2026-08-16), round-17 (2026-08-16) and
-    round-18 (2026-08-16): still absent."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def streaming_user_state_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``streaming_user_state`` on the Spark-4 ``transformWithStateInPandas``
-    API (typed state handles instead of a single state tuple schema) —
-    same per-user running profile, same output contract, so the batch
-    totals pin in tests applies verbatim. Unregistered: the container
-    lacks the protobuf dependency the TWS state server requires, so this
-    path cannot earn driver evidence here; the witness test skips with a
-    pinned reason and runs for real the moment the dependency appears.
-    """
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(pyspark.sql.streaming.proto.StateMessage_pb2) — not installed "
-            "in this container; use streaming_user_state "
-            "(applyInPandasWithState) instead"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = (
-        "user_id long, n_events long, sum_value double, last_ts timestamp"
-    )
-
-    class UserProfile(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "profile", "n bigint, s double, last_us bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s, last_us = (
-                self._state.get() if self._state.exists() else (0, 0.0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-                last_us = max(
-                    last_us, int(pdf["ts"].astype("int64").max()) // 1000
-                )
-            self._state.update((n, s, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [round(s, 2)],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    stream = _events_stream(spark, sf_dir)
-    profiled = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserProfile(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        profiled.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .drop("rk")
-    )
+    return _drain_to_memory(profiled, spark, "update", ("user_id", "n_events"))
 
 
 @query("streaming_session_30m")  # rows-only
@@ -317,20 +240,13 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain_to_memory(deduped, spark)
 
 
-@query("streaming_click_attribution")  # rows-only: stream-stream join state
-def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join: each purchase attributed to the same
-    user's clicks in the preceding 30 minutes — both sides are unbounded
-    streams, so Spark buffers each side in watermark-bounded join state
-    (the flagship Structured Streaming capability the batch range join
-    can't express over live data).
-
-    The time-bound predicate is what makes the state finite: with both
-    watermarks at 1 hour and the interval at 30 minutes, rows age out of
-    the buffer deterministically. Append output (joins emit no
-    retractions). Semantics pinned by tests/test_streaming.py against the
-    identical batch join.
-    """
+def _click_attribution(
+    spark: SparkSession, sf_dir: str, purchase_value: Column
+) -> DataFrame:
+    """The clicks⋈purchases interval join behind both click-attribution
+    queries, drained in append mode (joins emit no retractions);
+    ``purchase_value`` is each query's own expression over the raw
+    ``purchase_value`` column."""
     clicks = (
         _events_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")
@@ -358,18 +274,27 @@ def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_user").alias("user_id"),
         "purchase_ts",
         "click_ts",
-        F.round(F.col("purchase_value"), 2).alias("purchase_value"),
+        purchase_value.alias("purchase_value"),
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _drain_to_memory(joined, spark, "append")
+
+
+@query("streaming_click_attribution")  # rows-only: stream-stream join state
+def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream interval join: each purchase attributed to the same
+    user's clicks in the preceding 30 minutes — both sides are unbounded
+    streams, so Spark buffers each side in watermark-bounded join state
+    (the flagship Structured Streaming capability the batch range join
+    can't express over live data).
+
+    The time-bound predicate is what makes the state finite: with both
+    watermarks at 1 hour and the interval at 30 minutes, rows age out of
+    the buffer deterministically. Semantics pinned by
+    tests/test_streaming.py against the identical batch join.
+    """
+    return _click_attribution(
+        spark, sf_dir, F.round(F.col("purchase_value"), 2)
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 @query("streaming_nation_activity")  # rows-only: streaming not in SQL oracle
@@ -445,7 +370,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest batch). Batch equivalence pinned in tests/test_streaming.py
     against ``dedup_incremental``'s flagged subset.
     """
-    from databricks_spark_sql_challenge1_spark.catalog import table_path
     from databricks_spark_sql_challenge1_spark.operators.dedup import (
         HAMMING_MAX,
         INCREMENTAL_MOD,
@@ -455,13 +379,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_simhash,
     )
 
-    ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
-    # Same layout-agnostic glob as _events_stream (a directory-shaped
-    # documents.parquet/ would stream 0 rows under pathGlobFilter).
-    stream = spark.readStream.schema(raw_schema).parquet(
-        table_path(sf_dir, "documents") + "*"
-    )
+    stream = _table_stream(spark, sf_dir, "documents")
     # 32-bit SimHash as a narrow expression chain (matches text_simhash).
     bit_terms = " + ".join(
         f"(CASE WHEN aggregate(hs, 0L, (acc, h) -> acc + "
@@ -574,22 +492,6 @@ def streaming_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        monitored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .drop("rk")
-        .orderBy(F.col("user_id").asc())
-    )
+    return _drain_to_memory(
+        monitored, spark, "update", ("user_id", "n_events")
+    ).orderBy(F.col("user_id").asc())

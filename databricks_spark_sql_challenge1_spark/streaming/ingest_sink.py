@@ -13,7 +13,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,6 +26,7 @@ from databricks_spark_sql_challenge1_spark.registry import query
 from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
     _drain_to_memory,
     _events_stream,
+    scratch_dir,
 )
 
 
@@ -366,18 +366,9 @@ def streaming_parity_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     for — see ``_drain_arrivals_idempotent`` for the 100 TB shape.
     """
     ensure_session_confs(spark)
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    scratch_base = os.path.join(repo_root, "spark-warehouse")
-    os.makedirs(scratch_base, exist_ok=True)
-    scratch = tempfile.mkdtemp(prefix="ingest_e2e_", dir=scratch_base)
-    try:
+    with scratch_dir("ingest_e2e_") as scratch:
         bronze_dir = _land_events_with_replay(spark, sf_dir, scratch)
-        gold = _bronze_to_gold(spark, bronze_dir)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return gold
+        return _bronze_to_gold(spark, bronze_dir)
 
 
 @query("streaming_parity_ingest_adversarial", oracle=_INGEST_GOLD_ORACLE)
@@ -404,18 +395,9 @@ def streaming_parity_ingest_adversarial(
     deflates them, and an order-sensitive landing shifts n_sessions.
     """
     ensure_session_confs(spark)
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    scratch_base = os.path.join(repo_root, "spark-warehouse")
-    os.makedirs(scratch_base, exist_ok=True)
-    scratch = tempfile.mkdtemp(prefix="ingest_adv_", dir=scratch_base)
-    try:
+    with scratch_dir("ingest_adv_") as scratch:
         bronze_dir = _land_events_adversarial(spark, sf_dir, scratch)
-        gold = _bronze_to_gold(spark, bronze_dir)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return gold
+        return _bronze_to_gold(spark, bronze_dir)
 
 
 # The skew witness's gold oracle: the SAME gaps-and-islands sessionization,
@@ -478,16 +460,7 @@ def streaming_parity_ingest_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     this row certifies are what those mitigations must preserve.
     """
     ensure_session_confs(spark)
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    scratch_base = os.path.join(repo_root, "spark-warehouse")
-    os.makedirs(scratch_base, exist_ok=True)
-    scratch = tempfile.mkdtemp(prefix="ingest_skew_", dir=scratch_base)
-    try:
+    with scratch_dir("ingest_skew_") as scratch:
         raw_dir = stage_skewed_shards(spark, sf_dir, scratch)
         bronze_dir = _drain_arrivals_idempotent(spark, raw_dir, scratch)
-        gold = _bronze_to_gold(spark, bronze_dir)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return gold
+        return _bronze_to_gold(spark, bronze_dir)

@@ -1,16 +1,16 @@
 """Driver-verifiable batch parity for the streaming surface.
 
-The eight live ``streaming_*`` operators are rows-only by design: a live stream has
-no DuckDB oracle. But the ``availableNow`` drain used throughout
+The eight live ``streaming_*`` operators are rows-only by design: a live
+stream has no DuckDB oracle. But the ``availableNow`` drain used throughout
 events_stream.py is Spark's batch-equivalent execution mode — the drained
 result of each stream IS the batch aggregate, which is SQL-expressible. Each
-``streaming_parity_*`` query below re-runs the stream pipeline (watermark,
-stateful operator, memory-sink drain — the real streaming machinery, not the
-batch twin) and registers the batch twin's DuckDB oracle against the drained
-output. A green hash row therefore certifies end-to-end that the streaming
-operator, its state handling, and its drain reproduce the declarative batch
-semantics — the strongest form of the batch-parity pin that previously lived
-only in tests/test_streaming.py (invisible to CORRECTNESS_r*.json).
+``streaming_parity_*`` twin below calls the rows-only query it vouches for
+(click attribution: the join builder that query calls, with its own final
+``purchase_value`` expression) and registers the batch twin's DuckDB oracle
+against the drained output. A green hash row therefore certifies end-to-end
+that the streaming operator, its state handling, and its drain reproduce the
+declarative batch semantics. The one exception is the stateful profile:
+``streaming_parity_user_state`` is its own integer-cents pipeline (below).
 
 Alignment notes (CLAUDE.md rules):
   - tumbling / session / nation reuse the batch twins' exact agg
@@ -28,7 +28,7 @@ this parity family is part of the extension streaming stack.
 
 from __future__ import annotations
 
-import uuid
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,8 +39,20 @@ from databricks_spark_sql_challenge1_spark.catalog import (
 )
 from databricks_spark_sql_challenge1_spark.registry import query
 from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
+    GAP_ALERT_US,
+    _click_attribution,
     _drain_to_memory,
     _events_stream,
+    scratch_dir,
+    streaming_dedup_events,
+    streaming_gap_monitor,
+    streaming_incremental_dedup,
+    streaming_nation_activity,
+    streaming_session_30m,
+    streaming_tumbling_1h,
+)
+from databricks_spark_sql_challenge1_spark.streaming.ingest_sink import (
+    _write_arrival_shard,
 )
 
 
@@ -61,24 +73,7 @@ def streaming_parity_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-hour event-time windows per event type, executed as a real stream
     (window state + availableNow drain), hash-checked against
     ``events_tumbling_1h``'s DuckDB oracle."""
-    stream = _events_stream(spark, sf_dir)
-    windowed = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    return _drain_to_memory(windowed, spark).orderBy("window_start", "event_type")
+    return streaming_tumbling_1h(spark, sf_dir).orderBy("window_start", "event_type")
 
 
 @query(
@@ -112,25 +107,7 @@ def streaming_parity_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drained stateful session-window stream (30-minute gap, native
     streaming session state under a watermark) hash-checked against
     ``events_session_30m``'s gaps-and-islands DuckDB oracle."""
-    stream = _events_stream(spark, sf_dir)
-    windowed = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
-    return _drain_to_memory(windowed, spark).orderBy("user_id", "session_start")
+    return streaming_session_30m(spark, sf_dir).orderBy("user_id", "session_start")
 
 
 @query(
@@ -148,14 +125,7 @@ def streaming_parity_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a watermark feeding a count) hash-checked against the batch
     COUNT(DISTINCT) it must equal — a replayed event double-counts iff the
     dedup state fails."""
-    stream = _events_stream(spark, sf_dir)
-    deduped = (
-        stream.withWatermark("ts", "1 hour")
-        .dropDuplicates(["user_id", "event_type"])
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_unique_users"))
-    )
-    return _drain_to_memory(deduped, spark).orderBy("event_type")
+    return streaming_dedup_events(spark, sf_dir).orderBy("event_type")
 
 
 @query(
@@ -231,27 +201,9 @@ def streaming_parity_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        profiled.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # update mode may emit one row per micro-batch per user; the final
-    # emission (max n_events) is the complete profile.
-    out = spark.table(name)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .drop("rk")
-        .orderBy("user_id")
-    )
+    return _drain_to_memory(
+        profiled, spark, "update", ("user_id", "n_events")
+    ).orderBy("user_id")
 
 
 @query(
@@ -277,45 +229,11 @@ def streaming_parity_click_attribution(spark: SparkSession, sf_dir: str) -> Data
     checked against the identical batch interval join in DuckDB — append
     mode emits each matched pair exactly once iff the join state is
     correct."""
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES")),
-    ).select(
-        F.col("p_user").alias("user_id"),
-        "purchase_ts",
-        "click_ts",
-        (F.round(F.col("purchase_value") * 100).cast("long") / F.lit(100.0)).alias(
-            "purchase_value"
-        ),
-    )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("user_id", "purchase_ts", "click_ts")
+    return _click_attribution(
+        spark,
+        sf_dir,
+        F.round(F.col("purchase_value") * 100).cast("long") / F.lit(100.0),
+    ).orderBy("user_id", "purchase_ts", "click_ts")
 
 
 @query(
@@ -336,45 +254,10 @@ def streaming_parity_nation_activity(spark: SparkSession, sf_dir: str) -> DataFr
     """Drained stream-static enrichment (events stream broadcast-joined to
     the customer→nation dimension chain, then windowed per nation)
     hash-checked against the identical batch join+window in DuckDB."""
-    stream = _events_stream(spark, sf_dir)
-    dims = (
-        load_table(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("user_id"), "c_nationkey")
-        .join(
-            load_table(spark, sf_dir, "nation").select(
-                F.col("n_nationkey").alias("c_nationkey"),
-                F.col("n_name").alias("nation"),
-            ),
-            "c_nationkey",
-        )
-        .select("user_id", "nation")
-    )
-    windowed = (
-        stream.withWatermark("ts", "1 hour")
-        .join(dims, "user_id")
-        .groupBy(F.window("ts", "1 hour"), "nation")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "nation",
-            "n_events",
-            "sum_value",
-        )
-    )
-    return _drain_to_memory(windowed, spark).orderBy("window_start", "nation")
+    return streaming_nation_activity(spark, sf_dir).orderBy("window_start", "nation")
 
 
-def _gap_monitor_oracle_sql() -> str:
-    from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
-        GAP_ALERT_US,
-    )
-
-    return f"""
+_GAP_MONITOR_ORACLE = f"""
 WITH g AS (
     SELECT user_id, ts,
            LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
@@ -393,7 +276,7 @@ ORDER BY user_id ASC
 """
 
 
-@query("streaming_parity_gap_monitor", oracle=_gap_monitor_oracle_sql())
+@query("streaming_parity_gap_monitor", oracle=_GAP_MONITOR_ORACLE)
 def streaming_parity_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stateful gap/SLA monitor, hash-checked: its per-user metrics
     (event count, max inter-event gap in µs, gaps over the 1-hour alert
@@ -401,10 +284,6 @@ def streaming_parity_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``applyInPandasWithState`` state, so the drained profile equals the
     batch LAG() equivalent bit-for-bit — no diff column or rounding shim
     needed."""
-    from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
-        streaming_gap_monitor,
-    )
-
     return streaming_gap_monitor(spark, sf_dir).orderBy("user_id")
 
 
@@ -446,10 +325,6 @@ def streaming_parity_incremental_dedup(
     strictly stronger evidence than ``streaming_incremental_dedup``'s own
     rows-only driver re-run (same pipeline, hash-checked output), which
     is why that name parks outside the window this round."""
-    from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
-        streaming_incremental_dedup,
-    )
-
     return streaming_incremental_dedup(spark, sf_dir).orderBy("doc_id")
 
 
@@ -544,20 +419,8 @@ def streaming_parity_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     tumbling aggregate with O(open windows) state, and the accounting join
     is window-grain (720 rows/month), broadcast-tiny at any corpus scale.
     """
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     ensure_session_confs(spark)
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    scratch_base = os.path.join(repo_root, "spark-warehouse")
-    os.makedirs(scratch_base, exist_ok=True)
-    scratch = tempfile.mkdtemp(prefix="lateness_", dir=scratch_base)
-    try:
+    with scratch_dir("lateness_") as scratch:
         events = load_table(spark, sf_dir, "events").select(
             "event_id",
             "ts",
@@ -572,14 +435,7 @@ def streaming_parity_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
             events.where(F.col("is_late")),
         ]
         for i, frame in enumerate(phases):
-            phase_dir = os.path.join(scratch, f"phase{i}")
-            frame.select("ts", "cents").coalesce(1).write.parquet(phase_dir)
-            (part,) = glob.glob(os.path.join(phase_dir, "part-*.parquet"))
-            dst = os.path.join(stream_dir, f"batch{i}.parquet")
-            shutil.move(part, dst)
-            # distinct mtimes pin the file-source processing order
-            # (oldest-first is the source's default)
-            os.utime(dst, (_time.time() - 180 + 60 * i,) * 2)
+            _write_arrival_shard(frame.select("ts", "cents"), scratch, stream_dir, i)
         stream = (
             spark.readStream.schema("ts timestamp, cents bigint")
             .option("maxFilesPerTrigger", "1")
@@ -598,30 +454,12 @@ def streaming_parity_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_cents",
             )
         )
-        name = f"stream_out_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        from pyspark.sql.window import Window
-
         # update mode re-emits a window when batch 2 adds accepted late
-        # rows; the final emission (max n_surv — counts only grow) is the
-        # settled state. Materialized before the scratch dir is removed.
-        w = Window.partitionBy("window_start").orderBy(F.col("n_surv").desc())
-        drained = (
-            spark.table(name)
-            .withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") == 1)
-            .drop("rk")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        # rows; counts only grow, so the max-n_surv emission is the settled
+        # state. Materialized before the scratch dir is removed.
+        drained = _drain_to_memory(
+            agg, spark, "update", ("window_start", "n_surv")
+        ).localCheckpoint()
     batch = load_table(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("window_start"),
         (F.col("event_id") % LATE_MOD == LATE_RESIDUE).alias("is_late"),

@@ -3,6 +3,9 @@ window contents (see registry.DRIVER_PRIORITY)."""
 
 from __future__ import annotations
 
+import ast
+import inspect
+
 import databricks_spark_sql_challenge1_spark.operators  # noqa: F401
 from databricks_spark_sql_challenge1_spark.registry import (
     DRIVER_PRIORITY,
@@ -22,42 +25,33 @@ DRIVER_WINDOW = 50
 # was accidentally left out of the window). Update this literal whenever
 # a query is added or its output/oracle changes.
 MUST_VERIFY = {
-    # NEW round 18 (VERDICT r17 #5): the key-skew witness's
-    # driver-checkable registration — zero driver evidence until r18
-    "streaming_parity_ingest_skew",
-    # oracle SQL rewritten post-evidence by the round-17 integer-log2
-    # migration (089c69e; VERDICT r17 #1 pins them at the head of the
-    # r18 window — 3-scale parity re-proven twice, driver row lands here)
-    "dedup_embedding_lsh_adaptive",
-    "dedup_embedding_clusters",
-    "dedup_embedding_incremental",
-    # changed MID-round-18 by the layout-invariance fix (the streaming
-    # file-source glob, events_stream.py:35) and ALREADY inside the
-    # committed r18 window — its driver row this round is the
-    # post-change evidence for the _events_stream code site; the other
-    # changed twins head the r19 NEXT_WINDOW or refresh at r20 on the
-    # natural cadence (see registry.py NEXT_WINDOW comment)
+    # changed round 20 by the streaming one-pipeline consolidation: each
+    # twin calls the rows-only query it stands in for (click attribution:
+    # the shared join builder), and all of them drain through the one
+    # memory-sink helper / scratch-dir context manager
+    "streaming_parity_tumbling_1h",
+    "streaming_parity_session_30m",
+    "streaming_parity_dedup",
+    "streaming_parity_nation_activity",
+    "streaming_parity_click_attribution",
+    "streaming_parity_user_state",
+    "streaming_parity_gap_monitor",
+    "streaming_parity_incremental_dedup",
     "streaming_parity_lateness",
-    # oracle empty-payload legs fixed late-r18 by the ASCII multimodal
-    # fuzz (GREATEST frame floor / CASE n=0 rms+peak; value-invariant on
-    # every fixture — empty text never occurs there — and 3-scale
-    # re-proven); audio_pcm_stats sits at r18 window idx 29 so its
-    # post-change row lands THIS round; its sibling
-    # multimodal_frame_stats is in the committed r19 NEXT_WINDOW (the
-    # precedented changed-post-spend pattern, same as the r17 log2 trio)
-    "multimodal_audio_pcm_stats",
-    # avg_value moved to the integer-cents formulation late-r18 (the
-    # triple-composed probe caught ROUND(AVG(money), 2) landing a
-    # sub-cent average ON the .005 boundary — rounding apart
-    # cross-engine and flipping with summation order); in the r18
-    # window, value-invariant at all three fixture scales (re-proven)
-    "orders_unpivot_metrics",
-    # same r18 integer-average boundary campaign: ROUND(AVG(int), 2)
-    # measured diverging end-to-end on a 40-doc boundary corpus; moved
-    # to the integer-grain formulation, in the r18 window, 3-scale
-    # re-proven (events_json_extract, the scale-4 sibling, is in the
-    # committed r19 NEXT_WINDOW)
-    "lang_stats",
+    "streaming_parity_ingest_e2e",
+    "streaming_parity_ingest_adversarial",
+    "streaming_parity_ingest_skew",
+    # changed in r18/r19 (plan-size rewrites, spread removal) with no
+    # post-change CORRECTNESS row yet (VERDICT r19 #1)
+    "customers_kmv_setops",
+    "scd2_cdc_apply",
+    "retrieval_rrf_rerank",
+    "dedup_incremental",
+    "dedup_simhash_methods",
+    "similarity_ann_methods",
+    "events_gapfill_methods",
+    "order_export_denorm",
+    "text_simhash",
 }
 
 
@@ -173,3 +167,56 @@ def test_rows_only_stand_ins_are_sound():
     )
     for name, twin in ROWS_ONLY_STAND_INS.items():
         assert twin in ORACLES, f"stand-in for {name} not oracle-backed: {twin}"
+
+
+# The one streaming stand-in that is a separate pipeline by design: the
+# rows-only profile keeps float state, the twin integer-cents state, so
+# only the twin is oracle-exact (registry.ROWS_ONLY_STAND_INS comment).
+SEPARATE_PIPELINE_STAND_INS = {"streaming_user_state"}
+
+
+def _calls(fn_node) -> set[str]:
+    """Names of the plain functions called in a function's body."""
+    return {
+        n.func.id
+        for stmt in fn_node.body
+        for n in ast.walk(stmt)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+    }
+
+
+def test_streaming_stand_ins_call_the_query_they_vouch_for():
+    """A streaming stand-in is evidence for its rows-only query only if it
+    runs that query's pipeline: its body must call the rows-only function,
+    or a streaming-module builder that the rows-only function also calls
+    and no other registered query does. A statement-for-statement copy
+    fails, because a copy can drift from the query it vouches for."""
+    from databricks_spark_sql_challenge1_spark.streaming import (
+        events_stream,
+        ingest_sink,
+        parity,
+    )
+
+    defs = {}
+    for mod in (events_stream, ingest_sink, parity):
+        for node in ast.parse(inspect.getsource(mod)).body:
+            if isinstance(node, ast.FunctionDef):
+                defs[node.name] = node
+    calls = {name: _calls(node) for name, node in defs.items()}
+    query_fns = {QUERIES[n].__name__ for n in QUERIES} & set(defs)
+    callers = {f: {q for q in query_fns if f in calls[q]} for f in defs}
+
+    unsound = []
+    for name, twin in ROWS_ONLY_STAND_INS.items():
+        if not name.startswith("streaming_") or name in SEPARATE_PIPELINE_STAND_INS:
+            continue
+        rows_fn, twin_fn = QUERIES[name].__name__, QUERIES[twin].__name__
+        builders = {
+            f
+            for f in calls[rows_fn] & calls[twin_fn] & set(defs)
+            if callers[f] == {rows_fn, twin_fn}
+        }
+        if rows_fn not in calls[twin_fn] and not builders:
+            unsound.append((name, twin))
+    assert not unsound, unsound
+    assert SEPARATE_PIPELINE_STAND_INS <= set(ROWS_ONLY_STAND_INS)

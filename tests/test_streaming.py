@@ -341,46 +341,6 @@ def test_ingest_skew_stress_witness(spark, tmp_path):
     assert hot_n >= n_src * 0.4
 
 
-def test_streaming_user_state_tws(spark):
-    """Witness for the transformWithStateInPandas capability gap (VERDICT
-    r8 #7): the TWS variant of the per-user running profile runs and ends
-    at the batch totals — SKIPPED with a pinned reason while the container
-    lacks the protobuf package its state server requires, and exercised
-    for real the moment the dependency appears."""
-    import pytest
-
-    from pyspark.sql import functions as F
-
-    from databricks_spark_sql_challenge1_spark.catalog import load_table
-    from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
-        streaming_user_state_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            streaming_user_state_tws(spark, SF_DIR)
-        pytest.skip(
-            "transformWithStateInPandas needs the protobuf package "
-            "(state-server wire protocol) — not installed in this "
-            "container; applyInPandasWithState covers the capability "
-            "(streaming_user_state)"
-        )
-
-    state = streaming_user_state_tws(spark, SF_DIR)
-    batch = (
-        load_table(spark, SF_DIR, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-    cols = ["user_id", "n_events", "sum_value", "last_ts"]
-    assert _rows(state.select(*cols)) == _rows(batch.select(*cols))
-
-
 def test_streaming_attribution_equals_batch_join(spark):
     """The stream-stream interval join must emit exactly the batch interval
     join's rows (availableNow drains everything; append mode, no late data

@@ -46,7 +46,7 @@ import time
 
 SEED = 0x18C0FFEE
 
-# Same DuckDB-side budget as tools/parity_sweep.py: a handful of oracles
+# Same DuckDB-side budget as tools/parity_names.py: a handful of oracles
 # are DELIBERATELY quadratic/recursive (all-pairs dedup ground truth,
 # recursive-CTE graph reachability) and are correctness tools for driver
 # scale (sf0.01), not sf0.1+ — a SKIP records that explicitly instead of

@@ -1,14 +1,20 @@
-"""Targeted oracle-parity check for NAMED queries across fixture dirs.
+"""Oracle-parity check across fixture dirs: Spark vs DuckDB, per query.
 
-Same Spark-vs-DuckDB compare as tools/parity_sweep.py, but takes query
-names, so a changed query can be re-proven at sf0.001/0.01/0.1 without
-sweeping the whole registry (the round-10 head-slot workflow).
+Takes query names, so a changed query can be re-proven at
+sf0.001/0.01/0.1 without sweeping the whole registry (the round-10
+head-slot workflow); with no names it checks every oracle-backed query.
+CORRECTNESS_r*.json rows are hash-checked at sf0.01 only; round 8's sf0.1
+sweep caught a cross-engine drift class they could never show (DuckDB
+ROUND preserving -0.0).
 
 Usage:
-    python tools/parity_names.py name1 [name2 ...] [--sf dir1,dir2,...]
+    python tools/parity_names.py [name ...] [--sf dir1,dir2,...]
 
-Default SF dirs: /root/testdata/sf0.001, sf0.01, sf0.1.
-Exit code 1 on any mismatch/error.
+Default SF dirs: ``DEFAULT_SFS`` (sf0.001, sf0.01, sf0.1). Prints one line per
+(dir, query) — DONE / SKIP / ROWS / ERROR, with the first diffs on a
+mismatch — and a final summary listing failures and skips. Exit code 1 on
+any mismatch/error; a DuckDB watchdog SKIP is listed, not counted as a
+pass or a failure.
 """
 
 from __future__ import annotations
@@ -17,10 +23,10 @@ import sys
 import threading
 import time
 
-# Same interrupt watchdog as tools/parity_sweep.py (r19): the deliberately
-# quadratic/recursive oracles (all-pairs dedup ground truth, recursive-CTE
-# graph reachability) wedge DuckDB at sf0.1 — SKIP them loudly there
-# instead of hanging a targeted re-proof; the driver checks them at sf0.01.
+# DuckDB interrupt watchdog: the deliberately quadratic/recursive oracles
+# (all-pairs dedup ground truth, recursive-CTE graph reachability) wedge
+# DuckDB at sf0.1 — SKIP them loudly there instead of hanging the check;
+# CORRECTNESS_r*.json checks them at sf0.01.
 DUCK_BUDGET_S = 150
 
 DEFAULT_SFS = [
@@ -90,7 +96,8 @@ def main() -> None:
 
     spark = get_spark("parity-names")
     q, o = entry.queries(), entry.oracle_sql()
-    bad = []
+    names = names or sorted(o)
+    bad, skipped = [], []
     for sf_dir in sfs:
         con = duckdb.connect()
         for t in TABLES:
@@ -131,6 +138,7 @@ def main() -> None:
                         "recursive oracle; the driver checks it at sf0.01)",
                         flush=True,
                     )
+                    skipped.append((sf_dir, name))
                     continue
                 finally:
                     timer.cancel()
@@ -182,7 +190,7 @@ def main() -> None:
                 print(f"ERROR {sf_dir} {name}: {str(exc)[:300]}", flush=True)
                 bad.append((sf_dir, name))
         con.close()
-    print("NAMESDONE bad:", bad, flush=True)
+    print("NAMESDONE bad:", bad, "skipped:", skipped, flush=True)
     sys.exit(1 if bad else 0)
 
 

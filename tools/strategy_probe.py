@@ -56,7 +56,7 @@ import sys
 import threading
 import time
 
-# Same DuckDB-side budget as tools/parity_sweep.py — the deliberately
+# Same DuckDB-side budget as tools/parity_names.py — the deliberately
 # quadratic/recursive oracles (all-pairs dedup ground truth,
 # recursive-CTE graph reachability) are correctness tools for driver
 # scale (sf0.01), not sf0.1+; a SKIP records that instead of wedging.
