@@ -96,6 +96,13 @@ def detail_name(cpus: int) -> str:
     return f"BENCH_DETAIL_c{cpus}.json"
 
 
+def jvm_options(spark) -> list[str]:
+    """The driver JVM's ``-XX`` input arguments: the compiler and collector
+    policy the sweep ran under."""
+    bean = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    return [a for a in bean.getInputArguments() if a.startswith("-XX")]
+
+
 def summary_line(detail: dict) -> str:
     """The compact driver-facing line: one JSON object, no newline, small
     enough that the driver's tail capture holds all of it."""
@@ -194,6 +201,7 @@ def main() -> None:
         "cpus": int(os.environ["SPARK_GRAFT_CPUS"]),
         "master": sc.master,
         "default_parallelism": sc.defaultParallelism,
+        "jvm_options": jvm_options(spark),
         "sink": SINK,
         "calibration": {
             "query": CALIBRATION_QUERY,

@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -75,11 +76,62 @@ def load_table(
     dims would pay a shuffle for nothing.
     """
     ensure_session_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    layout = _layout(path)
+    df = _read_parquet(spark, path, layout)
     if name == "events":
         df = _heal_events_ts(df)
     if spread:
-        df = _maybe_spread(spark, df, sf_dir, name)
+        df = _maybe_spread(spark, df, name, sum(size for _, size, _ in layout or ()))
+    return df
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The table's schema as stored (``events.ts`` not yet healed), from the
+    same per-layout cache as ``load_table``."""
+    ensure_session_confs(spark)
+    path = table_path(sf_dir, name)
+    return _read_parquet(spark, path, _layout(path)).schema
+
+
+# One inferred schema per table path, with the layout it was inferred from.
+# Inference is a Spark job per read; an unchanged layout reuses the schema,
+# and a new layout replaces the path's entry.
+_SCHEMA_CACHE: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _layout(path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """Sorted ``(file, size, mtime_ns)`` of every file under a driver-LOCAL
+    parquet path (file or directory), or None when the path cannot be
+    stat'ed here (object stores, missing paths). Rewriting a part file in
+    place changes its size or mtime, so the layout changes with it."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((path, st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, _dirs, names in os.walk(path):
+            for f in names:
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                files.append((full, st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(files))
+
+
+def _read_parquet(
+    spark: SparkSession, path: str, layout: tuple | None
+) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only when this
+    layout of the path has not been read before. A path without a layout
+    (not stat'able locally) is inferred on every read."""
+    hit = _SCHEMA_CACHE.get(path)
+    if layout is not None and hit is not None and hit[0] == layout:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if layout is not None:
+        _SCHEMA_CACHE[path] = (layout, df.schema)
     return df
 
 
@@ -101,47 +153,25 @@ _SPREAD_MIN_BYTES = 256 * 1024
 # load-bearing: the gate only distinguishes "far fewer splits than cores"
 # from "plenty of splits").
 _SPREAD_SPLIT_BYTES = 128 * 1024 * 1024
-_SPREAD_BYTES_CACHE: dict[tuple[str, float], int] = {}
-
-
-def _table_disk_bytes(path: str) -> int:
-    """On-disk size of a driver-LOCAL parquet path (file or directory).
-
-    Sizes are cached per (path, mtime) so a fixture rewritten in-process
-    (probe tooling resharding tables) refreshes its spread decision
-    (ADVICE r18). Non-local sf_dirs return 0 → spread disables — a
-    perf-only, never-wrong fallback; production object-store deployments
-    have split counts >> cores anyway, where the spread gate is a no-op.
-    """
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        return 0
-    key = (path, mtime)
-    if key not in _SPREAD_BYTES_CACHE:
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        else:
-            total = os.path.getsize(path)
-        _SPREAD_BYTES_CACHE[key] = total
-    return _SPREAD_BYTES_CACHE[key]
 
 
 def _maybe_spread(
-    spark: SparkSession, df: DataFrame, sf_dir: str, name: str
+    spark: SparkSession, df: DataFrame, name: str, nbytes: int
 ) -> DataFrame:
     """Input-parallelism floor (round-18 optimization, guide §2.5): when the
     scan's estimated split count is below the core count, hash-repartition
     by the table's id so downstream per-row compute parallelizes. At
     production sizes the split count dwarfs the core count and this is a
     no-op — scale-neutral by construction. Results are partitioning-
-    invariant (pinned repo-wide by tests/test_layout_invariance_contract)."""
+    invariant (pinned repo-wide by tests/test_layout_invariance_contract).
+
+    ``nbytes`` is the table's on-disk size from its layout; a path that is
+    not local has none (0) and never spreads — a perf-only, never-wrong
+    fallback, since object-store deployments have split counts >> cores
+    anyway."""
     key = _SPREAD_KEYS.get(name)
     if key is None:
         return df
-    nbytes = _table_disk_bytes(table_path(sf_dir, name))
     if nbytes < _SPREAD_MIN_BYTES:
         return df
     parallelism = spark.sparkContext.defaultParallelism

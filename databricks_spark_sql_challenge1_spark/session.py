@@ -30,6 +30,17 @@ def get_spark(app_name: str = "challenge1-engine") -> SparkSession:
         .appName(app_name)
         .config("spark.driver.memory", memory)
         .config("spark.driver.maxResultSize", "4g")
+        # Driver JVM policy (SCALE.md "Session posture"): a cold session's
+        # CPU went mostly to HotSpot's JIT threads, which in local mode
+        # compete with the task threads for the same cores. One C1 + one
+        # C2 compiler thread, and the throughput collector instead of G1's
+        # concurrent-marking threads. defaultJavaOptions, not
+        # extraJavaOptions: a caller's --driver-java-options sets the
+        # latter and would replace this policy instead of adding to it.
+        .config(
+            "spark.driver.defaultJavaOptions",
+            "-XX:CICompilerCount=2 -XX:+UseParallelGC",
+        )
         # AQE: coalesce post-shuffle partitions, split skewed join partitions,
         # convert sort-merge to broadcast when runtime stats allow.
         .config("spark.sql.adaptive.enabled", "true")

@@ -34,8 +34,8 @@ from pyspark.sql.window import Window
 
 from databricks_spark_sql_challenge1_spark.catalog import (
     _heal_events_ts,
-    ensure_session_confs,
     table_path,
+    table_schema,
 )
 from databricks_spark_sql_challenge1_spark.registry import query
 
@@ -60,14 +60,13 @@ def scratch_dir(prefix: str):
 
 def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """readStream over ``{table}.parquet`` with the schema pinned from the
-    static read. Glob path, not pathGlobFilter: the filter matches leaf
-    FILE names only, so a directory-shaped ``{table}.parquet/`` (every
-    production layout) would stream 0 rows; the glob resolves both shapes
-    (module docstring; tests/test_layout_invariance_contract.py)."""
-    ensure_session_confs(spark)
-    path = table_path(sf_dir, table)
-    raw_schema = spark.read.parquet(path).schema
-    return spark.readStream.schema(raw_schema).parquet(path + "*")
+    catalog (the one place table schemas are inferred). Glob path, not
+    pathGlobFilter: the filter matches leaf FILE names only, so a
+    directory-shaped ``{table}.parquet/`` (every production layout) would
+    stream 0 rows; the glob resolves both shapes (module docstring;
+    tests/test_layout_invariance_contract.py)."""
+    raw_schema = table_schema(spark, sf_dir, table)
+    return spark.readStream.schema(raw_schema).parquet(table_path(sf_dir, table) + "*")
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

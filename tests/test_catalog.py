@@ -11,6 +11,7 @@ deep in a driver run.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import functions as F
 
@@ -96,3 +97,86 @@ def test_empty_orders_anchor_fails_loudly(spark, tmp_path):
     with pytest.raises(ValueError, match="anchor MAX\\(o_orderdate\\)"):
         catalog.last_order_datetime(spark, d)
     assert d not in catalog._ANCHOR_CACHE
+
+
+# --- one schema inference per table layout ------------------------------------
+
+
+def _write_part(path: str, rows: int, extra_column: bool = False) -> None:
+    """Write ``path`` as one parquet part of ``rows`` orders keys (plus an
+    incompressible ``pad`` column when ``extra_column``). An existing part
+    is rewritten IN PLACE: same file name, so the directory's entries and
+    mtime stay as they were."""
+    import shutil
+
+    import duckdb
+
+    pad = ", md5(CAST(range AS VARCHAR)) AS pad" if extra_column else ""
+    # staged beside the table directory, not in it, so the directory's
+    # entries never change
+    staged = os.path.join(os.path.dirname(os.path.dirname(path)), "staged.parquet")
+    duckdb.connect().execute(
+        f"COPY (SELECT range AS o_orderkey{pad} FROM range({rows})) "
+        f"TO '{staged}' (FORMAT PARQUET)"
+    )
+    shutil.copyfile(staged, path)  # truncates and rewrites an existing part
+    os.remove(staged)
+
+
+def _directory_table(tmp_path, rows: int = 10) -> tuple[str, str]:
+    """A directory-shaped ``orders.parquet/`` with one part file."""
+    table = tmp_path / "orders.parquet"
+    table.mkdir()
+    part = str(table / "part-00000.parquet")
+    _write_part(part, rows)
+    return str(tmp_path), part
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_unchanged_layout_loads_without_jobs(spark, tmp_path):
+    """Schema inference is a Spark job; the second load_table of an
+    unchanged directory-shaped table reuses the first one's schema and
+    launches none."""
+    sf_dir, _ = _directory_table(tmp_path)
+    group = f"layout-{os.path.basename(sf_dir)}"
+    first = _jobs_in_group(spark, group + "-a", lambda: load_table(spark, sf_dir, "orders"))
+    second = _jobs_in_group(spark, group + "-b", lambda: load_table(spark, sf_dir, "orders"))
+    assert first >= 1, "the first load must infer the schema"
+    assert second == 0
+    assert load_table(spark, sf_dir, "orders").count() == 10
+
+
+def test_in_place_rewrite_with_added_column_is_seen(spark, tmp_path):
+    """Rewriting a part file in place (same name, new content) is a new
+    layout: the next load_table infers again and sees the added column."""
+    sf_dir, part = _directory_table(tmp_path)
+    assert load_table(spark, sf_dir, "orders").columns == ["o_orderkey"]
+    _write_part(part, 10, extra_column=True)
+    df = load_table(spark, sf_dir, "orders")
+    assert df.columns == ["o_orderkey", "pad"]
+    assert df.where("pad IS NOT NULL").count() == 10
+
+
+def test_spread_size_refreshes_after_in_place_rewrite(spark, tmp_path):
+    """The spread gate's byte count comes from the same layout: a part
+    rewritten in place from byte-small to above the gate must switch the
+    spread on, though the directory's own mtime did not move."""
+
+    def spread(df) -> bool:
+        return "RepartitionByExpression" in df._jdf.queryExecution().logical().toString()
+
+    sf_dir, part = _directory_table(tmp_path)
+    assert not spread(load_table(spark, sf_dir, "orders", spread=True))
+    _write_part(part, 20_000, extra_column=True)
+    assert os.path.getsize(part) >= catalog._SPREAD_MIN_BYTES
+    assert spread(load_table(spark, sf_dir, "orders", spread=True))
