@@ -148,9 +148,37 @@ _PAIRS_SQL = f"""
 """
 
 
+def _min_label_ctes(nodes_sql: str, node: str, label: str) -> str:
+    """Oracle-side connected components over an ``edges(src, dst)`` CTE:
+    recursive min-label propagation. Every node of ``nodes_sql`` starts
+    labelled with its own id; each round a node takes ``LEAST(own label,
+    MIN(neighbour label))``, and the recursion stops after the first round
+    in which no label changed, so ``lab({node}, {label})`` holds that
+    round's rows — the min id of each node's component. Each round is one
+    join over the edge list and rounds grow with the graph diameter,
+    where an all-pairs reachability closure grows with the square of the
+    component size (it never finished on the sf0.1 SimHash graph). It
+    shares nothing with the Spark side's pointer jumping or its label-sum
+    convergence probe."""
+    return f"""prop(it, node, label, changed) AS (
+    SELECT 0, id, id, TRUE FROM ({nodes_sql}) AS n(id)
+    UNION ALL
+    SELECT p.it + 1, p.node, LEAST(p.label, MIN(q.label)),
+           LEAST(p.label, MIN(q.label)) < p.label
+    FROM prop p
+    LEFT JOIN edges e ON e.src = p.node
+    LEFT JOIN prop q ON q.node = e.dst
+    WHERE EXISTS (SELECT 1 FROM prop WHERE changed)
+    GROUP BY p.it, p.node, p.label
+),
+lab AS (
+    SELECT node AS {node}, label AS {label} FROM prop
+    WHERE it = (SELECT MAX(it) FROM prop)
+)"""
+
+
 # Shared recursive prefix: SimHash signatures → near-dup pairs → symmetric
-# edges → all-pairs reachability → min-label per node. Only feasible at
-# oracle scale, which is exactly why the Spark side iterates instead.
+# edges → min-label propagation per node.
 _CC_LAB_SQL = f"""
 WITH RECURSIVE
 sig AS ({_simhash_sql_duckdb().replace("ORDER BY doc_id ASC", "")}),
@@ -160,12 +188,7 @@ edges AS (
     UNION ALL
     SELECT doc_2 AS src, doc_1 AS dst FROM pairs
 ),
-reach(node, r) AS (
-    SELECT doc_id, doc_id FROM documents
-    UNION
-    SELECT reach.node, e.dst FROM reach JOIN edges e ON e.src = reach.r
-),
-lab AS (SELECT node AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY node)
+{_min_label_ctes("SELECT doc_id FROM documents", "doc_id", "cluster_id")}
 """
 
 
@@ -184,9 +207,9 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cluster_id = min doc_id in the component (singletons cluster with
     themselves); exactly one canonical row per cluster. The oracle computes
-    the same fixpoint via a DuckDB recursive CTE — an all-pairs reachability
-    walk that is only feasible at oracle scale, which is exactly why the
-    Spark side uses logarithmic-round label propagation instead.
+    the same fixpoint via a DuckDB recursive CTE (``_min_label_ctes``:
+    one-hop min-label rounds until no label changes), while the Spark side
+    uses logarithmic-round label propagation with pointer jumping.
     """
     labels = _cluster_labels(spark, sf_dir)
     w = Window.partitionBy("cluster_id")
@@ -277,12 +300,7 @@ edges AS (
     UNION ALL
     SELECT product_2, product_1 FROM pairs
 ),
-reach(node, r) AS (
-    SELECT id, id FROM nodes
-    UNION
-    SELECT reach.node, e.dst FROM reach JOIN edges e ON e.src = reach.r
-),
-lab AS (SELECT node AS partkey, MIN(r) AS group_id FROM reach GROUP BY node)
+{_min_label_ctes("SELECT id FROM nodes", "partkey", "group_id")}
 SELECT partkey, group_id,
        COUNT(*) OVER (PARTITION BY group_id) AS group_size
 FROM lab
@@ -712,12 +730,7 @@ edges AS (
     UNION ALL
     SELECT vec_2, vec_1 FROM lshp
 ),
-reach(node, r) AS (
-    SELECT vec_id, vec_id FROM embeddings
-    UNION
-    SELECT reach.node, ed.dst FROM reach JOIN edges ed ON ed.src = reach.r
-),
-lab AS (SELECT node AS vec_id, MIN(r) AS cluster_id FROM reach GROUP BY node)
+{_min_label_ctes("SELECT vec_id FROM embeddings", "vec_id", "cluster_id")}
 SELECT vec_id, cluster_id,
        COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
        vec_id = cluster_id AS is_kept
@@ -740,8 +753,8 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     components run log-round label propagation on the (sparse) pair set;
     the survivor rule is one window over cluster_id. The oracle chains the
     SAME generated LSH CTEs (shared via ``_emb_lsh_adaptive_ctes`` — one
-    source of truth) into a recursive reachability walk, feasible only at
-    oracle scale, which is the point of the iterative Spark side.
+    source of truth) into the shared min-label recursion
+    (``_min_label_ctes``).
     """
     from databricks_spark_sql_challenge1_spark.operators.dedup import (
         dedup_embedding_lsh_adaptive,

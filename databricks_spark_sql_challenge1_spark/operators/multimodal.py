@@ -2,18 +2,25 @@
 north-star training-data pipeline ops).
 
 Images/audio/video are opaque ``binary`` columns + typed metadata structs.
-Codec decode requiring external libraries (MP3/H.264-class) is STUBBED
-(deterministic fake bytes, or ``NotImplementedError`` when a real codec is
-demanded). Everything else is fully implemented from scratch: raw kernels
+Three vectorized STUB kernels (``extract_media_features``,
+``resize_media``, ``sample_frames``) stand in for decoders that would need
+external libraries (``NotImplementedError`` when a real codec is
+demanded). Everything else is implemented from scratch: raw kernels
 (``pcm_audio_stats`` vectorized DSP, ``image_thumbnail_stats`` strided
-resize), real containers (WAV/RIFF chunk walk, BMP headers), and three
-genuinely COMPRESSED codec families — PNG (stdlib zlib/DEFLATE + filter
-reconstruction + per-chunk CRC-32), GIF87a (spec LZW written from scratch:
-variable code width, KwKwK, table freeze), and baseline-sequential JPEG
-(ITU T.81: 8x8 DCT, Annex K Huffman, DC prediction, AC RLE, byte
-stuffing — the first LOSSY family, r8). In all cases the Spark-side
-plumbing is real and tested: schema, Arrow batch shape, ``mapInPandas``
-signatures, partition-preserving dataflow.
+resize), real containers (WAV/RIFF chunk walk, BMP headers), and seven
+COMPRESSED codec families, each an encode → decode round trip checked
+against a DuckDB oracle — PNG (zlib/DEFLATE, filters, CRC-32), GIF87a
+(LZW), baseline JPEG (ITU T.81 DCT + Huffman, the first LOSSY family),
+FLAC (Rice + fixed predictor), the MP3 frame layer (ISO 11172-3 headers +
+CRC-16), MJPEG-in-AVI, and the H.264 Annex-B NAL layer (Exp-Golomb,
+emulation prevention).
+
+The plumbing exists once: ``_map_rows`` is the row-local Arrow map every
+kernel runs through (per-batch row build, doc-id error prefix),
+``_codec_witness`` is the subset → spread → map → sort prologue of the six
+sampled codec witnesses, ``_BitWriter``/``_BitReader`` are the one
+MSB-first bit I/O pair (JPEG stuffing and H.264 emulation prevention are
+separate byte passes), and ``_crc8``/``_crc16`` the one CRC runner.
 """
 
 from __future__ import annotations
@@ -39,6 +46,72 @@ from databricks_spark_sql_challenge1_spark.catalog import load_table
 from databricks_spark_sql_challenge1_spark.registry import query
 
 REAL_CODECS_AVAILABLE = False  # no PIL/ffmpeg in this container
+
+MEDIA_SCHEMA = StructType(
+    [StructField("doc_id", LongType()), StructField("media_bytes", BinaryType())]
+)
+
+
+def _map_rows(df: DataFrame, fn, schema: StructType) -> DataFrame:
+    """Row-local Arrow map over a two-column ``(doc_id, text|media_bytes)``
+    frame: ``fn(payload) -> dict`` maps one payload's bytes to the values
+    of ``schema``'s non-``doc_id`` fields. A ``text`` column is read
+    through ``_witness_text_bytes`` (outside the error wrapper, so its
+    convention error keeps its own single ``doc N:`` prefix); any
+    ValueError ``fn`` raises is re-raised prefixed with the document id.
+
+    Arrow iterator contract: a partition may arrive as many batches (the
+    strategy contract runs ``arrow.maxRecordsPerBatch=7``), and every
+    kernel is row-local, so each batch maps on its own."""
+    src = df.columns[1]
+    # Chosen here: a module-level function in the kernel's closure pickles by
+    # reference and makes each Python worker import the package (~0.2 s).
+    if src == "text":
+        to_bytes = _witness_text_bytes
+    else:
+        def to_bytes(_doc_id, blob) -> bytes:
+            return bytes(blob)
+
+    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = {k.name: [] for k in schema.fields}
+            for doc_id, value in zip(pdf["doc_id"], pdf[src]):
+                payload = to_bytes(doc_id, value)
+                try:
+                    out = fn(payload)
+                except ValueError as exc:
+                    raise ValueError(f"doc {doc_id}: {exc}") from exc
+                rows["doc_id"].append(doc_id)
+                for key, val in out.items():
+                    rows[key].append(val)
+            yield pd.DataFrame(rows)
+
+    return df.mapInPandas(_kernel, schema)
+
+
+def _codec_witness(
+    spark: SparkSession, sf_dir: str, residue: tuple, kernel, schema: StructType
+) -> DataFrame:
+    """The codec-witness prologue: the ``doc_id % m == r`` document subset
+    (``residue = (m, r)``), one spread across the cores, ``kernel`` as a
+    row-local ``_map_rows`` over the text, and the presentation sort.
+
+    Each witness bounds its corpus share the way a production pipeline
+    samples a codec-validation pass, since every kernel is a sequential
+    per-payload Python loop. The spread is a small-file artifact: the
+    fixture's documents table is a single parquet split, which would pin
+    the CPU-bound kernel to one core, and one row-shuffle on ``doc_id``
+    buys ``defaultParallelism``-way decode. At real corpus scale the input
+    is many splits and the spread is a no-op to remove."""
+    m, r = residue
+    docs = (
+        load_table(spark, sf_dir, "documents", spread=True)
+        .where(F.col("doc_id") % m == r)
+        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    )
+    return _map_rows(docs.select("doc_id", "text"), kernel, schema).orderBy(
+        F.col("doc_id").asc()
+    )
 
 
 def attach_fake_media(docs: DataFrame) -> DataFrame:
@@ -282,35 +355,23 @@ def pcm_audio_stats(media: DataFrame) -> DataFrame:
     """REAL vectorized DSP kernel (not a stub): interpret the binary payload
     as unsigned 8-bit PCM centered at 128 and compute RMS, peak amplitude,
     and zero-crossing count per clip — numpy over Arrow batches, the kernel
-    a raw-audio featurizer actually runs. Only *compressed* codecs (JPEG/
-    MP3/H.264) remain stubbed in this container; raw formats are fully
-    implemented. All intermediate sums are integers < 2^53, so the numbers
-    are bit-exact across engines regardless of summation order."""
+    a raw-audio featurizer actually runs. All intermediate sums are
+    integers < 2^53, so the numbers are bit-exact across engines
+    regardless of summation order."""
     import math
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "n_samples": [],
-                "rms": [],
-                "peak": [],
-                "zero_crossings": [],
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media_bytes"]):
-                x = np.frombuffer(bytes(blob), np.uint8).astype(np.int64) - 128
-                n = len(x)
-                ss = int((x * x).sum())
-                rows["doc_id"].append(doc_id)
-                rows["n_samples"].append(n)
-                rows["rms"].append(round(math.sqrt(ss / n), 6) if n else 0.0)
-                rows["peak"].append(int(np.abs(x).max()) if n else 0)
-                rows["zero_crossings"].append(
-                    int(((x[:-1] * x[1:]) < 0).sum()) if n > 1 else 0
-                )
-            yield pd.DataFrame(rows)
+    def _stats(raw: bytes) -> dict:
+        x = np.frombuffer(raw, np.uint8).astype(np.int64) - 128
+        n = len(x)
+        ss = int((x * x).sum())
+        return {
+            "n_samples": n,
+            "rms": round(math.sqrt(ss / n), 6) if n else 0.0,
+            "peak": int(np.abs(x).max()) if n else 0,
+            "zero_crossings": int(((x[:-1] * x[1:]) < 0).sum()) if n > 1 else 0,
+        }
 
-    return media.mapInPandas(_stats, PCM_STATS_SCHEMA)
+    return _map_rows(media.select("doc_id", "media_bytes"), _stats, PCM_STATS_SCHEMA)
 
 
 @query(
@@ -343,9 +404,7 @@ def multimodal_audio_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload (fixture stand-in: UTF-8 text bytes, pure ASCII — verified, so
     DuckDB's per-character ord() replays the exact byte stream), then a
     vectorized numpy kernel computes per-clip RMS / peak / zero-crossings
-    over Arrow batches. Demonstrates that the multimodal surface's honest
-    limitation is ONLY compressed codecs: uncompressed formats run real
-    signal-processing kernels through the same mapInPandas plumbing.
+    over Arrow batches (``_map_rows``).
 
     Scale shape: narrow 1:1 Arrow-batched map (partition-preserving, no
     shuffle); integer-exact math makes the oracle comparison bit-for-bit
@@ -383,39 +442,30 @@ def image_thumbnail_stats(media: DataFrame) -> DataFrame:
     division ((i·h)//T, (j·w)//T), so every number is integer-exact across
     engines."""
 
-    def _thumb(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _thumb(raw: bytes) -> dict:
         T = THUMB_SIZE
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "img_w": [],
-                "img_h": [],
-                "thumb_sum": [],
-                "thumb_mean": [],
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media_bytes"]):
-                b = np.frombuffer(bytes(blob), np.uint8)
-                n = len(b)
-                if n == 0:
-                    # empty payload: 0x0 raster, zero checksum (matches the
-                    # oracle's CASE; the PCM kernel guards n==0 the same way)
-                    w = h = 0
-                    s = 0
-                else:
-                    w = int(np.floor(np.sqrt(n)))
-                    h = n // w
-                    img = b[: w * h].reshape(h, w)
-                    ri = (np.arange(T) * h) // T
-                    ci = (np.arange(T) * w) // T
-                    s = int(img[ri][:, ci].astype(np.int64).sum())
-                rows["doc_id"].append(doc_id)
-                rows["img_w"].append(w)
-                rows["img_h"].append(h)
-                rows["thumb_sum"].append(s)
-                rows["thumb_mean"].append(round(s / (T * T), 6))
-            yield pd.DataFrame(rows)
+        b = np.frombuffer(raw, np.uint8)
+        n = len(b)
+        if n == 0:
+            # empty payload: 0x0 raster, zero checksum (matches the
+            # oracle's CASE; the PCM kernel guards n==0 the same way)
+            w = h = 0
+            s = 0
+        else:
+            w = int(np.floor(np.sqrt(n)))
+            h = n // w
+            img = b[: w * h].reshape(h, w)
+            ri = (np.arange(T) * h) // T
+            ci = (np.arange(T) * w) // T
+            s = int(img[ri][:, ci].astype(np.int64).sum())
+        return {
+            "img_w": w,
+            "img_h": h,
+            "thumb_sum": s,
+            "thumb_mean": round(s / (T * T), 6),
+        }
 
-    return media.mapInPandas(_thumb, THUMB_SCHEMA)
+    return _map_rows(media.select("doc_id", "media_bytes"), _thumb, THUMB_SCHEMA)
 
 
 @query(
@@ -450,8 +500,7 @@ def multimodal_image_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw-image thumbnailing, end to end REAL: treat each payload as a
     grayscale raster, nearest-neighbor-downsample to an 8×8 thumbnail via
     numpy strided indexing over Arrow batches, and emit per-image checksum
-    + mean — the image companion to ``multimodal_audio_pcm_stats`` in
-    narrowing the multimodal stub to compressed codecs only. The oracle
+    + mean — the image companion to ``multimodal_audio_pcm_stats``. The oracle
     replays the identical integer sample-index arithmetic over the ASCII
     payload, so the comparison is bit-for-bit.
 
@@ -462,6 +511,36 @@ def multimodal_image_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True)
     media = attach_fake_media(docs).select("doc_id", "media_bytes")
     return image_thumbnail_stats(media).orderBy(F.col("doc_id").asc())
+
+
+def _gray_raster(raw: bytes, width: int, rows: int) -> "np.ndarray":
+    """``raw`` row-major in a zero-padded (rows, width) uint8 raster — the
+    PNG/GIF/JPEG/AVI witnesses' pixel convention (pixel i = byte i)."""
+    img = np.zeros((rows, width), np.uint8)
+    img.reshape(-1)[: len(raw)] = np.frombuffer(raw, np.uint8)
+    return img
+
+
+def _corrupt_stream_is_valueerror(codec: str):
+    """Decoder boundary: the structural guards inside each decoder raise
+    specific ValueErrors, and this normalizes whatever low-level exception
+    a byte-flipped stream can still reach below them, so every corrupt
+    input surfaces as ValueError — the contract ``_map_rows`` prefixes
+    with the doc id (fuzzed per codec in tests/test_properties.py)."""
+    import functools
+    import struct
+
+    def wrap(decode):
+        @functools.wraps(decode)
+        def checked(blob: bytes):
+            try:
+                return decode(blob)
+            except (IndexError, KeyError, OverflowError, struct.error) as exc:
+                raise ValueError(f"corrupt {codec}: {type(exc).__name__}") from exc
+
+        return checked
+
+    return wrap
 
 
 def _witness_text_bytes(doc_id, text: str) -> bytes:
@@ -495,11 +574,10 @@ def _witness_text_bytes(doc_id, text: str) -> bytes:
 
 # --- real container formats: WAV (RIFF) and BMP, pure numpy ----------------
 #
-# VERDICT r6 "Next round" #5: the honest multimodal stub is COMPRESSED
-# codecs only. Uncompressed container formats need no codec library —
-# WAV/RIFF and BMP are header arithmetic + raw sample/pixel payloads, so
-# both the encoder and a real chunk-walking parser are implementable in
-# numpy/struct. Each query below round-trips fixture bytes through a
+# Uncompressed container formats need no codec library — WAV/RIFF and BMP
+# are header arithmetic + raw sample/pixel payloads, so both the encoder
+# and a real chunk-walking parser are implementable in numpy/struct.
+# Each query below round-trips fixture bytes through a
 # genuine container (encode -> binary column -> parse) and the oracle
 # replays the header-field arithmetic integer-exactly.
 
@@ -525,27 +603,19 @@ def attach_wav_media(docs: DataFrame) -> DataFrame:
     a standards-valid WAV any audio tool could open."""
     import struct
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _encode(raw: bytes) -> dict:
         rate = WAV_SAMPLE_RATE
-        for pdf in batches:
-            out = {"doc_id": [], "media_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = _witness_text_bytes(doc_id, text)
-                x = (np.frombuffer(raw, np.uint8).astype(np.int16) - 128) * 256
-                data = x.astype("<i2").tobytes()
-                hdr = struct.pack(
-                    "<4sI4s4sIHHIIHH4sI",
-                    b"RIFF", 36 + len(data), b"WAVE",
-                    b"fmt ", 16, 1, 1, rate, rate * 2, 2, 16,
-                    b"data", len(data),
-                )
-                out["doc_id"].append(doc_id)
-                out["media_bytes"].append(hdr + data)
-            yield pd.DataFrame(out)
+        x = (np.frombuffer(raw, np.uint8).astype(np.int16) - 128) * 256
+        data = x.astype("<i2").tobytes()
+        hdr = struct.pack(
+            "<4sI4s4sIHHIIHH4sI",
+            b"RIFF", 36 + len(data), b"WAVE",
+            b"fmt ", 16, 1, 1, rate, rate * 2, 2, 16,
+            b"data", len(data),
+        )
+        return {"media_bytes": hdr + data}
 
-    return docs.select("doc_id", "text").mapInPandas(
-        _encode, "doc_id long, media_bytes binary"
-    )
+    return _map_rows(docs.select("doc_id", "text"), _encode, MEDIA_SCHEMA)
 
 
 def parse_wav_stats(media: DataFrame) -> DataFrame:
@@ -556,45 +626,41 @@ def parse_wav_stats(media: DataFrame) -> DataFrame:
     signal stats. Every output is integer-exact (sums < 2^53)."""
     import struct
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in WAV_STATS_SCHEMA.fields}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media_bytes"]):
-                b = bytes(blob)
-                if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                    raise ValueError(f"doc {doc_id}: not a RIFF/WAVE file")
-                riff_size = struct.unpack_from("<I", b, 4)[0]
-                pos, rate, data = 12, None, None
-                while pos + 8 <= len(b):
-                    cid, csize = struct.unpack_from("<4sI", b, pos)
-                    body = b[pos + 8 : pos + 8 + csize]
-                    if len(body) < csize:
-                        raise ValueError(f"doc {doc_id}: truncated RIFF chunk")
-                    if cid == b"fmt ":
-                        if len(body) < 8:
-                            raise ValueError(f"doc {doc_id}: short fmt chunk")
-                        fmt_tag, channels, rate = struct.unpack_from(
-                            "<HHI", body, 0
-                        )
-                        if fmt_tag != 1 or channels != 1:
-                            raise ValueError("expected mono PCM")
-                    elif cid == b"data":
-                        data = body
-                    pos += 8 + csize + (csize & 1)  # RIFF word alignment
-                if rate is None or data is None:
-                    raise ValueError("missing fmt/data chunk")
-                x = np.frombuffer(data, "<i2").astype(np.int64)
-                n = len(x)
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(n)
-                rows["riff_size"].append(riff_size)
-                rows["duration_us"].append(n * 1_000_000 // rate)
-                rows["peak"].append(int(np.abs(x).max()) if n else 0)
-                rows["sample_sum"].append(int(x.sum()))
-            yield pd.DataFrame(rows)
+    def _parse(b: bytes) -> dict:
+        if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+            raise ValueError("not a RIFF/WAVE file")
+        riff_size = struct.unpack_from("<I", b, 4)[0]
+        pos, rate, data = 12, None, None
+        while pos + 8 <= len(b):
+            cid, csize = struct.unpack_from("<4sI", b, pos)
+            body = b[pos + 8 : pos + 8 + csize]
+            if len(body) < csize:
+                raise ValueError("truncated RIFF chunk")
+            if cid == b"fmt ":
+                if len(body) < 8:
+                    raise ValueError("short fmt chunk")
+                fmt_tag, channels, rate = struct.unpack_from("<HHI", body, 0)
+                if fmt_tag != 1 or channels != 1:
+                    raise ValueError("expected mono PCM")
+            elif cid == b"data":
+                data = body
+            pos += 8 + csize + (csize & 1)  # RIFF word alignment
+        if rate is None or data is None:
+            raise ValueError("missing fmt/data chunk")
+        x = np.frombuffer(data, "<i2").astype(np.int64)
+        n = len(x)
+        return {
+            "sample_rate": rate,
+            "n_samples": n,
+            "riff_size": riff_size,
+            "duration_us": n * 1_000_000 // rate,
+            "peak": int(np.abs(x).max()) if n else 0,
+            "sample_sum": int(x.sum()),
+        }
 
-    return media.mapInPandas(_parse, WAV_STATS_SCHEMA)
+    return _map_rows(
+        media.select("doc_id", "media_bytes"), _parse, WAV_STATS_SCHEMA
+    )
 
 
 @query(
@@ -657,33 +723,23 @@ def attach_bmp_media(docs: DataFrame) -> DataFrame:
     padding, under genuine BITMAPFILEHEADER + BITMAPINFOHEADER structs."""
     import struct
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "media_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = np.frombuffer(_witness_text_bytes(doc_id, text), np.uint8)
-                n = len(raw)
-                w = int(np.floor(np.sqrt(n)))
-                h = n // w if w else 0
-                stride = (3 * w + 3) & ~3
-                img = raw[: w * h].reshape(h, w)
-                rows = np.zeros((h, stride), np.uint8)
-                rows[:, : 3 * w] = np.repeat(img, 3, axis=1)  # gray -> BGR
-                pixels = rows[::-1].tobytes()  # bottom-up row order
-                file_size = 54 + stride * h
-                hdr = struct.pack(
-                    "<2sIHHI", b"BM", file_size, 0, 0, 54
-                ) + struct.pack(
-                    "<IiiHHIIiiII",
-                    40, w, h, 1, 24, 0, stride * h, 2835, 2835, 0, 0,
-                )
-                out["doc_id"].append(doc_id)
-                out["media_bytes"].append(hdr + pixels)
-            yield pd.DataFrame(out)
+    def _encode(payload: bytes) -> dict:
+        raw = np.frombuffer(payload, np.uint8)
+        n = len(raw)
+        w = int(np.floor(np.sqrt(n)))
+        h = n // w if w else 0
+        stride = (3 * w + 3) & ~3
+        img = raw[: w * h].reshape(h, w)
+        rows = np.zeros((h, stride), np.uint8)
+        rows[:, : 3 * w] = np.repeat(img, 3, axis=1)  # gray -> BGR
+        pixels = rows[::-1].tobytes()  # bottom-up row order
+        file_size = 54 + stride * h
+        hdr = struct.pack("<2sIHHI", b"BM", file_size, 0, 0, 54) + struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h, 2835, 2835, 0, 0
+        )
+        return {"media_bytes": hdr + pixels}
 
-    return docs.select("doc_id", "text").mapInPandas(
-        _encode, "doc_id long, media_bytes binary"
-    )
+    return _map_rows(docs.select("doc_id", "text"), _encode, MEDIA_SCHEMA)
 
 
 def parse_bmp_stats(media: DataFrame) -> DataFrame:
@@ -695,36 +751,32 @@ def parse_bmp_stats(media: DataFrame) -> DataFrame:
     malformed encoder cannot sneak past."""
     import struct
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in BMP_STATS_SCHEMA.fields}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media_bytes"]):
-                b = bytes(blob)
-                if len(b) < 54:  # file header (14) + BITMAPINFOHEADER (40)
-                    raise ValueError(f"doc {doc_id}: truncated BMP")
-                magic, file_size, _, _, px_off = struct.unpack_from(
-                    "<2sIHHI", b, 0
-                )
-                if magic != b"BM" or file_size != len(b):
-                    raise ValueError(f"doc {doc_id}: bad BMP header")
-                hdr_size, w, h, _, bpp = struct.unpack_from("<IiiHH", b, 14)
-                if hdr_size != 40 or bpp != 24:
-                    raise ValueError("expected BITMAPINFOHEADER / 24 bpp")
-                if w < 0 or h < 0:
-                    raise ValueError(f"doc {doc_id}: negative BMP dims")
-                stride = (3 * w + 3) & ~3
-                arr = np.frombuffer(b, np.uint8, stride * h, px_off)
-                img = arr.reshape(h, stride)[::-1, : 3 * w : 3]  # un-pad,
-                # un-flip, blue channel == gray
-                rows["doc_id"].append(doc_id)
-                rows["img_w"].append(w)
-                rows["img_h"].append(h)
-                rows["file_size"].append(file_size)
-                rows["pixel_sum"].append(int(img.astype(np.int64).sum()))
-                rows["top_left"].append(int(img[0, 0]) if w and h else 0)
-            yield pd.DataFrame(rows)
+    def _parse(b: bytes) -> dict:
+        if len(b) < 54:  # file header (14) + BITMAPINFOHEADER (40)
+            raise ValueError("truncated BMP")
+        magic, file_size, _, _, px_off = struct.unpack_from("<2sIHHI", b, 0)
+        if magic != b"BM" or file_size != len(b):
+            raise ValueError("bad BMP header")
+        hdr_size, w, h, _, bpp = struct.unpack_from("<IiiHH", b, 14)
+        if hdr_size != 40 or bpp != 24:
+            raise ValueError("expected BITMAPINFOHEADER / 24 bpp")
+        if w < 0 or h < 0:
+            raise ValueError("negative BMP dims")
+        stride = (3 * w + 3) & ~3
+        arr = np.frombuffer(b, np.uint8, stride * h, px_off)
+        # un-pad, un-flip; the blue channel is the gray value
+        img = arr.reshape(h, stride)[::-1, : 3 * w : 3]
+        return {
+            "img_w": w,
+            "img_h": h,
+            "file_size": file_size,
+            "pixel_sum": int(img.astype(np.int64).sum()),
+            "top_left": int(img[0, 0]) if w and h else 0,
+        }
 
-    return media.mapInPandas(_parse, BMP_STATS_SCHEMA)
+    return _map_rows(
+        media.select("doc_id", "media_bytes"), _parse, BMP_STATS_SCHEMA
+    )
 
 
 @query(
@@ -759,9 +811,8 @@ def multimodal_bmp_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoder, and emit dimensions + integer-exact pixel stats. The oracle
     replays the spec arithmetic — file_size = 54 + stride·h with the
     4-byte row padding rule — so encoder, parser, and spec must all agree
-    for the hash to match. Together with ``multimodal_wav_parse`` this
-    narrows the container's honest multimodal stub to genuinely
-    COMPRESSED codecs (JPEG/MP3/H.264) only.
+    for the hash to match. The uncompressed image companion to
+    ``multimodal_wav_parse``.
 
     Scale shape: two narrow 1:1 Arrow-batched maps; only the presentation
     sort shuffles.
@@ -811,11 +862,8 @@ def png_encode_gray(raw: bytes) -> bytes:
     import zlib
 
     w = PNG_WIDTH
-    arr = np.frombuffer(raw, np.uint8)
-    n = len(arr)
-    h = (n + w - 1) // w
-    img = np.zeros((h, w), np.uint8)
-    img.reshape(-1)[:n] = arr
+    h = -(-len(raw) // w)
+    img = _gray_raster(raw, w, h)
     scan = bytearray()
     for r in range(h):
         row = img[r]
@@ -842,18 +890,10 @@ def attach_png_media(docs: DataFrame) -> DataFrame:
     no external codec lib is needed). Narrow 1:1 Arrow map over the pure
     ``png_encode_gray`` kernel; any PNG tool can open the output."""
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "media_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                out["doc_id"].append(doc_id)
-                out["media_bytes"].append(
-                    png_encode_gray(_witness_text_bytes(doc_id, text))
-                )
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(
-        _encode, "doc_id long, media_bytes binary"
+    return _map_rows(
+        docs.select("doc_id", "text"),
+        lambda raw: {"media_bytes": png_encode_gray(raw)},
+        MEDIA_SCHEMA,
     )
 
 
@@ -935,20 +975,9 @@ def parse_png_stats(media: DataFrame) -> DataFrame:
     ``png_decode_stats`` kernel; emits dimensions + integer-exact pixel
     stats per blob."""
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in PNG_STATS_SCHEMA.fields}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media_bytes"]):
-                try:
-                    stats = png_decode_stats(blob)
-                except ValueError as exc:
-                    raise ValueError(f"doc {doc_id}: {exc}") from exc
-                rows["doc_id"].append(doc_id)
-                for k, v in stats.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_parse, PNG_STATS_SCHEMA)
+    return _map_rows(
+        media.select("doc_id", "media_bytes"), png_decode_stats, PNG_STATS_SCHEMA
+    )
 
 
 @query(
@@ -982,9 +1011,9 @@ def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pixel i = byte i of the text, zero-padded to 32-wide rows), so a
     decoder bug anywhere in the chain (chunk walk, CRC, inflate,
     de-filter) breaks the hash; ``sub_rows`` = h//2 proves the Sub-filter
-    reconstruction path actually ran. This retires the "no compressed
-    codec" caveat from the honest multimodal stub for the DEFLATE family;
-    only lossy codecs (JPEG/MP3/H.264) remain out of container reach.
+    reconstruction path actually ran. The first compressed family; the
+    six after it (GIF, JPEG, FLAC, MP3, AVI, H.264) share
+    ``_codec_witness``.
 
     Scale shape: two narrow 1:1 Arrow-batched maps (encode, decode) —
     no shuffle except the presentation sort; per-row work is linear in
@@ -1102,11 +1131,8 @@ def gif_encode_gray(raw: bytes) -> bytes:
     import struct
 
     w = GIF_WIDTH
-    arr = np.frombuffer(raw, np.uint8)
-    n = len(arr)
-    h = (n + w - 1) // w
-    img = np.zeros((h, w), np.uint8)
-    img.reshape(-1)[:n] = arr
+    h = -(-len(raw) // w)
+    img = _gray_raster(raw, w, h)
     gif = bytearray(b"GIF87a")
     gif += struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT: 256 entries
     gif += bytes(v for i in range(256) for v in (i, i, i))  # gray ramp
@@ -1135,7 +1161,7 @@ def gif_decode_stats(blob: bytes) -> dict:
 
     def at(i: int) -> int:
         # every header/walk byte read goes through this guard so a
-        # truncated blob raises ValueError (carried by _parse's doc-id
+        # truncated blob raises ValueError (carried by _map_rows's doc-id
         # wrapper), never a bare IndexError (ADVICE r7)
         if i >= len(b):
             raise ValueError("truncated GIF")
@@ -1231,50 +1257,16 @@ def multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats from the deterministic raster definition, so any bug in the
     bit packing, sub-block walk, or LZW tables breaks the hash.
 
-    Two deliberate scale choices: (1) the witness runs on the
+    Scale shape: the ``_codec_witness`` prologue on the
     doc_id % {GIF_SUBSET_MOD} == 0 subset — LZW is an inherently
-    sequential per-payload loop (pure Python, no vectorizing it), so the
-    witness bounds its corpus share the way a production pipeline samples
-    a codec-validation pass; (2) the encode map REPARTITIONS the scan
-    first — a single parquet file arrives as one partition locally, and a
-    CPU-bound per-row kernel is exactly the case where spreading rows
-    across cores is worth one exchange (the decode stage inherits the
-    layout, so it's one exchange total).
+    sequential per-payload loop (pure Python, no vectorizing it).
     """
-    docs = (
-        load_table(spark, sf_dir, "documents", spread=True)
-        .where(F.col("doc_id") % GIF_SUBSET_MOD == 0)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "media_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                out["doc_id"].append(doc_id)
-                out["media_bytes"].append(
-                    gif_encode_gray(_witness_text_bytes(doc_id, text))
-                )
-            yield pd.DataFrame(out)
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in GIF_STATS_SCHEMA.fields}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media_bytes"]):
-                try:
-                    stats = gif_decode_stats(blob)
-                except ValueError as exc:
-                    raise ValueError(f"doc {doc_id}: {exc}") from exc
-                rows["doc_id"].append(doc_id)
-                for k, v in stats.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    media = docs.select("doc_id", "text").mapInPandas(
-        _encode, "doc_id long, media_bytes binary"
-    )
-    return media.mapInPandas(_parse, GIF_STATS_SCHEMA).orderBy(
-        F.col("doc_id").asc()
+    return _codec_witness(
+        spark,
+        sf_dir,
+        (GIF_SUBSET_MOD, 0),
+        lambda raw: gif_decode_stats(gif_encode_gray(raw)),
+        GIF_STATS_SCHEMA,
     )
 
 
@@ -1394,27 +1386,109 @@ def _jpeg_quantize_blocks(raster: "np.ndarray"):
 
 
 class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
+    """MSB-first bit writer: the JPEG entropy segment, FLAC STREAMINFO and
+    frames, and H.264 RBSPs. Byte-level escapes are separate passes over
+    ``getvalue()`` (``_jpeg_stuff``, ``_h264_emulation_prevent``)."""
+
+    def __init__(self) -> None:
+        self.buf = bytearray()
         self.acc = 0
         self.nbits = 0
 
-    def write(self, value: int, length: int) -> None:
-        if not length:
-            return
-        self.acc = (self.acc << length) | (value & ((1 << length) - 1))
-        self.nbits += length
+    def write(self, value: int, bits: int) -> None:
+        self.acc = (self.acc << bits) | (value & ((1 << bits) - 1))
+        self.nbits += bits
         while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:  # byte stuffing
-                self.out.append(0x00)
             self.nbits -= 8
+            self.buf.append((self.acc >> self.nbits) & 0xFF)
         self.acc &= (1 << self.nbits) - 1
 
-    def flush(self) -> None:
-        if self.nbits:
-            self.write(0x7F, 8 - self.nbits)  # pad with 1s per spec
+    def write_unary(self, q: int) -> None:
+        """q zero bits then a one bit (the FLAC Rice quotient)."""
+        while q >= 32:  # bound per-call shift growth on pathological k
+            self.write(0, 32)
+            q -= 32
+        self.write(1, q + 1)
+
+    def ue(self, val: int) -> None:
+        """Exp-Golomb ue(v) (H.264 §9.1): n-1 zeros, then val+1 in n bits."""
+        code = val + 1
+        n = code.bit_length()
+        self.write(0, n - 1)
+        self.write(code, n)
+
+    def se(self, val: int) -> None:
+        """se(v) (§9.1.1): v > 0 -> codeNum 2v-1, v <= 0 -> -2v."""
+        self.ue(2 * val - 1 if val > 0 else -2 * val)
+
+    def align(self, pad_bit: int = 0) -> None:
+        """Pad to a byte boundary with ``pad_bit`` (JPEG pads with 1s)."""
+        self.write(-pad_bit, -self.nbits % 8)
+
+    def getvalue(self) -> bytes:
+        assert self.nbits == 0, "unaligned bitstream"
+        return bytes(self.buf)
+
+
+class _BitReader:
+    """MSB-first bit reader from byte ``start`` of ``data``, the inverse of
+    ``_BitWriter``. Every read past the end raises ValueError."""
+
+    def __init__(self, data: bytes, start: int = 0) -> None:
+        self.data = data
+        self.pos = start  # next byte to load
+        self.acc = 0
+        self.nbits = 0  # loaded, unread bits (always < 8 between reads)
+
+    def read(self, bits: int) -> int:
+        while self.nbits < bits:
+            if self.pos >= len(self.data):
+                raise ValueError("bitstream truncated")
+            self.acc = (self.acc << 8) | self.data[self.pos]
+            self.pos += 1
+            self.nbits += 8
+        self.nbits -= bits
+        val = (self.acc >> self.nbits) & ((1 << bits) - 1)
+        self.acc &= (1 << self.nbits) - 1
+        return val
+
+    def read_unary(self) -> int:
+        q = 0
+        while not self.read(1):
+            q += 1
+            if q > 1 << 20:
+                raise ValueError("unterminated unary run")
+        return q
+
+    def ue(self) -> int:
+        zeros = 0
+        while not self.read(1):
+            zeros += 1
+            if zeros > 31:
+                raise ValueError("Exp-Golomb prefix overrun")
+        return (1 << zeros) - 1 + self.read(zeros)
+
+    def se(self) -> int:
+        code = self.ue()
+        return (code + 1) // 2 if code % 2 else -(code // 2)
+
+    def align(self) -> int:
+        """Skip to the next byte boundary (``pos`` is then the byte
+        offset); returns the skipped pad bits."""
+        return self.read(self.nbits)
+
+
+def _jpeg_stuff(seg: bytes) -> bytes:
+    """T.81 byte stuffing: a 0x00 after every 0xFF of the entropy segment."""
+    return seg.replace(b"\xff", b"\xff\x00")
+
+
+def _jpeg_unstuff(seg: bytes) -> bytes:
+    """Inverse of ``_jpeg_stuff``. A 0xFF not followed by 0x00 is a marker,
+    which cannot occur inside this encoder's scan."""
+    if seg.count(b"\xff") != seg.count(b"\xff\x00"):
+        raise ValueError("unexpected marker in entropy segment")
+    return seg.replace(b"\xff\x00", b"\xff")
 
 
 def _jpeg_magnitude(v: int):
@@ -1426,18 +1500,21 @@ def _jpeg_magnitude(v: int):
     return size, v if v > 0 else v + (1 << size) - 1
 
 
+def _jpeg_raster(payload: bytes):
+    """(raster, true_h): the payload as a JPEG_WIDTH-wide raster of
+    ceil(n/32) rows (at least one), zero-padded to the 8-row MCU
+    boundary."""
+    true_h = max(1, -(-len(payload) // JPEG_WIDTH))
+    return _gray_raster(payload, JPEG_WIDTH, (true_h + 7) // 8 * 8), true_h
+
+
 def jpeg_encode_gray(payload: bytes) -> bytes:
     """Encode payload bytes as a baseline sequential JFIF/JPEG: pixel i =
     byte i of a JPEG_WIDTH-wide raster (zero-padded), SOF0 records the TRUE
     height ceil(n/32); rows are zero-padded to the 8-row MCU boundary."""
     import struct
 
-    n = len(payload)
-    true_h = max(1, (n + JPEG_WIDTH - 1) // JPEG_WIDTH)
-    pad_h = (true_h + 7) // 8 * 8
-    raster = np.zeros((pad_h, JPEG_WIDTH), np.uint8)
-    flat = raster.reshape(-1)
-    flat[:n] = np.frombuffer(payload, np.uint8)
+    raster, true_h = _jpeg_raster(payload)
     qblocks = _jpeg_quantize_blocks(raster)
 
     bw = _BitWriter()
@@ -1467,7 +1544,7 @@ def jpeg_encode_gray(payload: bytes) -> bytes:
         if last_nz < 63:
             ec, el = _JPEG_AC_CODES[0x00]  # EOB
             bw.write(ec, el)
-    bw.flush()
+    bw.align(1)  # pad with 1s per spec
 
     qtab = bytearray(64)
     for idx, (i, j) in enumerate(_JPEG_ZZ):
@@ -1484,48 +1561,14 @@ def jpeg_encode_gray(payload: bytes) -> bytes:
         out += b"\xFF\xC4" + struct.pack(">HB", 3 + 16 + len(vals), cls)
         out += bytes(bits) + bytes(vals)
     out += b"\xFF\xDA" + struct.pack(">HBBBBBB", 8, 1, 1, 0x00, 0, 63, 0)  # SOS
-    out += bw.out
+    out += _jpeg_stuff(bw.getvalue())
     out += b"\xFF\xD9"  # EOI
     return bytes(out)
 
 
-class _BitReader:
-    """MSB-first entropy-segment reader with 0xFF00 unstuffing."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def read(self, length: int) -> int:
-        while self.nbits < length:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated JPEG entropy segment")
-            byte = self.data[self.pos]
-            self.pos += 1
-            if byte == 0xFF:
-                if self.pos >= len(self.data) or self.data[self.pos] != 0x00:
-                    raise ValueError("unexpected marker in entropy segment")
-                self.pos += 1
-            self.acc = (self.acc << 8) | byte
-            self.nbits += 8
-        self.nbits -= length
-        val = (self.acc >> self.nbits) & ((1 << length) - 1)
-        self.acc &= (1 << self.nbits) - 1
-        return val
-
-
 def _decode_tree(bits, vals):
     """(length, code) -> symbol map for the canonical table."""
-    out, code, idx = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[(length, code)] = vals[idx]
-            code += 1
-            idx += 1
-        code <<= 1
-    return out
+    return {(n, c): sym for sym, (c, n) in _canonical_codes(bits, vals).items()}
 
 
 def _read_symbol(br: _BitReader, tree: dict) -> int:
@@ -1545,30 +1588,16 @@ def _extend(bits: int, size: int) -> int:
     return bits if bits >= (1 << (size - 1)) else bits - (1 << size) + 1
 
 
+@_corrupt_stream_is_valueerror("JPEG")
 def jpeg_decode_gray(blob: bytes):
     """Full baseline JPEG decoder for single-component 8-bit streams:
     marker walk, DQT/DHT/SOF0/SOS parse, Huffman entropy decode with DC
     prediction and RLE/EOB/ZRL, dequantize, IDCT, level shift, crop to the
     SOF dims. Returns (pixels uint8 (h, w), quantized coefficient blocks
     int32 (n, 8, 8)) — the coefficient blocks let callers verify the
-    lossless entropy layer exactly.
-
-    Every corrupt-input failure surfaces as ValueError (the _parse
-    wrapper's contract): structural guards below catch the common cases
-    with specific messages, and the boundary re-raise normalizes whatever
-    low-level exception a byte-flipped stream can still reach (fuzzed:
-    4,000 random 1-3-byte corruptions, zero non-ValueError escapes)."""
-    import struct
-
-    try:
-        return _jpeg_decode_inner(blob)
-    except ValueError:
-        raise
-    except (IndexError, KeyError, OverflowError, struct.error) as exc:
-        raise ValueError(f"corrupt JPEG: {type(exc).__name__}") from exc
-
-
-def _jpeg_decode_inner(blob: bytes):
+    lossless entropy layer exactly. Every corrupt input raises ValueError
+    (fuzzed: 4,000 random 1-3-byte corruptions, zero non-ValueError
+    escapes)."""
     import struct
 
     b = bytes(blob)
@@ -1645,7 +1674,7 @@ def _jpeg_decode_inner(blob: bytes):
     ac_tree = trees[0x10 | (td_ta & 0x0F)]
     pad_h, pad_w = (h + 7) // 8 * 8, (w + 7) // 8 * 8
     n_blocks = (pad_h // 8) * (pad_w // 8)
-    br = _BitReader(scan)
+    br = _BitReader(_jpeg_unstuff(scan))
     qblocks = np.zeros((n_blocks, 8, 8), np.int32)
     prev_dc = 0
     for bi in range(n_blocks):
@@ -1778,58 +1807,44 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
       ``err_le_bound`` — TRUE in the oracle, so a reconstruction blowup
       flips the hash.
 
-    Scale shape: same as the GIF witness — doc_id % {JPEG_SUBSET_MOD} == 1
-    subset (disjoint from GIF's % 4 == 0), one repartition to spread the
-    CPU-bound sequential kernel across cores, two narrow Arrow maps.
+    Scale shape: the ``_codec_witness`` prologue on the
+    doc_id % {JPEG_SUBSET_MOD} == 1 subset (disjoint from GIF's % 4 == 0).
     """
-    docs = (
-        load_table(spark, sf_dir, "documents", spread=True)
-        .where(F.col("doc_id") % JPEG_SUBSET_MOD == 1)
-        .repartition(spark.sparkContext.defaultParallelism)
+    return _codec_witness(
+        spark, sf_dir, (JPEG_SUBSET_MOD, 1), _jpeg_witness_row, JPEG_STATS_SCHEMA
     )
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in JPEG_STATS_SCHEMA.fields}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload = _witness_text_bytes(doc_id, text)
-                try:
-                    blob = jpeg_encode_gray(payload)
-                    px, qb = jpeg_decode_gray(blob)
-                    n = len(payload)
-                    true_h = max(1, (n + JPEG_WIDTH - 1) // JPEG_WIDTH)
-                    pad_h = (true_h + 7) // 8 * 8
-                    raster = np.zeros((pad_h, JPEG_WIDTH), np.uint8)
-                    raster.reshape(-1)[:n] = np.frombuffer(payload, np.uint8)
-                    enc_q = _jpeg_quantize_blocks(raster)
-                    if not np.array_equal(enc_q, qb):
-                        raise ValueError("entropy-layer coefficient mismatch")
-                    if px.shape != (true_h, JPEG_WIDTH):
-                        raise ValueError(f"decoded shape {px.shape}")
-                    err = int(
-                        np.abs(
-                            px.astype(np.int64)
-                            - raster[:true_h, :].astype(np.int64)
-                        ).max()
-                    )
-                    if err > JPEG_MAX_ABS_ERR:
-                        raise ValueError(f"reconstruction error {err}")
-                except ValueError as exc:
-                    raise ValueError(f"doc {doc_id}: {exc}") from exc
-                rows["doc_id"].append(doc_id)
-                rows["img_w"].append(JPEG_WIDTH)
-                rows["img_h"].append(true_h)
-                rows["n_pixels"].append(true_h * JPEG_WIDTH)
-                rows["n_blocks"].append(len(enc_q))
-                rows["dc_sum"].append(int(enc_q[:, 0, 0].sum()))
-                rows["err_le_bound"].append(err <= JPEG_MAX_ABS_ERR)
-            yield pd.DataFrame(rows)
 
-    return (
-        docs.select("doc_id", "text")
-        .mapInPandas(_roundtrip, JPEG_STATS_SCHEMA)
-        .orderBy(F.col("doc_id").asc())
-    )
+def _jpeg_entropy_check(raster: "np.ndarray", px: "np.ndarray", qb) -> int:
+    """The JPEG and AVI witnesses' per-image check. The entropy layer is
+    lossless, so the decoder's quantized coefficient blocks ``qb`` must
+    equal a re-quantization of the source ``raster`` exactly; the decoded
+    pixels ``px`` (the top rows of ``raster``) must lie within
+    JPEG_MAX_ABS_ERR of it. Raises ValueError otherwise; returns the
+    image's quantized-DC sum."""
+    enc_q = _jpeg_quantize_blocks(raster)
+    if not np.array_equal(enc_q, qb):
+        raise ValueError("entropy-layer coefficient mismatch")
+    src = raster[: len(px)].astype(np.int64)
+    err = int(np.abs(px.astype(np.int64) - src).max())
+    if err > JPEG_MAX_ABS_ERR:
+        raise ValueError(f"reconstruction error {err}")
+    return int(enc_q[:, 0, 0].sum())
+
+
+def _jpeg_witness_row(payload: bytes) -> dict:
+    px, qb = jpeg_decode_gray(jpeg_encode_gray(payload))
+    raster, true_h = _jpeg_raster(payload)
+    if px.shape != (true_h, JPEG_WIDTH):
+        raise ValueError(f"decoded shape {px.shape}")
+    return {
+        "img_w": JPEG_WIDTH,
+        "img_h": true_h,
+        "n_pixels": true_h * JPEG_WIDTH,
+        "n_blocks": len(qb),
+        "dc_sum": _jpeg_entropy_check(raster, px, qb),
+        "err_le_bound": True,  # the check raises past the bound
+    }
 
 
 # --------------------------------------------------------------------------
@@ -1864,87 +1879,24 @@ def _crc_table(poly: int, width: int) -> list[int]:
     return table
 
 
-_FLAC_CRC8 = _crc_table(0x07, 8)  # x^8+x^2+x+1, init 0 (FLAC frame header)
-_FLAC_CRC16 = _crc_table(0x8005, 16)  # x^16+x^15+x^2+1, init 0 (FLAC frame)
+_CRC8 = _crc_table(0x07, 8)  # x^8+x^2+x+1 (FLAC frame header)
+_CRC16 = _crc_table(0x8005, 16)  # x^16+x^15+x^2+1 (FLAC frame, MPEG audio)
 
 
 def _crc8(data: bytes) -> int:
     crc = 0
     for b in data:
-        crc = _FLAC_CRC8[crc ^ b]
+        crc = _CRC8[crc ^ b]
     return crc
 
 
-def _crc16(data: bytes) -> int:
-    crc = 0
+def _crc16(data: bytes, init: int = 0) -> int:
+    """CRC-16/0x8005: FLAC frames start at 0, the ISO 11172-3 protection
+    CRC at 0xFFFF."""
+    crc = init
     for b in data:
-        crc = ((crc << 8) & 0xFFFF) ^ _FLAC_CRC16[(crc >> 8) ^ b]
+        crc = ((crc << 8) & 0xFFFF) ^ _CRC16[(crc >> 8) ^ b]
     return crc
-
-
-class _FlacBitWriter:
-    """MSB-first bit packer (FLAC bitstream order)."""
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, bits: int) -> None:
-        self.acc = (self.acc << bits) | (value & ((1 << bits) - 1))
-        self.nbits += bits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_unary(self, q: int) -> None:
-        while q >= 32:  # bound per-call shift growth on pathological k
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zero bits then a one bit
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def getvalue(self) -> bytes:
-        assert self.nbits == 0, "unaligned bitstream"
-        return bytes(self.buf)
-
-
-class _FlacBitReader:
-    """MSB-first bit reader; every premature end raises ValueError."""
-
-    def __init__(self, data: bytes, pos_bytes: int = 0) -> None:
-        self.data = data
-        self.pos = pos_bytes * 8
-
-    def read(self, bits: int) -> int:
-        if self.pos + bits > len(self.data) * 8:
-            raise ValueError("bitstream truncated")
-        out = 0
-        for _ in range(bits):
-            byte = self.data[self.pos >> 3]
-            out = (out << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return out
-
-    def read_unary(self) -> int:
-        q = 0
-        while True:
-            if self.read(1):
-                return q
-            q += 1
-            if q > 1 << 20:
-                raise ValueError("unterminated unary run")
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-    def byte_pos(self) -> int:
-        assert self.pos % 8 == 0
-        return self.pos // 8
 
 
 def _flac_utf8_number(n: int) -> bytes:
@@ -2002,7 +1954,7 @@ def flac_encode(raw: bytes) -> bytes:
     n = len(x)
     md5 = hashlib.md5(x.astype("<i2").tobytes()).digest()
 
-    si = _FlacBitWriter()
+    si = _BitWriter()
     si.write(FLAC_BLOCK, 16)  # min block size
     si.write(FLAC_BLOCK, 16)  # max block size
     si.write(0, 24)  # min frame size (0 = unknown, spec-legal)
@@ -2021,7 +1973,7 @@ def flac_encode(raw: bytes) -> bytes:
         block = x[start : start + FLAC_BLOCK]
         bs = len(block)
         hdr = bytearray()
-        w = _FlacBitWriter()
+        w = _BitWriter()
         w.write(0b11111111111110, 14)  # sync
         w.write(0, 1)  # reserved
         w.write(0, 1)  # fixed blocking strategy
@@ -2035,7 +1987,7 @@ def flac_encode(raw: bytes) -> bytes:
         hdr += bytes([(bs - 1) >> 8, (bs - 1) & 0xFF])
         hdr.append(_crc8(bytes(hdr)))
 
-        fw = _FlacBitWriter()
+        fw = _BitWriter()
         order = 2 if bs > 2 else 0
         fw.write(0, 1)  # subframe padding bit
         fw.write(0b001000 | order, 6)  # SUBFRAME_FIXED, order
@@ -2090,7 +2042,7 @@ def flac_decode_stats(blob: bytes) -> dict:
             break
     if streaminfo is None:
         raise ValueError("missing STREAMINFO")
-    r = _FlacBitReader(streaminfo)
+    r = _BitReader(streaminfo)
     min_bs, max_bs = r.read(16), r.read(16)
     r.read(24), r.read(24)  # min/max frame size (unknown)
     rate = r.read(20)
@@ -2129,7 +2081,7 @@ def flac_decode_stats(blob: bytes) -> dict:
         pos += 1
         if not (0 < bs <= FLAC_BLOCK):
             raise ValueError("bad block size")
-        fr = _FlacBitReader(b, pos)
+        fr = _BitReader(b, pos)
         if fr.read(1):
             raise ValueError("bad subframe padding bit")
         stype = fr.read(6)
@@ -2155,7 +2107,7 @@ def flac_decode_stats(blob: bytes) -> dict:
             u = (q << k) | (fr.read(k) if k else 0)
             res[i] = (u >> 1) ^ -(u & 1)  # un-zigzag
         fr.align()
-        pos = fr.byte_pos()
+        pos = fr.pos
         if pos + 2 > len(b):
             raise ValueError("truncated frame CRC-16")
         if _crc16(b[frame_start:pos]) != (b[pos] << 8 | b[pos + 1]):
@@ -2232,39 +2184,16 @@ def multimodal_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     predictor, the bit packer, or the header arithmetic turns into a
     ValueError or a hash mismatch instead of a silently-wrong stat.
 
-    Scale shape: doc_id % {FLAC_SUBSET_MOD} == 2 subset (the GIF/JPEG
-    witnesses take the other residues), one Arrow-batched mapInPandas
-    kernel. The explicit repartition below is a small-file artifact: the
-    fixture's documents table is a single parquet split, which would pin
-    the (CPU-bound, per-sample bit-level) kernel to one core — one tiny
-    row-shuffle buys 32-way decode parallelism. At 100 TB the input is
-    thousands of splits and the repartition is a no-op to remove.
+    Scale shape: the ``_codec_witness`` prologue on the
+    doc_id % {FLAC_SUBSET_MOD} == 2 subset (the GIF/JPEG witnesses take
+    the other residues).
     """
-    docs = (
-        load_table(spark, sf_dir, "documents", spread=True)
-        .where(F.col("doc_id") % FLAC_SUBSET_MOD == 2)
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    )
-
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in FLAC_STATS_SCHEMA.fields}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                try:
-                    stats = flac_decode_stats(
-                        flac_encode(_witness_text_bytes(doc_id, text))
-                    )
-                except ValueError as exc:
-                    raise ValueError(f"doc {doc_id}: {exc}") from exc
-                rows["doc_id"].append(doc_id)
-                for key, val in stats.items():
-                    rows[key].append(val)
-            yield pd.DataFrame(rows)
-
-    return (
-        docs.select("doc_id", "text")
-        .mapInPandas(_roundtrip, FLAC_STATS_SCHEMA)
-        .orderBy(F.col("doc_id").asc())
+    return _codec_witness(
+        spark,
+        sf_dir,
+        (FLAC_SUBSET_MOD, 2),
+        lambda raw: flac_decode_stats(flac_encode(raw)),
+        FLAC_STATS_SCHEMA,
     )
 
 
@@ -2300,15 +2229,6 @@ _MP3_SR_IDX = 0  # 44.1 kHz
 _MP3_SIDE_LEN = 17  # MPEG-1 single-channel side info
 _MP3_FRAME_LEN = 144 * _MP3_BITRATES[_MP3_BR_IDX] // _MP3_RATES[_MP3_SR_IDX]
 _MP3_CAP = _MP3_FRAME_LEN - 4 - 2 - _MP3_SIDE_LEN  # payload bytes per frame
-
-
-def _mp3_crc16(data: bytes) -> int:
-    """ISO 11172-3 protection CRC: poly 0x8005, init 0xFFFF (FLAC shares
-    the polynomial but starts at 0, hence the separate runner)."""
-    crc = 0xFFFF
-    for byte in data:
-        crc = ((crc << 8) & 0xFFFF) ^ _FLAC_CRC16[((crc >> 8) ^ byte) & 0xFF]
-    return crc
 
 
 def _id3_syncsafe(n: int) -> bytes:
@@ -2351,26 +2271,18 @@ def mp3_encode(raw: bytes) -> bytes:
         side = bytearray(_MP3_SIDE_LEN)  # main_data_begin=0 (no bit reservoir)
         side[2] = i & 0xFF
         side[3] = (i >> 8) & 0xFF
-        crc = _mp3_crc16(hdr[2:4] + bytes(side))
+        crc = _crc16(hdr[2:4] + bytes(side), 0xFFFF)
         out.append(hdr + struct.pack(">H", crc) + bytes(side) + chunk)
     return b"".join(out)
 
 
+@_corrupt_stream_is_valueerror("MP3")
 def mp3_decode_stats(blob: bytes) -> dict:
     """Walk the stream validating EVERY layer — ID3 syncsafe size, TXXX
     structure, per-frame syncword/version/layer/table indices, the
     frame-length formula, ISO CRC-16, main_data_begin, frame counter,
     private-bit parity, tail zero-padding, payload MD5 — then emit the
     FLAC-witness signal stats over the reconstructed PCM."""
-    try:
-        return _mp3_decode_inner(blob)
-    except (IndexError, UnicodeDecodeError) as exc:
-        # truncation/corruption surfacing below the explicit field checks —
-        # same ValueError contract as the other codec witnesses
-        raise ValueError(f"malformed MP3 stream: {exc}") from exc
-
-
-def _mp3_decode_inner(blob: bytes) -> dict:
     import hashlib
 
     if len(blob) < 10 or blob[:3] != b"ID3" or blob[3] != 3 or blob[5] != 0:
@@ -2408,7 +2320,7 @@ def _mp3_decode_inner(blob: bytes) -> dict:
             raise ValueError("truncated frame")
         side = blob[pos + 6 : pos + 6 + _MP3_SIDE_LEN]
         crc = int.from_bytes(blob[pos + 4 : pos + 6], "big")
-        if _mp3_crc16(hdr[2:4] + side) != crc:
+        if _crc16(hdr[2:4] + side, 0xFFFF) != crc:
             raise ValueError(f"CRC mismatch in frame {idx}")
         if side[0] != 0 or side[1] & 0x80:
             raise ValueError("nonzero main_data_begin")
@@ -2484,35 +2396,16 @@ def multimodal_mp3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula, the CRC runner, or the byte accounting raises or flips a
     hash-checked value.
 
-    Scale shape: doc_id % {MP3_SUBSET_MOD} == 3 subset (GIF/JPEG/FLAC take
-    the other residues), one Arrow-batched mapInPandas kernel; the
-    repartition spreads the CPU-bound kernel across cores exactly as the
-    other codec witnesses do (a no-op at real multi-split corpus scale).
+    Scale shape: the ``_codec_witness`` prologue on the
+    doc_id % {MP3_SUBSET_MOD} == 3 subset (GIF/JPEG/FLAC take the other
+    residues).
     """
-    docs = (
-        load_table(spark, sf_dir, "documents", spread=True)
-        .where(F.col("doc_id") % MP3_SUBSET_MOD == 3)
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    )
-
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in MP3_STATS_SCHEMA.fields}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = _witness_text_bytes(doc_id, text)
-                try:
-                    stats = mp3_decode_stats(mp3_encode(data))
-                except ValueError as exc:
-                    raise ValueError(f"doc {doc_id}: {exc}") from exc
-                rows["doc_id"].append(doc_id)
-                for key, val in stats.items():
-                    rows[key].append(val)
-            yield pd.DataFrame(rows)
-
-    return (
-        docs.select("doc_id", "text")
-        .mapInPandas(_roundtrip, MP3_STATS_SCHEMA)
-        .orderBy(F.col("doc_id").asc())
+    return _codec_witness(
+        spark,
+        sf_dir,
+        (MP3_SUBSET_MOD, 3),
+        lambda raw: mp3_decode_stats(mp3_encode(raw)),
+        MP3_STATS_SCHEMA,
     )
 
 
@@ -2637,23 +2530,13 @@ def avi_encode_mjpeg(payload: bytes) -> bytes:
     return _fourcc("RIFF") + struct.pack("<I", len(body)) + body
 
 
+@_corrupt_stream_is_valueerror("AVI")
 def avi_decode_frames(blob: bytes):
     """Full RIFF/AVI walker: validates the RIFF envelope, header-list
     fields, movi chunk layout (word alignment included) and the idx1
     index's offsets/sizes against the actual chunk positions, then
     baseline-JPEG-decodes every '00dc' frame. Returns (n_frames,
     [(pixels, qblocks)]). Any structural defect raises ValueError."""
-    import struct
-
-    try:
-        return _avi_decode_inner(blob)
-    except ValueError:
-        raise
-    except (IndexError, KeyError, OverflowError, struct.error) as exc:
-        raise ValueError(f"corrupt AVI: {type(exc).__name__}") from exc
-
-
-def _avi_decode_inner(blob: bytes):
     import struct
 
     b = bytes(blob)
@@ -2835,80 +2718,34 @@ def multimodal_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     - per-frame reconstruction error asserted <= {JPEG_MAX_ABS_ERR},
       surfaced as the hash-checked ``err_le_bound``.
 
-    Scale shape: doc_id % {AVI_SUBSET_MOD} == 5 subset (disjoint residue
-    within the codec-witness partition scheme), one repartition to spread
-    the CPU-bound sequential kernel across cores, one Arrow-batched
-    mapInPandas — identical to the other codec witnesses; at real corpus
-    scale the repartition is a no-op over many input splits.
+    Scale shape: the ``_codec_witness`` prologue on the
+    doc_id % {AVI_SUBSET_MOD} == 5 subset (a residue inside JPEG's
+    % 4 == 1).
     """
-    docs = (
-        load_table(spark, sf_dir, "documents", spread=True)
-        .where(F.col("doc_id") % AVI_SUBSET_MOD == 5)
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    return _codec_witness(
+        spark, sf_dir, (AVI_SUBSET_MOD, 5), _avi_witness_row, AVI_STATS_SCHEMA
     )
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in AVI_STATS_SCHEMA.fields}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload = _witness_text_bytes(doc_id, text)
-                try:
-                    blob = avi_encode_mjpeg(payload)
-                    n_frames, frames = avi_decode_frames(blob)
-                    expect_frames = max(
-                        1,
-                        (len(payload) + AVI_FRAME_PAYLOAD - 1)
-                        // AVI_FRAME_PAYLOAD,
-                    )
-                    if n_frames != expect_frames:
-                        raise ValueError("frame count mismatch")
-                    padded = payload + b"\x00" * (
-                        n_frames * AVI_FRAME_PAYLOAD - len(payload)
-                    )
-                    dc_sum = 0
-                    max_err = 0
-                    for f, (px, qb) in enumerate(frames):
-                        raster = np.frombuffer(
-                            padded[
-                                f * AVI_FRAME_PAYLOAD : (f + 1)
-                                * AVI_FRAME_PAYLOAD
-                            ],
-                            np.uint8,
-                        ).reshape(AVI_FRAME_H, AVI_FRAME_W)
-                        enc_q = _jpeg_quantize_blocks(raster)
-                        if not np.array_equal(enc_q, qb):
-                            raise ValueError(
-                                f"frame {f} entropy-layer mismatch"
-                            )
-                        dc_sum += int(enc_q[:, 0, 0].sum())
-                        max_err = max(
-                            max_err,
-                            int(
-                                np.abs(
-                                    px.astype(np.int64)
-                                    - raster.astype(np.int64)
-                                ).max()
-                            ),
-                        )
-                    if max_err > JPEG_MAX_ABS_ERR:
-                        raise ValueError(f"reconstruction error {max_err}")
-                except ValueError as exc:
-                    raise ValueError(f"doc {doc_id}: {exc}") from exc
-                rows["doc_id"].append(doc_id)
-                rows["n_frames"].append(n_frames)
-                rows["frame_w"].append(AVI_FRAME_W)
-                rows["frame_h"].append(AVI_FRAME_H)
-                rows["n_blocks"].append(n_frames * 4)
-                rows["dc_sum"].append(dc_sum)
-                rows["idx_ok"].append(True)
-                rows["err_le_bound"].append(max_err <= JPEG_MAX_ABS_ERR)
-            yield pd.DataFrame(rows)
 
-    return (
-        docs.select("doc_id", "text")
-        .mapInPandas(_roundtrip, AVI_STATS_SCHEMA)
-        .orderBy(F.col("doc_id").asc())
+def _avi_witness_row(payload: bytes) -> dict:
+    n_frames, frames = avi_decode_frames(avi_encode_mjpeg(payload))
+    if n_frames != max(1, -(-len(payload) // AVI_FRAME_PAYLOAD)):
+        raise ValueError("frame count mismatch")
+    rasters = _gray_raster(payload, AVI_FRAME_W, n_frames * AVI_FRAME_H).reshape(
+        n_frames, AVI_FRAME_H, AVI_FRAME_W
     )
+    return {
+        "n_frames": n_frames,
+        "frame_w": AVI_FRAME_W,
+        "frame_h": AVI_FRAME_H,
+        "n_blocks": n_frames * 4,
+        "dc_sum": sum(
+            _jpeg_entropy_check(raster, px, qb)
+            for raster, (px, qb) in zip(rasters, frames)
+        ),
+        "idx_ok": True,
+        "err_le_bound": True,  # the check raises past the bound
+    }
 
 
 # --------------------------------------------------------------------------
@@ -2936,76 +2773,18 @@ H264_QP_MINUS26 = -3  # pic_init_qp_minus26: se(-3) -> codeNum 6
 H264_CHROMA_QP_OFF = 2  # chroma_qp_index_offset: se(2) -> codeNum 3
 
 
-class _H264BitWriter:
-    """MSB-first bit writer with ue(v)/se(v) Exp-Golomb (H.264 §9.1)."""
-
-    def __init__(self):
-        self.bits: list[int] = []
-
-    def u(self, val: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.bits.append((val >> i) & 1)
-
-    def ue(self, val: int) -> None:
-        code = val + 1
-        n = code.bit_length()
-        self.u(0, n - 1)
-        self.u(code, n)
-
-    def se(self, val: int) -> None:
-        # §9.1.1: codeNum = 2|v| - 1 for v > 0 is mapped as v<=0 -> -2v,
-        # v>0 -> 2v-1
-        self.ue(2 * val - 1 if val > 0 else -2 * val)
-
-    def trailing(self) -> bytes:
-        """rbsp_trailing_bits: stop bit then zero-pad to a byte."""
-        self.bits.append(1)
-        while len(self.bits) % 8:
-            self.bits.append(0)
-        out = bytearray()
-        for i in range(0, len(self.bits), 8):
-            b = 0
-            for bit in self.bits[i : i + 8]:
-                b = (b << 1) | bit
-            out.append(b)
-        return bytes(out)
+def _rbsp_trailing(w: _BitWriter) -> bytes:
+    """rbsp_trailing_bits (§7.3.2.11): stop bit, then zero-pad to a byte."""
+    w.write(1, 1)
+    w.align(0)
+    return w.getvalue()
 
 
-class _H264BitReader:
-    """MSB-first bit reader with ue(v)/se(v) decode."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-
-    def u(self, n: int) -> int:
-        val = 0
-        for _ in range(n):
-            byte = self.pos // 8
-            if byte >= len(self.data):
-                raise ValueError("RBSP bit underrun")
-            val = (val << 1) | ((self.data[byte] >> (7 - self.pos % 8)) & 1)
-            self.pos += 1
-        return val
-
-    def ue(self) -> int:
-        zeros = 0
-        while self.u(1) == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("Exp-Golomb prefix overrun")
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        code = self.ue()
-        return (code + 1) // 2 if code % 2 else -(code // 2)
-
-    def trailing(self) -> None:
-        if self.u(1) != 1:
-            raise ValueError("missing rbsp stop bit")
-        while self.pos % 8:
-            if self.u(1) != 0:
-                raise ValueError("nonzero rbsp alignment bit")
+def _rbsp_check_trailing(r: _BitReader) -> None:
+    if r.read(1) != 1:
+        raise ValueError("missing rbsp stop bit")
+    if r.align():
+        raise ValueError("nonzero rbsp alignment bit")
 
 
 def _h264_emulation_prevent(rbsp: bytes) -> bytes:
@@ -3049,42 +2828,42 @@ def _h264_nal(ref_idc: int, nal_type: int, rbsp: bytes, long_start: bool) -> byt
 
 
 def _h264_sps_rbsp() -> bytes:
-    w = _H264BitWriter()
-    w.u(66, 8)  # profile_idc: Baseline
-    w.u(0, 8)  # constraint flags + reserved
-    w.u(30, 8)  # level_idc 3.0
+    w = _BitWriter()
+    w.write(66, 8)  # profile_idc: Baseline
+    w.write(0, 8)  # constraint flags + reserved
+    w.write(30, 8)  # level_idc 3.0
     w.ue(0)  # seq_parameter_set_id
     w.ue(0)  # log2_max_frame_num_minus4
     w.ue(2)  # pic_order_cnt_type
     w.ue(1)  # max_num_ref_frames
-    w.u(0, 1)  # gaps_in_frame_num_value_allowed_flag
+    w.write(0, 1)  # gaps_in_frame_num_value_allowed_flag
     w.ue(H264_WIDTH_MBS - 1)  # pic_width_in_mbs_minus1
     w.ue(H264_HEIGHT_MBS - 1)  # pic_height_in_map_units_minus1
-    w.u(1, 1)  # frame_mbs_only_flag
-    w.u(1, 1)  # direct_8x8_inference_flag
-    w.u(0, 1)  # frame_cropping_flag
-    w.u(0, 1)  # vui_parameters_present_flag
-    return w.trailing()
+    w.write(1, 1)  # frame_mbs_only_flag
+    w.write(1, 1)  # direct_8x8_inference_flag
+    w.write(0, 1)  # frame_cropping_flag
+    w.write(0, 1)  # vui_parameters_present_flag
+    return _rbsp_trailing(w)
 
 
 def _h264_pps_rbsp() -> bytes:
-    w = _H264BitWriter()
+    w = _BitWriter()
     w.ue(0)  # pic_parameter_set_id
     w.ue(0)  # seq_parameter_set_id
-    w.u(0, 1)  # entropy_coding_mode_flag (CAVLC)
-    w.u(0, 1)  # bottom_field_pic_order_in_frame_present_flag
+    w.write(0, 1)  # entropy_coding_mode_flag (CAVLC)
+    w.write(0, 1)  # bottom_field_pic_order_in_frame_present_flag
     w.ue(0)  # num_slice_groups_minus1
     w.ue(0)  # num_ref_idx_l0_default_active_minus1
     w.ue(0)  # num_ref_idx_l1_default_active_minus1
-    w.u(0, 1)  # weighted_pred_flag
-    w.u(0, 2)  # weighted_bipred_idc
+    w.write(0, 1)  # weighted_pred_flag
+    w.write(0, 2)  # weighted_bipred_idc
     w.se(H264_QP_MINUS26)  # pic_init_qp_minus26
     w.se(0)  # pic_init_qs_minus26
     w.se(H264_CHROMA_QP_OFF)  # chroma_qp_index_offset
-    w.u(1, 1)  # deblocking_filter_control_present_flag
-    w.u(0, 1)  # constrained_intra_pred_flag
-    w.u(0, 1)  # redundant_pic_cnt_present_flag
-    return w.trailing()
+    w.write(1, 1)  # deblocking_filter_control_present_flag
+    w.write(0, 1)  # constrained_intra_pred_flag
+    w.write(0, 1)  # redundant_pic_cnt_present_flag
+    return _rbsp_trailing(w)
 
 
 def _h264_sei_rbsp(chunk: bytes) -> bytes:
@@ -3119,21 +2898,13 @@ def h264_encode_annexb(payload: bytes) -> bytes:
     return bytes(out)
 
 
+@_corrupt_stream_is_valueerror("H.264")
 def h264_decode_stats(blob: bytes) -> dict:
     """Full Annex-B walk: start-code scan, NAL header checks, emulation-
     prevention removal, SPS/PPS Exp-Golomb field verification against the
     encoder constants (a broken ue/se coder or bit writer fails here),
     SEI TLV parse with UUID check, payload reassembly + md5. Raises
     ValueError on any defect."""
-    try:
-        return _h264_decode_inner(blob)
-    except ValueError:
-        raise
-    except (IndexError, KeyError, OverflowError) as exc:
-        raise ValueError(f"corrupt H.264: {type(exc).__name__}") from exc
-
-
-def _h264_decode_inner(blob: bytes) -> dict:
     b = bytes(blob)
     # Annex-B start-code scan
     nals = []
@@ -3170,35 +2941,35 @@ def _h264_decode_inner(blob: bytes) -> dict:
         if idx == 0:
             if (long_sc, ref_idc, nal_type) != (True, 3, 7):
                 raise ValueError("first NAL is not a long-start SPS")
-            r = _H264BitReader(rbsp)
-            if r.u(8) != 66 or r.u(8) != 0 or r.u(8) != 30:
+            r = _BitReader(rbsp)
+            if r.read(8) != 66 or r.read(8) != 0 or r.read(8) != 30:
                 raise ValueError("SPS profile/level mismatch")
             if r.ue() != 0 or r.ue() != 0 or r.ue() != 2 or r.ue() != 1:
                 raise ValueError("SPS field mismatch")
-            if r.u(1) != 0:
+            if r.read(1) != 0:
                 raise ValueError("SPS gaps flag mismatch")
             if r.ue() != H264_WIDTH_MBS - 1 or r.ue() != H264_HEIGHT_MBS - 1:
                 raise ValueError("SPS dimensions mismatch")
-            if r.u(1) != 1 or r.u(1) != 1 or r.u(1) != 0 or r.u(1) != 0:
+            if r.read(1) != 1 or r.read(1) != 1 or r.read(1) != 0 or r.read(1) != 0:
                 raise ValueError("SPS flag mismatch")
-            r.trailing()
+            _rbsp_check_trailing(r)
         elif idx == 1:
             if (long_sc, ref_idc, nal_type) != (True, 3, 8):
                 raise ValueError("second NAL is not a long-start PPS")
-            r = _H264BitReader(rbsp)
-            if r.ue() != 0 or r.ue() != 0 or r.u(1) != 0 or r.u(1) != 0:
+            r = _BitReader(rbsp)
+            if r.ue() != 0 or r.ue() != 0 or r.read(1) != 0 or r.read(1) != 0:
                 raise ValueError("PPS id/flag mismatch")
             if r.ue() != 0 or r.ue() != 0 or r.ue() != 0:
                 raise ValueError("PPS ref/group mismatch")
-            if r.u(1) != 0 or r.u(2) != 0:
+            if r.read(1) != 0 or r.read(2) != 0:
                 raise ValueError("PPS weighting mismatch")
             if r.se() != H264_QP_MINUS26 or r.se() != 0:
                 raise ValueError("PPS QP mismatch")
             if r.se() != H264_CHROMA_QP_OFF:
                 raise ValueError("PPS chroma offset mismatch")
-            if r.u(1) != 1 or r.u(1) != 0 or r.u(1) != 0:
+            if r.read(1) != 1 or r.read(1) != 0 or r.read(1) != 0:
                 raise ValueError("PPS flag mismatch")
-            r.trailing()
+            _rbsp_check_trailing(r)
         elif idx == len(nals) - 1:
             if (long_sc, ref_idc, nal_type) != (False, 0, 11) or rbsp:
                 raise ValueError("stream not terminated by end_of_stream")
@@ -3304,43 +3075,20 @@ def multimodal_h264_nal(spark: SparkSession, sf_dir: str) -> DataFrame:
     the MP3 frame witness (the macroblock transform below this layer is
     the JPEG DCT already covered).
 
-    Scale shape: doc_id % {H264_SUBSET_MOD} == 7 subset (AVI takes
-    % 8 == 5), one repartition to spread the kernel, one Arrow-batched
-    mapInPandas — the codec-witness pattern.
+    Scale shape: the ``_codec_witness`` prologue on the
+    doc_id % {H264_SUBSET_MOD} == 7 subset (AVI takes % 8 == 5).
     """
-    docs = (
-        load_table(spark, sf_dir, "documents", spread=True)
-        .where(F.col("doc_id") % H264_SUBSET_MOD == 7)
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    return _codec_witness(
+        spark, sf_dir, (H264_SUBSET_MOD, 7), _h264_witness_row, H264_STATS_SCHEMA
     )
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
 
-        for pdf in batches:
-            rows = {k.name: [] for k in H264_STATS_SCHEMA.fields}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload = _witness_text_bytes(doc_id, text)
-                try:
-                    stats = h264_decode_stats(h264_encode_annexb(payload))
-                    if stats["n_bytes"] != len(payload):
-                        raise ValueError("payload length mismatch")
-                    if stats["md5"] != hashlib.md5(payload).hexdigest():
-                        raise ValueError("payload md5 mismatch")
-                except ValueError as exc:
-                    raise ValueError(f"doc {doc_id}: {exc}") from exc
-                rows["doc_id"].append(doc_id)
-                rows["n_bytes"].append(stats["n_bytes"])
-                rows["n_nals"].append(stats["n_nals"])
-                rows["n_sei"].append(stats["n_sei"])
-                rows["payload_sum"].append(stats["payload_sum"])
-                rows["payload_peak"].append(stats["payload_peak"])
-                rows["parse_ok"].append(True)
-                rows["md5_ok"].append(True)
-            yield pd.DataFrame(rows)
+def _h264_witness_row(payload: bytes) -> dict:
+    import hashlib
 
-    return (
-        docs.select("doc_id", "text")
-        .mapInPandas(_roundtrip, H264_STATS_SCHEMA)
-        .orderBy(F.col("doc_id").asc())
-    )
+    stats = h264_decode_stats(h264_encode_annexb(payload))
+    if stats["n_bytes"] != len(payload):
+        raise ValueError("payload length mismatch")
+    if stats.pop("md5") != hashlib.md5(payload).hexdigest():
+        raise ValueError("payload md5 mismatch")
+    return {**stats, "parse_ok": True, "md5_ok": True}

@@ -62,19 +62,39 @@ def query(name: str, oracle: str | None = None):
 #     rotation already produces. tests/test_registry_order.py enforces the
 #     stand-in invariant.
 #
-# Round-20 window, in priority order:
-#   0. the 12 streaming parity twins, changed this round by the one-pipeline
+# Round-20 window, in priority order (changed-query rule: changed names
+# first):
+#   0. the 11 multimodal names whose kernels now run through the one
+#      ``_map_rows`` / ``_codec_witness`` harness and the unified bit I/O,
+#      and the 4 graph queries whose oracles now use the shared min-label
+#      propagation CTE instead of an all-pairs reachability closure.
+#   1. the 12 streaming parity twins, changed this round by the one-pipeline
 #      consolidation (each twin now calls the rows-only query it stands in
-#      for; one memory-sink drain, one scratch dir) — changed-query rule
-#      says first.
-#   1. the 9 names changed in r18/r19 whose post-change rows never landed
+#      for; one memory-sink drain, one scratch dir).
+#   2. the 9 names changed in r18/r19 whose post-change rows never landed
 #      (ROADMAP carry-over, VERDICT r19 #1).
-#   2. the oldest evidence: 29 of the 45 remaining latest-r16 names.
+#   3. the oldest evidence: 14 of the remaining latest-r16 names.
 # 97 oracle-backed names carry r17-or-older evidence against a 50-row
 # window, so the age gate stays red until CORRECTNESS_r20.json lands; the
-# rest go in NEXT_WINDOW.
+# rest go in NEXT_WINDOW, oldest first, as far as its 50 rows reach.
 DRIVER_PRIORITY: tuple[str, ...] = (
-    # 0: changed this round (streaming one-pipeline consolidation)
+    # 0: changed this round (one codec harness; min-label graph oracles)
+    "multimodal_audio_pcm_stats",
+    "multimodal_image_thumbnail",
+    "multimodal_wav_parse",
+    "multimodal_bmp_parse",
+    "multimodal_png_roundtrip",
+    "multimodal_gif_roundtrip",
+    "multimodal_jpeg_roundtrip",
+    "multimodal_flac_roundtrip",
+    "multimodal_mp3_frames",
+    "multimodal_avi_frames",
+    "multimodal_h264_nal",
+    "dedup_cluster_components",
+    "dedup_keep_best",
+    "copurchase_components",
+    "dedup_embedding_clusters",
+    # 1: changed this round (streaming one-pipeline consolidation)
     "streaming_parity_tumbling_1h",
     "streaming_parity_session_30m",
     "streaming_parity_dedup",
@@ -87,7 +107,7 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "streaming_parity_ingest_e2e",
     "streaming_parity_ingest_adversarial",
     "streaming_parity_ingest_skew",
-    # 1: r18/r19-changed carry-over
+    # 2: r18/r19-changed carry-over
     "customers_kmv_setops",
     "scd2_cdc_apply",
     "retrieval_rrf_rerank",
@@ -97,7 +117,7 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "events_gapfill_methods",
     "order_export_denorm",
     "text_simhash",
-    # 2: latest-r16 evidence
+    # 3: latest-r16 evidence
     "corpus_bpe_encode",
     "corpus_bpe_merges",
     "corpus_mixture_weights",
@@ -112,21 +132,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "distinct_orders_kmv_rollup",
     "docs_bm25_topk",
     "docs_contamination_bloom",
-    "docs_dsir_weights",
-    "docs_perplexity_buckets",
-    "docs_pii_redact",
-    "docs_quality_classifier",
-    "docs_quality_tiers",
-    "docs_weighted_sample",
-    "embedding_quantize_int8",
-    "embedding_random_projection",
-    "events_asof_join",
-    "events_funnel_conversion",
-    "events_json_extract",
-    "events_json_schema",
-    "events_range_join",
-    "events_retention_cohorts",
-    "events_rolling_7d_value",
     # --- window boundary: 50 names above (tests/test_registry_order.py) ---
 )
 
@@ -159,22 +164,36 @@ ROWS_ONLY_STAND_INS: dict[str, str] = {
 }
 
 # Committed round-21 window (the rotation the NEXT round starts from; the
-# phase-aware age gate uses this once CORRECTNESS_r20.json lands): every
-# stale oracle-backed name the r20 window above leaves out — the 16
-# remaining latest-r16 names, then the 33 latest-r17 names.
+# phase-aware age gate uses this once CORRECTNESS_r20.json lands): the
+# stale oracle-backed names the r20 window above leaves out, oldest
+# evidence first — the 27 remaining latest-r16 names, then 23 of the 26
+# latest-r17 names. Fifty rows cannot hold all 53: text_quality_stats,
+# text_token_stats and valid_orders (latest r17) wait for round 22, so
+# the age gate names those three until a window takes them.
 NEXT_WINDOW: tuple[str, ...] = (
     # latest-r16 evidence
+    "docs_dsir_weights",
+    "docs_perplexity_buckets",
+    "docs_pii_redact",
+    "docs_quality_classifier",
+    "docs_quality_tiers",
+    "docs_weighted_sample",
+    "embedding_quantize_int8",
+    "embedding_random_projection",
+    "events_asof_join",
+    "events_funnel_conversion",
+    "events_json_extract",
+    "events_json_schema",
+    "events_range_join",
+    "events_retention_cohorts",
+    "events_rolling_7d_value",
     "events_session_30m",
     "events_sliding_1h_30m",
     "events_time_rollup",
     "events_tumbling_1h",
     "events_type_transitions",
     "jsonl_roundtrip_checksum",
-    "multimodal_bmp_parse",
     "multimodal_frame_stats",
-    "multimodal_image_thumbnail",
-    "multimodal_png_roundtrip",
-    "multimodal_wav_parse",
     "orc_roundtrip_checksum",
     "orders_dq_audit",
     "retrieval_hybrid_rrf",
@@ -183,13 +202,11 @@ NEXT_WINDOW: tuple[str, ...] = (
     # latest-r17 evidence
     "calendar_dim",
     "clean_orders",
-    "copurchase_components",
     "corpus_dedup_pipeline",
     "count_distinct_orders",
     "dashboard_month_assembly",
     "dedup_exact",
     "dedup_fingerprint",
-    "dedup_keep_best",
     "dedup_minhash_portable",
     "doc_fingerprint_methods",
     "docs_contamination_incremental",
@@ -200,20 +217,12 @@ NEXT_WINDOW: tuple[str, ...] = (
     "events_json_nested",
     "launch_year_orders",
     "monthly_order_trend_lag",
-    "multimodal_avi_frames",
-    "multimodal_gif_roundtrip",
-    "multimodal_h264_nal",
-    "multimodal_jpeg_roundtrip",
-    "multimodal_mp3_frames",
     "orders_incremental_merge",
     "orders_no_price",
     "pivot_status_by_priority",
     "price_percentiles",
     "rollup_order_values",
     "set_ops_customers",
-    "text_quality_stats",
-    "text_token_stats",
-    "valid_orders",
 )
 
 

@@ -647,10 +647,12 @@ def test_h264_roundtrip_lossless_and_exercises_every_layer():
 
     from databricks_spark_sql_challenge1_spark.operators.multimodal import (
         H264_SEI_CHUNK,
+        _BitReader,
+        _BitWriter,
         _h264_emulation_prevent,
         _h264_emulation_remove,
-        _H264BitReader,
-        _H264BitWriter,
+        _rbsp_check_trailing,
+        _rbsp_trailing,
         h264_decode_stats,
         h264_encode_annexb,
     )
@@ -668,19 +670,106 @@ def test_h264_roundtrip_lossless_and_exercises_every_layer():
         assert stats["payload_sum"] == sum(raw)
 
     # Exp-Golomb ue/se invert over a range including the signed mapping
-    w = _H264BitWriter()
+    w = _BitWriter()
     vals = list(range(0, 40))
     svals = list(range(-20, 21))
     for v in vals:
         w.ue(v)
     for v in svals:
         w.se(v)
-    r = _H264BitReader(w.trailing())
+    r = _BitReader(_rbsp_trailing(w))
     assert [r.ue() for _ in vals] == vals
     assert [r.se() for _ in svals] == svals
-    r.trailing()
+    _rbsp_check_trailing(r)
 
     # emulation prevention inverts on adversarial zero runs
     for _ in range(200):
         raw = bytes(rng.choice([0, 0, 0, 1, 2, 3]) for _ in range(rng.randrange(64)))
         assert _h264_emulation_remove(_h264_emulation_prevent(raw)) == raw
+
+
+_bit_ops = st.one_of(
+    st.tuples(
+        st.just("bits"), st.integers(0, 48), st.integers(0, (1 << 48) - 1)
+    ).map(lambda t: (t[0], t[1], t[2] & ((1 << t[1]) - 1))),
+    st.tuples(st.just("unary"), st.integers(0, 100)),
+    st.tuples(st.just("ue"), st.integers(0, (1 << 31) - 2)),
+    st.tuples(st.just("se"), st.integers(-(1 << 30), 1 << 30)),
+)
+
+
+@given(st.lists(_bit_ops, max_size=60), st.integers(0, 1))
+@settings(max_examples=200, deadline=None)
+def test_bit_writer_reader_roundtrip(ops, pad_bit):
+    """The one MSB-first bit writer/reader pair (JPEG, FLAC and H.264 all
+    use it): any mix of fixed-width fields — including zero-width ones —
+    unary codes and Exp-Golomb ue/se codes reads back exactly, the pad
+    bits ``align`` writes read back as ``pad_bit``, and one more read past
+    the end raises the truncation error."""
+    import pytest
+
+    from databricks_spark_sql_challenge1_spark.operators.multimodal import (
+        _BitReader,
+        _BitWriter,
+    )
+
+    w = _BitWriter()
+    for op in ops:
+        if op[0] == "bits":
+            w.write(op[2], op[1])
+        elif op[0] == "unary":
+            w.write_unary(op[1])
+        else:
+            getattr(w, op[0])(op[1])
+    pad = -w.nbits % 8
+    w.align(pad_bit)
+    data = w.getvalue()
+    r = _BitReader(data)
+    for op in ops:
+        if op[0] == "bits":
+            assert r.read(op[1]) == op[2]
+        elif op[0] == "unary":
+            assert r.read_unary() == op[1]
+        else:
+            assert getattr(r, op[0])() == op[1]
+    assert r.align() == (pad_bit and (1 << pad) - 1)
+    assert r.pos == len(data)
+    with pytest.raises(ValueError, match="bitstream truncated"):
+        r.read(1)
+
+
+def test_bit_reader_overrun_guards():
+    """The reader's caps: a run of zeros longer than the unary cap or the
+    Exp-Golomb prefix cap raises instead of looping to the end."""
+    import pytest
+
+    from databricks_spark_sql_challenge1_spark.operators.multimodal import (
+        _BitReader,
+    )
+
+    with pytest.raises(ValueError, match="unterminated unary run"):
+        _BitReader(bytes(1 << 18)).read_unary()
+    with pytest.raises(ValueError, match="Exp-Golomb prefix overrun"):
+        _BitReader(bytes(8)).ue()
+
+
+@given(st.lists(st.sampled_from([0x00, 0xFF, 0xFF, 0xFF, 0xD9, 0x7F]), max_size=300))
+@settings(max_examples=200, deadline=None)
+def test_jpeg_stuffing_inverts_on_ff_dense_input(seg):
+    """JPEG byte stuffing is a separate byte pass, the way H.264's
+    emulation prevention is: unstuff(stuff(x)) == x on 0xFF-dense
+    segments, the stuffed form carries no bare marker, and a 0xFF not
+    followed by 0x00 is rejected as a marker."""
+    import pytest
+
+    from databricks_spark_sql_challenge1_spark.operators.multimodal import (
+        _jpeg_stuff,
+        _jpeg_unstuff,
+    )
+
+    raw = bytes(seg)
+    stuffed = _jpeg_stuff(raw)
+    assert _jpeg_unstuff(stuffed) == raw
+    assert stuffed.count(b"\xff") == stuffed.count(b"\xff\x00") == raw.count(b"\xff")
+    with pytest.raises(ValueError, match="unexpected marker in entropy segment"):
+        _jpeg_unstuff(stuffed + b"\xff\xd9")

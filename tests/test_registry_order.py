@@ -25,6 +25,25 @@ DRIVER_WINDOW = 50
 # was accidentally left out of the window). Update this literal whenever
 # a query is added or its output/oracle changes.
 MUST_VERIFY = {
+    # changed round 20 by the one codec-witness harness (_map_rows /
+    # _codec_witness, unified bit I/O and CRC) in operators/multimodal.py
+    "multimodal_audio_pcm_stats",
+    "multimodal_image_thumbnail",
+    "multimodal_wav_parse",
+    "multimodal_bmp_parse",
+    "multimodal_png_roundtrip",
+    "multimodal_gif_roundtrip",
+    "multimodal_jpeg_roundtrip",
+    "multimodal_flac_roundtrip",
+    "multimodal_mp3_frames",
+    "multimodal_avi_frames",
+    "multimodal_h264_nal",
+    # changed round 20: oracles now run the shared min-label propagation
+    # CTE (clustering._min_label_ctes) instead of a reachability closure
+    "dedup_cluster_components",
+    "dedup_keep_best",
+    "copurchase_components",
+    "dedup_embedding_clusters",
     # changed round 20 by the streaming one-pipeline consolidation: each
     # twin calls the rows-only query it stands in for (click attribution:
     # the shared join builder), and all of them drain through the one

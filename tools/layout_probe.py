@@ -46,12 +46,12 @@ import time
 
 SEED = 0x18C0FFEE
 
-# Same DuckDB-side budget as tools/parity_names.py: a handful of oracles
-# are DELIBERATELY quadratic/recursive (all-pairs dedup ground truth,
-# recursive-CTE graph reachability) and are correctness tools for driver
-# scale (sf0.01), not sf0.1+ — a SKIP records that explicitly instead of
-# wedging the sweep (r18: the unbudgeted probe sat 35+ min inside
-# dedup_embedding_clusters' recursive oracle at sf0.1).
+# Same DuckDB-side budget as tools/parity_names.py: a deliberately
+# quadratic oracle (all-pairs dedup ground truth) is a correctness tool
+# for driver scale (sf0.01), not sf0.1+ — a SKIP records that explicitly
+# instead of wedging the sweep (r18: the unbudgeted probe sat 35+ min
+# inside dedup_embedding_clusters' then-closure oracle at sf0.1; the graph
+# oracles now run clustering._min_label_ctes and finish there).
 DUCK_BUDGET_S = 150
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -175,7 +175,7 @@ def main() -> None:
                     print(
                         f"SKIP {name} rows={len(sseq)} (duckdb oracle "
                         f"exceeded {DUCK_BUDGET_S}s — deliberately "
-                        "quadratic/recursive oracle; the driver checks it "
+                        "quadratic oracle; the driver checks it "
                         "at sf0.01)",
                         flush=True,
                     )

@@ -23,10 +23,11 @@ import sys
 import threading
 import time
 
-# DuckDB interrupt watchdog: the deliberately quadratic/recursive oracles
-# (all-pairs dedup ground truth, recursive-CTE graph reachability) wedge
-# DuckDB at sf0.1 — SKIP them loudly there instead of hanging the check;
-# CORRECTNESS_r*.json checks them at sf0.01.
+# DuckDB interrupt watchdog: a deliberately quadratic oracle (all-pairs
+# dedup ground truth) could wedge DuckDB at sf0.1 — SKIP it loudly there
+# instead of hanging the check; CORRECTNESS_r*.json checks it at sf0.01.
+# The recursive graph oracles no longer need it: their min-label
+# propagation CTE (clustering._min_label_ctes) finishes at sf0.1.
 DUCK_BUDGET_S = 150
 
 DEFAULT_SFS = [
@@ -134,8 +135,8 @@ def main() -> None:
                     print(
                         f"SKIP {sf_dir} {name} spark={t1 - t0:.1f}s "
                         f"rows={len(sseq)} (duckdb oracle exceeded "
-                        f"{DUCK_BUDGET_S}s — deliberately quadratic/"
-                        "recursive oracle; the driver checks it at sf0.01)",
+                        f"{DUCK_BUDGET_S}s — deliberately quadratic "
+                        "oracle; the driver checks it at sf0.01)",
                         flush=True,
                     )
                     skipped.append((sf_dir, name))

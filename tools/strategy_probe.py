@@ -56,10 +56,10 @@ import sys
 import threading
 import time
 
-# Same DuckDB-side budget as tools/parity_names.py — the deliberately
-# quadratic/recursive oracles (all-pairs dedup ground truth,
-# recursive-CTE graph reachability) are correctness tools for driver
-# scale (sf0.01), not sf0.1+; a SKIP records that instead of wedging.
+# Same DuckDB-side budget as tools/parity_names.py — a deliberately
+# quadratic oracle (all-pairs dedup ground truth) is a correctness tool
+# for driver scale (sf0.01), not sf0.1+; a SKIP records that instead of
+# wedging.
 DUCK_BUDGET_S = 150
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -147,7 +147,7 @@ def main() -> None:
                     print(
                         f"SKIP {name} rows={len(sseq)} (duckdb oracle "
                         f"exceeded {DUCK_BUDGET_S}s — deliberately "
-                        "quadratic/recursive oracle; the driver checks it "
+                        "quadratic oracle; the driver checks it "
                         "at sf0.01)",
                         flush=True,
                     )
