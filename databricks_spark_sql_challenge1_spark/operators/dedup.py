@@ -280,7 +280,7 @@ def _distinct_token_md5(docs: DataFrame) -> DataFrame:
 # order in the oracle is a contract the Spark side never promises — the
 # r18 layout campaign caught exactly that (the single-file fixture
 # happened to reproduce doc_id order; a resharded warehouse does not,
-# and the ordered compare in tools/parity_names.py / the layout contract
+# and the ordered compare in tools/parity_names.run / the layout contract
 # test rightly flagged it). Value-identical under the driver's
 # sorted-row hash compare; the sorted presentation variant is
 # ``text_simhash`` below.

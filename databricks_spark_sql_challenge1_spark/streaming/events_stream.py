@@ -9,7 +9,7 @@ source requires) AND a production-shaped ``{table}.parquet/`` DIRECTORY
 of part-files, which the source recurses into. The previous
 ``pathGlobFilter={table}.parquet`` formulation matched LEAF FILE names
 only, so a directory-shaped table silently streamed 0 rows (found by
-tools/layout_probe.py, r18; pinned in
+``tools/parity_names.py --perturb layout``, r18; pinned in
 tests/test_layout_invariance_contract.py). Event-time window agg behind
 a watermark,
 ``availableNow`` trigger draining to a memory sink — the batch-equivalent

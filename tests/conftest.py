@@ -1,37 +1,29 @@
-"""Shared fixtures: one SparkSession per test session + a DuckDB oracle
-comparator that mimics the driver's check (row-count + column names +
-order-insensitive values)."""
+"""Shared fixtures: one SparkSession per test session and one DuckDB
+connection with a view per fixture table. Spark-vs-oracle comparisons go
+through tools/parity_names.run."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
 import pytest
 
+from databricks_spark_sql_challenge1_spark.catalog import TABLES
 from databricks_spark_sql_challenge1_spark.session import get_spark
 
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 ORACLE_SF_DIR = os.environ.get("ORACLE_SF_DIR", SF_DIR)
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    # The suite's live heap stays near 1 GB (sf0.001 fixtures), but under
+    # the 24g production cap ParallelGC grows this one long-lived JVM to
+    # 12-14 GB RSS over a full run, enough for the OOM killer to take it
+    # on a 16 GB host and fail every later Spark test.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
     s = get_spark("challenge1-tests")
     yield s
 
@@ -45,45 +37,3 @@ def duck():
         )
     yield con
     con.close()
-
-
-def _normalize_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # collapse -0.0/0.0 and represent at a fixed precision
-        return f"{v + 0.0:.9g}"
-    return str(v) if v is not None else None
-
-
-def normalize_rows(cols, rows):
-    """Sort columns by name, then rows by rendered values (None first)."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [
-        tuple(_normalize_cell(r[i]) for i in order)
-        for r in rows
-    ]
-    out.sort(key=lambda row: tuple((v is not None, v or "") for v in row))
-    return [cols[i] for i in order], out
-
-
-def compare_with_oracle(spark_df, duck_con, oracle_sql: str):
-    """Return (ok, message) comparing a Spark result with DuckDB output."""
-    spark_cols = spark_df.columns
-    spark_rows = [tuple(r) for r in spark_df.collect()]
-    res = duck_con.execute(oracle_sql)
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-
-    if sorted(spark_cols) != sorted(duck_cols):
-        return False, f"column mismatch: spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
-    if len(spark_rows) != len(duck_rows):
-        return False, f"row-count mismatch: spark={len(spark_rows)} duck={len(duck_rows)}"
-    _, s_norm = normalize_rows(spark_cols, spark_rows)
-    _, d_norm = normalize_rows(duck_cols, duck_rows)
-    if s_norm != d_norm:
-        diffs = [
-            (i, a, b) for i, (a, b) in enumerate(zip(s_norm, d_norm)) if a != b
-        ][:5]
-        return False, f"value mismatch (first diffs): {diffs}"
-    return True, "ok"

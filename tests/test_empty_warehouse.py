@@ -28,21 +28,12 @@ fuzz campaigns, applied to the empty end):
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+from databricks_spark_sql_challenge1_spark.catalog import TABLES
+from tools.parity_names import limited_warehouse, run
+
+SRC = "/root/testdata/sf0.001"
 
 ANCHOR_MSG = "anchor MAX(o_orderdate)"
 
@@ -82,74 +73,56 @@ ANCHORED_TREND_NAMES = [
 ]
 
 
-def _probe_against_oracles(spark, con, sf_dir, names, grand_row=frozenset(),
-                           shape=frozenset()):
-    """The shared probe loop: run each named query on ``sf_dir`` and its
-    oracle on ``con``, classify into (bad, anchored) under the degenerate
-    contract — agree, documented anchor ValueError, or a pinned
-    divergence class."""
-    import __spark_entry__ as entry
+# The one-table-empty pins (r16): each pinned divergence appears exactly
+# when its OWN source table is the empty one — (grand_row, shape) per
+# empty table; a table absent here carries no pinned class.
+ONE_TABLE_PINS = {
+    "orders": (
+        {"cube_order_summary", "rollup_order_values"},
+        {"customer_rfm_segments_approx"},
+    ),
+    "events": ({"events_time_rollup"}, set()),
+}
 
-    q, o = entry.queries(), entry.oracle_sql()
+
+def contract_violations(outcomes, grand_row=frozenset(), shape=frozenset()):
+    """Classify parity outcomes under the degenerate contract into
+    (bad, anchored): agree, the documented anchor ValueError, or a pinned
+    divergence class (grand-row: Spark 0 rows vs DuckDB 1; shape: equal
+    row counts)."""
     bad, anchored = [], []
-    for name in names:
-        try:
-            srows = sorted(
-                tuple(str(x) for x in r) for r in q[name](spark, sf_dir).collect()
-            )
-        except ValueError as exc:
-            if ANCHOR_MSG in str(exc):
-                anchored.append(name)
-                continue
-            bad.append((name, f"spark-err: {str(exc)[:90]}"))
-            continue
-        except Exception as exc:  # noqa: BLE001 — collect all failures
-            bad.append((name, f"spark-err: {type(exc).__name__}: {str(exc)[:90]}"))
-            continue
-        drows = sorted(
-            tuple(str(x) for x in r) for r in con.execute(o[name]).fetchall()
-        )
-        if name in grand_row:
-            if not (len(srows) == 0 and len(drows) == 1):
-                bad.append((name, f"grand-row pin moved: {len(srows)} vs {len(drows)}"))
-        elif name in shape:
-            if len(srows) != len(drows):
-                bad.append((name, f"shape pin moved: {len(srows)} vs {len(drows)}"))
-        elif srows != drows:
-            first = next(
-                (f"{a[:4]} vs {b[:4]}" for a, b in zip(srows, drows) if a != b),
-                f"row counts {len(srows)} vs {len(drows)}",
-            )
-            bad.append((name, f"diff: {first}"))
+    for oc in outcomes:
+        if (
+            oc.status == "spark-error"
+            and isinstance(oc.error, ValueError)
+            and ANCHOR_MSG in str(oc.error)
+        ):
+            anchored.append(oc.name)
+        elif oc.name in grand_row:
+            if (oc.spark_n, oc.duck_n) != (0, 1):
+                bad.append(f"grand-row pin moved: {oc}")
+        elif oc.name in shape:
+            if oc.status not in ("match", "diff") or oc.spark_n != oc.duck_n:
+                bad.append(f"shape pin moved: {oc}")
+        elif oc.status != "match":
+            bad.append(str(oc))
     return bad, anchored
 
 
 @pytest.fixture(scope="module")
 def empty_dir(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("emptywh"))
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"COPY (SELECT * FROM '/root/testdata/sf0.001/{t}.parquet' "
-            f"LIMIT 0) TO '{d}/{t}.parquet' (FORMAT PARQUET)"
-        )
-    con.close()
+    limited_warehouse(SRC, d, {t: 0 for t in TABLES})
     return d
 
 
 def test_empty_warehouse_contract(spark, empty_dir):
     import __spark_entry__ as entry
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{empty_dir}/{t}.parquet'"
-        )
-    bad, anchored = _probe_against_oracles(
-        spark, con, empty_dir, sorted(entry.oracle_sql()),
-        grand_row=GRAND_ROW_DIVERGENT, shape=SHAPE_DIVERGENT,
+    bad, anchored = contract_violations(
+        run(spark, sorted(entry.oracle_sql()), empty_dir),
+        GRAND_ROW_DIVERGENT, SHAPE_DIVERGENT,
     )
-    con.close()
     assert bad == []
     # the anchored trend surface is exactly the set that rides
     # catalog.last_order_datetime — a new anchored query lands here
@@ -216,24 +189,11 @@ def test_one_table_empty_contract(spark, tmp_path_factory, empty_table):
     by the all-empty + one-row ends above plus the probe protocol
     recorded here."""
     d = str(tmp_path_factory.mktemp(f"empty_{empty_table}"))
-    con = duckdb.connect()
-    for t in TABLES:
-        limit = "LIMIT 0" if t == empty_table else ""
-        con.execute(
-            f"COPY (SELECT * FROM '/root/testdata/sf0.001/{t}.parquet' "
-            f"{limit}) TO '{d}/{t}.parquet' (FORMAT PARQUET)"
-        )
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
-    grand_row = {
-        "orders": {"cube_order_summary", "rollup_order_values"},
-        "events": {"events_time_rollup"},
-    }[empty_table]
-    shape = {"customer_rfm_segments_approx"} if empty_table == "orders" else set()
-    bad, anchored = _probe_against_oracles(
-        spark, con, d, _names_reading(empty_table),
-        grand_row=grand_row, shape=shape,
+    limited_warehouse(SRC, d, {empty_table: 0})
+    bad, anchored = contract_violations(
+        run(spark, _names_reading(empty_table), d),
+        *ONE_TABLE_PINS[empty_table],
     )
-    con.close()
     assert bad == []
     expected_anchor = ANCHORED_TREND_NAMES if empty_table == "orders" else []
     assert sorted(anchored) == expected_anchor
@@ -242,13 +202,7 @@ def test_one_table_empty_contract(spark, tmp_path_factory, empty_table):
 @pytest.fixture(scope="module")
 def onerow_dir(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("onerowwh"))
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"COPY (SELECT * FROM '/root/testdata/sf0.001/{t}.parquet' "
-            f"LIMIT 1) TO '{d}/{t}.parquet' (FORMAT PARQUET)"
-        )
-    con.close()
+    limited_warehouse(SRC, d, {t: 1 for t in TABLES})
     return d
 
 
@@ -265,30 +219,6 @@ def test_onerow_warehouse_exact_parity(spark, onerow_dir):
     this test before it can reach a driver hash check."""
     import __spark_entry__ as entry
 
-    q, o = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{onerow_dir}/{t}.parquet'"
-        )
-    bad = []
-    for name in sorted(o):
-        try:
-            srows = sorted(
-                tuple(str(x) for x in r)
-                for r in q[name](spark, onerow_dir).collect()
-            )
-        except Exception as exc:  # noqa: BLE001 — collect all failures
-            bad.append((name, f"spark-err: {type(exc).__name__}: {str(exc)[:90]}"))
-            continue
-        drows = sorted(
-            tuple(str(x) for x in r) for r in con.execute(o[name]).fetchall()
-        )
-        if srows != drows:
-            first = next(
-                (f"{a[:4]} vs {b[:4]}" for a, b in zip(srows, drows) if a != b),
-                f"row counts {len(srows)} vs {len(drows)}",
-            )
-            bad.append((name, f"diff: {first}"))
-    con.close()
+    outcomes = run(spark, sorted(entry.oracle_sql()), onerow_dir)
+    bad = [str(oc) for oc in outcomes if oc.status != "match"]
     assert bad == []

@@ -27,6 +27,9 @@ import re
 import duckdb
 import pytest
 
+from databricks_spark_sql_challenge1_spark.catalog import TABLES
+from tools.parity_names import run
+
 # One nasty property per doc; doc_id = list position.
 ADVERSARIAL_DOCS = [
     # (text, lang, source)
@@ -73,10 +76,7 @@ ADVERSARIAL_DOCS = [
 # out of scope for a text-content fuzz.
 SKIP_PREFIXES = ("multimodal_", "streaming_", "jsonl_", "orc_")
 
-OTHER_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "embeddings",
-]
+OTHER_TABLES = [t for t in TABLES if t != "documents"]
 
 
 def _random_collision_docs(seed: int = 13, n_docs: int = 30) -> list:
@@ -162,33 +162,8 @@ def test_fuzz_corpus_covers_the_documents_only_surface():
 def test_adversarial_corpus_oracle_parity(spark, fuzz_dir):
     """Every documents-only query must agree with its oracle on the nasty
     corpus — same sorted-stringified-row compare the grading driver uses."""
-    import __spark_entry__ as entry
-
-    q, o = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{fuzz_dir}/documents.parquet'"
-    )
-    bad = []
-    for name in _documents_only_names():
-        try:
-            srows = sorted(
-                tuple(str(x) for x in r)
-                for r in q[name](spark, fuzz_dir).collect()
-            )
-        except Exception as exc:  # noqa: BLE001 — collect all failures
-            bad.append((name, f"spark-err: {str(exc)[:120]}"))
-            continue
-        drows = sorted(
-            tuple(str(x) for x in r) for r in con.execute(o[name]).fetchall()
-        )
-        if srows != drows:
-            first = next(
-                (f"{a[:6]} vs {b[:6]}" for a, b in zip(srows, drows) if a != b),
-                f"row counts {len(srows)} vs {len(drows)}",
-            )
-            bad.append((name, f"diff: {first}"))
-    con.close()
+    outcomes = run(spark, _documents_only_names(), fuzz_dir)
+    bad = [str(oc) for oc in outcomes if oc.status != "match"]
     assert bad == []
 
 
@@ -257,26 +232,11 @@ def test_integer_average_boundary_contract(spark, tmp_path):
     division) and scale-0 boundaries (N.5) are all binary-exact, so
     both engines always see the same side. Pinned end-to-end on
     lang_stats with the witness corpus."""
-    import duckdb
-
-    import __spark_entry__ as entry
-
     d = str(tmp_path)
     _write_docs(d, [("", "en", "src0")] * 39 + [("x" * 41, "en", "src0")])
-    q, o = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'"
-    )
-    srows = sorted(
-        tuple(str(x) for x in r) for r in q["lang_stats"](spark, d).collect()
-    )
-    drows = sorted(
-        tuple(str(x) for x in r)
-        for r in con.execute(o["lang_stats"]).fetchall()
-    )
-    con.close()
-    assert srows == drows, (srows, drows)
+    (oc,) = run(spark, ["lang_stats"], d)
+    assert oc.status == "match", str(oc)
+    srows = sorted(oc.rows)
     # the boundary really is exercised: avg_chars is the 1.025 case
     assert srows[0][3] == "1.03", srows
 
@@ -291,10 +251,6 @@ def test_prerounded_score_boundary_contract(spark, tmp_path):
     This corpus manufactures a doc whose score is exactly the measured
     divergent member 0.193150 (50 tokens → 0.5 factor; 10000 chars with
     6137 punct → 0.3863 factor)."""
-    import duckdb
-
-    import __spark_entry__ as entry
-
     words = ["a" * 77] * 49 + ["a" * 41]  # 50 tokens, 3814 alnum chars
     text = " ".join(words) + "!" * 6137   # + 49 spaces = 10000 chars
     assert len(text) == 10000
@@ -302,21 +258,9 @@ def test_prerounded_score_boundary_contract(spark, tmp_path):
     _write_docs(d, [(text, "en", "src0"),
                     ("hello world clean text", "en", "src1"),
                     ("", "en", "src2")])
-    q, o = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'"
-    )
-    srows = sorted(
-        tuple(str(x) for x in r)
-        for r in q["docs_quality_tiers"](spark, d).collect()
-    )
-    drows = sorted(
-        tuple(str(x) for x in r)
-        for r in con.execute(o["docs_quality_tiers"]).fetchall()
-    )
-    con.close()
-    assert srows == drows, (srows, drows)
+    (oc,) = run(spark, ["docs_quality_tiers"], d)
+    assert oc.status == "match", str(oc)
+    srows = oc.rows
     # the boundary member is really present, and both engines now give
     # the scale-0 answer: raw*1e4 = 1931.4999999999998 (the identical
     # IEEE double on both sides, BELOW the half) → micro 1931 → 0.1931

@@ -38,6 +38,9 @@ from datetime import datetime, timedelta
 import duckdb
 import pytest
 
+from databricks_spark_sql_challenge1_spark.catalog import TABLES
+from tools.parity_names import run
+
 D = datetime
 PRIOS = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 
@@ -54,9 +57,6 @@ CONTRACT_EXCLUDED = {"approx_price_percentiles"}
 # cents-boundary values exercise the window/dedup/attribution state
 # paths); the rows-only streaming_* names have no oracle to compare.
 SKIP_PREFIXES = ("multimodal_", "jsonl_", "orc_")
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "embeddings", "documents"]
 
 
 def build_fixture(path: str) -> None:
@@ -397,34 +397,8 @@ def test_fuzz_fixture_covers_the_relational_surface():
 
 
 def test_adversarial_relational_oracle_parity(spark, fuzz_rel_dir):
-    import __spark_entry__ as entry
-
-    q, o = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{fuzz_rel_dir}/{t}.parquet'"
-        )
-    bad = []
-    for name in _relational_names():
-        try:
-            srows = sorted(
-                tuple(str(x) for x in r)
-                for r in q[name](spark, fuzz_rel_dir).collect()
-            )
-        except Exception as exc:  # noqa: BLE001 — collect all failures
-            bad.append((name, f"spark-err: {str(exc)[:120]}"))
-            continue
-        drows = sorted(
-            tuple(str(x) for x in r) for r in con.execute(o[name]).fetchall()
-        )
-        if srows != drows:
-            first = next(
-                (f"{a[:6]} vs {b[:6]}" for a, b in zip(srows, drows) if a != b),
-                f"row counts {len(srows)} vs {len(drows)}",
-            )
-            bad.append((name, f"diff: {first}"))
-    con.close()
+    outcomes = run(spark, _relational_names(), fuzz_rel_dir)
+    bad = [str(oc) for oc in outcomes if oc.status != "match"]
     assert bad == []
 
 
@@ -489,9 +463,9 @@ def test_nonfinite_embedding_components_are_out_of_contract():
 
 
 def test_tenth_cent_money_is_out_of_contract(spark):
-    """r18 random-warehouse sweep finding (tools/fuzz_rel_seeds_probe.py,
-    seed 200): tenth-cent values in MONEY columns (o_totalprice,
-    c_acctbal, s_acctbal, p_retailprice, l_extendedprice) put
+    """r18 random-warehouse sweep finding (``tools/parity_names.py
+    --perturb fuzz-rel``, seed 200): tenth-cent values in MONEY columns
+    (o_totalprice, c_acctbal, s_acctbal, p_retailprice, l_extendedprice) put
     ``ROUND(agg, 2)`` outputs exactly ON a .005 rounding boundary, where
     Spark (shortest-decimal-repr HALF_UP) and DuckDB (exact-binary)
     round apart — ``cube_order_summary`` read 1237.24 vs 1237.23 and
@@ -545,10 +519,6 @@ def test_integer_average_scale4_boundary_contract(spark, tmp_path):
     formulation (SUM(k)*10^4 / COUNT(k), scale-0 ROUND — denominator
     COUNT(k), matching AVG's NULL-skipping, exercised here by an
     all-NULL-k group)."""
-    from datetime import datetime, timedelta
-
-    import __spark_entry__ as entry
-
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE events (event_id BIGINT, ts TIMESTAMP, "
@@ -574,18 +544,8 @@ def test_integer_average_scale4_boundary_contract(spark, tmp_path):
     con.execute(f"COPY events TO '{d}/events.parquet' (FORMAT PARQUET)")
     con.close()
 
-    q, o = entry.queries(), entry.oracle_sql()
-    oc = duckdb.connect()
-    oc.execute(f"CREATE VIEW events AS SELECT * FROM '{d}/events.parquet'")
-    srows = sorted(
-        tuple(str(x) for x in r)
-        for r in q["events_json_extract"](spark, d).collect()
-    )
-    drows = sorted(
-        tuple(str(x) for x in r)
-        for r in oc.execute(o["events_json_extract"]).fetchall()
-    )
-    oc.close()
-    assert srows == drows, (srows, drows)
+    (oc,) = run(spark, ["events_json_extract"], d)
+    assert oc.status == "match", str(oc)
+    srows = oc.rows
     assert ("view", "800", "-2599", "-3.2488") in srows, srows
     assert ("click", "5", "None", "None") in srows, srows

@@ -13,15 +13,16 @@ pick, a non-total window ORDER BY, a rank tie broken by arrival order —
 is a real cluster bug the pristine fixtures can never show.
 
 Measured r18 (probe-then-pin, the r13/r15/r18-NULL protocol,
-tools/layout_probe.py): Spark reading a REWRITTEN warehouse — rows
-pseudo-randomly permuted per table, each table resharded into 3-7
+``tools/parity_names.py --perturb layout``): Spark reading a REWRITTEN
+warehouse — rows pseudo-randomly permuted per table, each table
+resharded into 3-7
 uneven part-files PLUS one zero-row part-file (distributed writers
 routinely emit empty parts) under a ``{table}.parquet/`` DIRECTORY —
 under perturbed runtime confs (shuffle.partitions 7, maxPartitionBytes
 256 KiB, openCostInBytes 0, so every part-file is its own scan
 partition) against the DuckDB oracles on the ORIGINAL warehouse.
 Result: **147/147 oracle pairs bit-exact** (confirmed at sf0.01 by the
-full-registry ``tools/layout_probe.py --sf /root/testdata/sf0.01``
+full-registry ``--perturb layout --sf /root/testdata/sf0.01``
 sweep on the post-fix tree: 147/147, bad: []; and at sf0.1 — 145/147,
 bad: [], plus the two deliberate graph-oracle skips under the probe's
 150 s DuckDB watchdog) after two findings were fixed — one real bug:
@@ -69,28 +70,19 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.layout_probe import PROBE_CONFS, build_shuffled_warehouse
-from tools.parity_names import has_top_level_order_by
+from databricks_spark_sql_challenge1_spark.catalog import TABLES
+from tools.parity_names import (
+    LAYOUT_CONFS,
+    build_shuffled_warehouse,
+    run,
+    session_confs,
+)
 
 SRC = "/root/testdata/sf0.001"
-
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
 
 
 @pytest.fixture(scope="module")
@@ -117,13 +109,8 @@ def layout_dir(tmp_path_factory):
 
 @pytest.fixture()
 def perturbed_confs(spark):
-    priors = {k: spark.conf.get(k, None) for k, _v in PROBE_CONFS}
-    for k, v in PROBE_CONFS:
-        spark.conf.set(k, v)
-    yield
-    for k, v in priors.items():
-        if v is not None:
-            spark.conf.set(k, v)
+    with session_confs(spark, LAYOUT_CONFS):
+        yield
 
 
 def test_layout_invariance_oracle_parity(spark, layout_dir, perturbed_confs):
@@ -134,37 +121,8 @@ def test_layout_invariance_oracle_parity(spark, layout_dir, perturbed_confs):
     declared order is not total — the CLAUDE.md hazard)."""
     import __spark_entry__ as entry
 
-    q, o = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SRC}/{t}.parquet'")
-    bad = []
-    for name in sorted(o):
-        try:
-            sseq = [
-                tuple(str(x) for x in r)
-                for r in q[name](spark, layout_dir).collect()
-            ]
-            dseq = [
-                tuple(str(x) for x in r)
-                for r in con.execute(o[name]).fetchall()
-            ]
-        except Exception as exc:  # noqa: BLE001 — collect all failures
-            bad.append((name, f"err: {type(exc).__name__}: {str(exc)[:90]}"))
-            continue
-        if sorted(sseq) != sorted(dseq):
-            first = next(
-                (
-                    f"{a[:5]} vs {b[:5]}"
-                    for a, b in zip(sorted(sseq), sorted(dseq))
-                    if a != b
-                ),
-                f"row counts {len(sseq)} vs {len(dseq)}",
-            )
-            bad.append((name, f"diff: {first}"))
-        elif sseq != dseq and has_top_level_order_by(o[name]):
-            bad.append((name, "ORDER-ONLY: declared order not total"))
-    con.close()
+    outcomes = run(spark, sorted(entry.oracle_sql()), layout_dir, SRC)
+    bad = [str(oc) for oc in outcomes if oc.status != "match"]
     assert bad == []
 
 

@@ -129,10 +129,10 @@ def test_thumbnail_empty_payload_guard(spark):
 
 
 def test_empty_text_payload_parity_contract(spark, tmp_path):
-    """r18 ASCII multimodal fuzz find (tools/fuzz_seeds_probe.py
-    --multimodal): an EMPTY-text document — empty synthesized payload —
-    diverged from the oracle on two surfaces until the oracles replayed
-    the kernels' empty-payload conventions:
+    """r18 ASCII multimodal fuzz find (``tools/parity_names.py
+    --perturb fuzz-multimodal``): an EMPTY-text document — empty
+    synthesized payload — diverged from the oracle on two surfaces until
+    the oracles replayed the kernels' empty-payload conventions:
 
     - ``multimodal_frame_stats``: the sampler's ``max(1, ceil(n/64))``
       floor means an empty payload is ONE empty frame; the oracle's raw
@@ -145,30 +145,15 @@ def test_empty_text_payload_parity_contract(spark, tmp_path):
     across the full 13-name multimodal oracle surface — empty text is IN
     contract for the codec witnesses (NULL text is the loud-guard
     fixture-convention error; see test_witness_text_bytes_guard)."""
-    import duckdb
-
     import __spark_entry__ as entry
     from tests.test_fuzz_parity import _write_docs
+    from tools.parity_names import run
 
     d = str(tmp_path)
     _write_docs(d, [("", "en", "src0"), ("   ", "en", "src1"),
                     ("hello world", "en", "src2")])
-    q, o = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'"
-    )
-    bad = []
-    for name in sorted(n for n in o if n.startswith("multimodal_")):
-        srows = sorted(
-            tuple(str(x) for x in r) for r in q[name](spark, d).collect()
-        )
-        drows = sorted(
-            tuple(str(x) for x in r) for r in con.execute(o[name]).fetchall()
-        )
-        if srows != drows:
-            bad.append((name, srows[:2], drows[:2]))
-    con.close()
+    names = sorted(n for n in entry.oracle_sql() if n.startswith("multimodal_"))
+    bad = [str(oc) for oc in run(spark, names, d) if oc.status != "match"]
     assert bad == []
 
 

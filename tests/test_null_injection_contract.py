@@ -52,18 +52,8 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+from databricks_spark_sql_challenge1_spark.catalog import TABLES
+from tools.parity_names import run
 
 # (column, deterministic row predicate) per table — non-key attributes,
 # measures, and FKs only (see the contract boundary in the module doc).
@@ -162,53 +152,38 @@ def null_dir(tmp_path_factory):
     return d
 
 
+def _drop_columns(queries, oracles, contract):
+    """The registry with each ``contract`` name's columns dropped on both
+    sides (Spark ``drop``, DuckDB ``EXCLUDE``)."""
+    queries, oracles = dict(queries), dict(oracles)
+    for name, cols in contract.items():
+        base = queries[name]
+        queries[name] = lambda s, d, base=base, cols=cols: base(s, d).drop(*cols)
+        oracles[name] = (
+            f"SELECT * EXCLUDE ({', '.join(cols)}) FROM ({oracles[name]})"
+        )
+    return queries, oracles
+
+
 def test_null_injection_oracle_parity(spark, null_dir):
     import __spark_entry__ as entry
 
-    q, o = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{null_dir}/{t}.parquet'"
-        )
+    o = entry.oracle_sql()
+    queries, oracles = _drop_columns(entry.queries(), o, AUDIT_BOOL_CONTRACT)
     bad = []
     raised_convention = []
-    for name in sorted(o):
-        try:
-            sdf = q[name](spark, null_dir)
-            drop = AUDIT_BOOL_CONTRACT.get(name, ())
-            keep = [c for c in sdf.columns if c not in drop]
-            srows = sorted(
-                tuple(str(x) for x in r) for r in sdf.select(*keep).collect()
-            )
-        except Exception as exc:  # noqa: BLE001 — collect all failures
-            if name.startswith(MULTIMODAL_PREFIX) and CONVENTION_ERR in str(exc):
-                raised_convention.append(name)
-                continue
-            bad.append((name, f"spark-err: {type(exc).__name__}: {str(exc)[:90]}"))
-            continue
-        if name.startswith(MULTIMODAL_PREFIX):
-            bad.append((name, "expected the NULL-text convention error"))
-            continue
-        try:
-            dall = con.execute(o[name])
-            dcols = [c[0] for c in dall.description]
-            drows_full = dall.fetchall()
-        except Exception as exc:  # noqa: BLE001
-            bad.append((name, f"duck-err: {type(exc).__name__}: {str(exc)[:90]}"))
-            continue
-        drop = AUDIT_BOOL_CONTRACT.get(name, ())
-        idx = [i for i, c in enumerate(dcols) if c not in drop]
-        drows = sorted(
-            tuple(str(r[i]) for i in idx) for r in drows_full
-        )
-        if srows != drows:
-            first = next(
-                (f"{a[:5]} vs {b[:5]}" for a, b in zip(srows, drows) if a != b),
-                f"row counts {len(srows)} vs {len(drows)}",
-            )
-            bad.append((name, f"diff: {first}"))
-    con.close()
+    for oc in run(spark, sorted(o), null_dir, queries=queries, oracles=oracles):
+        if oc.name.startswith(MULTIMODAL_PREFIX):
+            if oc.status == "spark-error" and CONVENTION_ERR in str(oc.error):
+                raised_convention.append(oc.name)
+            else:
+                bad.append((oc.name, "expected the NULL-text convention error"))
+        # multiset compare: 23 oracles declare a top-level ORDER BY over a
+        # column injected NULL here without explicit NULLS FIRST/LAST, and
+        # the engines' default NULL placement differs (the root cause
+        # pinned in test_null_date_window_placement_diverges)
+        elif oc.status not in ("match", "ORDER-ONLY"):
+            bad.append(str(oc))
     assert bad == []
     # the whole codec-witness family must hit the loud convention error —
     # a silent pass would mean a NULL payload slipped through a kernel

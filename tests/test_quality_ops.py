@@ -130,21 +130,26 @@ def test_multimodal_oracles_guard_empty_documents():
     import duckdb
 
     from databricks_spark_sql_challenge1_spark.registry import ORACLES
+    from tools.parity_names import oracle_rows
 
     con = duckdb.connect()
     con.sql(
         "CREATE VIEW documents AS SELECT CAST(0 AS BIGINT) AS doc_id, "
         "'' AS text, 'en' AS lang, 'web' AS source, CAST(0 AS BIGINT) AS n_chars"
     )
-    bmp = con.sql(ORACLES["multimodal_bmp_parse"]).fetchall()
+
+    def rows(name):
+        return oracle_rows(con, ORACLES[name])[1]
+
+    bmp = rows("multimodal_bmp_parse")
     assert bmp == [(0, 0, 0, 54, 0, 0)], bmp
-    png = con.sql(ORACLES["multimodal_png_roundtrip"]).fetchall()
+    png = rows("multimodal_png_roundtrip")
     assert png == [(0, 32, 0, 0, 0, 0, 0)], png
-    wav = con.sql(ORACLES["multimodal_wav_parse"]).fetchall()
+    wav = rows("multimodal_wav_parse")
     assert wav == [(0, 16000, 0, 36, 0, 0, 0)], wav
-    gif = con.sql(ORACLES["multimodal_gif_roundtrip"]).fetchall()
+    gif = rows("multimodal_gif_roundtrip")
     assert gif == [(0, 32, 0, 0, 0, 0, 0)], gif
-    thumb = con.sql(ORACLES["multimodal_image_thumbnail"]).fetchall()
+    thumb = rows("multimodal_image_thumbnail")
     assert all(v is not None for row in thumb for v in row), thumb
 
 

@@ -17,9 +17,9 @@ interpreted and codegen'd paths disagree — is a real cluster bug the
 default-conf run can never show.
 
 Measured r18 (probe-then-pin, the r13/r15/r18-NULL/r18-layout protocol,
-tools/strategy_probe.py): all oracle-backed queries re-run against
-their DuckDB oracles on the SAME warehouse with the strategy flipped
-wholesale — auto-broadcast OFF (explicit ``F.broadcast`` hints still
+``tools/parity_names.py --perturb strategy``): all oracle-backed
+queries re-run against their DuckDB oracles on the SAME warehouse with
+the strategy flipped wholesale — auto-broadcast OFF (explicit ``F.broadcast`` hints still
 apply: hints are part of the declared plan), shuffled-hash preferred
 over sort-merge for the joins that remain, AQE OFF, whole-stage codegen
 OFF, runtime bloom filters OFF, and ``arrow.maxRecordsPerBatch=7`` so
@@ -50,39 +50,24 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.parity_names import has_top_level_order_by
-from tools.strategy_probe import PROBE_CONFS, assert_nonvacuous
+from tools.parity_names import (
+    STRATEGY_CONFS,
+    assert_nonvacuous,
+    run,
+    session_confs,
+)
 
 SRC = "/root/testdata/sf0.001"
-
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
 
 
 @pytest.fixture()
 def strategy_confs(spark):
-    priors = {k: spark.conf.get(k, None) for k, _v in PROBE_CONFS}
-    for k, v in PROBE_CONFS:
-        spark.conf.set(k, v)
-    yield
-    for k, v in priors.items():
-        if v is not None:
-            spark.conf.set(k, v)
+    with session_confs(spark, STRATEGY_CONFS):
+        yield
 
 
 def test_probe_confs_flip_the_physical_plan(spark, strategy_confs):
@@ -98,35 +83,6 @@ def test_strategy_invariance_oracle_parity(spark, strategy_confs):
     oracle declares a top-level ORDER BY."""
     import __spark_entry__ as entry
 
-    q, o = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SRC}/{t}.parquet'")
-    bad = []
-    for name in sorted(o):
-        try:
-            sseq = [
-                tuple(str(x) for x in r)
-                for r in q[name](spark, SRC).collect()
-            ]
-            dseq = [
-                tuple(str(x) for x in r)
-                for r in con.execute(o[name]).fetchall()
-            ]
-        except Exception as exc:  # noqa: BLE001 — collect all failures
-            bad.append((name, f"err: {type(exc).__name__}: {str(exc)[:90]}"))
-            continue
-        if sorted(sseq) != sorted(dseq):
-            first = next(
-                (
-                    f"{a[:5]} vs {b[:5]}"
-                    for a, b in zip(sorted(sseq), sorted(dseq))
-                    if a != b
-                ),
-                f"row counts {len(sseq)} vs {len(dseq)}",
-            )
-            bad.append((name, f"diff: {first}"))
-        elif sseq != dseq and has_top_level_order_by(o[name]):
-            bad.append((name, "ORDER-ONLY: declared order not total"))
-    con.close()
+    outcomes = run(spark, sorted(entry.oracle_sql()), SRC)
+    bad = [str(oc) for oc in outcomes if oc.status != "match"]
     assert bad == []
