@@ -60,22 +60,30 @@ SELECT o_orderstatus, o_orderpriority,
        ROUND(CAST(SUM(o_totalprice) AS DOUBLE), 2) AS total_value
 FROM orders
 GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST
+ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST,
+         GROUPING(o_orderstatus, o_orderpriority) ASC
 """,
 )
 def rollup_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP aggregation (status → status+priority → grand total)."""
+    """ROLLUP aggregation (status → status+priority → grand total).
+
+    The grouping id is the last sort key: a NULL status or priority in the
+    data groups under the same NULL as a rollup subtotal, and without it
+    those rows tie and the engines order them apart."""
     orders = load_table(spark, sf_dir, "orders", spread=True)
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_value"),
+            F.grouping_id().alias("gid"),
         )
         .orderBy(
             F.col("o_orderstatus").asc_nulls_first(),
             F.col("o_orderpriority").asc_nulls_first(),
+            F.col("gid").asc(),
         )
+        .drop("gid")
     )
 
 
@@ -128,7 +136,7 @@ SELECT o_orderpriority,
        CAST(COALESCE(SUM(CASE WHEN o_orderstatus = 'P' THEN 1 END), 0) AS BIGINT) AS pending_orders
 FROM orders
 GROUP BY o_orderpriority
-ORDER BY o_orderpriority ASC
+ORDER BY o_orderpriority ASC NULLS FIRST
 """,
 )
 def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,7 +351,7 @@ SELECT o_orderstatus,
        ROUND(quantile_cont(o_totalprice, 0.99), 2) AS p99
 FROM orders
 GROUP BY o_orderstatus
-ORDER BY o_orderstatus ASC
+ORDER BY o_orderstatus ASC NULLS FIRST
 """,
 )
 def price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,7 +428,7 @@ SELECT o_orderstatus, metric, value FROM (
     UNION ALL
     SELECT o_orderstatus, 'avg_value', avg_value FROM s
 )
-ORDER BY o_orderstatus ASC, metric ASC
+ORDER BY o_orderstatus ASC NULLS FIRST, metric ASC
 """,
 )
 def orders_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:

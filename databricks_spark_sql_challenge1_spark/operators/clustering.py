@@ -32,9 +32,8 @@ from databricks_spark_sql_challenge1_spark.operators.abandonment import (
     TOP_ABANDONED_PAIRS_SQL,
 )
 from databricks_spark_sql_challenge1_spark.operators.dedup import (
-    _simhash_sql_duckdb,
+    _simhash_pairs_sql,
     dedup_simhash_pairs,
-    HAMMING_MAX,
 )
 from databricks_spark_sql_challenge1_spark.registry import query
 
@@ -141,13 +140,6 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(nodes, pairs)
 
 
-_PAIRS_SQL = f"""
-    SELECT a.doc_id AS doc_1, b.doc_id AS doc_2
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= {HAMMING_MAX}
-"""
-
-
 def _min_label_ctes(nodes_sql: str, node: str, label: str) -> str:
     """Oracle-side connected components over an ``edges(src, dst)`` CTE:
     recursive min-label propagation. Every node of ``nodes_sql`` starts
@@ -181,8 +173,7 @@ lab AS (
 # edges → min-label propagation per node.
 _CC_LAB_SQL = f"""
 WITH RECURSIVE
-sig AS ({_simhash_sql_duckdb().replace("ORDER BY doc_id ASC", "")}),
-pairs AS ({_PAIRS_SQL}),
+pairs AS ({_simhash_pairs_sql("narrow32")}),
 edges AS (
     SELECT doc_1 AS src, doc_2 AS dst FROM pairs
     UNION ALL
@@ -720,11 +711,11 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _emb_clusters_oracle_sql() -> str:
     from databricks_spark_sql_challenge1_spark.operators.dedup import (
-        _emb_lsh_adaptive_ctes,
+        _emb_lsh_ctes,
     )
 
     return f"""
-WITH RECURSIVE {_emb_lsh_adaptive_ctes()},
+WITH RECURSIVE {_emb_lsh_ctes()},
 edges AS (
     SELECT vec_1 AS src, vec_2 AS dst FROM lshp
     UNION ALL
@@ -752,7 +743,7 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the pair stage is the measured-flat adaptive LSH plan;
     components run log-round label propagation on the (sparse) pair set;
     the survivor rule is one window over cluster_id. The oracle chains the
-    SAME generated LSH CTEs (shared via ``_emb_lsh_adaptive_ctes`` — one
+    SAME generated LSH CTEs (shared via ``_emb_lsh_ctes`` — one
     source of truth) into the shared min-label recursion
     (``_min_label_ctes``).
     """

@@ -3,9 +3,9 @@ exact (hash-groupBy), normalized fingerprint, n-gram Jaccard near-dup,
 SimHash near-dup, and MinHash+LSH (spark.ml; rows-only check).
 
 Hash-function policy: everything oracle-checked hashes via md5 (identical
-hex output in Spark and DuckDB); token hashes for SimHash are the first 8
-md5 hex chars parsed as a 32-bit integer — reproducible bit-for-bit on both
-engines. spark.ml's MinHashLSH uses JVM-internal hashes → rows-only entry.
+hex output in Spark and DuckDB); token hashes for SimHash are md5 hex
+slices parsed as integers, one slice per signature limb (SIMHASH_LAYOUTS) —
+reproducible bit-for-bit on both engines. spark.ml's MinHashLSH uses JVM-internal hashes → rows-only entry.
 """
 
 from __future__ import annotations
@@ -26,11 +26,16 @@ JACCARD_THRESHOLD = 0.2
 # guard for shingle-based near-dup at web scale. Mirrored bit-for-bit in
 # the DuckDB oracle (same cut, same universe), so parity is exact.
 NGRAM_DF_CAP = 128
-SIMHASH_BITS = 32
 # The fixture documents draw from a tiny shared vocabulary, so signatures
 # cluster tightly; Hamming ≤ 3 keeps the near-dup output meaningfully sparse
 # (≤ 6 marks nearly half of all pairs "near-dup" on this corpus).
 HAMMING_MAX = 3
+
+
+def _ceil_log2(n: int) -> int:
+    """ceil(log2 n) for n >= 2 (n < 2 counts as 2), in integer arithmetic:
+    no float libm on the path to a band width (VERDICT r16 #6)."""
+    return (max(n, 2) - 1).bit_length()
 
 
 @query(
@@ -41,7 +46,7 @@ SELECT md5(text) AS text_hash,
        MIN(doc_id) AS canonical_doc_id
 FROM documents
 GROUP BY text
-ORDER BY text_hash ASC
+ORDER BY text_hash ASC NULLS FIRST
 """,
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,7 +78,7 @@ SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint,
        MIN(doc_id) AS canonical_doc_id
 FROM documents
 GROUP BY 1
-ORDER BY fingerprint ASC
+ORDER BY fingerprint ASC NULLS FIRST
 """,
 )
 def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -224,48 +229,81 @@ def _ngram_jaccard(docs: DataFrame, df_cap: int) -> DataFrame:
 
 # --- SimHash ---------------------------------------------------------------
 
+# One row per signature layout: the md5 hex slices (start, length) of each
+# limb. A limb of k hex chars is a 4k-bit signature word — at most 60 bits,
+# so signed 64-bit arithmetic holds on both engines. Token hashes, bit
+# algebra, Hamming distance and pigeonhole regions all derive from here.
+#   narrow32    the 32-bit fixture baseline;
+#   wide60      the measured 100 TB configuration (SCALE.md round 5);
+#   adaptive88  two 44-bit limbs, for the corpus-size-adaptive band keys of
+#               ``dedup_simhash_adaptive``.
+SIMHASH_LAYOUTS = {
+    "narrow32": ((1, 8),),
+    "wide60": ((1, 15),),
+    "adaptive88": ((1, 11), (12, 11)),
+}
 
-def _simhash_exprs_spark(n_bits: int = SIMHASH_BITS, col: str = "h") -> str:
-    """SUM-of-sign per bit, then recombine: Spark SQL expression string.
-    Identical text is valid DuckDB SQL — both engines share the algebra."""
-    bits = " + ".join(
-        f"(CASE WHEN sum(CASE WHEN ({col} >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
+# Incremental split: the fixture has no arrival timestamp on documents, so
+# doc_id % 5 == 0 stands in for "today's incoming batch" (20% of the corpus)
+# vs the already-ingested 80%. Fixtures contain NO exact-duplicate texts
+# (verified: 0 groups with count>1), so incremental dedup is defined on the
+# SimHash near-dup relation — the realistic production check anyway.
+INCREMENTAL_MOD = 5
+
+# DuckDB spells XOR ``xor(a, b)``: its ``^`` is POWER (Spark's is XOR).
+_DUCK_XOR = "xor({}, {})"
+
+
+def _simhash_regions(layout: str) -> tuple[tuple[int, int, int], ...]:
+    """The HAMMING_MAX + 1 pigeonhole regions of a layout as (limb, shift,
+    width): equal, disjoint bit slices, each inside one limb. Two
+    signatures within Hamming HAMMING_MAX differ in at most HAMMING_MAX
+    regions, so they agree exactly on at least one."""
+    limbs = SIMHASH_LAYOUTS[layout]
+    per_limb, rest = divmod(HAMMING_MAX + 1, len(limbs))
+    width = 4 * limbs[0][1] // per_limb
+    assert rest == 0 and all(4 * n == per_limb * width for _s, n in limbs)
+    return tuple(
+        (limb, r * width, width)
+        for limb in range(len(limbs))
+        for r in range(per_limb)
+    )
+
+
+def _limb_hashes(hx, layout: str) -> list:
+    """One BIGINT token hash per limb of ``layout``, sliced from the md5 hex
+    column ``hx`` (Spark side; ``_simhash_sig_sql`` slices the same chars)."""
+    return [
+        F.conv(F.substring(hx, start, n), 16, 10).cast("bigint")
+        for start, n in SIMHASH_LAYOUTS[layout]
+    ]
+
+
+def _simhash_bits(n_bits: int, h: str, fold: str = "sum({})") -> str:
+    """SimHash bit algebra, one SQL expression (valid Spark SQL and DuckDB):
+    bit b of the signature is set iff the ``fold`` of the tokens' ±1 votes
+    on bit b of their hash ``h`` is positive. Batch folds rows with
+    ``sum``; a stream folds a per-row array with ``aggregate``."""
+    return " + ".join(
+        f"(CASE WHEN {fold.format(f'CASE WHEN ({h} >> {b}) & 1 = 1 THEN 1 ELSE -1 END')} > 0 "
         f"THEN CAST({1 << b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
         for b in range(n_bits)
     )
-    return bits
 
 
-def _simhash_sql_duckdb() -> str:
-    bits = " + ".join(
-        f"(CASE WHEN sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
-        f"THEN CAST({1 << b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for b in range(SIMHASH_BITS)
+def _hamming_sql(layout: str, a: str, b: str, xor: str = "({} ^ {})") -> str:
+    """Hamming distance between the signatures of relations ``a`` and
+    ``b``: the bit counts of each limb's XOR, summed."""
+    return " + ".join(
+        f"bit_count({xor.format(f'{a}.s{i}', f'{b}.s{i}')})"
+        for i in range(len(SIMHASH_LAYOUTS[layout]))
     )
-    return f"""
-WITH toks AS (
-    SELECT DISTINCT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
-    FROM documents
-),
-hashed AS (
-    SELECT doc_id,
-           CAST(CAST('0x' || substr(md5(tok), 1, 8) AS UBIGINT) AS BIGINT) AS h
-    FROM toks
-)
-SELECT doc_id, {bits} AS simhash
-FROM hashed
-GROUP BY doc_id
-ORDER BY doc_id ASC
-"""
-
 
 
 def _distinct_token_md5(docs: DataFrame) -> DataFrame:
     """(doc_id, hx): md5 hex of each DISTINCT (doc_id, token) — the shared
-    prefix of every SimHash signature width (round-18: the 32/60/88-bit
-    legs of ``dedup_simhash_methods`` all tokenize + distinct + md5 the
-    corpus identically and then slice different hex ranges; the distinct
-    runs BEFORE hashing so the dedup key is the token itself)."""
+    prefix of every SimHash layout (the distinct runs BEFORE hashing, so
+    the dedup key is the token itself)."""
     return (
         docs.select(
             "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
@@ -275,206 +313,222 @@ def _distinct_token_md5(docs: DataFrame) -> DataFrame:
     )
 
 
-# The registered oracle strips the helper's top-level ORDER BY: the
-# registered form is deliberately UNSORTED (below), so a declared output
-# order in the oracle is a contract the Spark side never promises — the
-# r18 layout campaign caught exactly that (the single-file fixture
-# happened to reproduce doc_id order; a resharded warehouse does not,
-# and the ordered compare in tools/parity_names.run / the layout contract
-# test rightly flagged it). Value-identical under the driver's
-# sorted-row hash compare; the sorted presentation variant is
-# ``text_simhash`` below.
+def _simhash_sig(layout: str, toks: DataFrame) -> DataFrame:
+    """(doc_id, s0[, s1]): the layout's SimHash limbs over a (doc_id, hx)
+    token frame (``_distinct_token_md5``) — one groupBy, a single shuffle
+    on doc_id at any scale."""
+    hashed = toks.select(
+        "doc_id",
+        *[h.alias(f"h{i}") for i, h in enumerate(_limb_hashes("hx", layout))],
+    )
+    return hashed.groupBy("doc_id").agg(
+        *[
+            F.expr(_simhash_bits(4 * n, f"h{i}")).alias(f"s{i}")
+            for i, (_start, n) in enumerate(SIMHASH_LAYOUTS[layout])
+        ]
+    )
+
+
+def _simhash_sig_sql(layout: str, source: str = "documents") -> str:
+    """The DuckDB twin of ``_simhash_sig``: the SELECT of a (doc_id, s0[, s1])
+    CTE over ``source``, any relation with doc_id and text."""
+    slices = SIMHASH_LAYOUTS[layout]
+    hashes = ", ".join(
+        f"CAST(CAST('0x' || substr(md5(tok), {start}, {n}) AS UBIGINT)"
+        f" AS BIGINT) AS h{i}"
+        for i, (start, n) in enumerate(slices)
+    )
+    limbs = ", ".join(
+        f"{_simhash_bits(4 * n, f'h{i}')} AS s{i}"
+        for i, (_start, n) in enumerate(slices)
+    )
+    return f"""
+    SELECT doc_id, {limbs}
+    FROM (
+        SELECT doc_id, {hashes}
+        FROM (SELECT DISTINCT doc_id,
+                     unnest(string_split_regex(trim(text), '\\s+')) AS tok
+              FROM {source})
+    )
+    GROUP BY doc_id"""
+
+
+def _simhash_pairs_sql(layout: str, source: str = "documents") -> str:
+    """DuckDB ground truth for a layout's near-dup pairs: the quadratic
+    all-pairs join, (doc_1 < doc_2, hamming ≤ HAMMING_MAX)."""
+    ham = _hamming_sql(layout, "a", "b", _DUCK_XOR)
+    return f"""
+WITH sig AS ({_simhash_sig_sql(layout, source)})
+SELECT a.doc_id AS doc_1, b.doc_id AS doc_2,
+       CAST({ham} AS INTEGER) AS hamming
+FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+WHERE {ham} <= {HAMMING_MAX}
+"""
+
+
+# The incremental split's ground truth as a CTE chain ending in ``hits``:
+# per incoming doc, the number of existing docs within HAMMING_MAX (all
+# pairs, narrow32). ``dedup_incremental`` and its streaming twin read it.
+_SIMHASH_SPLIT_HITS_SQL = f"""sig AS ({_simhash_sig_sql("narrow32")}),
+inc AS (SELECT * FROM sig WHERE doc_id % {INCREMENTAL_MOD} = 0),
+ex  AS (SELECT * FROM sig WHERE doc_id % {INCREMENTAL_MOD} <> 0),
+hits AS (
+    SELECT a.doc_id, COUNT(*) AS n
+    FROM inc a JOIN ex b
+      ON {_hamming_sql("narrow32", "a", "b", _DUCK_XOR)} <= {HAMMING_MAX}
+    GROUP BY a.doc_id
+)"""
+
+
+# The registered form is deliberately UNSORTED, so its oracle declares no
+# output order: the r18 layout campaign caught a declared doc_id order
+# that only the single-file fixture happened to reproduce.
 @query(
     "text_simhash",
-    oracle=_simhash_sql_duckdb().replace("ORDER BY doc_id ASC", ""),
+    oracle=f"SELECT doc_id, s0 AS simhash FROM ({_simhash_sig_sql('narrow32')})",
 )
-def _text_simhash_unsorted(
-    spark: SparkSession, sf_dir: str, _toks: DataFrame | None = None
-) -> DataFrame:
-    """``text_simhash`` without the presentation sort — the building-block
-    form for downstream joins/bands, where a global range-partitioning
-    sort before a shuffle is pure waste at scale. ``_toks`` injects the
-    shared (doc_id, hx) token frame (see ``_distinct_token_md5``)."""
-    if _toks is None:
-        _toks = _distinct_token_md5(
-            load_table(spark, sf_dir, "documents", spread=True)
-        )
-    toks = _toks.withColumn(
-        "h", F.conv(F.substring("hx", 1, 8), 16, 10).cast("bigint")
-    )
-    return toks.groupBy("doc_id").agg(
-        F.expr(_simhash_exprs_spark()).alias("simhash")
-    )
-
-
 def text_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 32-bit SimHash over distinct whitespace tokens.
 
     Token hash = first 8 md5 hex chars as int (engine-portable); bit b of
     the signature = sign of Σ ±1 over token-hash bit b. One explode + one
-    groupBy — a single shuffle on doc_id at any scale.
+    groupBy — a single shuffle on doc_id at any scale. Unsorted: the
+    building-block form for downstream joins/bands, where a global
+    range-partitioning sort before a shuffle is pure waste at scale.
     """
-    return _text_simhash_unsorted(spark, sf_dir).orderBy(
-        F.col("doc_id").asc()
+    toks = _distinct_token_md5(load_table(spark, sf_dir, "documents", spread=True))
+    return _simhash_sig("narrow32", toks).select(
+        "doc_id", F.col("s0").alias("simhash")
     )
 
 
-def _simhash_bands(
-    sig: DataFrame, n_bits: int = SIMHASH_BITS, h_max: int = HAMMING_MAX
+def _simhash_band_join(
+    layout: str,
+    left: DataFrame,
+    right: DataFrame,
+    pred=None,
+    trunc: int = 0,
 ) -> DataFrame:
-    """Explode a (doc_id, simhash) frame into pigeonhole bands.
+    """Exact near-dup pairs (doc_1 from ``left``, doc_2 from ``right``,
+    hamming ≤ HAMMING_MAX) of two (doc_id, s0[, s1]) signature frames, each
+    pair emitted EXACTLY ONCE with no post-join distinct.
 
-    h_max + 1 bands: two signatures within Hamming distance h_max must
-    agree exactly on ≥ 1 band, so an equi-join on (band_id, band_val)
-    yields a candidate superset with no N² term.
-    """
-    n_bands = h_max + 1
-    band_width = n_bits // n_bands  # default 4 bands × 8 bits
-    band_mask = (1 << band_width) - 1
-    return sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.expr(
-                            f"(simhash >> {b * band_width}) & {band_mask}"
-                        ).alias("band_val"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_id", "band.band_val")
-
-
-def _first_agreeing_band_sql(x: str, n: int, width: int, mask: int) -> str:
-    """SQL CASE: smallest band index of ``x`` (an XOR of two signatures)
-    whose ``width``-bit slice is all zeros. Well-defined whenever the two
-    signatures are within Hamming ≤ n-1 (pigeonhole); the ELSE branch only
-    fires on rows the exact Hamming filter discards anyway."""
-    whens = " ".join(
-        f"WHEN (({x} >> {b * width}) & {mask}) = 0 THEN {b}"
-        for b in range(n - 1)
-    )
-    return f"(CASE {whens} ELSE {n - 1} END)"
-
-
-def _simhash_true_pairs(
-    sig: DataFrame, n_bits: int = SIMHASH_BITS, h_max: int = HAMMING_MAX
-) -> DataFrame:
-    """Exact near-dup pairs (doc_1, doc_2, hamming ≤ HAMMING_MAX), each
-    emitted EXACTLY ONCE with no post-join distinct: a pair matching on
-    several bands is kept only where band_id equals its FIRST agreeing
-    band — computable from sh1 XOR sh2 on the joined row, so multi-band
-    duplicates are dropped by a per-row expression instead of a shuffle
-    over the full pair set.
+    Blocking: both sides explode into the layout's pigeonhole regions; a
+    pair within HAMMING_MAX agrees on at least one, so the equi-join on
+    (band_id, band_key) yields a candidate superset with no N² term.
+    ``trunc`` keeps only the top bits of each region as the band key (a
+    prefix of an agreeing region agrees too). The exact Hamming filter
+    keeps the true pairs, and a pair matching on several bands survives
+    only on its FIRST agreeing band — computable from the XOR of the two
+    signatures on the joined row, so multi-band duplicates drop by a
+    per-row expression instead of a shuffle over the matched pair set.
+    ``pred`` is an extra join predicate on the aliases ``a`` (left) and
+    ``b`` (right), e.g. ``a.doc_id < b.doc_id`` for a self-join.
 
     Measured alternatives (sf0.1, local[32], BENCH_NOTES.md §simhash r4):
-    post-join ``.distinct()`` (previous shape) — equal cold, slower warm
-    (the distinct re-shuffles ~6M matched rows); a second pigeonhole level
-    splitting dense buckets on the out-of-band bits — SLOWER here, because
-    the fixture's 3,058-doc hot bucket is true-dup-dominated (blocking can
-    never cut below the true pair count) while the sub-band explode adds
-    4× rows and wider join keys; a bloom/singleton bucket pre-pass —
-    pointless (singleton buckets emit zero join rows; 134 of 537 buckets).
-    At a real corpus where hot buckets are boilerplate-driven (few true
-    pairs), the sub-band level becomes the right lever; it is kept in git
-    history (commit adding it) and SCALE.md documents the trigger."""
-    n_bands = h_max + 1
-    band_width = n_bits // n_bands
-    band_mask = (1 << band_width) - 1
-    bands = _simhash_bands(sig, n_bits, h_max)
-    a, b = bands.alias("a"), bands.alias("b")
-    ham = F.expr("bit_count(a.simhash ^ b.simhash)")
-    first_band = _first_agreeing_band_sql(
-        "(a.simhash ^ b.simhash)", n_bands, band_width, band_mask
+    post-join ``.distinct()`` — equal cold, slower warm (it re-shuffles
+    ~6M matched rows); a second pigeonhole level splitting dense buckets
+    on the out-of-band bits — SLOWER on the fixture, whose 3,058-doc hot
+    bucket is true-dup-dominated, while the sub-band explode adds 4× rows
+    and wider join keys. At a real corpus where hot buckets are
+    boilerplate-driven, the sub-band level becomes the right lever
+    (SCALE.md documents the trigger)."""
+    regions = _simhash_regions(layout)
+
+    def region_key(limb: str, r: int) -> str:
+        i, shift, width = regions[r]
+        key = f"(({limb.format(i)} >> {shift}) & {(1 << width) - 1})"
+        return f"({key} >> {trunc})" if trunc else key
+
+    def bands(sig: DataFrame) -> DataFrame:
+        return sig.select(
+            *sig.columns,
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(r).alias("band_id"),
+                            F.expr(region_key("s{}", r)).alias("band_key"),
+                        )
+                        for r in range(len(regions))
+                    ]
+                )
+            ).alias("band"),
+        ).select(*sig.columns, "band.band_id", "band.band_key")
+
+    last = len(regions) - 1
+    whens = " ".join(
+        f"WHEN {region_key('(a.s{0} ^ b.s{0})', r)} = 0 THEN {r}"
+        for r in range(last)
     )
+    on = (F.col("a.band_id") == F.col("b.band_id")) & (
+        F.col("a.band_key") == F.col("b.band_key")
+    )
+    if pred is not None:
+        on = on & pred
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(ham <= h_max)
-        .where(F.expr(f"a.band_id = {first_band}"))
+        bands(left).alias("a")
+        .join(bands(right).alias("b"), on)
+        .withColumn("hamming", F.expr(_hamming_sql(layout, "a", "b")).cast("int"))
+        .where(F.col("hamming") <= HAMMING_MAX)
+        .where(F.expr(f"a.band_id = (CASE {whens} ELSE {last} END)"))
         .select(
             F.col("a.doc_id").alias("doc_1"),
             F.col("b.doc_id").alias("doc_2"),
-            ham.cast("int").alias("hamming"),
+            "hamming",
         )
     )
 
 
-# Oracle kept as a module constant: since r13 the three SimHash pair scans
-# register through the consolidated ``dedup_simhash_methods`` (capacity
-# policy, same move as similarity_ann_methods), which unions these
-# verbatim — each method's SQL stays single-sourced.
-_SIMHASH_PAIRS_ORACLE_SQL = f"""
-WITH sig AS ({_simhash_sql_duckdb().replace("ORDER BY doc_id ASC", "")})
-SELECT a.doc_id AS doc_1, b.doc_id AS doc_2,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {HAMMING_MAX}
-"""
+def _simhash_self_pairs(layout: str, toks: DataFrame, trunc: int = 0) -> DataFrame:
+    """Near-dup pairs within one corpus: the layout's signatures over the
+    (doc_id, hx) token frame, materialized once (n_docs tiny rows, both
+    join sides read them), band-self-joined on ``a.doc_id < b.doc_id``."""
+    sig = _simhash_sig(layout, toks).localCheckpoint()
+    return _simhash_band_join(
+        layout, sig, sig, F.col("a.doc_id") < F.col("b.doc_id"), trunc
+    )
 
 
 def dedup_simhash_pairs(
     spark: SparkSession, sf_dir: str, _toks: DataFrame | None = None
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ HAMMING_MAX.
+    """Near-dup pairs by 32-bit SimHash Hamming distance ≤ HAMMING_MAX.
 
-    Scale path, exact: band-blocked candidate generation — the 32-bit
-    signature splits into HAMMING_MAX+1 bands; by pigeonhole, two
-    signatures within Hamming distance HAMMING_MAX MUST agree exactly on
-    ≥ 1 band, so an equi-join on (band_id, band_value) produces a candidate
-    superset. The exact bit_count filter keeps the true pairs, each
-    emitted exactly once (first-agreeing-band rule in
-    ``_simhash_true_pairs`` — no post-join distinct shuffle). Result is
+    Scale path, exact: the band-blocked equi-join of
+    ``_simhash_band_join`` (HAMMING_MAX+1 pigeonhole bands, exact
+    bit_count filter, first-agreeing-band single emission). Result is
     identical to the quadratic all-pairs join (the DuckDB oracle), but the
     join is an equi-join: no crossJoin, shuffles on band buckets only.
+    ``_toks`` injects the shared (doc_id, hx) token frame
+    (``dedup_simhash_methods``).
     """
-    # Round-18: the unsorted signature form — the former sorted variant
-    # paid a global range-partitioning sort that the band explode/join
-    # immediately discards (exactly the waste _text_simhash_unsorted's
-    # docstring names); the pair SET is order-independent.
-    sig = _text_simhash_unsorted(spark, sf_dir, _toks=_toks).localCheckpoint()
-    return _simhash_true_pairs(sig)
+    if _toks is None:
+        _toks = _distinct_token_md5(
+            load_table(spark, sf_dir, "documents", spread=True)
+        )
+    return _simhash_self_pairs("narrow32", _toks)
 
 
-# Wide-signature variant: SCALE.md's round-5 growth curve measured the
-# 32-bit/8-bit-band configuration saturating (256 band values → every
-# bucket dense at 20 k docs). The 100 TB configuration is a wider
-# signature with wider bands; 60 bits (= 15 md5 hex chars, fits signed
-# 64-bit arithmetic on BOTH engines — same trick as the 60-bit rolling
-# fingerprint) gives 4 bands × 15 bits → 32,768 band values.
-SIMHASH_WIDE_BITS = 60
-
-# Saturation guards (round-8, closing VERDICT r7 "What's wrong" #1/#2):
-# both fixed-band variants below are retained as the measured fixture-scale
-# baselines, but their band spaces are FIXED, so candidate volume
-# Σ|bucket|² goes quadratic once the corpus outgrows them — measured, not
-# hypothesized (SCALE.md r7 addendum §3: 60-bit SimHash knee ≈ 8·10⁴ docs,
-# 1.1 s → 8.4 s in one doubling; r5 curve: 6-bit embedding LSH at
-# 4.9×/doubling past ~10⁴ vectors). A copy-paste user must not be able to
-# run them past the knee: each counts its corpus first (a cheap
-# count-star, the bounded anchor-pull pattern) and raises toward the
-# adaptive sibling — whose band space grows with log₂ N and is measured
-# flat 1×–16× — instead of silently going quadratic.
+# Saturation guard (round-8, closing VERDICT r7 "What's wrong" #1/#2): the
+# wide60 baseline below is retained as the measured fixture-scale
+# configuration, but its band space is FIXED, so candidate volume
+# Σ|bucket|² goes quadratic once the corpus outgrows it — measured, not
+# hypothesized (SCALE.md r7 addendum §3: knee ≈ 8·10⁴ docs, 1.1 s → 8.4 s
+# in one doubling). A copy-paste user must not be able to run it past the
+# knee: it counts its corpus first (a cheap count-star, the bounded
+# anchor-pull pattern) and raises toward the adaptive sibling — whose band
+# space grows with log₂ N and is measured flat 1×–16× — instead of
+# silently going quadratic.
 SIMHASH_WIDE_SATURATION_DOCS = 80_000
-EMB_LSH_SATURATION_VECS = 10_000
 
 
 def _guard_fixed_band_corpus(n: int, knee: int, name: str, adaptive: str) -> None:
-    """Raise-style saturation guard — kept ONLY for fixed-band baselines
-    whose output contract the adaptive sibling cannot reproduce (r9,
-    VERDICT r8 #5: `dedup_simhash_wide_pairs` emits exact Hamming over the
-    60-bit signature, while the adaptive sibling hams an 88-bit one — the
-    values differ, so silent delegation would change results). Variants
-    whose contract DOES match delegate instead (see `dedup_embedding_lsh`)."""
+    """Raise-style saturation guard for a fixed-band baseline whose output
+    contract the adaptive sibling cannot reproduce (r9, VERDICT r8 #5:
+    ``dedup_simhash_wide_pairs`` emits exact Hamming over the 60-bit
+    signature, while the adaptive sibling hams an 88-bit one — the values
+    differ, so silent delegation would change results)."""
     if n > knee:
         raise ValueError(
             f"{name}: corpus size {n} exceeds the measured band-saturation "
@@ -484,41 +538,6 @@ def _guard_fixed_band_corpus(n: int, knee: int, name: str, adaptive: str) -> Non
             f"(not auto-delegated: {adaptive}'s signature width differs, "
             "so its hamming values are a different exact relation)."
         )
-
-
-def _simhash_wide_sig(
-    docs: DataFrame, _toks: DataFrame | None = None
-) -> DataFrame:
-    """(doc_id, simhash) with a 60-bit signature over distinct tokens."""
-    if _toks is None:
-        _toks = _distinct_token_md5(docs)
-    toks = _toks.withColumn(
-        "h", F.conv(F.substring("hx", 1, 15), 16, 10).cast("bigint")
-    )
-    return toks.groupBy("doc_id").agg(
-        F.expr(_simhash_exprs_spark(SIMHASH_WIDE_BITS)).alias("simhash")
-    )
-
-
-_SIMHASH_WIDE_ORACLE_SQL = f"""
-WITH toks AS (
-    SELECT DISTINCT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
-    FROM documents
-),
-hashed AS (
-    SELECT doc_id,
-           CAST(CAST('0x' || substr(md5(tok), 1, 15) AS UBIGINT) AS BIGINT) AS h
-    FROM toks
-),
-sig AS (
-    SELECT doc_id, {_simhash_exprs_spark(SIMHASH_WIDE_BITS)} AS simhash
-    FROM hashed GROUP BY doc_id
-)
-SELECT a.doc_id AS doc_1, b.doc_id AS doc_2,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {HAMMING_MAX}
-"""
 
 
 def dedup_simhash_wide_pairs(
@@ -534,13 +553,13 @@ def dedup_simhash_wide_pairs(
     (32,768 values) random band collisions stay rare until ~10⁶ docs per
     partition-disjoint corpus shard, and the candidate set tracks true
     pairs again (measured on the decorrelated 4× replica: cross-replica
-    pair count collapses vs the 32-bit variant). Same band-blocked
-    equi-join + first-agreeing-band emission; the exact Hamming filter
-    makes the result identical to the oracle's quadratic all-pairs join.
+    pair count collapses vs the 32-bit variant). Same band join; the exact
+    Hamming filter makes the result identical to the oracle's quadratic
+    all-pairs join.
 
     Scale posture (r8): the 4×15-bit band space is fixed, and the round-7
     sink-mode curve measured it saturating at ~8·10⁴ docs — so this
-    baseline now guards its corpus size and raises toward
+    baseline guards its corpus size and raises toward
     ``dedup_simhash_adaptive`` (log₂N-derived band prefix, measured flat)
     past the knee rather than going quadratic.
     """
@@ -551,30 +570,15 @@ def dedup_simhash_wide_pairs(
         "dedup_simhash_wide_pairs",
         "dedup_simhash_adaptive",
     )
-    sig = _simhash_wide_sig(docs, _toks=_toks).localCheckpoint()
-    return _simhash_true_pairs(sig, SIMHASH_WIDE_BITS, HAMMING_MAX)
-
-
-# Incremental split: the fixture has no arrival timestamp on documents, so
-# doc_id % 5 == 0 stands in for "today's incoming batch" (20% of the corpus)
-# vs the already-ingested 80%. Fixtures contain NO exact-duplicate texts
-# (verified: 0 groups with count>1), so incremental dedup is defined on the
-# SimHash near-dup relation — the realistic production check anyway.
-INCREMENTAL_MOD = 5
+    if _toks is None:
+        _toks = _distinct_token_md5(docs)
+    return _simhash_self_pairs("wide60", _toks)
 
 
 @query(
     "dedup_incremental",
     oracle=f"""
-WITH sig AS ({_simhash_sql_duckdb().replace("ORDER BY doc_id ASC", "")}),
-inc AS (SELECT * FROM sig WHERE doc_id % {INCREMENTAL_MOD} = 0),
-ex  AS (SELECT * FROM sig WHERE doc_id % {INCREMENTAL_MOD} <> 0),
-hits AS (
-    SELECT i.doc_id, COUNT(*) AS n
-    FROM inc i JOIN ex e
-      ON bit_count(xor(i.simhash, e.simhash)) <= {HAMMING_MAX}
-    GROUP BY i.doc_id
-)
+WITH {_SIMHASH_SPLIT_HITS_SQL}
 SELECT i.doc_id,
        CAST(COALESCE(h.n, 0) AS BIGINT) AS n_near_dups,
        COALESCE(h.n, 0) > 0 AS is_dup
@@ -586,7 +590,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup: flag incoming docs with a near-dup already in the
     ingested corpus (SimHash Hamming ≤ HAMMING_MAX), keep the rest.
 
-    Same band-blocked equi-join as ``dedup_simhash_pairs`` but across the
+    Same band join as ``dedup_simhash_pairs`` but across the
     incoming/existing split — candidate generation touches only docs that
     collide on a band, so the incremental check costs O(batch) shuffles,
     not O(corpus²). At 100 TB the existing side's band table is a
@@ -594,36 +598,18 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round-19 shape (VERDICT r18 #7): the signature frame feeds THREE plan
     references (incoming bands, existing bands, the incoming left-join
-    back), and the r9-r18 form evaluated the tokenize+md5+simhash subtree
-    once per SIDE (the incoming cache only covered its own two uses). One
-    localCheckpoint of the (doc_id, simhash) frame — n_docs tiny rows,
-    eager, recomputed per call — feeds both sides: one corpus pass total.
-    Multi-band pair duplicates are dropped by the per-row
-    first-agreeing-band rule instead of a post-join ``.distinct()``,
-    removing a shuffle over the matched pair set (the
-    ``_simhash_true_pairs`` trick applied across the split).
+    back). One localCheckpoint of the (doc_id, s0) frame — n_docs tiny
+    rows, eager, recomputed per call — feeds both sides: one corpus pass
+    total. Each colliding (incoming, existing) pair is counted exactly
+    once by the band join's first-agreeing-band rule.
     """
-    sig = _text_simhash_unsorted(spark, sf_dir).localCheckpoint()
+    toks = _distinct_token_md5(load_table(spark, sf_dir, "documents", spread=True))
+    sig = _simhash_sig("narrow32", toks).localCheckpoint()
     incoming = sig.where(F.col("doc_id") % INCREMENTAL_MOD == 0)
     existing = sig.where(F.col("doc_id") % INCREMENTAL_MOD != 0)
-    i = _simhash_bands(incoming).alias("i")
-    e = _simhash_bands(existing).alias("e")
-    n_bands = HAMMING_MAX + 1
-    band_width = SIMHASH_BITS // n_bands
-    first_band = _first_agreeing_band_sql(
-        "(i.simhash ^ e.simhash)", n_bands, band_width, (1 << band_width) - 1
-    )
     hits = (
-        i.join(
-            e,
-            (F.col("i.band_id") == F.col("e.band_id"))
-            & (F.col("i.band_val") == F.col("e.band_val")),
-        )
-        .where(F.expr("bit_count(i.simhash ^ e.simhash)") <= HAMMING_MAX)
-        # each colliding (incoming, existing) pair counted exactly once:
-        # keep only the row whose band is the pair's first agreeing band
-        .where(F.col("i.band_id") == F.expr(first_band))
-        .groupBy(F.col("i.doc_id").alias("doc_id"))
+        _simhash_band_join("narrow32", incoming, existing)
+        .groupBy(F.col("doc_1").alias("doc_id"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
     return (
@@ -1008,116 +994,60 @@ EMB_LSH_BITS = 6
 # the dim off the data and produces the identical matrix when it is 64.
 EMB_LSH_DIM = 64
 
+# Adaptive-width hyperplane bands: round 5's growth curve (SCALE.md) measured
+# a fixed 6-bit configuration saturating — 64 values/band means every
+# bucket is dense past ~10⁴ vectors and candidate volume grows quadratically
+# (4.9×/doubling at 8×). The fix is the same family as
+# ``dedup_simhash_wide_pairs`` but parameterized by corpus size: bits per
+# band = 2·ceil(log2 N) − EMB_LSH_BITS_OFFSET (clamped to [6, 16]), so the
+# band-value space 2^bits quadruples per corpus doubling — exactly matching
+# the N² growth of random pairs, which pins expected random band collisions
+# (≈ bands · N²/2^(bits+1)) CONSTANT. The offset calibrates the formula to
+# reproduce the fixture-tuned 6-bit configuration at the 2 k-vector 1×
+# fixture. Recall trade: at the production near-dup threshold (cosine 0.99,
+# per-bit agreement p ≈ 0.97) twelve 16-bit bands hold recall ≈ 1−(1−0.97¹⁶)¹²
+# ≈ 0.999997; only the fixture's deliberately loose 0.4 threshold (p ≈ 0.63)
+# loses recall as bits widen — and at fixture sizes bits stays 6.
+EMB_LSH_MAX_BITS = 16
+EMB_LSH_BITS_OFFSET = 16
 
-def _lsh_planes(dim: int = EMB_LSH_DIM):
-    """The seeded random-hyperplane matrix (dim × bands·bits), shared
-    bit-for-bit by the Spark kernel and the oracle generator."""
+
+def _emb_lsh_bits(n: int) -> int:
+    """Band width for an index of n vectors. The oracle's params CTE
+    computes the same integer formula, ceil(log2 n) as
+    ``length(bin(n-1))``, so the band width never touches float libm on
+    either engine (pinned at every power of two ±1 to 2^40 in
+    tests/test_extensions.py)."""
+    return min(
+        EMB_LSH_MAX_BITS,
+        max(EMB_LSH_BITS, 2 * _ceil_log2(n) - EMB_LSH_BITS_OFFSET),
+    )
+
+
+def _lsh_planes_wide(dim: int = EMB_LSH_DIM):
+    """The one seeded random-hyperplane matrix, (dim,
+    EMB_LSH_BANDS·EMB_LSH_MAX_BITS), band-major: band b's columns are
+    [b·MAX_BITS, (b+1)·MAX_BITS). Each band's first EMB_LSH_BITS columns
+    come from a seed-42 draw and its widening columns from an independent
+    seed-43 draw; a band width of ``bits`` uses each band's first ``bits``
+    columns. Shared bit-for-bit by the Spark kernel and the oracle.
+
+    Every oracle-backed caller bakes this matrix into its DuckDB SQL at
+    EMB_LSH_DIM, so the fixed-dim oracle contract (see ``_emb_dim``) is
+    enforced HERE — one guard covers the whole family
+    (``dedup_embedding_lsh_adaptive``, ``dedup_embedding_incremental``,
+    and everything built on their signatures) instead of per-query
+    call sites that can drift (r16-end review)."""
+    _require_oracle_dim(dim)
     import numpy as np
 
-    return np.random.RandomState(42).normal(size=(dim, EMB_LSH_BANDS * EMB_LSH_BITS))
-
-
-def _emb_lsh_oracle_sql() -> str:
-    """DuckDB oracle for the random-hyperplane LSH: the plane matrix is
-    embedded as full-precision double literals (repr round-trips exactly),
-    signatures via list_dot_product sign bits over the DOUBLE-cast
-    embeddings. numpy's dgemm and DuckDB's sequential dot differ only in
-    summation order (~1e-13); a sign flip needs |dot| below that — never
-    observed, and the exact ROUND(6) cosine verify behind it is the same
-    expression the oracle-green ``dedup_embedding_cosine`` uses."""
-    planes = _lsh_planes()
-    bits, bands = EMB_LSH_BITS, EMB_LSH_BANDS
-
-    def plane_lit(k: int) -> str:
-        return "[" + ",".join(repr(float(x)) for x in planes[:, k]) + "]"
-
-    band_exprs = []
-    for b in range(bands):
-        terms = " + ".join(
-            f"(CASE WHEN list_dot_product(v, {plane_lit(b * bits + k)}) >= 0"
-            f" THEN {1 << k} ELSE 0 END)"
-            for k in range(bits)
-        )
-        band_exprs.append(f"({terms}) AS bv{b}")
-    bands_list = ",".join(str(b) for b in range(bands))
-    bv_list = ",".join(f"bv{b}" for b in range(bands))
-    return f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-sigw AS (SELECT vec_id, {", ".join(band_exprs)} FROM e),
-sig AS (
-    SELECT vec_id, unnest([{bands_list}]) AS band,
-           unnest([{bv_list}]) AS band_val
-    FROM sigw
-),
-cand AS (
-    SELECT DISTINCT a.vec_id AS vec_1, b.vec_id AS vec_2
-    FROM sig a
-    JOIN sig b ON a.band = b.band AND a.band_val = b.band_val
-              AND a.vec_id < b.vec_id
-),
-ee AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)
-SELECT c.vec_1, c.vec_2,
-       ROUND(list_cosine_similarity(x.emb, y.emb), 6) AS cosine
-FROM cand c
-JOIN ee x ON x.vec_id = c.vec_1
-JOIN ee y ON y.vec_id = c.vec_2
-WHERE ROUND(list_cosine_similarity(x.emb, y.emb), 6) >= {EMB_DUP_THRESHOLD}
-ORDER BY vec_1 ASC, vec_2 ASC
-"""
-
-
-# Round-10 capacity policy: RETIRED from the registry (ADVICE r9 + VERDICT
-# r9 #2). Above the saturation knee this baseline delegates to
-# dedup_embedding_lsh_adaptive, whose count-derived band width would diverge
-# from THIS query's fixed 6-bit oracle on any above-knee corpus — the
-# registered name is now the adaptive variant alone, which carries a
-# count-gated oracle valid at every size. The fixed-band callable (and its
-# oracle builder, used by the below-knee bit-identity pin in
-# tests/test_extensions.py) stays importable.
-def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup WITHOUT all-pairs: random-hyperplane LSH blocking.
-
-    Signature = sign bits of ``v @ planes`` (seeded, broadcast — a few KB);
-    band values become join keys, so candidate generation is a band-bucket
-    equi-join exactly like ``dedup_simhash_pairs``; candidates are then
-    verified with the exact JVM-side cosine (over DOUBLE-cast arrays, so
-    products match the oracle's double arithmetic — float32 products would
-    drift ~1e-7, past the ROUND(6) pin). Scale shape: shuffle on
-    (band, value) — no N² term anywhere, the 10⁹-vector path the chunked
-    GEMM cannot be. Recall is tunable (bands × bits); the subset property
-    (output ⊆ exact all-pairs output) and recall floor are pinned in
-    tests/test_extensions.py against ``dedup_embedding_cosine``. The seeded
-    planes make even this "not SQL-expressible" op oracle-checkable: the
-    matrix is baked into the DuckDB SQL as literals (_emb_lsh_oracle_sql).
-
-    Scale posture (r9, VERDICT r8 #5): the 2⁶-value band space is fixed,
-    and the round-5 growth curve measured it saturating (4.9×/doubling
-    past ~10⁴ vectors) — past the knee this baseline now DELEGATES to
-    ``dedup_embedding_lsh_adaptive`` instead of raising. The contracts
-    match: both emit a recall-bounded subset of the exact cosine ≥
-    threshold pairs with identical columns and identical verify
-    arithmetic, and below the knee the adaptive clamp floor makes the two
-    bit-identical (pinned in tests/test_extensions.py) — so delegation
-    only ever swaps in a band space with BETTER collision behavior at a
-    size where the fixed config's own recall envelope was never
-    validated. (Contrast ``dedup_simhash_wide_pairs``, whose exact
-    60-bit-hamming contract the adaptive sibling cannot reproduce — it
-    keeps the raise.)
-    """
-    e = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
-    if e.count() > EMB_LSH_SATURATION_VECS:
-        return dedup_embedding_lsh_adaptive(spark, sf_dir)
-    dim = _emb_dim(e)
-    if dim is None:
-        return _empty_pairs(spark)
-    # ADVICE r16: this non-delegating path builds its planes OUTSIDE
-    # _lsh_planes_wide, so the family-wide dim guard there doesn't cover
-    # it — yet its oracle builder (_emb_lsh_oracle_sql, still used by the
-    # below-knee bit-identity pin) bakes plane literals at EMB_LSH_DIM
-    # exactly like its registered siblings. Guard here too, so a future
-    # re-registration cannot silently reopen the desync.
-    _require_oracle_dim(dim)
-    return _emb_lsh_pairs(spark, e, _lsh_planes(dim), EMB_LSH_BITS)
+    base, extra = (
+        np.random.RandomState(seed)
+        .normal(size=(dim, EMB_LSH_BANDS * k))
+        .reshape(dim, EMB_LSH_BANDS, k)
+        for seed, k in ((42, EMB_LSH_BITS), (43, EMB_LSH_MAX_BITS - EMB_LSH_BITS))
+    )
+    return np.concatenate([base, extra], axis=2).reshape(dim, -1)
 
 
 def _emb_dim(e: DataFrame) -> int | None:
@@ -1196,21 +1126,27 @@ def _emb_signatures(
 
 
 def _emb_lsh_pairs(
-    spark: SparkSession, e: DataFrame, planes, bits: int
+    spark: SparkSession, e: DataFrame, dim: int, n_index: int, pairing
 ) -> DataFrame:
-    """Shared hyperplane-LSH kernel: signatures = sign bits of ``v @ planes``
-    (band-major columns: EMB_LSH_BANDS bands × ``bits`` planes each), band
-    equi-join candidates, exact DOUBLE-cosine verify at EMB_DUP_THRESHOLD.
-    Used by ``dedup_embedding_lsh`` (fixed 6-bit bands) and
-    ``dedup_embedding_lsh_adaptive`` (count-derived band width)."""
-    sigs = _emb_signatures(spark, e, planes, bits)
+    """(vec_1, vec_2, cosine): the one hyperplane-LSH candidate join and
+    verify. Band width comes from ``n_index``, the size of the index being
+    probed; one signature pass over ``e`` (``_emb_signatures``) feeds a
+    band equi-join whose extra predicate ``pairing`` (on the aliases ``a``
+    and ``b``) picks which vectors may pair; a pair colliding in several
+    bands is one candidate, verified by the exact JVM-side cosine at
+    EMB_DUP_THRESHOLD (over DOUBLE-cast arrays, so products match the
+    oracle's double arithmetic — float32 products would drift ~1e-7, past
+    the ROUND(6) pin)."""
+    bits = _emb_lsh_bits(n_index)
+    cols = [b * EMB_LSH_MAX_BITS + k for b in range(EMB_LSH_BANDS) for k in range(bits)]
+    sigs = _emb_signatures(spark, e, _lsh_planes_wide(dim)[:, cols], bits)
     a, b_ = sigs.alias("a"), sigs.alias("b")
     candidates = (
         a.join(
             b_,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
+            & pairing,
         )
         .select(
             F.col("a.vec_id").alias("vec_1"), F.col("b.vec_id").alias("vec_2")
@@ -1240,80 +1176,25 @@ def _emb_lsh_pairs(
         )
         .where(F.col("cosine") >= EMB_DUP_THRESHOLD)
         .select("vec_1", "vec_2", "cosine")
-        .orderBy("vec_1", "vec_2")
     )
 
 
-# Adaptive-width hyperplane bands: round 5's growth curve (SCALE.md) measured
-# the fixed 6-bit configuration saturating — 64 values/band means every
-# bucket is dense past ~10⁴ vectors and candidate volume grows quadratically
-# (4.9×/doubling at 8×). The fix is the same family as
-# ``dedup_simhash_wide_pairs`` but parameterized by corpus size: bits per
-# band = 2·ceil(log2 N) − EMB_LSH_BITS_OFFSET (clamped to [6, 16]), so the
-# band-value space 2^bits quadruples per corpus doubling — exactly matching
-# the N² growth of random pairs, which pins expected random band collisions
-# (≈ bands · N²/2^(bits+1)) CONSTANT. The offset calibrates the formula to
-# reproduce the fixture-tuned 6-bit configuration at the 2 k-vector 1×
-# fixture. Recall trade: at the production near-dup threshold (cosine 0.99,
-# per-bit agreement p ≈ 0.97) twelve 16-bit bands hold recall ≈ 1−(1−0.97¹⁶)¹²
-# ≈ 0.999997; only the fixture's deliberately loose 0.4 threshold (p ≈ 0.63)
-# loses recall as bits widen — and at fixture sizes bits stays 6, where the
-# first 6 planes of every band ARE the seed-42 planes of
-# ``dedup_embedding_lsh``, making the two queries bit-identical there
-# (pinned in tests/test_extensions.py).
-EMB_LSH_MAX_BITS = 16
-EMB_LSH_BITS_OFFSET = 16
-
-
-def _emb_lsh_bits(n: int) -> int:
-    """Band width for a corpus of n vectors (identical formula in the
-    oracle's params CTE).
-
-    INTEGER formulation (VERDICT r16 #6): ceil(log2 n) == (n-1).bit_length()
-    for n >= 2, exactly — and the oracle computes the same thing as
-    ``length(bin(n-1))`` — so the band width never touches float libm on
-    either engine. The r16 pin (tests/test_extensions.py, every power of
-    two ±1 to 2^40) is retained and now also asserts the integer and the
-    historical float formulations agree."""
-    return min(
-        EMB_LSH_MAX_BITS,
-        max(EMB_LSH_BITS, 2 * (max(n, 2) - 1).bit_length() - EMB_LSH_BITS_OFFSET),
-    )
-
-
-def _lsh_planes_wide(dim: int = EMB_LSH_DIM):
-    """(dim, EMB_LSH_BANDS·EMB_LSH_MAX_BITS) plane matrix, band-major: band
-    b's columns are [b·MAX_BITS, (b+1)·MAX_BITS). The first EMB_LSH_BITS
-    columns of each band are the seed-42 planes of ``_lsh_planes`` (so the
-    adaptive query degenerates to ``dedup_embedding_lsh`` exactly when
-    bits == EMB_LSH_BITS); the widening columns come from an independent
-    seeded draw.
-
-    Every oracle-backed caller bakes this matrix into its DuckDB SQL at
-    EMB_LSH_DIM, so the fixed-dim oracle contract (see ``_emb_dim``) is
-    enforced HERE — one guard covers the whole family
-    (``dedup_embedding_lsh_adaptive``, ``dedup_embedding_incremental``,
-    and everything built on their signatures) instead of per-query
-    call sites that can drift (r16-end review)."""
-    _require_oracle_dim(dim)
-    import numpy as np
-
-    base = _lsh_planes(dim)  # (dim, BANDS*BITS), seed 42
-    extra_per_band = EMB_LSH_MAX_BITS - EMB_LSH_BITS
-    extra = np.random.RandomState(43).normal(
-        size=(dim, EMB_LSH_BANDS * extra_per_band)
-    )
-    cols = []
-    for b in range(EMB_LSH_BANDS):
-        cols.append(base[:, b * EMB_LSH_BITS : (b + 1) * EMB_LSH_BITS])
-        cols.append(extra[:, b * extra_per_band : (b + 1) * extra_per_band])
-    return np.concatenate(cols, axis=1)
-
-
-def _emb_lsh_adaptive_ctes() -> str:
-    """The adaptive-band LSH pair pipeline as a reusable CTE chain ending
-    in ``lshp`` (vec_1, vec_2, cosine) — shared by the pair query's oracle
-    and the embedding-cluster dedup oracle so the two can never desync."""
+def _emb_lsh_ctes(
+    count_from: str = "embeddings", pairing: str = "a.vec_id < b.vec_id"
+) -> str:
+    """The DuckDB twin of ``_emb_lsh_pairs``: a CTE chain ending in
+    ``lshp`` (vec_1, vec_2, cosine), shared by the pair, incremental and
+    embedding-cluster oracles. The wide plane matrix is baked as
+    full-precision double literals (repr round-trips exactly); the band
+    width comes from a params CTE computing the identical clamp(2·ceil(log2
+    N) − offset) off COUNT(*) over ``count_from``, and every bit term is
+    gated on ``k < p.bits``, so the same SQL is correct at every corpus
+    size (the sqrtk pattern — parameters derived in-query, never a second
+    source of truth). Candidates are band collisions whose aliases ``a``
+    and ``b`` satisfy ``pairing``. numpy's dgemm and DuckDB's sequential
+    dot differ only in summation order (~1e-13); a sign flip needs |dot|
+    below that — never observed, and the exact ROUND(6) cosine verify is
+    the expression the oracle-green ``dedup_embedding_cosine`` uses."""
     planes = _lsh_planes_wide()
     bands, maxb = EMB_LSH_BANDS, EMB_LSH_MAX_BITS
 
@@ -1335,7 +1216,7 @@ def _emb_lsh_adaptive_ctes() -> str:
     SELECT LEAST({maxb}, GREATEST({EMB_LSH_BITS},
            2 * length(bin(GREATEST(COUNT(*), 2) - 1))
            - {EMB_LSH_BITS_OFFSET})) AS bits
-    FROM embeddings
+    FROM {count_from}
 ),
 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 sigw AS (SELECT vec_id, {", ".join(band_exprs)} FROM e CROSS JOIN params p),
@@ -1348,7 +1229,7 @@ cand AS (
     SELECT DISTINCT a.vec_id AS vec_1, b.vec_id AS vec_2
     FROM sig a
     JOIN sig b ON a.band = b.band AND a.band_val = b.band_val
-              AND a.vec_id < b.vec_id
+              AND {pairing}
 ),
 ee AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
 lshp AS (
@@ -1362,52 +1243,45 @@ lshp AS (
 )"""
 
 
-def _emb_lsh_adaptive_oracle_sql() -> str:
-    """DuckDB oracle for the adaptive-band LSH: the wide plane matrix is
-    baked as full-precision double literals; the band width comes from a
-    params CTE computing the identical clamp(2·ceil(log2 N) − offset)
-    formula off COUNT(*), and every bit term is gated on ``k < p.bits`` so
-    the same SQL is correct at every corpus size (the sqrtk pattern —
-    parameters derived in-query, never a second source of truth)."""
-    return f"""
-WITH {_emb_lsh_adaptive_ctes()}
+@query(
+    "dedup_embedding_lsh_adaptive",
+    oracle=f"""
+WITH {_emb_lsh_ctes()}
 SELECT vec_1, vec_2, cosine FROM lshp
 ORDER BY vec_1 ASC, vec_2 ASC
-"""
-
-
-@query("dedup_embedding_lsh_adaptive", oracle=_emb_lsh_adaptive_oracle_sql())
+""",
+)
 def dedup_embedding_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup LSH with corpus-size-adaptive band width — the
-    100 TB configuration of ``dedup_embedding_lsh``.
+    """Embedding near-dup WITHOUT all-pairs: random-hyperplane LSH blocking
+    with a corpus-size-adaptive band width.
 
-    Same plan shape (broadcast planes → Arrow-batched sign-bit GEMM → band
-    equi-join → exact DOUBLE-cosine verify), but the band-value space grows
-    with the corpus: bits = clamp(2·ceil(log2 N) − {off}, {lo}, {hi}), i.e.
-    +2 bits per corpus doubling, quadrupling the bucket space exactly as
-    fast as the random-pair count grows. Expected random band collisions
-    stay ≈ bands·N²/2^(bits+1) = constant, so the candidate join is linear
-    in N and the signature GEMM (linear, BLAS) dominates — vs the fixed
-    6-bit variant whose measured 4.9×/doubling at 8× was pure band
-    saturation (SCALE.md round-5 curve). N is read once via the bounded
-    anchor-pull pattern (a count, not a collect); the oracle derives the
-    identical width from COUNT(*) in its params CTE, so the two sides can
-    never desync. At fixture sizes the clamp floor makes this query
-    bit-identical to ``dedup_embedding_lsh`` (pinned in
-    tests/test_extensions.py).
+    Plan shape (``_emb_lsh_pairs``): broadcast planes → Arrow-batched
+    sign-bit GEMM → band equi-join → exact DOUBLE-cosine verify. Scale
+    shape: shuffle on (band, value) — no N² term anywhere, the
+    10⁹-vector path the chunked GEMM of ``dedup_embedding_cosine`` cannot
+    be. The band-value space grows with the corpus: bits = clamp(2·ceil
+    (log2 N) − {off}, {lo}, {hi}), i.e. +2 bits per corpus doubling,
+    quadrupling the bucket space exactly as fast as the random-pair count
+    grows. Expected random band collisions stay ≈ bands·N²/2^(bits+1) =
+    constant, so the candidate join is linear in N and the signature GEMM
+    (linear, BLAS) dominates — where a fixed 6-bit band space measured
+    4.9×/doubling at 8× from pure band saturation (SCALE.md round-5
+    curve). N is read once via the bounded anchor-pull pattern (a count,
+    not a collect); the oracle derives the identical width from COUNT(*)
+    in its params CTE, so the two sides can never desync. Recall is
+    tunable (bands × bits); the subset property (output ⊆ exact all-pairs
+    output) and recall floor are pinned in tests/test_extensions.py
+    against ``dedup_embedding_cosine``. The seeded planes make even this
+    "not SQL-expressible" op oracle-checkable: the matrix is baked into
+    the DuckDB SQL as literals (``_emb_lsh_ctes``).
     """
     e = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
     dim = _emb_dim(e)
     if dim is None:
         return _empty_pairs(spark)
-    bits = _emb_lsh_bits(e.count())
-    wide = _lsh_planes_wide(dim)
-    cols = [
-        b * EMB_LSH_MAX_BITS + k
-        for b in range(EMB_LSH_BANDS)
-        for k in range(bits)
-    ]
-    return _emb_lsh_pairs(spark, e, wide[:, cols], bits)
+    return _emb_lsh_pairs(
+        spark, e, dim, e.count(), F.col("a.vec_id") < F.col("b.vec_id")
+    ).orderBy("vec_1", "vec_2")
 
 
 dedup_embedding_lsh_adaptive.__doc__ = dedup_embedding_lsh_adaptive.__doc__.format(
@@ -1416,59 +1290,21 @@ dedup_embedding_lsh_adaptive.__doc__ = dedup_embedding_lsh_adaptive.__doc__.form
 
 
 def _emb_inc_oracle_sql() -> str:
-    """DuckDB oracle for the embedding-side incremental admission: the wide
-    plane matrix baked as full-precision double literals (repr round-trips
-    exactly — the ``_emb_lsh_adaptive_oracle_sql`` technique), band width
-    derived in a params CTE from the EXISTING-side count (the index's own
-    size is the index parameter, never the batch's), every bit term gated
-    on ``k < p.bits`` so the same SQL is correct at every corpus size."""
-    planes = _lsh_planes_wide()
-    bands, maxb, mod = EMB_LSH_BANDS, EMB_LSH_MAX_BITS, INCREMENTAL_MOD
-
-    def plane_lit(c: int) -> str:
-        return "[" + ",".join(repr(float(x)) for x in planes[:, c]) + "]"
-
-    band_exprs = []
-    for b in range(bands):
-        terms = " + ".join(
-            f"(CASE WHEN {k} < p.bits AND"
-            f" list_dot_product(v, {plane_lit(b * maxb + k)}) >= 0"
-            f" THEN {1 << k} ELSE 0 END)"
-            for k in range(maxb)
-        )
-        band_exprs.append(f"({terms}) AS bv{b}")
-    bands_list = ",".join(str(b) for b in range(bands))
-    bv_list = ",".join(f"bv{b}" for b in range(bands))
+    """DuckDB oracle for the embedding-side incremental admission: the one
+    LSH CTE chain with the band width derived from the EXISTING side's
+    count (the index's own size is the index parameter, never the
+    batch's) and candidates pairing an incoming vector with an existing
+    one."""
+    mod = INCREMENTAL_MOD
+    ctes = _emb_lsh_ctes(
+        f"embeddings WHERE vec_id % {mod} <> 0",
+        f"a.vec_id % {mod} = 0 AND b.vec_id % {mod} <> 0",
+    )
     return f"""
-WITH params AS (
-    SELECT LEAST({maxb}, GREATEST({EMB_LSH_BITS},
-           2 * length(bin(GREATEST(COUNT(*), 2) - 1))
-           - {EMB_LSH_BITS_OFFSET})) AS bits
-    FROM embeddings WHERE vec_id % {mod} <> 0
-),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-sigw AS (SELECT vec_id, {", ".join(band_exprs)} FROM e CROSS JOIN params p),
-sig AS (
-    SELECT vec_id, unnest([{bands_list}]) AS band,
-           unnest([{bv_list}]) AS band_val
-    FROM sigw
-),
-cand AS (
-    SELECT DISTINCT i.vec_id AS vec_id, x.vec_id AS vec_ex
-    FROM sig i
-    JOIN sig x ON i.band = x.band AND i.band_val = x.band_val
-    WHERE i.vec_id % {mod} = 0 AND x.vec_id % {mod} <> 0
-),
-ee AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+WITH {ctes},
 hits AS (
-    SELECT c.vec_id, COUNT(*) AS n,
-           MAX(ROUND(list_cosine_similarity(a.emb, b.emb), 6)) AS mc
-    FROM cand c
-    JOIN ee a ON a.vec_id = c.vec_id
-    JOIN ee b ON b.vec_id = c.vec_ex
-    WHERE ROUND(list_cosine_similarity(a.emb, b.emb), 6)
-          >= {EMB_DUP_THRESHOLD}
-    GROUP BY c.vec_id
+    SELECT vec_1 AS vec_id, COUNT(*) AS n, MAX(cosine) AS mc
+    FROM lshp GROUP BY vec_1
 )
 SELECT i.vec_id,
        CAST(COALESCE(h.n, 0) AS BIGINT) AS n_near_dups,
@@ -1489,14 +1325,14 @@ def dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental family (text shingles → Bloom, SimHash bands, now
     hyperplane-LSH bands).
 
-    Plan shape: ONE adaptive-band signature pass over the corpus
-    (``_emb_signatures`` — Arrow-batched sign-bit GEMM, materialized once,
-    the dedup_incremental push-below-the-split idiom), the ``vec_id % mod``
-    split applied to the signature table, then an incoming×existing band
-    equi-join for candidates and an exact DOUBLE-cosine verify on the
-    collisions only. Band width derives from the EXISTING side's count —
-    the index's own size is the index parameter; a small batch against a
-    large corpus must probe the corpus's band space, not shrink it.
+    Plan shape: the one LSH candidate join and verify
+    (``_emb_lsh_pairs``) — ONE adaptive-band signature pass over the
+    corpus, materialized once, then an incoming×existing band equi-join
+    (the ``vec_id % mod`` split is the join's pairing predicate) and an
+    exact DOUBLE-cosine verify on the collisions only. Band width derives
+    from the EXISTING side's count — the index's own size is the index
+    parameter; a small batch against a large corpus must probe the
+    corpus's band space, not shrink it.
 
     At 100 TB the existing side's (band, band_val) table is the
     precomputed, bucketed LSH index maintained alongside the corpus; the
@@ -1510,46 +1346,16 @@ def dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "vec_id long, n_near_dups long, is_dup boolean, max_cosine double"
         )
-    bits = _emb_lsh_bits(  # dim guard lives in _lsh_planes_wide below
-        e.where(F.col("vec_id") % INCREMENTAL_MOD != 0).count()
-    )
-    wide = _lsh_planes_wide(dim)
-    cols = [
-        b * EMB_LSH_MAX_BITS + k
-        for b in range(EMB_LSH_BANDS)
-        for k in range(bits)
-    ]
-    sigs = _emb_signatures(spark, e, wide[:, cols], bits)
-    i = sigs.where(F.col("vec_id") % INCREMENTAL_MOD == 0).alias("i")
-    x = sigs.where(F.col("vec_id") % INCREMENTAL_MOD != 0).alias("x")
-    cand = (
-        i.join(
-            x,
-            (F.col("i.band") == F.col("x.band"))
-            & (F.col("i.band_val") == F.col("x.band_val")),
-        )
-        .select(
-            F.col("i.vec_id").alias("vec_id"),
-            F.col("x.vec_id").alias("vec_ex"),
-        )
-        .distinct()  # a pair may collide in several bands
-    )
-    ea = e.select(
-        F.col("vec_id"),
-        F.col("embedding").cast("array<double>").alias("emb_i"),
-    )
-    eb = e.select(
-        F.col("vec_id").alias("vec_ex"),
-        F.col("embedding").cast("array<double>").alias("emb_x"),
-    )
-    from databricks_spark_sql_challenge1_spark.functions.vectors import cosine
-
     hits = (
-        cand.join(ea, "vec_id")
-        .join(eb, "vec_ex")
-        .withColumn("cosine", F.round(cosine(F.col("emb_i"), F.col("emb_x")), 6))
-        .where(F.col("cosine") >= EMB_DUP_THRESHOLD)
-        .groupBy("vec_id")
+        _emb_lsh_pairs(
+            spark,
+            e,
+            dim,
+            e.where(F.col("vec_id") % INCREMENTAL_MOD != 0).count(),
+            (F.col("a.vec_id") % INCREMENTAL_MOD == 0)
+            & (F.col("b.vec_id") % INCREMENTAL_MOD != 0),
+        )
+        .groupBy(F.col("vec_1").alias("vec_id"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.max("cosine").alias("max_cosine"),
@@ -1674,83 +1480,22 @@ def docs_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # grew only 1.6x). Cure = the family rule proven on the embedding LSH in
 # r6: derive band width from corpus size. SimHash needs one extra move:
 # the pigeonhole argument fixes the BAND COUNT at HAMMING_MAX + 1, so the
-# only lever is total signature width -> a two-limb 88-bit signature
-# (2 x 44 bits; each limb fits signed-64 arithmetic on both engines),
-# giving 4 pigeonhole regions of 22 bits. The runtime band KEY is the top
-# `bpb` bits of each region (truncation preserves the pigeonhole: if two
-# signatures agree on a whole region they agree on any prefix of it), and
-# bpb = clamp(ceil(log2 N) + 2, 8, 22) keeps the expected random-collision
-# bucket load < 1/4 doc per bucket at every corpus size up to ~10^6 docs
-# per shard. Because the exact Hamming filter decides membership, the
-# RESULT is band-width-invariant — the oracle is the quadratic all-pairs
-# join and cannot desync from the band rule by construction.
-SIMHASH_LIMB_BITS = 44
-SIMHASH_REGION_BITS = 22  # 4 pigeonhole regions across the two limbs
+# only lever is total signature width -> the two-limb adaptive88 layout
+# (2 x 44 bits), giving 4 pigeonhole regions of 22 bits. The runtime band
+# KEY is the top `bpb` bits of each region (truncation preserves the
+# pigeonhole: if two signatures agree on a whole region they agree on any
+# prefix of it), and bpb = clamp(ceil(log2 N) + 2, 8, 22) keeps the
+# expected random-collision bucket load < 1/4 doc per bucket at every
+# corpus size up to ~10^6 docs per shard. Because the exact Hamming filter
+# decides membership, the RESULT is band-width-invariant — the oracle is
+# the quadratic all-pairs join and cannot desync from the band rule by
+# construction.
 SIMHASH_BPB_MIN = 8
-SIMHASH_BPB_MAX = SIMHASH_REGION_BITS
+SIMHASH_BPB_MAX = _simhash_regions("adaptive88")[0][2]
 
 
 def _adaptive_simhash_bpb(n_docs: int) -> int:
-    import math
-
-    return max(
-        SIMHASH_BPB_MIN,
-        min(SIMHASH_BPB_MAX, math.ceil(math.log2(max(n_docs, 2))) + 2),
-    )
-
-
-def _simhash_wide2_sig(
-    docs: DataFrame, _toks: DataFrame | None = None
-) -> DataFrame:
-    """(doc_id, sig_hi, sig_lo): 88-bit SimHash as two 44-bit limbs from
-    disjoint md5 hex ranges (chars 1-11 and 12-22) of each distinct token."""
-    if _toks is None:
-        _toks = _distinct_token_md5(docs)
-    toks = _toks.withColumn(
-        "h1", F.conv(F.substring("hx", 1, 11), 16, 10).cast("bigint")
-    ).withColumn(
-        "h2", F.conv(F.substring("hx", 12, 11), 16, 10).cast("bigint")
-    )
-    return toks.groupBy("doc_id").agg(
-        F.expr(_simhash_exprs_spark(SIMHASH_LIMB_BITS, "h1")).alias("sig_hi"),
-        F.expr(_simhash_exprs_spark(SIMHASH_LIMB_BITS, "h2")).alias("sig_lo"),
-    )
-
-
-def _region_expr(prefix: str, band: int) -> str:
-    """SQL expr for 22-bit pigeonhole region `band` (0-3) of a two-limb
-    signature with columns {prefix}hi/{prefix}lo."""
-    limb = f"{prefix}hi" if band < 2 else f"{prefix}lo"
-    shift = SIMHASH_REGION_BITS if band % 2 == 0 else 0
-    mask = (1 << SIMHASH_REGION_BITS) - 1
-    return f"(({limb} >> {shift}) & {mask})"
-
-
-_SIMHASH_ADAPTIVE_ORACLE_SQL = f"""
-WITH toks AS (
-    SELECT DISTINCT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
-    FROM documents
-),
-hashed AS (
-    SELECT doc_id,
-           CAST(CAST('0x' || substr(md5(tok), 1, 11) AS UBIGINT) AS BIGINT) AS h1,
-           CAST(CAST('0x' || substr(md5(tok), 12, 11) AS UBIGINT) AS BIGINT) AS h2
-    FROM toks
-),
-sig AS (
-    SELECT doc_id,
-           {_simhash_exprs_spark(SIMHASH_LIMB_BITS, "h1")} AS sig_hi,
-           {_simhash_exprs_spark(SIMHASH_LIMB_BITS, "h2")} AS sig_lo
-    FROM hashed GROUP BY doc_id
-)
-SELECT a.doc_id AS doc_1, b.doc_id AS doc_2,
-       CAST(bit_count(xor(a.sig_hi, b.sig_hi))
-            + bit_count(xor(a.sig_lo, b.sig_lo)) AS INTEGER) AS hamming
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sig_hi, b.sig_hi))
-      + bit_count(xor(a.sig_lo, b.sig_lo)) <= {HAMMING_MAX}
-ORDER BY doc_1 ASC, doc_2 ASC
-"""
+    return max(SIMHASH_BPB_MIN, min(SIMHASH_BPB_MAX, _ceil_log2(n_docs) + 2))
 
 
 def dedup_simhash_adaptive(
@@ -1779,63 +1524,11 @@ def dedup_simhash_adaptive(
     docs = load_table(spark, sf_dir, "documents", spread=True)
     if bpb is None:
         bpb = _adaptive_simhash_bpb(docs.count())
-    trunc = SIMHASH_REGION_BITS - bpb
-    sig = _simhash_wide2_sig(docs, _toks=_toks).localCheckpoint()
-    bands = sig.select(
-        "doc_id",
-        "sig_hi",
-        "sig_lo",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.expr(
-                            f"{_region_expr('sig_', b)} >> {trunc}"
-                        ).alias("band_key"),
-                    )
-                    for b in range(HAMMING_MAX + 1)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "sig_hi", "sig_lo", "band.band_id", "band.band_key")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_key") == F.col("b.band_key"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    )
-    hamming = sum(
-        F.bit_count(
-            F.expr(f"a.sig_{limb}").bitwiseXOR(F.expr(f"b.sig_{limb}"))
-        )
-        for limb in ("hi", "lo")
-    )
-    # first-agreeing-band single emission: keep the row only where band_id
-    # is the FIRST band whose truncated keys agree (computable per joined
-    # row from the two signatures — no distinct over the pair set).
-    first_band = F.expr(
-        "CASE "
-        + " ".join(
-            f"WHEN ({_region_expr('a.sig_', i)} >> {trunc}) = "
-            f"({_region_expr('b.sig_', i)} >> {trunc}) THEN {i}"
-            for i in range(HAMMING_MAX + 1)
-        )
-        + " END"
-    )
-    return (
-        joined.withColumn("hamming", hamming.cast("int"))
-        .where(F.col("hamming") <= HAMMING_MAX)
-        .where(F.col("a.band_id") == first_band)
-        .select(
-            F.col("a.doc_id").alias("doc_1"),
-            F.col("b.doc_id").alias("doc_2"),
-            "hamming",
-        )
-        .orderBy(F.col("doc_1").asc(), F.col("doc_2").asc())
-    )
+    if _toks is None:
+        _toks = _distinct_token_md5(docs)
+    return _simhash_self_pairs(
+        "adaptive88", _toks, SIMHASH_BPB_MAX - bpb
+    ).orderBy(F.col("doc_1").asc(), F.col("doc_2").asc())
 
 
 # --- consolidated SimHash pair surface (r13 capacity policy) ----------------
@@ -1844,16 +1537,14 @@ def dedup_simhash_adaptive(
 # oracle (method column), freeing two rotation slots while every
 # signature width stays individually hash-checked — the per-method pair
 # sets are disjoint keyspaces under the method tag, so a drift in any one
-# flips the combined hash.
-
-# One row per method: (name, leg function, leg oracle SQL) — the single
-# registry both the Spark surface and the oracle union iterate, so a
-# method cannot be added to one side and not the other (round-13 review).
-_SIMHASH_METHODS = (
-    ("adaptive88", dedup_simhash_adaptive, _SIMHASH_ADAPTIVE_ORACLE_SQL),
-    ("narrow32", dedup_simhash_pairs, _SIMHASH_PAIRS_ORACLE_SQL),
-    ("wide60", dedup_simhash_wide_pairs, _SIMHASH_WIDE_ORACLE_SQL),
-)
+# flips the combined hash. One method per layout: both the Spark surface
+# and the oracle union iterate SIMHASH_LAYOUTS, so a layout cannot reach
+# one side and not the other.
+_SIMHASH_METHODS = {
+    "narrow32": dedup_simhash_pairs,
+    "wide60": dedup_simhash_wide_pairs,
+    "adaptive88": dedup_simhash_adaptive,
+}
 
 
 def _simhash_methods_oracle() -> str:
@@ -1861,8 +1552,9 @@ def _simhash_methods_oracle() -> str:
     # order-insensitive, and a total-order sort of the ~1.9 M-row sf0.1
     # union would be a single-partition stage bought for nothing.
     union = "\nUNION ALL\n".join(
-        f"SELECT '{m}' AS method, doc_1, doc_2, hamming FROM ({sql})"
-        for m, _fn, sql in _SIMHASH_METHODS
+        f"SELECT '{m}' AS method, doc_1, doc_2, hamming"
+        f" FROM ({_simhash_pairs_sql(m)})"
+        for m in SIMHASH_LAYOUTS
     )
     return f"""
 SELECT method, doc_1, doc_2, hamming
@@ -1876,10 +1568,10 @@ def dedup_simhash_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     60-bit wide configuration and the 88-bit corpus-size-adaptive scan
     side by side under a method column — each method's (doc_1, doc_2,
     hamming) rows exactly as the three pre-r13 standalone registrations
-    produced them. The per-method plans (band-blocked equi-joins with
-    first-agreeing-band single emission) and saturation guards are
-    untouched; this surface only unions their outputs, so the driver hash
-    pins all three signature widths in one row budget.
+    produced them. The per-method plans (the one band join) and the
+    saturation guard are untouched; this surface only unions their
+    outputs, so the driver hash pins all three signature widths in one row
+    budget.
 
     Round-18: all three legs tokenize + distinct + md5 the corpus
     identically before slicing different hex ranges; the shared
@@ -1890,10 +1582,10 @@ def dedup_simhash_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents", spread=True)
     ).localCheckpoint()
     parts = [
-        fn(spark, sf_dir, _toks=toks).select(
+        _SIMHASH_METHODS[m](spark, sf_dir, _toks=toks).select(
             F.lit(m).alias("method"), "doc_1", "doc_2", "hamming"
         )
-        for m, fn, _sql in _SIMHASH_METHODS
+        for m in SIMHASH_LAYOUTS
     ]
     out = parts[0]
     for p in parts[1:]:

@@ -64,7 +64,7 @@ SELECT event_type,
            / 10000.0 + 0 AS avg_k
 FROM events
 GROUP BY event_type
-ORDER BY event_type ASC
+ORDER BY event_type ASC NULLS FIRST
 """,
 )
 def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,7 +136,7 @@ SELECT json_extract_string(payload, '$.meta.t') AS t,
        CAST(MAX(json_array_length(payload, '$.vals')) AS BIGINT) AS max_vals
 FROM env
 GROUP BY 1
-ORDER BY t ASC
+ORDER BY t ASC NULLS FIRST
 """,
 )
 def events_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -663,7 +663,7 @@ SELECT label, CAST(i - 1 AS INTEGER) AS pos, ROUND(AVG(emb[i]), 6) + 0 AS centro
 FROM (SELECT label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
      unnest(generate_series(1, len(emb))) AS t(i)
 GROUP BY label, i
-ORDER BY label ASC, pos ASC
+ORDER BY label ASC NULLS FIRST, pos ASC
 """,
 )
 def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -769,7 +769,7 @@ SELECT 'label_norm' AS section,
        CAST(NULL AS DOUBLE) AS min_val,
        CAST(NULL AS DOUBLE) AS max_val
 FROM norm_rows
-ORDER BY section ASC, key ASC
+ORDER BY section ASC, key ASC NULLS FIRST
 """,
 )
 def embedding_profile(spark: SparkSession, sf_dir: str) -> DataFrame:

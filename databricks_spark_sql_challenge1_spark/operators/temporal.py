@@ -203,7 +203,7 @@ SELECT event_type, next_type,
 FROM s
 WHERE next_type IS NOT NULL
 GROUP BY event_type, next_type
-ORDER BY event_type ASC, next_type ASC
+ORDER BY event_type ASC NULLS FIRST, next_type ASC NULLS FIRST
 """,
 )
 def events_type_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -184,7 +184,7 @@ SELECT lang,
            AS avg_tokens
 FROM documents
 GROUP BY lang
-ORDER BY lang ASC
+ORDER BY lang ASC NULLS FIRST
 """,
 )
 def lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,7 +246,7 @@ FROM (
     FROM scored
 )
 WHERE rk <= {TFIDF_TOP_K}
-ORDER BY lang ASC, tfidf DESC, term ASC
+ORDER BY lang ASC NULLS FIRST, tfidf DESC, term ASC
 """,
 )
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,7 +349,7 @@ JOIN canonical c ON s.fp = c.fp AND s.doc_id = c.canonical_doc_id
 WHERE s.n_tokens >= {QUALITY_MIN_TOKENS}
   AND s.punct_ratio <= {QUALITY_MAX_PUNCT}
 GROUP BY s.lang
-ORDER BY s.lang ASC
+ORDER BY s.lang ASC NULLS FIRST
 """,
 )
 def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1220,7 +1220,7 @@ SELECT lang,
            AS survivor_chars
 FROM ranked
 GROUP BY lang
-ORDER BY lang ASC
+ORDER BY lang ASC NULLS FIRST
 """,
 )
 def corpus_privacy_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

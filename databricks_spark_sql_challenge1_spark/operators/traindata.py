@@ -17,11 +17,9 @@ from pyspark.sql import functions as F
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
 from databricks_spark_sql_challenge1_spark.operators.dedup import (
-    HAMMING_MAX,
-    SIMHASH_WIDE_BITS,
     _SHINGLES_SQL,
     _shingles_spark,
-    _simhash_exprs_spark,
+    _simhash_pairs_sql,
 )
 from databricks_spark_sql_challenge1_spark.registry import query
 
@@ -96,7 +94,7 @@ SELECT doc_id, lang, n_tokens,
            AS pack_id,
        CAST(cum_tokens AS BIGINT) AS cum_tokens
 FROM c
-ORDER BY lang ASC, doc_id ASC
+ORDER BY lang ASC NULLS FIRST, doc_id ASC
 """,
 )
 def token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,7 +327,7 @@ SELECT g.lang, g.source,
        CAST(ceil(CAST(tot.total_tokens AS DOUBLE) / tot.n_groups / g.n_tokens)
             AS BIGINT) AS epochs
 FROM g CROSS JOIN tot
-ORDER BY lang ASC, source ASC
+ORDER BY lang ASC NULLS FIRST, source ASC NULLS FIRST
 """,
 )
 def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -394,7 +392,7 @@ FROM (
     FROM documents
 )
 WHERE rk <= {SAMPLE_PER_STRATUM}
-ORDER BY lang ASC, source ASC, sample_rank ASC
+ORDER BY lang ASC NULLS FIRST, source ASC NULLS FIRST, sample_rank ASC
 """,
 )
 def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -663,24 +661,8 @@ canon AS (
         SELECT stats.*, MIN(doc_id) OVER (PARTITION BY fp) AS cmin FROM stats
     ) WHERE doc_id = cmin
 ),
-toks AS (
-    SELECT DISTINCT doc_id,
-           unnest(string_split_regex(trim(text), '\\s+')) AS tok
-    FROM canon
-),
-hashed AS (
-    SELECT doc_id,
-           CAST(CAST('0x' || substr(md5(tok), 1, 15) AS UBIGINT) AS BIGINT) AS h
-    FROM toks
-),
-sig AS (
-    SELECT doc_id, {SIMHASH_EXPRS} AS simhash
-    FROM hashed GROUP BY doc_id
-),
 near_dropped AS (
-    SELECT DISTINCT b.doc_id
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= {HAMMING_MAX}
+    SELECT DISTINCT doc_2 AS doc_id FROM ({NEAR_PAIRS})
 ),
 kept AS (
     SELECT c.* FROM canon c ANTI JOIN near_dropped d USING (doc_id)
@@ -702,10 +684,9 @@ SELECT split, lang,
        CAST(SUM(n_tokens) AS BIGINT) AS kept_tokens
 FROM split_assigned
 GROUP BY split, lang
-ORDER BY split ASC, lang ASC
+ORDER BY split ASC, lang ASC NULLS FIRST
 """.format(
-        SIMHASH_EXPRS=_simhash_exprs_spark(SIMHASH_WIDE_BITS),
-        HAMMING_MAX=HAMMING_MAX,
+        NEAR_PAIRS=_simhash_pairs_sql("wide60", "canon"),
         MIN_TOKENS=QUALITY_MIN_TOKENS,
         MAX_PUNCT=QUALITY_MAX_PUNCT,
         SPLIT_BUCKETS=SPLIT_BUCKETS,
@@ -730,8 +711,8 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     remain the tools when cluster-level survivor policies are required.
     """
     from databricks_spark_sql_challenge1_spark.operators.dedup import (
-        _simhash_true_pairs,
-        _simhash_wide_sig,
+        _distinct_token_md5,
+        _simhash_self_pairs,
     )
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
@@ -755,9 +736,10 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") == F.col("cmin"))
         .drop("cmin")
     )
-    sig = _simhash_wide_sig(canon.select("doc_id", "text")).localCheckpoint()
     near_dropped = (
-        _simhash_true_pairs(sig, SIMHASH_WIDE_BITS, HAMMING_MAX)
+        _simhash_self_pairs(
+            "wide60", _distinct_token_md5(canon.select("doc_id", "text"))
+        )
         .select(F.col("doc_2").alias("doc_id"))
         .distinct()
     )
@@ -818,7 +800,7 @@ SELECT p.lang,
        ROUND(power(p.share, {TEMPERATURE_ALPHA}) / z.zsum / p.share, 4)
            AS boost
 FROM p CROSS JOIN z
-ORDER BY p.lang ASC
+ORDER BY p.lang ASC NULLS FIRST
 """,
 )
 def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:

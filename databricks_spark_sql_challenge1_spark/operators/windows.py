@@ -32,7 +32,7 @@ SELECT date_trunc('hour', ts) AS window_start,
        CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
 FROM events
 GROUP BY 1, 2
-ORDER BY window_start ASC, event_type ASC
+ORDER BY window_start ASC, event_type ASC NULLS FIRST
 """,
 )
 def events_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -348,19 +348,20 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-dup admission control — the live variant of
     ``dedup_incremental``: incoming documents stream in, each is SimHash-
     signed ON THE STREAM SIDE as a pure expression pipeline (array fold
-    over distinct tokens — zero stream-side shuffle to sign a doc), band-
-    exploded, and stream-static-joined against the ingested corpus's band
-    index; flagged docs emit (doc_id, n_near_dups).
+    over distinct tokens — zero stream-side shuffle to sign a doc), and
+    band-joined stream-static against the ingested corpus's signatures;
+    flagged docs emit (doc_id, n_near_dups).
 
     Two streaming-specific shapes worth noting:
     - the signature is computed WITHOUT the batch path's groupBy (an
       aggregation before a join would chain stateful operators); the
-      CASE-sum algebra is identical, so signatures match the batch
-      ``text_simhash`` bit-for-bit;
+      token hashes and bit algebra are the batch ones (``_limb_hashes``,
+      ``_simhash_bits``) folded with ``aggregate`` instead of ``sum``, so
+      signatures match the batch ``text_simhash`` bit-for-bit;
     - a pair agreeing on several bands would need a streaming ``distinct``
-      (unsupported distinct-aggregation) — instead the first-agreeing-band
-      rule from ``dedup_simhash_pairs`` keeps exactly one row per (inc,
-      ex) pair with a per-row expression, so the final count is a plain
+      (unsupported distinct-aggregation) — instead the one band join
+      (``dedup._simhash_band_join``) keeps exactly one row per (inc, ex)
+      pair by its first-agreeing-band rule, so the final count is a plain
       streaming aggregate.
 
     At scale: the static band index is the precomputed bucketed table the
@@ -369,51 +370,43 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest batch). Batch equivalence pinned in tests/test_streaming.py
     against ``dedup_incremental``'s flagged subset.
     """
+    from databricks_spark_sql_challenge1_spark.catalog import load_table
     from databricks_spark_sql_challenge1_spark.operators.dedup import (
-        HAMMING_MAX,
         INCREMENTAL_MOD,
-        SIMHASH_BITS,
-        _first_agreeing_band_sql,
-        _simhash_bands,
-        text_simhash,
+        SIMHASH_LAYOUTS,
+        _distinct_token_md5,
+        _limb_hashes,
+        _simhash_band_join,
+        _simhash_bits,
+        _simhash_sig,
     )
 
     stream = _table_stream(spark, sf_dir, "documents")
-    # 32-bit SimHash as a narrow expression chain (matches text_simhash).
-    bit_terms = " + ".join(
-        f"(CASE WHEN aggregate(hs, 0L, (acc, h) -> acc + "
-        f"CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
-        f"THEN CAST({1 << b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for b in range(SIMHASH_BITS)
-    )
+    # narrow32 signed per row: the batch token hash and bit algebra, folded
+    # over each doc's distinct-token hash array by aggregate()
+    n_bits = 4 * SIMHASH_LAYOUTS["narrow32"][0][1]
+    toks = F.array_distinct(F.split(F.trim("text"), r"\s+"))
     inc_sig = (
         stream.where(F.col("doc_id") % INCREMENTAL_MOD == 0)
-        .selectExpr(
+        .select(
             "doc_id",
-            r"transform(array_distinct(split(trim(text), '\\s+')), "
-            "t -> cast(conv(substring(md5(t), 1, 8), 16, 10) as bigint)) AS hs",
+            F.transform(toks, lambda t: _limb_hashes(F.md5(t), "narrow32")[0])
+            .alias("hs"),
         )
-        .selectExpr("doc_id", f"{bit_terms} AS simhash")
+        .select(
+            "doc_id",
+            F.expr(
+                _simhash_bits(n_bits, "h", "aggregate(hs, 0L, (acc, h) -> acc + {})")
+            ).alias("s0"),
+        )
     )
-    existing = text_simhash(spark, sf_dir).where(
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    existing = _simhash_sig("narrow32", _distinct_token_md5(docs)).where(
         F.col("doc_id") % INCREMENTAL_MOD != 0
     )
-    i = _simhash_bands(inc_sig).alias("i")
-    e = _simhash_bands(existing).alias("e")
-    n_bands = HAMMING_MAX + 1
-    band_width = SIMHASH_BITS // n_bands
-    first_band = _first_agreeing_band_sql(
-        "(i.simhash ^ e.simhash)", n_bands, band_width, (1 << band_width) - 1
-    )
     flagged = (
-        i.join(
-            e,
-            (F.col("i.band_id") == F.col("e.band_id"))
-            & (F.col("i.band_val") == F.col("e.band_val")),
-        )
-        .where(F.expr("bit_count(i.simhash ^ e.simhash)") <= HAMMING_MAX)
-        .where(F.expr(f"i.band_id = {first_band}"))
-        .groupBy(F.col("i.doc_id").alias("doc_id"))
+        _simhash_band_join("narrow32", inc_sig, existing)
+        .groupBy(F.col("doc_1").alias("doc_id"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_near_dups"))
     )
     return _drain_to_memory(flagged, spark)

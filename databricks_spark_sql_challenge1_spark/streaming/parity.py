@@ -65,7 +65,7 @@ SELECT date_trunc('hour', ts) AS window_start,
        CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
 FROM events
 GROUP BY 1, 2
-ORDER BY window_start ASC, event_type ASC
+ORDER BY window_start ASC, event_type ASC NULLS FIRST
 """,
 )
 def streaming_parity_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -117,7 +117,7 @@ SELECT event_type,
        COUNT(DISTINCT user_id) AS n_unique_users
 FROM events
 GROUP BY event_type
-ORDER BY event_type ASC
+ORDER BY event_type ASC NULLS FIRST
 """,
 )
 def streaming_parity_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -289,21 +289,14 @@ def streaming_parity_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _incremental_dedup_oracle_sql() -> str:
     from databricks_spark_sql_challenge1_spark.operators.dedup import (
-        HAMMING_MAX,
-        INCREMENTAL_MOD,
-        _simhash_sql_duckdb,
+        _SIMHASH_SPLIT_HITS_SQL,
     )
 
-    sig = _simhash_sql_duckdb().replace("ORDER BY doc_id ASC", "")
     return f"""
-WITH sig AS ({sig}),
-inc AS (SELECT * FROM sig WHERE doc_id % {INCREMENTAL_MOD} = 0),
-ex  AS (SELECT * FROM sig WHERE doc_id % {INCREMENTAL_MOD} <> 0)
-SELECT i.doc_id, CAST(COUNT(*) AS BIGINT) AS n_near_dups
-FROM inc i JOIN ex e
-  ON bit_count(xor(i.simhash, e.simhash)) <= {HAMMING_MAX}
-GROUP BY i.doc_id
-ORDER BY i.doc_id ASC
+WITH {_SIMHASH_SPLIT_HITS_SQL}
+SELECT doc_id, CAST(n AS BIGINT) AS n_near_dups
+FROM hits
+ORDER BY doc_id ASC
 """
 
 

@@ -44,7 +44,8 @@ and ntile file assignment wherever a date feeds an implicit-default
 ORDER BY. That default divergence is pinned below
 (test_null_date_window_placement_diverges) so an engine upgrade that
 moves it fails HERE, not in a driver hash check; CLAUDE.md's
-explicit-NULLS-FIRST/LAST rule for LIMIT queries is the same class.
+explicit-NULLS-FIRST/LAST rule for every top-level oracle ORDER BY is
+the same class.
 """
 
 from __future__ import annotations
@@ -178,11 +179,11 @@ def test_null_injection_oracle_parity(spark, null_dir):
                 raised_convention.append(oc.name)
             else:
                 bad.append((oc.name, "expected the NULL-text convention error"))
-        # multiset compare: 23 oracles declare a top-level ORDER BY over a
-        # column injected NULL here without explicit NULLS FIRST/LAST, and
-        # the engines' default NULL placement differs (the root cause
-        # pinned in test_null_date_window_placement_diverges)
-        elif oc.status not in ("match", "ORDER-ONLY"):
+        # ordered compare under a top-level ORDER BY: every oracle spells
+        # NULLS FIRST on its ascending NULL-able sort keys (Spark's ASC
+        # default; DuckDB's differs, the root cause pinned in
+        # test_null_date_window_placement_diverges)
+        elif oc.status != "match":
             bad.append(str(oc))
     assert bad == []
     # the whole codec-witness family must hit the loud convention error —

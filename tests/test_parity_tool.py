@@ -132,15 +132,16 @@ def test_every_registered_oracle_classification_is_stable():
         if _top_level_limit(s) and not has_top_level_order_by(s)
     ]
     assert unsafe == []
-    # and pin the (small) set of oracles that rely on order-insensitive
-    # compare while still mentioning nested ORDER BYs, so a new one is a
-    # conscious decision, not an accident:
+    # and pin the set of oracles that rely on order-insensitive compare
+    # while still mentioning nested ORDER BYs, so a new one is a conscious
+    # decision, not an accident (empty since the SimHash pair oracles
+    # share one generator, which declares no order):
     nested_only = sorted(
         n
         for n, s in oracles.items()
         if "order by" in s.lower() and not has_top_level_order_by(s)
     )
-    assert nested_only == ["dedup_simhash_methods"]
+    assert nested_only == []
 
 
 def test_no_oracle_uses_the_classifiers_blind_spots():

@@ -4,6 +4,7 @@ nothing degenerates into a cartesian product."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
@@ -130,16 +131,47 @@ def test_bloom_bitmap_joins_as_broadcast(spark):
     assert uses_broadcast_join(docs_contamination_bloom(spark, SF_DIR))
 
 
-def test_simhash_pairs_no_pair_set_reshuffle(spark):
-    """The first-agreeing-band emission replaced the post-join distinct:
-    the plan must not hash-partition on the output pair key (that exchange
-    over the full matched-pair set is exactly what was removed)."""
-    from databricks_spark_sql_challenge1_spark.operators.dedup import (
-        dedup_simhash_pairs,
-    )
+# Every caller of the one SimHash band join (dedup._simhash_band_join):
+# its module, and whether it counts hits per incoming doc (a groupBy on
+# the band join's doc_1 by design).
+BAND_JOIN_CALLERS = {
+    "dedup_simhash_pairs": ("operators.dedup", False),
+    "dedup_simhash_wide_pairs": ("operators.dedup", False),
+    "dedup_simhash_adaptive": ("operators.dedup", False),
+    "dedup_incremental": ("operators.dedup", True),
+    "streaming_incremental_dedup": ("streaming.events_stream", True),
+    "corpus_dedup_pipeline": ("operators.traindata", False),
+}
 
-    plan = formatted_plan(dedup_simhash_pairs(spark, SF_DIR))
-    assert "hashpartitioning(doc_1" not in plan, plan
+
+@pytest.mark.parametrize("name", sorted(BAND_JOIN_CALLERS))
+def test_simhash_pairs_no_pair_set_reshuffle(spark, monkeypatch, name):
+    """The first-agreeing-band emission replaced the post-join distinct:
+    no plan that runs the band join may hash-partition on the output pair
+    key (that exchange over the full matched-pair set is exactly what was
+    removed). A pair-emitting caller has no doc_1-keyed exchange at all; a
+    per-incoming-doc count has one on doc_1 alone. The streaming caller
+    is planned as the stream itself rather than drained into its memory
+    table."""
+    import importlib
+
+    from databricks_spark_sql_challenge1_spark.streaming import events_stream
+
+    monkeypatch.setattr(
+        events_stream, "_drain_to_memory", lambda stream, spark: stream
+    )
+    module, per_doc = BAND_JOIN_CALLERS[name]
+    fn = getattr(
+        importlib.import_module(f"databricks_spark_sql_challenge1_spark.{module}"),
+        name,
+    )
+    plan = formatted_plan(fn(spark, SF_DIR))
+    assert "band_key" in plan, plan
+    doc_1_keyed = [ln for ln in plan.splitlines() if "hashpartitioning(doc_1" in ln]
+    if per_doc:
+        assert all("doc_2" not in ln for ln in doc_1_keyed), plan
+    else:
+        assert doc_1_keyed == [], plan
 
 
 def test_round5_operators_plan_shapes(spark):
@@ -289,8 +321,6 @@ def test_rfm_approx_no_global_sort(spark):
 # targeted tests above remain as directed regressions for richer
 # invariants (pushdown, broadcast sides, narrowness, no-pair-reshuffle).
 # --------------------------------------------------------------------------
-
-import pytest
 
 import databricks_spark_sql_challenge1_spark.operators  # noqa: F401  (registers)
 from databricks_spark_sql_challenge1_spark.registry import QUERIES

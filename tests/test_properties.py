@@ -13,6 +13,11 @@ from databricks_spark_sql_challenge1_spark.functions.datetime import (
     month_start,
     shift_months,
 )
+from databricks_spark_sql_challenge1_spark.operators.dedup import (
+    HAMMING_MAX,
+    SIMHASH_LAYOUTS,
+    _simhash_regions,
+)
 
 ts_strategy = st.datetimes(
     min_value=dt.datetime(1990, 1, 1), max_value=dt.datetime(2100, 12, 31)
@@ -773,3 +778,28 @@ def test_jpeg_stuffing_inverts_on_ff_dense_input(seg):
     assert stuffed.count(b"\xff") == stuffed.count(b"\xff\x00") == raw.count(b"\xff")
     with pytest.raises(ValueError, match="unexpected marker in entropy segment"):
         _jpeg_unstuff(stuffed + b"\xff\xd9")
+
+
+@given(st.sampled_from(sorted(SIMHASH_LAYOUTS)), st.data())
+@settings(max_examples=300)
+def test_simhash_regions_pigeonhole_complete(layout, data):
+    """SimHash band blocking is complete: for every layout, two signatures
+    within HAMMING_MAX bits agree exactly on at least one of the regions
+    ``_simhash_regions`` returns — the table the band join generates its
+    band keys and first-agreeing-band CASE from."""
+    widths = [4 * n for _start, n in SIMHASH_LAYOUTS[layout]]
+    a = [data.draw(st.integers(0, (1 << w) - 1)) for w in widths]
+    flips = data.draw(
+        st.sets(st.integers(0, sum(widths) - 1), max_size=HAMMING_MAX)
+    )
+    b = list(a)
+    for bit in flips:
+        limb = 0
+        while bit >= widths[limb]:
+            bit -= widths[limb]
+            limb += 1
+        b[limb] ^= 1 << bit
+    assert any(
+        ((a[limb] ^ b[limb]) >> shift) & ((1 << width) - 1) == 0
+        for limb, shift, width in _simhash_regions(layout)
+    )

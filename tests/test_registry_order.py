@@ -25,6 +25,13 @@ DRIVER_WINDOW = 50
 # was accidentally left out of the window). Update this literal whenever
 # a query is added or its output/oracle changes.
 MUST_VERIFY = {
+    # changed round 20 by the one SimHash band join and the one
+    # hyperplane-LSH candidate join / oracle CTE in operators/dedup.py
+    "corpus_dedup_pipeline",
+    "dedup_embedding_lsh_adaptive",
+    "dedup_embedding_incremental",
+    # changed round 20: grouping id as the last sort key on both sides
+    "rollup_order_values",
     # changed round 20 by the one codec-witness harness (_map_rows /
     # _codec_witness, unified bit I/O and CRC) in operators/multimodal.py
     "multimodal_audio_pcm_stats",
