@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
-from databricks_spark_sql_challenge1_spark.registry import query
+from databricks_spark_sql_challenge1_spark.registry import fill_doc, query
 
 SHINGLE_N = 3  # word 3-grams
 JACCARD_THRESHOLD = 0.2
@@ -1284,8 +1284,11 @@ def dedup_embedding_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_1", "vec_2")
 
 
-dedup_embedding_lsh_adaptive.__doc__ = dedup_embedding_lsh_adaptive.__doc__.format(
-    off=EMB_LSH_BITS_OFFSET, lo=EMB_LSH_BITS, hi=EMB_LSH_MAX_BITS
+fill_doc(
+    dedup_embedding_lsh_adaptive,
+    off=EMB_LSH_BITS_OFFSET,
+    lo=EMB_LSH_BITS,
+    hi=EMB_LSH_MAX_BITS,
 )
 
 
@@ -1526,9 +1529,7 @@ def dedup_simhash_adaptive(
         bpb = _adaptive_simhash_bpb(docs.count())
     if _toks is None:
         _toks = _distinct_token_md5(docs)
-    return _simhash_self_pairs(
-        "adaptive88", _toks, SIMHASH_BPB_MAX - bpb
-    ).orderBy(F.col("doc_1").asc(), F.col("doc_2").asc())
+    return _simhash_self_pairs("adaptive88", _toks, SIMHASH_BPB_MAX - bpb)
 
 
 # --- consolidated SimHash pair surface (r13 capacity policy) ----------------

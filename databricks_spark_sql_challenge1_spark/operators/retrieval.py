@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.functions.vectors import cosine
+from databricks_spark_sql_challenge1_spark.operators.similarity import _emb
 from databricks_spark_sql_challenge1_spark.registry import query
 
 # Fixed retrieval query — terms from the fixture vocabulary (FIXTURES.md:
@@ -230,9 +232,6 @@ def retrieval_hybrid_rrf(
     arithmetic on both engines — no FP drift surface beyond the legs'
     already-immunized rounding.
     """
-    from databricks_spark_sql_challenge1_spark.functions.vectors import cosine
-    from databricks_spark_sql_challenge1_spark.operators.similarity import _emb
-
     lex = (
         _bm25_scored(spark, sf_dir, _stats=_stats)
         .select(
@@ -399,9 +398,6 @@ def retrieval_rrf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     score isn't in the lexical top-N frame; per-doc tokenize+score runs
     on just the K key-matched rows. No new corpus-scale shuffle anywhere.
     """
-    from databricks_spark_sql_challenge1_spark.functions.vectors import cosine
-    from databricks_spark_sql_challenge1_spark.operators.similarity import _emb
-
     # Round-19 (VERDICT r18 #8): stage 2 used to re-derive the BM25
     # statistics with a SECOND full-corpus aggregate, and `short` fed three
     # consumers unmaterialized (the feature join + both key probes), so the

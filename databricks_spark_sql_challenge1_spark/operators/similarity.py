@@ -1,23 +1,35 @@
 """Similarity search over ``embeddings.embedding`` (array<float>[64]) —
 extension surface (SURVEY.md §7 Stage 3).
 
-Two paths:
-  - ``similarity_topk``: brute-force cosine top-k — the exact baseline.
-    O(N·Q); fine when Q (query set) is small and broadcastable.
-  - ``similarity_ivf``: IVF-style bucketed ANN — the 100 TB scale path.
-    Vectors are assigned to their nearest of K centroids once (K small →
-    centroid table broadcasts), then each query probes only its own bucket:
-    the crossJoin shrinks from N·Q to (N/K)·Q per probe. At real scale the
-    centroid set comes from a sampled k-means (spark.ml KMeans fits here);
-    the fixture variant uses a deterministic centroid subset so the DuckDB
-    oracle can replay the exact same computation.
+Every query here is composed from one small ANN toolkit, each piece written
+once per engine (a Spark builder beside its DuckDB SQL twin):
+
+  - ``_centroids``: the deterministic centroid subset (every stride-th
+    vector, optionally capped) that stands in for a sampled k-means fit,
+    so the DuckDB oracle can replay the exact same computation;
+  - ``_assign``: nearest-centroid assignment — broadcast the centroids,
+    cross join (or join per PQ subspace), keep each point's ``probes``
+    nearest under a rounded metric (cosine descending or squared L2
+    ascending) with a centroid-id tiebreak. IVF routing, multi-probe,
+    SemDeDup cells, each Lloyd round and the PQ encoder are this one call;
+  - ``_topk``: the per-partition ``row_number`` cut every ranking uses
+    (``_neighbors`` adds the per-query output order);
+  - ``_sqdist``: the one in-order squared-L2 fold;
+  - ``_pq_codes_dtable``: the PQ encode pass and query distance table
+    (optionally with a capped codebook), scanned in full by ``_adc``.
+
+The ANN legs (``_ivf_leg``, ``_pq_leg``, ``_ivfpq_leg``) take their frames
+as arguments. The public callables run the stride guard and build the
+frames; ``similarity_ann_methods`` builds each shared frame once.
 
 All arithmetic is cast to double on both engines; similarities are rounded
 to 6 decimals and ranked on the rounded value with an id tiebreak, so
-float-summation drift cannot flip the top-k cut.
+float-summation drift cannot flip a top-k cut.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,7 +37,8 @@ from pyspark.sql.window import Window
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
 from databricks_spark_sql_challenge1_spark.functions.vectors import cosine, l2_norm
-from databricks_spark_sql_challenge1_spark.registry import query
+from databricks_spark_sql_challenge1_spark.operators.dedup import EMB_DUP_THRESHOLD
+from databricks_spark_sql_challenge1_spark.registry import fill_doc, query
 
 N_QUERIES = 10  # query set = vec_id < 10
 TOP_K = 5
@@ -63,24 +76,228 @@ def _emb(spark, sf_dir) -> DataFrame:
     )
 
 
+_E_CTE = "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)"
+
+
+# --- the ANN toolkit ---------------------------------------------------------
+# A points frame carries (vec_id, emb[, m]), a centroid frame
+# (centroid_id, cemb[, m]); ``m`` is a PQ subspace. Each Spark builder is
+# followed by its DuckDB twin.
+
+
+def _sqdist(a, b):
+    """Σ (a_i - b_i)² as an in-order JVM fold (matches ``_SQDIST_SQL``:
+    DuckDB list_sum over list_transform, element order preserved on both
+    engines)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+_SQDIST_SQL = (
+    "list_sum(list_transform(generate_series(1, len({a})), "
+    "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
+)
+
+
+def _centroids(e: DataFrame, stride=CENTROID_STRIDE, cap: int | None = None) -> DataFrame:
+    """(centroid_id, cemb): every ``stride``-th vector of ``e``; with
+    ``cap``, only the first ``cap`` of them."""
+    cent = e.where(F.col("vec_id") % stride == 0)
+    if cap is not None:
+        cent = cent.where(F.col("vec_id") < stride * cap)
+    return cent.select(F.col("vec_id").alias("centroid_id"), F.col("emb").alias("cemb"))
+
+
+def _centroids_sql(stride=CENTROID_STRIDE, cap: int | None = None) -> str:
+    """``stride`` may be a SQL scalar expression."""
+    cut = "" if cap is None else f" AND vec_id < {stride} * {cap}"
+    return (
+        "SELECT vec_id AS centroid_id, emb AS cemb FROM e "
+        f"WHERE vec_id % {stride} = 0{cut}"
+    )
+
+
+def _topk(df: DataFrame, keys, order, k: int) -> DataFrame:
+    """The first ``k`` rows of each ``keys`` partition under ``order``, a
+    total order (every caller ends it with an id tiebreak)."""
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return df.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k).drop("rk")
+
+
+def _topk_sql(source: str, keys: str, order: str, k: int, drop: str = "rk") -> str:
+    return f"""SELECT * EXCLUDE ({drop}) FROM (
+    SELECT *, row_number() OVER (PARTITION BY {keys} ORDER BY {order}) AS rk
+    FROM {source}
+) WHERE rk <= {k}"""
+
+
+def _neighbors(scored: DataFrame, score, k: int = TOP_K) -> DataFrame:
+    """(query_id, neighbor_id, …) → each query's ``k`` best neighbours
+    under ``score`` (a sort column) with a neighbor-id tiebreak, sorted
+    for output."""
+    order = [score, F.col("neighbor_id").asc()]
+    return _topk(scored, ["query_id"], order, k).orderBy(
+        F.col("query_id").asc(), *order
+    )
+
+
+def _neighbors_sql(source: str, score: str, k: int = TOP_K) -> str:
+    order = f"{score}, neighbor_id ASC"
+    return f"{_topk_sql(source, 'query_id', order, k)}\nORDER BY query_id ASC, {order}"
+
+
+# Assignment metrics, rounded so float drift cannot flip a rank: cosine is
+# a similarity (nearest = largest), squared L2 a distance (nearest = least).
+_METRICS = {
+    "cos": lambda a, b: F.round(cosine(a, b), 6).desc(),
+    "l2": lambda a, b: F.round(_sqdist(a, b), 6).asc(),
+}
+_METRICS_SQL = {
+    "cos": "ROUND(list_cosine_similarity({a}, {b}), 6) DESC",
+    "l2": f"ROUND({_SQDIST_SQL}, 6) ASC",
+}
+
+
+def _assign(
+    points: DataFrame, cent: DataFrame, metric: str, probes: int, by=()
+) -> DataFrame:
+    """Nearest-centroid assignment → (vec_id, *by, emb, centroid_id): each
+    point's ``probes`` nearest centroids under the rounded ``metric``,
+    centroid-id tiebreak. The centroid frame is broadcast-tiny and joined
+    on ``by`` (a PQ subspace) or, without ``by``, cross-joined."""
+    keys = ["vec_id", *by]
+    cb = F.broadcast(cent)
+    joined = points.join(cb, list(by)) if by else points.crossJoin(cb)
+    order = [_METRICS[metric](F.col("emb"), F.col("cemb")), F.col("centroid_id").asc()]
+    return _topk(joined, keys, order, probes).select(*keys, "emb", "centroid_id")
+
+
+def _assign_sql(points: str, cent: str, metric: str, probes: int, by=()) -> str:
+    if by:
+        join = f"JOIN {cent} c ON " + " AND ".join(f"c.{k} = p.{k}" for k in by)
+    else:
+        join = f"CROSS JOIN {cent} c"
+    order = _METRICS_SQL[metric].format(a="emb", b="cemb") + ", centroid_id ASC"
+    return _topk_sql(
+        f"(SELECT p.*, c.centroid_id, c.cemb FROM {points} p {join})",
+        ", ".join(["vec_id", *by]),
+        order,
+        probes,
+        drop="rk, cemb",
+    )
+
+
+# --- Product quantization (IVF-PQ's compression half) ----------------------
+# Codebooks are deterministic (sub-vectors of every CENTROID_STRIDE-th
+# vector) so DuckDB can replay the exact computation — same trick as the
+# IVF centroid set. Production fits codebooks with sampled k-means; the
+# encode/score algebra below is unchanged by where codebooks come from.
+PQ_M = 8  # subspaces
+PQ_SUB = 8  # dims per subspace (embedding dim 64 = 8 × 8)
+
+
+def _subspaces(df: DataFrame, id_col: str = "vec_id", emb_col: str = "emb") -> DataFrame:
+    """(id, emb) → (id, m, emb): one row per PQ subspace slice."""
+    return df.select(
+        id_col,
+        F.posexplode(
+            F.array(*[F.slice(emb_col, m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
+        ).alias("m", emb_col),
+    )
+
+
+def _subspaces_sql(source: str, id_col: str = "vec_id", emb_col: str = "emb") -> str:
+    return (
+        f"SELECT {id_col}, m, {emb_col}[m * {PQ_SUB} + 1:m * {PQ_SUB} + {PQ_SUB}]"
+        f" AS {emb_col}\n    FROM {source}, "
+        f"(SELECT unnest(generate_series(0, {PQ_M - 1})) AS m)"
+    )
+
+
+def _pq_codes_dtable(
+    e: DataFrame, codebook_cap: int | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The PQ encode pass (vec_id, m, code) — each subspace slice's nearest
+    codebook entry in squared L2 — and the query distance table
+    (query_id, m, code, d).
+
+    ``codebook_cap`` bounds the codebook at a FIXED number of code vectors
+    (the first ``cap`` stride multiples) regardless of corpus size — real
+    PQ has a constant K (typically 256/subspace), and without the cap the
+    stride-derived codebook makes encoding N·K = N²/stride sqdist folds
+    (measured 3.2×/doubling on the round-6 growth curve). None keeps the
+    uncapped stride rule (the ``similarity_pq`` fixture baseline)."""
+    sub = _subspaces(e)
+    cb = _subspaces(_centroids(e, cap=codebook_cap), "centroid_id", "cemb")
+    codes = _assign(sub, cb, "l2", 1, by=("m",)).select(
+        "vec_id", "m", F.col("centroid_id").alias("code")
+    )
+    dtable = (
+        sub.where(F.col("vec_id") < N_QUERIES)
+        .join(F.broadcast(cb), "m")
+        .select(
+            F.col("vec_id").alias("query_id"),
+            "m",
+            F.col("centroid_id").alias("code"),
+            _sqdist(F.col("emb"), F.col("cemb")).alias("d"),
+        )
+    )
+    return codes, dtable
+
+
+def _pq_ctes(codebook_cap: int | None = None) -> str:
+    """The sub, cb, codes and dtable CTEs (after ``e``) of ``_pq_codes_dtable``."""
+    cent = f"({_centroids_sql(cap=codebook_cap)})"
+    return f"""sub AS ({_subspaces_sql("e")}),
+cb AS ({_subspaces_sql(cent, "centroid_id", "cemb")}),
+codes AS (
+    SELECT vec_id, m, centroid_id AS code
+    FROM ({_assign_sql("sub", "cb", "l2", 1, by=("m",))})
+),
+dtable AS (
+    SELECT s.vec_id AS query_id, s.m, cb.centroid_id AS code,
+           {_SQDIST_SQL.format(a="s.emb", b="cb.cemb")} AS d
+    FROM sub s JOIN cb ON cb.m = s.m
+    WHERE s.vec_id < {N_QUERIES}
+)"""
+
+
+def _adc(codes: DataFrame, dtable: DataFrame) -> DataFrame:
+    """Full ADC scoring set (query_id, neighbor_id, adist), no top-k cut:
+    codes ⋈ broadcast(dtable), one shuffle for the per-pair sum."""
+    return (
+        codes.join(F.broadcast(dtable), ["m", "code"])
+        .where(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.round(F.sum("d"), 4).alias("adist"))
+    )
+
+
+_ADC_SQL = """
+    SELECT d.query_id, c.vec_id AS neighbor_id, ROUND(SUM(d.d), 4) AS adist
+    FROM codes c JOIN dtable d ON d.m = c.m AND d.code = c.code
+    WHERE c.vec_id <> d.query_id
+    GROUP BY d.query_id, c.vec_id
+"""
+
+
+# --- exact and approximate top-k ---------------------------------------------
+
+
 @query(
     "similarity_topk",
     oracle=f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+WITH {_E_CTE},
 q AS (SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < {N_QUERIES}),
 scored AS (
     SELECT q.query_id, e.vec_id AS neighbor_id,
            ROUND(list_cosine_similarity(q.qemb, e.emb), 6) + 0 AS sim
     FROM q JOIN e ON e.vec_id <> q.query_id
 )
-SELECT query_id, neighbor_id, sim
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sim DESC, neighbor_id ASC) AS rk
-    FROM scored
-)
-WHERE rk <= {TOP_K}
-ORDER BY query_id ASC, sim DESC, neighbor_id ASC
+{_neighbors_sql("scored", "sim DESC")}
 """,
 )
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,81 +308,22 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
     )
-    scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qemb"), F.col("emb")), 6).alias("sim"),
-        )
+    scored = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(cosine(F.col("qemb"), F.col("emb")), 6).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim")
-        .orderBy(
-            F.col("query_id").asc(), F.col("sim").desc(), F.col("neighbor_id").asc()
-        )
-    )
+    return _neighbors(scored, F.col("sim").desc())
 
 
-def _ivf_assigned(e: DataFrame) -> DataFrame:
-    """(vec_id, emb, centroid_id): nearest deterministic centroid per vector
-    (crossJoin against the broadcast-tiny centroid table, rank-1 window on
-    rounded cosine with a centroid-id tiebreak). Shared by ``similarity_ivf``
-    and ``dedup_semantic_ivf``."""
-    cent = e.where(F.col("vec_id") % CENTROID_STRIDE == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("emb").alias("cemb")
-    )
-    rk_w = Window.partitionBy("vec_id").orderBy(
-        F.round(cosine(F.col("emb"), F.col("cemb")), 6).desc(),
-        F.col("centroid_id").asc(),
-    )
-    return (
-        e.crossJoin(F.broadcast(cent))
-        .withColumn("rk", F.row_number().over(rk_w))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "emb", "centroid_id")
-    )
-
-
-# DuckDB mirror of _ivf_assigned (reused by the similarity_ivf and
-# dedup_semantic_ivf oracles).
-_IVF_ASSIGNED_SQL = f"""
-    SELECT vec_id, emb, centroid_id
-    FROM (
-        SELECT e.vec_id, e.emb, cent.centroid_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_cosine_similarity(e.emb, cent.cemb), 6) DESC,
-                            cent.centroid_id ASC) AS rk
-        FROM e CROSS JOIN cent
-    ) WHERE rk = 1
-"""
-
-
-# Oracle kept as a module constant: since r13 the three one-stage ANN scans
+# The one-stage ANN oracles are module constants: since r13 the three scans
 # register through the consolidated ``similarity_ann_methods`` (capacity
-# policy), which unions these verbatim — and the recall audit composes the
+# policy), which unions them verbatim — and the recall audit composes the
 # ivfpq one — so each method's SQL remains single-sourced.
 _IVF_ORACLE_SQL = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-cent AS (SELECT vec_id AS centroid_id, emb AS cemb FROM e
-         WHERE vec_id % {CENTROID_STRIDE} = 0),
-assigned AS (
-    SELECT vec_id, emb, centroid_id
-    FROM (
-        SELECT e.vec_id, e.emb, cent.centroid_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_cosine_similarity(e.emb, cent.cemb), 6) DESC,
-                            cent.centroid_id ASC) AS rk
-        FROM e CROSS JOIN cent
-    ) WHERE rk = 1
-),
+WITH {_E_CTE},
+cent AS ({_centroids_sql()}),
+assigned AS ({_assign_sql("e", "cent", "cos", 1)}),
 q AS (SELECT vec_id AS query_id, emb AS qemb, centroid_id AS qc
       FROM assigned WHERE vec_id < {N_QUERIES}),
 scored AS (
@@ -173,35 +331,13 @@ scored AS (
            ROUND(list_cosine_similarity(q.qemb, a.emb), 6) + 0 AS sim
     FROM q JOIN assigned a ON a.centroid_id = q.qc AND a.vec_id <> q.query_id
 )
-SELECT query_id, neighbor_id, sim
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sim DESC, neighbor_id ASC) AS rk
-    FROM scored
-)
-WHERE rk <= {TOP_K}
-ORDER BY query_id ASC, sim DESC, neighbor_id ASC
+{_neighbors_sql("scored", "sim DESC")}
 """
 
 
-def similarity_ivf(
-    spark: SparkSession, sf_dir: str, _assigned: DataFrame | None = None
-) -> DataFrame:
-    """IVF-bucketed approximate top-k: assign → probe own bucket only.
-
-    The bucket join is an equi-join on centroid_id (shuffle/broadcast on a
-    low-cardinality key) instead of a full crossJoin — the plan that still
-    works when N is 10^9.
-
-    ``_assigned`` lets the consolidated ANN surface pass the materialized
-    shared assignment (round-18 optimization: the ivf and ivfpq legs run
-    the identical assignment pipeline; sharing it removes a full duplicate
-    pass). Values are unchanged — the assignment is deterministic.
-    """
-    e = _emb(spark, sf_dir)
-    if _assigned is None:
-        _guard_stride_corpus(e.count(), "similarity_ivf", "dedup_semantic_ivf's sqrt-N sibling rule (dedup_semantic_sqrtk) or similarity_pq_rerank")
-    assigned = _assigned if _assigned is not None else _ivf_assigned(e)
+def _ivf_leg(assigned: DataFrame) -> DataFrame:
+    """IVF top-k over a (vec_id, emb, centroid_id) assignment: each query
+    probes only its own cell."""
     q = assigned.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb").alias("qemb"),
@@ -215,106 +351,39 @@ def similarity_ivf(
         F.col("vec_id").alias("neighbor_id"),
         F.round(cosine(F.col("qemb"), F.col("emb")), 6).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim")
-        .orderBy(
-            F.col("query_id").asc(), F.col("sim").desc(), F.col("neighbor_id").asc()
-        )
-    )
+    return _neighbors(scored, F.col("sim").desc())
 
 
-# --- Product quantization (IVF-PQ's compression half) ----------------------
-# Codebooks are deterministic (sub-vectors of every CENTROID_STRIDE-th
-# vector) so DuckDB can replay the exact computation — same trick as the
-# IVF centroid set. Production fits codebooks with sampled k-means; the
-# encode/score algebra below is unchanged by where codebooks come from.
-PQ_M = 8  # subspaces
-PQ_SUB = 8  # dims per subspace (embedding dim 64 = 8 × 8)
+def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-bucketed approximate top-k: assign → probe own bucket only.
 
-
-def _sqdist(a, b):
-    """Σ (a_i - b_i)² as an in-order JVM fold (matches DuckDB list_sum over
-    list_transform, element order preserved on both engines)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _pq_subspaces(df: DataFrame, id_col: str, out_id: str) -> DataFrame:
-    """(id, emb) → (out_id, m, sub): one row per PQ subspace slice."""
-    return df.select(
-        F.col(id_col).alias(out_id),
-        F.posexplode(
-            F.array(
-                *[F.slice("emb", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)]
-            )
-        ).alias("m", "sub"),
-    )
-
-
-_PQ_SUB_SQL = f"""
-    SELECT vec_id, m, emb[m * {PQ_SUB} + 1:m * {PQ_SUB} + {PQ_SUB}] AS sub
-    FROM e, (SELECT unnest(generate_series(0, {PQ_M - 1})) AS m)
-"""
-
-_SQDIST_SQL = (
-    f"list_sum(list_transform(generate_series(1, {PQ_SUB}), "
-    "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-)
+    Vectors are assigned to their nearest of K centroids once (K small →
+    the centroid table broadcasts), then each query probes only its own
+    bucket: the crossJoin shrinks from N·Q to (N/K)·Q per probe. The bucket
+    join is an equi-join on centroid_id (shuffle/broadcast on a
+    low-cardinality key) instead of a full crossJoin — the plan that still
+    works when N is 10^9. At real scale the centroid set comes from a
+    sampled k-means (spark.ml KMeans fits here); the fixture variant uses
+    the deterministic centroid subset so the DuckDB oracle can replay it.
+    """
+    e = _emb(spark, sf_dir)
+    _guard_stride_corpus(e.count(), "similarity_ivf", "dedup_semantic_ivf's sqrt-N sibling rule (dedup_semantic_sqrtk) or similarity_pq_rerank")
+    return _ivf_leg(_assign(e, _centroids(e), "cos", 1))
 
 
 _PQ_ORACLE_SQL = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-sub AS ({_PQ_SUB_SQL}),
-cb AS (SELECT vec_id AS centroid_id, m, sub AS csub FROM sub
-       WHERE vec_id % {CENTROID_STRIDE} = 0),
-codes AS (
-    SELECT vec_id, m, centroid_id AS code
-    FROM (
-        SELECT s.vec_id, s.m, cb.centroid_id,
-               row_number() OVER (
-                   PARTITION BY s.vec_id, s.m
-                   ORDER BY ROUND({_SQDIST_SQL.format(a="s.sub", b="cb.csub")}, 6) ASC,
-                            cb.centroid_id ASC) AS rk
-        FROM sub s JOIN cb ON cb.m = s.m
-    ) WHERE rk = 1
-),
-dtable AS (
-    SELECT s.vec_id AS query_id, s.m, cb.centroid_id AS code,
-           {_SQDIST_SQL.format(a="s.sub", b="cb.csub")} AS d
-    FROM sub s JOIN cb ON cb.m = s.m
-    WHERE s.vec_id < {N_QUERIES}
-),
-scored AS (
-    SELECT d.query_id, c.vec_id AS neighbor_id, ROUND(SUM(d.d), 4) AS adist
-    FROM codes c JOIN dtable d ON d.m = c.m AND d.code = c.code
-    WHERE c.vec_id <> d.query_id
-    GROUP BY d.query_id, c.vec_id
-)
-SELECT query_id, neighbor_id, adist
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY adist ASC, neighbor_id ASC) AS rk
-    FROM scored
-)
-WHERE rk <= {TOP_K}
-ORDER BY query_id ASC, adist ASC, neighbor_id ASC
+WITH {_E_CTE},
+{_pq_ctes()},
+scored AS ({_ADC_SQL})
+{_neighbors_sql("scored", "adist ASC")}
 """
 
 
-def similarity_pq(
-    spark: SparkSession,
-    sf_dir: str,
-    _codes: DataFrame | None = None,
-    _dtable: DataFrame | None = None,
-) -> DataFrame:
+def _pq_leg(codes: DataFrame, dtable: DataFrame) -> DataFrame:
+    return _neighbors(_adc(codes, dtable), F.col("adist").asc())
+
+
+def similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ (product-quantization) approximate top-k — the memory half of
     IVF-PQ: vectors live as {PQ_M} one-byte codes, queries scan codes via a
     precomputed subspace distance table (ADC).
@@ -327,96 +396,11 @@ def similarity_pq(
     (mapPartitions over packed codes); the relational plan here keeps the
     identical algebra oracle-checkable.
     """
-    if _codes is None or _dtable is None:
-        _guard_stride_corpus(
-            _emb(spark, sf_dir).count(), "similarity_pq", "similarity_pq_rerank"
-        )
-    scored = _pq_scored(spark, sf_dir, _codes=_codes, _dtable=_dtable)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "adist")
-        .orderBy(
-            F.col("query_id").asc(), F.col("adist").asc(), F.col("neighbor_id").asc()
-        )
-    )
+    e = _emb(spark, sf_dir)
+    _guard_stride_corpus(e.count(), "similarity_pq", "similarity_pq_rerank")
+    return _pq_leg(*_pq_codes_dtable(e))
 
-
-def _pq_scored(
-    spark: SparkSession,
-    sf_dir: str,
-    codebook_cap: int | None = None,
-    _codes: DataFrame | None = None,
-    _dtable: DataFrame | None = None,
-) -> DataFrame:
-    """Full ADC scoring set (query_id, neighbor_id, adist), no top-k cut.
-
-    ``codebook_cap`` bounds the codebook at a FIXED number of code vectors
-    (the first ``cap`` stride multiples) regardless of corpus size — real
-    PQ has a constant K (typically 256/subspace), and without the cap the
-    stride-derived codebook makes encoding N·K = N²/stride sqdist folds
-    (measured 3.2×/doubling on the round-6 growth curve). None keeps the
-    uncapped stride rule (the ``similarity_pq`` fixture baseline).
-
-    ``_codes``/``_dtable`` let the consolidated ANN surface inject the
-    materialized encode/distance-table frames it shares with the ivfpq leg
-    (round-18; both legs build the identical uncapped frames)."""
-    if _codes is None or _dtable is None:
-        _codes, _dtable = _pq_codes_dtable(_emb(spark, sf_dir), codebook_cap)
-    return (
-        _codes.join(F.broadcast(_dtable), ["m", "code"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.round(F.sum("d"), 4).alias("adist"))
-    )
-
-
-def _pq_codes_dtable(
-    e: DataFrame, codebook_cap: int | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """The PQ encode pass (vec_id, m, code) and query distance table
-    (query_id, m, code, d) — factored out (round-18) because similarity_pq
-    and similarity_ivfpq build the IDENTICAL uncapped frames; the
-    consolidated ANN surface materializes them once and injects them into
-    both legs."""
-    sub = _pq_subspaces(e, "vec_id", "vec_id")
-    cb_src = e.where(F.col("vec_id") % CENTROID_STRIDE == 0)
-    if codebook_cap is not None:
-        cb_src = cb_src.where(F.col("vec_id") < CENTROID_STRIDE * codebook_cap)
-    cb = _pq_subspaces(cb_src, "vec_id", "centroid_id").select(
-        "centroid_id", "m", F.col("sub").alias("csub")
-    )
-
-    s = sub.alias("s")
-    c = cb.alias("c")
-    enc_w = Window.partitionBy("s.vec_id", "s.m").orderBy(
-        F.round(_sqdist(F.col("s.sub"), F.col("c.csub")), 6).asc(),
-        F.col("c.centroid_id").asc(),
-    )
-    codes = (
-        s.join(F.broadcast(c), F.col("s.m") == F.col("c.m"))
-        .withColumn("rk", F.row_number().over(enc_w))
-        .where(F.col("rk") == 1)
-        .select(
-            F.col("s.vec_id").alias("vec_id"),
-            F.col("s.m").alias("m"),
-            F.col("c.centroid_id").alias("code"),
-        )
-    )
-    dtable = (
-        s.where(F.col("s.vec_id") < N_QUERIES)
-        .join(F.broadcast(c), F.col("s.m") == F.col("c.m"))
-        .select(
-            F.col("s.vec_id").alias("query_id"),
-            F.col("s.m").alias("m"),
-            F.col("c.centroid_id").alias("code"),
-            _sqdist(F.col("s.sub"), F.col("c.csub")).alias("d"),
-        )
-    )
-    return codes, dtable
+fill_doc(similarity_pq, PQ_M=PQ_M)
 
 
 # IVF-PQ probes: queries scan their IVFPQ_PROBES nearest cells (standard
@@ -424,43 +408,17 @@ def _pq_codes_dtable(
 IVFPQ_PROBES = 2
 
 
+_QUERIES_SQL = f"(SELECT * FROM e WHERE vec_id < {N_QUERIES})"
+
 _IVFPQ_ORACLE_SQL = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-cent AS (SELECT vec_id AS centroid_id, emb AS cemb FROM e
-         WHERE vec_id % {CENTROID_STRIDE} = 0),
-assigned AS ({_IVF_ASSIGNED_SQL}),
+WITH {_E_CTE},
+cent AS ({_centroids_sql()}),
+assigned AS ({_assign_sql("e", "cent", "cos", 1)}),
 qprobe AS (
     SELECT vec_id AS query_id, centroid_id AS qc
-    FROM (
-        SELECT e.vec_id, cent.centroid_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_cosine_similarity(e.emb, cent.cemb), 6) DESC,
-                            cent.centroid_id ASC) AS rk
-        FROM e CROSS JOIN cent
-        WHERE e.vec_id < {N_QUERIES}
-    ) WHERE rk <= {IVFPQ_PROBES}
+    FROM ({_assign_sql(_QUERIES_SQL, "cent", "cos", IVFPQ_PROBES)})
 ),
-sub AS ({_PQ_SUB_SQL}),
-cb AS (SELECT vec_id AS centroid_id, m, sub AS csub FROM sub
-       WHERE vec_id % {CENTROID_STRIDE} = 0),
-codes AS (
-    SELECT vec_id, m, centroid_id AS code
-    FROM (
-        SELECT s.vec_id, s.m, cb.centroid_id,
-               row_number() OVER (
-                   PARTITION BY s.vec_id, s.m
-                   ORDER BY ROUND({_SQDIST_SQL.format(a="s.sub", b="cb.csub")}, 6) ASC,
-                            cb.centroid_id ASC) AS rk
-        FROM sub s JOIN cb ON cb.m = s.m
-    ) WHERE rk = 1
-),
-dtable AS (
-    SELECT s.vec_id AS query_id, s.m, cb.centroid_id AS code,
-           {_SQDIST_SQL.format(a="s.sub", b="cb.csub")} AS d
-    FROM sub s JOIN cb ON cb.m = s.m
-    WHERE s.vec_id < {N_QUERIES}
-),
+{_pq_ctes()},
 cand AS (
     SELECT q.query_id, a.vec_id
     FROM assigned a JOIN qprobe q ON a.centroid_id = q.qc
@@ -473,24 +431,35 @@ scored AS (
     JOIN dtable d ON d.query_id = c.query_id AND d.m = k.m AND d.code = k.code
     GROUP BY c.query_id, c.vec_id
 )
-SELECT query_id, neighbor_id, adist
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY adist ASC, neighbor_id ASC) AS rk
-    FROM scored
-)
-WHERE rk <= {TOP_K}
-ORDER BY query_id ASC, adist ASC, neighbor_id ASC
+{_neighbors_sql("scored", "adist ASC")}
 """
 
 
-def similarity_ivfpq(
-    spark: SparkSession,
-    sf_dir: str,
-    _assigned: DataFrame | None = None,
-    _codes: DataFrame | None = None,
-    _dtable: DataFrame | None = None,
+def _ivfpq_leg(
+    e: DataFrame, assigned: DataFrame, codes: DataFrame, dtable: DataFrame
 ) -> DataFrame:
+    """IVF routing over ``assigned`` composed with ADC scoring over
+    ``codes``/``dtable``: queries probe their IVFPQ_PROBES nearest cells of
+    ``e``'s centroid subset."""
+    qprobe = _assign(
+        e.where(F.col("vec_id") < N_QUERIES), _centroids(e), "cos", IVFPQ_PROBES
+    ).select(F.col("vec_id").alias("query_id"), F.col("centroid_id").alias("qc"))
+    cand = (
+        assigned.select("vec_id", "centroid_id")
+        .join(F.broadcast(qprobe), F.col("centroid_id") == F.col("qc"))
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id")
+    )
+    scored = (
+        cand.join(codes, "vec_id")
+        .join(F.broadcast(dtable), ["query_id", "m", "code"])
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.round(F.sum("d"), 4).alias("adist"))
+    )
+    return _neighbors(scored, F.col("adist").asc())
+
+
+def similarity_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ: the full production ANN plan — IVF coarse routing composed
     with PQ/ADC scoring (the two halves already proven separately in
     ``similarity_ivf`` and ``similarity_pq``). Queries probe their
@@ -518,53 +487,12 @@ def similarity_ivfpq(
     real clustered embeddings the same plan is the FAISS IVF-PQ shape.
     """
     e = _emb(spark, sf_dir)
-    if _assigned is None:
-        _guard_stride_corpus(e.count(), "similarity_ivfpq", "similarity_pq_rerank")
-    assigned = (
-        _assigned if _assigned is not None else _ivf_assigned(e)
-    ).select("vec_id", "centroid_id")
-    cent = e.where(F.col("vec_id") % CENTROID_STRIDE == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("emb").alias("cemb")
-    )
-    probe_w = Window.partitionBy("vec_id").orderBy(
-        F.round(cosine(F.col("emb"), F.col("cemb")), 6).desc(),
-        F.col("centroid_id").asc(),
-    )
-    qprobe = (
-        e.where(F.col("vec_id") < N_QUERIES)
-        .crossJoin(F.broadcast(cent))
-        .withColumn("rk", F.row_number().over(probe_w))
-        .where(F.col("rk") <= IVFPQ_PROBES)
-        .select(F.col("vec_id").alias("query_id"), F.col("centroid_id").alias("qc"))
+    _guard_stride_corpus(e.count(), "similarity_ivfpq", "similarity_pq_rerank")
+    return _ivfpq_leg(
+        e, _assign(e, _centroids(e), "cos", 1), *_pq_codes_dtable(e)
     )
 
-    if _codes is not None and _dtable is not None:
-        codes, dtable = _codes, _dtable
-    else:
-        codes, dtable = _pq_codes_dtable(e)
-
-    cand = (
-        assigned.join(F.broadcast(qprobe), F.col("centroid_id") == F.col("qc"))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-    )
-    scored = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(dtable), ["query_id", "m", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.round(F.sum("d"), 4).alias("adist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "adist")
-        .orderBy(
-            F.col("query_id").asc(), F.col("adist").asc(), F.col("neighbor_id").asc()
-        )
-    )
+fill_doc(similarity_ivfpq, PQ_M=PQ_M)
 
 
 # --- consolidated one-stage ANN surface (r13 capacity policy) ---------------
@@ -575,15 +503,12 @@ def similarity_ivfpq(
 # while every method stays individually hash-checked (the per-method rows
 # are disjoint, so a drift in any one method flips the combined hash).
 
-# One row per method: (name, leg function, leg oracle SQL, native score
-# column) — the single registry both the Spark surface and the oracle
-# union iterate, so a method cannot be added to one side and not the
-# other (round-13 review: the former tuple + separate legs dicts kept
-# the same list in three places).
+# One row per method: (name, leg oracle SQL, native score column) — the one
+# list both the Spark surface and the oracle union iterate.
 _ANN_METHODS = (
-    ("ivf", similarity_ivf, _IVF_ORACLE_SQL, "sim"),
-    ("ivfpq", similarity_ivfpq, _IVFPQ_ORACLE_SQL, "adist"),
-    ("pq", similarity_pq, _PQ_ORACLE_SQL, "adist"),
+    ("ivf", _IVF_ORACLE_SQL, "sim"),
+    ("ivfpq", _IVFPQ_ORACLE_SQL, "adist"),
+    ("pq", _PQ_ORACLE_SQL, "adist"),
 )
 
 
@@ -591,7 +516,7 @@ def _ann_methods_oracle() -> str:
     union = "\nUNION ALL\n".join(
         f"SELECT '{m}' AS method, query_id, neighbor_id, "
         f"{score} AS score FROM ({sql})"
-        for m, _fn, sql, score in _ANN_METHODS
+        for m, sql, score in _ANN_METHODS
     )
     return f"""
 SELECT method, query_id, neighbor_id, score
@@ -611,35 +536,31 @@ def similarity_ann_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape); this surface only unions their outputs, so the driver hash
     pins all three methods in one row budget.
 
-    Round-18 optimization (guide §1.2 step 1): the legs overlap — ivf and
-    ivfpq run the identical IVF assignment, and ivfpq and pq build the
-    identical uncapped PQ encode + query distance table. The surface now
-    materializes each shared frame ONCE (localCheckpoint) and injects it
-    into the legs via their ``_assigned``/``_codes``/``_dtable`` hooks; the
-    frames are deterministic, so every leg's rows are unchanged (3-scale
-    parity re-proven)."""
+    The legs overlap — ivf and ivfpq run the identical IVF assignment, and
+    ivfpq and pq the identical uncapped PQ encode and query distance table
+    — so the surface materializes each shared frame ONCE (localCheckpoint)
+    and passes it to the legs; the frames are deterministic, so every
+    leg's rows are those of its standalone callable."""
     e = _emb(spark, sf_dir)
     _guard_stride_corpus(
         e.count(), "similarity_ann_methods", "similarity_pq_rerank"
     )
-    assigned = _ivf_assigned(e).localCheckpoint()
-    codes, dtable = _pq_codes_dtable(e)
-    codes, dtable = codes.localCheckpoint(), dtable.localCheckpoint()
-    shared = {
-        "ivf": {"_assigned": assigned},
-        "ivfpq": {"_assigned": assigned, "_codes": codes, "_dtable": dtable},
-        "pq": {"_codes": codes, "_dtable": dtable},
+    assigned = _assign(e, _centroids(e), "cos", 1).localCheckpoint()
+    codes, dtable = [f.localCheckpoint() for f in _pq_codes_dtable(e)]
+    legs = {
+        "ivf": _ivf_leg(assigned),
+        "ivfpq": _ivfpq_leg(e, assigned, codes, dtable),
+        "pq": _pq_leg(codes, dtable),
     }
-    parts = []
-    for m, fn, _sql, score in _ANN_METHODS:
-        parts.append(
-            fn(spark, sf_dir, **shared[m]).select(
-                F.lit(m).alias("method"),
-                "query_id",
-                "neighbor_id",
-                F.col(score).alias("score"),
-            )
+    parts = [
+        legs[m].select(
+            F.lit(m).alias("method"),
+            "query_id",
+            "neighbor_id",
+            F.col(score).alias("score"),
         )
+        for m, _sql, score in _ANN_METHODS
+    ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -648,12 +569,7 @@ def similarity_ann_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# str.replace (not .format) so a future literal brace can't KeyError, and
-# guarded so `python -O` (docstrings stripped) can't AttributeError at import.
-if similarity_ann_methods.__doc__:
-    similarity_ann_methods.__doc__ = similarity_ann_methods.__doc__.replace(
-        "{k}", str(TOP_K)
-    )
+fill_doc(similarity_ann_methods, k=TOP_K)
 
 
 @query(
@@ -810,37 +726,29 @@ def embedding_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+
 # --- SemDeDup-style semantic dedup ------------------------------------------
-# Same duplicate threshold as dedup_embedding_cosine (operators/dedup.py):
-# redeclared here (not imported) to keep the module import graph acyclic.
-SEMANTIC_DUP_MIN = 0.4
+# Same duplicate threshold as dedup_embedding_cosine (operators/dedup.py).
+SEMANTIC_DUP_MIN = EMB_DUP_THRESHOLD
 # Multi-probe assignment: each vector indexes into its SEMANTIC_PROBES
 # nearest cells, so duplicate pairs that straddle a cell boundary still meet
 # (standard IVF multi-probe; measured on the fixtures it lifts pair recall
 # vs the exact all-pairs set from 0.26/0.41 to 0.64/0.71 at sf0.001/sf0.01
 # for ~4x the within-cell candidate volume).
 SEMANTIC_PROBES = 2
+# dedup_semantic_sqrtk's stride ceil(N / ceil(sqrt(N))) as a DuckDB scalar
+_SQRTK_STRIDE_SQL = (
+    "(SELECT CAST(ceil(COUNT(*) / ceil(sqrt(COUNT(*)))) AS BIGINT) FROM e)"
+)
 
 
-@query(
-    "dedup_semantic_ivf",
-    oracle=f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-cent AS (SELECT vec_id AS centroid_id, emb AS cemb FROM e
-         WHERE vec_id % {CENTROID_STRIDE} = 0),
-assigned AS (
-    SELECT vec_id, emb, centroid_id
-    FROM (
-        SELECT e.vec_id, e.emb, cent.centroid_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_cosine_similarity(e.emb, cent.cemb), 6) DESC,
-                            cent.centroid_id ASC) AS rk
-        FROM e CROSS JOIN cent
-    ) WHERE rk <= {SEMANTIC_PROBES}
-),
+def _semantic_oracle(stride) -> str:
+    return f"""
+WITH {_E_CTE},
+cent AS ({_centroids_sql(stride)}),
+assigned AS ({_assign_sql("e", "cent", "cos", SEMANTIC_PROBES)}),
 pairs AS (
-    SELECT vec_id, dup_of, MIN(via) AS via_centroid, MIN(sim) AS sim
+    SELECT vec_id, MIN(via) AS via_centroid, dup_of, MIN(sim) AS sim
     FROM (
         SELECT b.vec_id AS vec_id, a.vec_id AS dup_of, a.centroid_id AS via,
                ROUND(list_cosine_similarity(a.emb, b.emb), 6) AS sim
@@ -850,15 +758,46 @@ pairs AS (
     GROUP BY vec_id, dup_of
 ),
 dups AS (SELECT * FROM pairs WHERE sim >= {SEMANTIC_DUP_MIN})
-SELECT vec_id, via_centroid, dup_of, sim
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY sim DESC, dup_of ASC) AS rk
-    FROM dups
-) WHERE rk = 1
+{_topk_sql("dups", "vec_id", "sim DESC, dup_of ASC", 1)}
 ORDER BY vec_id ASC
-""",
-)
+"""
+
+
+def _semantic_dedup(e: DataFrame, stride: int) -> DataFrame:
+    """The SemDeDup body both cell-count rules share: multi-probe
+    assignment to the ``stride`` centroid subset, within-cell pair pruning,
+    keep-lowest-id rank."""
+    assigned = _assign(
+        e, _centroids(e, stride), "cos", SEMANTIC_PROBES
+    ).localCheckpoint()  # feeds both join sides; avoid double assignment
+    a, b = assigned.alias("a"), assigned.alias("b")
+    # a pair sharing both probed cells would appear twice: aggregate to one
+    # row per (vec_id, dup_of), keeping the smallest shared cell. sim is
+    # constant within the group (same two vectors), so MIN is its identity.
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.centroid_id") == F.col("b.centroid_id"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .select(
+            F.col("b.vec_id").alias("vec_id"),
+            F.col("a.vec_id").alias("dup_of"),
+            F.col("a.centroid_id").alias("via"),
+            F.round(cosine(F.col("a.emb"), F.col("b.emb")), 6).alias("sim"),
+        )
+        .groupBy("vec_id", "dup_of")
+        .agg(F.min("via").alias("via_centroid"), F.min("sim").alias("sim"))
+        .where(F.col("sim") >= SEMANTIC_DUP_MIN)
+    )
+    return (
+        _topk(pairs, ["vec_id"], [F.col("sim").desc(), F.col("dup_of").asc()], 1)
+        .select("vec_id", "via_centroid", "dup_of", "sim")
+        .orderBy(F.col("vec_id").asc())
+    )
+
+
+@query("dedup_semantic_ivf", oracle=_semantic_oracle(CENTROID_STRIDE))
 def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -888,92 +827,10 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = _emb(spark, sf_dir)
     _guard_stride_corpus(e.count(), "dedup_semantic_ivf", "dedup_semantic_sqrtk")
-    cent = e.where(F.col("vec_id") % CENTROID_STRIDE == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("emb").alias("cemb")
-    )
-    rk_w = Window.partitionBy("vec_id").orderBy(
-        F.round(cosine(F.col("emb"), F.col("cemb")), 6).desc(),
-        F.col("centroid_id").asc(),
-    )
-    assigned = (
-        e.crossJoin(F.broadcast(cent))
-        .withColumn("rk", F.row_number().over(rk_w))
-        .where(F.col("rk") <= SEMANTIC_PROBES)
-        .select("vec_id", "emb", "centroid_id")
-        .localCheckpoint()  # feeds both join sides; avoid double assignment
-    )
-    a, b = assigned.alias("a"), assigned.alias("b")
-    # a pair sharing both probed cells would appear twice: aggregate to one
-    # row per (vec_id, dup_of), keeping the smallest shared cell. sim is
-    # constant within the group (same two vectors), so MIN is its identity.
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.centroid_id") == F.col("b.centroid_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("b.vec_id").alias("vec_id"),
-            F.col("a.vec_id").alias("dup_of"),
-            F.col("a.centroid_id").alias("via"),
-            F.round(cosine(F.col("a.emb"), F.col("b.emb")), 6).alias("sim"),
-        )
-        .groupBy("vec_id", "dup_of")
-        .agg(F.min("via").alias("via_centroid"), F.min("sim").alias("sim"))
-        .where(F.col("sim") >= SEMANTIC_DUP_MIN)
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("dup_of").asc()
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "via_centroid", "dup_of", "sim")
-        .orderBy(F.col("vec_id").asc())
-    )
+    return _semantic_dedup(e, CENTROID_STRIDE)
 
 
-@query(
-    "dedup_semantic_sqrtk",
-    oracle=f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-params AS (
-    SELECT CAST(ceil(COUNT(*) / ceil(sqrt(COUNT(*)))) AS BIGINT) AS stride
-    FROM e
-),
-cent AS (SELECT vec_id AS centroid_id, emb AS cemb FROM e, params
-         WHERE vec_id % params.stride = 0),
-assigned AS (
-    SELECT vec_id, emb, centroid_id
-    FROM (
-        SELECT e.vec_id, e.emb, cent.centroid_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY ROUND(list_cosine_similarity(e.emb, cent.cemb), 6) DESC,
-                            cent.centroid_id ASC) AS rk
-        FROM e CROSS JOIN cent
-    ) WHERE rk <= {SEMANTIC_PROBES}
-),
-pairs AS (
-    SELECT vec_id, dup_of, MIN(via) AS via_centroid, MIN(sim) AS sim
-    FROM (
-        SELECT b.vec_id AS vec_id, a.vec_id AS dup_of, a.centroid_id AS via,
-               ROUND(list_cosine_similarity(a.emb, b.emb), 6) AS sim
-        FROM assigned a JOIN assigned b
-          ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-    )
-    GROUP BY vec_id, dup_of
-),
-dups AS (SELECT * FROM pairs WHERE sim >= {SEMANTIC_DUP_MIN})
-SELECT vec_id, via_centroid, dup_of, sim
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY sim DESC, dup_of ASC) AS rk
-    FROM dups
-) WHERE rk = 1
-ORDER BY vec_id ASC
-""",
-)
+@query("dedup_semantic_sqrtk", oracle=_semantic_oracle(_SQRTK_STRIDE_SQL))
 def dedup_semantic_sqrtk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dedup_semantic_ivf`` with the centroid count scaled as K ≈ √N —
     the production rule, applied after the round-5 growth curve measured
@@ -986,79 +843,23 @@ def dedup_semantic_sqrtk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The stride is ceil(N / ceil(√N)), computed from the corpus count —
     on the Spark side as a bounded driver scalar (same pattern as the
     S11 anchor pull, catalog.last_order_datetime), in the oracle as a
-    params CTE evaluating the identical formula. Everything downstream
-    (multi-probe assignment, within-cell pruning, keep-lowest-id rank)
-    is the dedup_semantic_ivf algebra unchanged.
+    scalar subquery evaluating the identical formula. Everything
+    downstream (multi-probe assignment, within-cell pruning,
+    keep-lowest-id rank) is the dedup_semantic_ivf algebra unchanged.
     """
-    import math
-
     e = _emb(spark, sf_dir)
     n = e.count()  # bounded driver scalar (anchor-pull pattern)
     # n = 0 would be 0/0 on the driver; any stride works on an empty
     # corpus (the oracle's NULL stride filters everything the same way —
     # r15 empty-warehouse probe)
     stride = math.ceil(n / math.ceil(math.sqrt(n))) if n else 1
-    cent = e.where(F.col("vec_id") % stride == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("emb").alias("cemb")
-    )
-    rk_w = Window.partitionBy("vec_id").orderBy(
-        F.round(cosine(F.col("emb"), F.col("cemb")), 6).desc(),
-        F.col("centroid_id").asc(),
-    )
-    assigned = (
-        e.crossJoin(F.broadcast(cent))
-        .withColumn("rk", F.row_number().over(rk_w))
-        .where(F.col("rk") <= SEMANTIC_PROBES)
-        .select("vec_id", "emb", "centroid_id")
-        .localCheckpoint()
-    )
-    a, b = assigned.alias("a"), assigned.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.centroid_id") == F.col("b.centroid_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("b.vec_id").alias("vec_id"),
-            F.col("a.vec_id").alias("dup_of"),
-            F.col("a.centroid_id").alias("via"),
-            F.round(cosine(F.col("a.emb"), F.col("b.emb")), 6).alias("sim"),
-        )
-        .groupBy("vec_id", "dup_of")
-        .agg(F.min("via").alias("via_centroid"), F.min("sim").alias("sim"))
-        .where(F.col("sim") >= SEMANTIC_DUP_MIN)
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("dup_of").asc()
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "via_centroid", "dup_of", "sim")
-        .orderBy(F.col("vec_id").asc())
-    )
+    return _semantic_dedup(e, stride)
 
 
 # --- fixed-round Lloyd refinement (k-means as a DataFrame loop) -------------
 KMEANS_ITERS = 2
 KMEANS_ROUND = 6  # means rounded per iteration on BOTH engines (parity)
 EMB_DIM = PQ_M * PQ_SUB  # 64
-
-_L2SQ_SQL = (
-    f"list_sum(list_transform(generate_series(1, {EMB_DIM}), "
-    "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-)
-
-_KM_ASSIGN_SQL = f"""
-    SELECT vec_id, emb, centroid_id FROM (
-        SELECT e.vec_id, e.emb, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   ROUND({_L2SQ_SQL.format(a="e.emb", b="c.cemb")}, 6) ASC,
-                   c.centroid_id ASC) AS rk
-        FROM e CROSS JOIN {{cent}} c
-    ) WHERE rk = 1
-"""
 
 
 def _km_oracle_sql(iters: int = KMEANS_ITERS) -> str:
@@ -1069,14 +870,9 @@ def _km_oracle_sql(iters: int = KMEANS_ITERS) -> str:
     list-reassembled means CTE (m_i) merged into the next centroid table
     (c_i) with the same empty-cluster COALESCE as the Spark side."""
     assert iters >= 1
-    ctes = [
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb "
-        "FROM embeddings)",
-        f"c0 AS (SELECT vec_id AS centroid_id, emb AS cemb FROM e\n"
-        f"       WHERE vec_id % {CENTROID_STRIDE} = 0)",
-    ]
+    ctes = [_E_CTE, f"c0 AS ({_centroids_sql()})"]
     for i in range(1, iters):
-        ctes.append(f"a{i} AS ({_KM_ASSIGN_SQL.format(cent=f'c{i - 1}')})")
+        ctes.append(f"a{i} AS ({_assign_sql('e', f'c{i - 1}', 'l2', 1)})")
         ctes.append(
             f"""m{i} AS (
     SELECT centroid_id, list(cv ORDER BY pos) AS cemb FROM (
@@ -1094,7 +890,7 @@ def _km_oracle_sql(iters: int = KMEANS_ITERS) -> str:
             f"ON m{i}.centroid_id = c{i - 1}.centroid_id)"
         )
     last = iters
-    ctes.append(f"a{last} AS ({_KM_ASSIGN_SQL.format(cent=f'c{last - 1}')})")
+    ctes.append(f"a{last} AS ({_assign_sql('e', f'c{last - 1}', 'l2', 1)})")
     ctes.append(
         f"sizes AS (SELECT centroid_id, CAST(COUNT(*) AS BIGINT) AS n_members\n"
         f"          FROM a{last} GROUP BY centroid_id)"
@@ -1153,22 +949,11 @@ def _kmeans_refine(e: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     empty-cluster COALESCE path (never exercised by the fixture corpus,
     where every seed self-assigns on round 1) can be unit-tested on
     synthetic data (tests/test_extensions.py)."""
-    cent = e.where(F.col("vec_id") % CENTROID_STRIDE == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("emb").alias("cemb")
-    )
+    cent = _centroids(e)
     assigned = None
     means = None
     for it in range(iters):
-        rk_w = Window.partitionBy("vec_id").orderBy(
-            F.round(_sqdist(F.col("emb"), F.col("cemb")), 6).asc(),
-            F.col("centroid_id").asc(),
-        )
-        assigned = (
-            e.crossJoin(F.broadcast(cent))
-            .withColumn("rk", F.row_number().over(rk_w))
-            .where(F.col("rk") == 1)
-            .select("vec_id", "emb", "centroid_id")
-        )
+        assigned = _assign(e, cent, "l2", 1)
         means = (
             assigned.select("centroid_id", F.posexplode("emb").alias("pos", "v"))
             .groupBy("centroid_id", "pos")
@@ -1328,67 +1113,26 @@ RERANK_SHORTLIST = 20
 # unchanged by the cap.
 PQ_CODEBOOK_VECS = 40
 
-_FULL_SQDIST_SQL = (
-    "list_sum(list_transform(generate_series(1, len({a})), "
-    "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-)
-
 
 @query(
     "similarity_pq_rerank",
     oracle=f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-sub AS ({_PQ_SUB_SQL}),
-cb AS (SELECT vec_id AS centroid_id, m, sub AS csub FROM sub
-       WHERE vec_id % {CENTROID_STRIDE} = 0
-         AND vec_id < {CENTROID_STRIDE * PQ_CODEBOOK_VECS}),
-codes AS (
-    SELECT vec_id, m, centroid_id AS code
-    FROM (
-        SELECT s.vec_id, s.m, cb.centroid_id,
-               row_number() OVER (
-                   PARTITION BY s.vec_id, s.m
-                   ORDER BY ROUND({_SQDIST_SQL.format(a="s.sub", b="cb.csub")}, 6) ASC,
-                            cb.centroid_id ASC) AS rk
-        FROM sub s JOIN cb ON cb.m = s.m
-    ) WHERE rk = 1
-),
-dtable AS (
-    SELECT s.vec_id AS query_id, s.m, cb.centroid_id AS code,
-           {_SQDIST_SQL.format(a="s.sub", b="cb.csub")} AS d
-    FROM sub s JOIN cb ON cb.m = s.m
-    WHERE s.vec_id < {N_QUERIES}
-),
-scored AS (
-    SELECT d.query_id, c.vec_id AS neighbor_id, ROUND(SUM(d.d), 4) AS adist
-    FROM codes c JOIN dtable d ON d.m = c.m AND d.code = c.code
-    WHERE c.vec_id <> d.query_id
-    GROUP BY d.query_id, c.vec_id
-),
+WITH {_E_CTE},
+{_pq_ctes(PQ_CODEBOOK_VECS)},
+scored AS ({_ADC_SQL}),
 shortlist AS (
-    SELECT query_id, neighbor_id, adist
-    FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY adist ASC, neighbor_id ASC) AS rk
-        FROM scored
-    ) WHERE rk <= {RERANK_SHORTLIST}
+    {_topk_sql("scored", "query_id", "adist ASC, neighbor_id ASC", RERANK_SHORTLIST)}
 ),
 exact AS (
-    SELECT sl.query_id, sl.neighbor_id, sl.adist,
-           ROUND({_FULL_SQDIST_SQL.format(a="q.emb", b="n.emb")}, 6)
-               AS exact_sqdist
+    SELECT sl.query_id, sl.neighbor_id,
+           ROUND({_SQDIST_SQL.format(a="q.emb", b="n.emb")}, 6)
+               AS exact_sqdist,
+           sl.adist
     FROM shortlist sl
     JOIN e q ON q.vec_id = sl.query_id
     JOIN e n ON n.vec_id = sl.neighbor_id
 )
-SELECT query_id, neighbor_id, exact_sqdist, adist
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY exact_sqdist ASC, neighbor_id ASC)
-              AS rk
-    FROM exact
-) WHERE rk <= {TOP_K}
-ORDER BY query_id ASC, exact_sqdist ASC, neighbor_id ASC
+{_neighbors_sql("exact", "exact_sqdist ASC")}
 """,
 )
 def similarity_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1412,16 +1156,13 @@ def similarity_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture sizes the cap is not binding, so outputs there are identical
     either way.
     """
-    scored = _pq_scored(spark, sf_dir, codebook_cap=PQ_CODEBOOK_VECS)
-    sw = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("rk", F.row_number().over(sw))
-        .where(F.col("rk") <= RERANK_SHORTLIST)
-        .select("query_id", "neighbor_id", "adist")
-    )
     e = _emb(spark, sf_dir)
+    shortlist = _topk(
+        _adc(*_pq_codes_dtable(e, PQ_CODEBOOK_VECS)),
+        ["query_id"],
+        [F.col("adist").asc(), F.col("neighbor_id").asc()],
+        RERANK_SHORTLIST,
+    )
     q = e.select(F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb"))
     n = e.select(
         F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("n_emb")
@@ -1429,24 +1170,14 @@ def similarity_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         shortlist.join(q, "query_id")
         .join(n, "neighbor_id")
-        .withColumn(
-            "exact_sqdist",
-            F.round(_sqdist(F.col("q_emb"), F.col("n_emb")), 6),
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(_sqdist(F.col("q_emb"), F.col("n_emb")), 6).alias("exact_sqdist"),
+            "adist",
         )
     )
-    rw = Window.partitionBy("query_id").orderBy(
-        F.col("exact_sqdist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rk", F.row_number().over(rw))
-        .where(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "exact_sqdist", "adist")
-        .orderBy(
-            F.col("query_id").asc(),
-            F.col("exact_sqdist").asc(),
-            F.col("neighbor_id").asc(),
-        )
-    )
+    return _neighbors(exact, F.col("exact_sqdist").asc())
 
 
 # Johnson-Lindenstrauss sign-random-projection: K output dims, sign matrix
@@ -1614,6 +1345,9 @@ def similarity_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-similarity_recall_audit.__doc__ = similarity_recall_audit.__doc__.format(
-    TOP_K=TOP_K, IVFPQ_PROBES=IVFPQ_PROBES, N_QUERIES=N_QUERIES
+fill_doc(
+    similarity_recall_audit,
+    TOP_K=TOP_K,
+    IVFPQ_PROBES=IVFPQ_PROBES,
+    N_QUERIES=N_QUERIES,
 )

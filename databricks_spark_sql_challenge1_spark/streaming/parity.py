@@ -37,7 +37,7 @@ from databricks_spark_sql_challenge1_spark.catalog import (
     ensure_session_confs,
     load_table,
 )
-from databricks_spark_sql_challenge1_spark.registry import query
+from databricks_spark_sql_challenge1_spark.registry import fill_doc, query
 from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
     GAP_ALERT_US,
     _click_attribution,
@@ -321,9 +321,7 @@ def streaming_parity_incremental_dedup(
     return streaming_incremental_dedup(spark, sf_dir).orderBy("doc_id")
 
 
-streaming_parity_incremental_dedup.__doc__ = (
-    streaming_parity_incremental_dedup.__doc__.format(h=3)
-)
+fill_doc(streaming_parity_incremental_dedup, h=3)
 
 
 # --- watermark lateness accounting (VERDICT r11 #4c) ------------------------
@@ -476,6 +474,4 @@ def streaming_parity_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-streaming_parity_lateness.__doc__ = streaming_parity_lateness.__doc__.format(
-    LATE_MOD=LATE_MOD, LATE_RESIDUE=LATE_RESIDUE
-)
+fill_doc(streaming_parity_lateness, LATE_MOD=LATE_MOD, LATE_RESIDUE=LATE_RESIDUE)

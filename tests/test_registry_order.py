@@ -25,6 +25,14 @@ DRIVER_WINDOW = 50
 # was accidentally left out of the window). Update this literal whenever
 # a query is added or its output/oracle changes.
 MUST_VERIFY = {
+    # changed round 20 by the one ANN toolkit in operators/similarity.py
+    # (one nearest-centroid assignment, top-k cut, PQ encoder, squared L2)
+    "similarity_topk",
+    "dedup_semantic_ivf",
+    "dedup_semantic_sqrtk",
+    "embedding_kmeans_refine",
+    "similarity_pq_rerank",
+    "similarity_recall_audit",
     # changed round 20 by the one SimHash band join and the one
     # hyperplane-LSH candidate join / oracle CTE in operators/dedup.py
     "corpus_dedup_pipeline",
