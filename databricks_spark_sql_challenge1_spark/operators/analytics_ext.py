@@ -7,11 +7,15 @@ correctness guarantee as the reference queries.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.functions.hashing import (
+    hex_int,
+    hex_int_sql,
+)
 from databricks_spark_sql_challenge1_spark.registry import query
 
 
@@ -199,8 +203,9 @@ LIMIT 100
 def approx_topk_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB variant of the flagship: HLL ``approx_count_distinct``
     (rsd = 0.02) instead of exact distinct — no expand, single-pass
-    mergeable sketch. Bounds-check oracle (VERDICT r8 #4, the
-    `distinct_orders_kmv` pattern adapted to a JVM-internal sketch): the
+    mergeable sketch. Bounds-check oracle (VERDICT r8 #4, the KMV
+    pattern of `distinct_orders_kmv_rollup` adapted to a JVM-internal
+    sketch): the
     HLL register values themselves are engine-specific, so instead of
     hashing the estimate the query computes BOTH the sketch estimate and
     the exact count in ONE groupBy pass and emits, per exact-top-100
@@ -1423,11 +1428,11 @@ CMS_DEPTH = 4
 CMS_WIDTH = 256
 
 
-def _cms_bucket_sql(key: str, d: str) -> str:
-    """Bucket of `key` in sketch row `d`: top 8 md5 hex chars of key#d,
-    mod width. Same text is valid in both engines modulo the hex-parse
-    idiom (handled per engine below)."""
-    return f"md5(CAST({key} AS VARCHAR) || '#' || CAST({d} AS VARCHAR))"
+def _cms_md5(key: str, d: str) -> str:
+    """md5 of `key`#`d`, the hash of `key` in sketch row `d`: the same
+    text in both engines. Its top 8 hex chars mod CMS_WIDTH are the
+    bucket."""
+    return f"md5(CAST({key} AS STRING) || '#' || CAST({d} AS STRING))"
 
 
 @query(
@@ -1440,21 +1445,14 @@ WITH ab AS (
 ),
 hashed AS (
     SELECT partkey, d,
-           CAST(CAST('0x' || substr({_cms_bucket_sql("partkey", "d")}, 1, 8)
-                AS UBIGINT) % {CMS_WIDTH} AS BIGINT) AS bucket
+           {hex_int_sql(_cms_md5("partkey", "d"), 1, 8)} % {CMS_WIDTH} AS bucket
     FROM ab, unnest(generate_series(0, {CMS_DEPTH - 1})) AS t(d)
 ),
 counters AS (
     SELECT d, bucket, COUNT(*) AS c FROM hashed GROUP BY d, bucket
 ),
-keys AS (
-    SELECT DISTINCT partkey FROM ab
-),
 key_buckets AS (
-    SELECT k.partkey, t.d,
-           CAST(CAST('0x' || substr({_cms_bucket_sql("k.partkey", "t.d")}, 1, 8)
-                AS UBIGINT) % {CMS_WIDTH} AS BIGINT) AS bucket
-    FROM keys k, unnest(generate_series(0, {CMS_DEPTH - 1})) AS t(d)
+    SELECT DISTINCT partkey, d, bucket FROM hashed
 ),
 est AS (
     SELECT kb.partkey, MIN(c.c) AS cms_estimate
@@ -1504,22 +1502,8 @@ def topk_products_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         # without this the fact join executes three times per run
     )
 
-    def bucket(key_col: str, d_col: str) -> F.Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.expr(
-                        f"md5(CAST({key_col} AS STRING) || '#' "
-                        f"|| CAST({d_col} AS STRING))"
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % CMS_WIDTH
-        )
+    def bucket(key_col: str, d_col: str) -> Column:
+        return hex_int(F.expr(_cms_md5(key_col, d_col)), 1, 8) % CMS_WIDTH
 
     depths = F.explode(
         F.array(*[F.lit(d) for d in range(CMS_DEPTH)])
@@ -1568,104 +1552,51 @@ def topk_products_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 KMV_K = 64
 
 
-# Round-10 capacity policy: RETIRED from the registry — the status-grain
-# estimate this query emits is byte-identical to distinct_orders_kmv_rollup's
-# kmv_direct column (same keys, same hash, same (K-1)*2^32 div m_K integer
-# arithmetic), so the rollup query's driver row already hash-checks this
-# one's semantics. The callable and its oracle stay importable for the
-# accuracy-floor pin in tests/test_quality_ops.py.
-_DISTINCT_ORDERS_KMV_SQL = f"""
-WITH keys AS (
-    SELECT DISTINCT o_orderstatus, o_orderkey FROM orders
-),
-hashed AS (
-    SELECT o_orderstatus,
-           CAST(CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8)
-                AS UBIGINT) AS BIGINT) AS h,
-           o_orderkey
-    FROM keys
-),
-ranked AS (
-    SELECT o_orderstatus, h,
-           ROW_NUMBER() OVER (PARTITION BY o_orderstatus
-                              ORDER BY h ASC, o_orderkey ASC) AS rn
-    FROM hashed
-),
-sk AS (
-    SELECT o_orderstatus,
-           COUNT(*) AS n_kept,
-           MAX(h) AS m_k
-    FROM ranked WHERE rn <= {KMV_K}
-    GROUP BY o_orderstatus
-),
-exact AS (
-    SELECT o_orderstatus, COUNT(DISTINCT o_orderkey) AS n_exact
-    FROM orders GROUP BY o_orderstatus
-)
-SELECT s.o_orderstatus,
-       x.n_exact,
-       CAST(CASE WHEN s.n_kept < {KMV_K} THEN x.n_exact
-                 ELSE ({KMV_K - 1} * 4294967296) // s.m_k
-            END AS BIGINT) AS kmv_estimate
-FROM sk s JOIN exact x ON x.o_orderstatus = s.o_orderstatus
-ORDER BY s.o_orderstatus ASC
-"""
+def _bottomk(df: DataFrame, by: list, key: str, rn: str = "rn") -> DataFrame:
+    """The KMV_K smallest rows of ``df`` per ``by`` group in the (h, key)
+    total order, ranked in column ``rn``: one bottom-K sketch step."""
+    w = Window.partitionBy(*by).orderBy(F.col("h").asc(), F.col(key).asc())
+    return df.withColumn(rn, F.row_number().over(w)).where(F.col(rn) <= KMV_K)
 
 
-def distinct_orders_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct order count per status by K-minimum-values sketch, next to
-    the exact count: keep the KMV_K (= 64) smallest 32-bit md5 hashes of the
-    distinct keys, estimate = (K-1)·2^32 / m_K (integer division), fall
-    back to the exact count when the group has fewer than K keys. Every
-    number is md5-derived integer arithmetic, so the DuckDB oracle
-    reproduces the ESTIMATE itself — the portable, driver-verifiable
-    counterpart to the JVM-internal HLL sketch.
+def _kmv_stats(sk: DataFrame, by: list, n: str, m: str) -> DataFrame:
+    """Per ``by`` group of the sketch ``sk``: its size ``n`` and its
+    largest kept hash ``m`` (m_K once the sketch is full)."""
+    return sk.groupBy(*by).agg(F.count(F.lit(1)).alias(n), F.max("h").alias(m))
 
-    Scale shape: KMV is a fixed-K mergeable bottom-k — in Spark terms one
-    distinct (map-side combinable) plus a per-group bottom-K window whose
-    state is K rows per group; the exact count exists for verification
-    and error reporting, production ships only the K-row sketch per
-    shard. Accuracy floor pinned in tests (relative error ≤ 2/sqrt(K) on
-    the fixture groups).
-    """
-    orders = load_table(spark, sf_dir, "orders", spread=True)
-    keys = orders.select("o_orderstatus", "o_orderkey").distinct()
-    hashed = keys.select(
-        "o_orderstatus",
-        "o_orderkey",
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("h"),
+
+def _kmv_est(n: str, m: str, exact: str) -> Column:
+    """KMV estimate: ``exact`` below K kept hashes, else (K-1)·2^32 div m_K.
+    m_K = 0 is unreachable on the estimator branch (ADVICE r13): the
+    branch only runs with n = K rows, and max(h) = 0 then needs all K = 64
+    distinct keys' 32-bit md5 prefixes to be zero simultaneously
+    (p = 2^-2048). No nullif guard, so the oracle's `//` and Spark's `div`
+    stay textually aligned."""
+    return F.when(F.col(n) < KMV_K, F.col(exact)).otherwise(
+        F.expr(f"({KMV_K - 1} * 4294967296) div {m}")
     )
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        F.col("h").asc(), F.col("o_orderkey").asc()
-    )
-    sk = (
-        hashed.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= KMV_K)
-        .groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n_kept"), F.max("h").alias("m_k"))
-    )
-    exact = orders.groupBy("o_orderstatus").agg(
-        F.countDistinct("o_orderkey").alias("n_exact")
-    )
+
+
+def _bottomk_sql(cols: str, src: str, key: str, by: str = "") -> str:
+    """The DuckDB twin of ``_bottomk``: ``cols`` of the KMV_K smallest rows
+    of ``src`` per ``by`` group (one group when ``by`` is empty)."""
+    part = f"PARTITION BY {by} " if by else ""
+    return f"""SELECT {cols} FROM (
+        SELECT *, ROW_NUMBER() OVER ({part}ORDER BY h ASC, {key} ASC) AS rn
+        FROM {src}) WHERE rn <= {KMV_K}"""
+
+
+def _kmv_stats_sql(src: str, by: str, key: str, n: str, m: str) -> str:
+    """The DuckDB twin of ``_kmv_stats`` over ``_bottomk_sql``."""
+    return f"""SELECT {by}, COUNT(*) AS {n}, MAX(h) AS {m}
+    FROM ({_bottomk_sql("*", src, key, by)}) GROUP BY {by}"""
+
+
+def _kmv_est_sql(n: str, m: str, exact: str) -> str:
+    """The DuckDB twin of ``_kmv_est``."""
     return (
-        sk.join(exact, "o_orderstatus")
-        .select(
-            "o_orderstatus",
-            "n_exact",
-            F.when(F.col("n_kept") < KMV_K, F.col("n_exact"))
-            .otherwise(
-                F.expr(f"({KMV_K - 1} * 4294967296) div m_k")
-            )
-            .cast("bigint")
-            .alias("kmv_estimate"),
-        )
-        .orderBy(F.col("o_orderstatus").asc())
+        f"CASE WHEN {n} < {KMV_K} THEN {exact} "
+        f"ELSE ({KMV_K - 1} * 4294967296) // {m} END"
     )
 
 
@@ -1678,33 +1609,18 @@ WITH keys AS (
 ),
 hashed AS (
     SELECT o_orderstatus, yr, o_orderkey,
-           CAST(CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8)
-                AS UBIGINT) AS BIGINT) AS h
+           {hex_int_sql("md5(CAST(o_orderkey AS VARCHAR))", 1, 8)} AS h
     FROM keys
 ),
 partial AS (
-    SELECT o_orderstatus, h, o_orderkey FROM (
-        SELECT o_orderstatus, yr, h, o_orderkey,
-               ROW_NUMBER() OVER (PARTITION BY o_orderstatus, yr
-                                  ORDER BY h ASC, o_orderkey ASC) AS rn
-        FROM hashed
-    ) WHERE rn <= {KMV_K}
+    {_bottomk_sql("o_orderstatus, h, o_orderkey", "hashed", "o_orderkey",
+                  "o_orderstatus, yr")}
 ),
 merged AS (
-    SELECT o_orderstatus, COUNT(*) AS n_kept_m, MAX(h) AS m_k_m FROM (
-        SELECT o_orderstatus, h,
-               ROW_NUMBER() OVER (PARTITION BY o_orderstatus
-                                  ORDER BY h ASC, o_orderkey ASC) AS rn2
-        FROM partial
-    ) WHERE rn2 <= {KMV_K} GROUP BY o_orderstatus
+    {_kmv_stats_sql("partial", "o_orderstatus", "o_orderkey", "n_kept_m", "m_k_m")}
 ),
 direct AS (
-    SELECT o_orderstatus, COUNT(*) AS n_kept_d, MAX(h) AS m_k_d FROM (
-        SELECT o_orderstatus, h,
-               ROW_NUMBER() OVER (PARTITION BY o_orderstatus
-                                  ORDER BY h ASC, o_orderkey ASC) AS rn
-        FROM hashed
-    ) WHERE rn <= {KMV_K} GROUP BY o_orderstatus
+    {_kmv_stats_sql("hashed", "o_orderstatus", "o_orderkey", "n_kept_d", "m_k_d")}
 ),
 shards AS (
     SELECT o_orderstatus, COUNT(DISTINCT yr) AS n_shards
@@ -1715,12 +1631,10 @@ exact AS (
     FROM orders GROUP BY o_orderstatus
 )
 SELECT d.o_orderstatus, s.n_shards, x.n_exact,
-       CAST(CASE WHEN d.n_kept_d < {KMV_K} THEN x.n_exact
-                 ELSE ({KMV_K - 1} * 4294967296) // d.m_k_d
-            END AS BIGINT) AS kmv_direct,
-       CAST(CASE WHEN m.n_kept_m < {KMV_K} THEN x.n_exact
-                 ELSE ({KMV_K - 1} * 4294967296) // m.m_k_m
-            END AS BIGINT) AS kmv_merged,
+       CAST({_kmv_est_sql("d.n_kept_d", "d.m_k_d", "x.n_exact")} AS BIGINT)
+           AS kmv_direct,
+       CAST({_kmv_est_sql("m.n_kept_m", "m.m_k_m", "x.n_exact")} AS BIGINT)
+           AS kmv_merged,
        (d.m_k_d = m.m_k_m AND d.n_kept_d = m.n_kept_m) AS merge_exact
 FROM direct d
 JOIN merged m ON m.o_orderstatus = d.o_orderstatus
@@ -1757,31 +1671,17 @@ def distinct_orders_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         "yr",
         "o_orderkey",
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10
-        )
-        .cast("bigint")
-        .alias("h"),
+        hex_int(F.md5(F.col("o_orderkey").cast("string")), 1, 8).alias("h"),
     )
-    order_cols = [F.col("h").asc(), F.col("o_orderkey").asc()]
-    w_shard = Window.partitionBy("o_orderstatus", "yr").orderBy(*order_cols)
-    partial = (
-        hashed.withColumn("rn", F.row_number().over(w_shard))
-        .where(F.col("rn") <= KMV_K)
-        .select("o_orderstatus", "h", "o_orderkey")
+    status = ["o_orderstatus"]
+    partial = _bottomk(hashed, [*status, "yr"], "o_orderkey").select(
+        "o_orderstatus", "h", "o_orderkey"
     )
-    w_status = Window.partitionBy("o_orderstatus").orderBy(*order_cols)
-    merged = (
-        partial.withColumn("rn2", F.row_number().over(w_status))
-        .where(F.col("rn2") <= KMV_K)
-        .groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n_kept_m"), F.max("h").alias("m_k_m"))
+    merged = _kmv_stats(
+        _bottomk(partial, status, "o_orderkey", "rn2"), status, "n_kept_m", "m_k_m"
     )
-    direct = (
-        hashed.withColumn("rn", F.row_number().over(w_status))
-        .where(F.col("rn") <= KMV_K)
-        .groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n_kept_d"), F.max("h").alias("m_k_d"))
+    direct = _kmv_stats(
+        _bottomk(hashed, status, "o_orderkey"), status, "n_kept_d", "m_k_d"
     )
     shards = keys.groupBy("o_orderstatus").agg(
         F.countDistinct("yr").alias("n_shards")
@@ -1789,17 +1689,6 @@ def distinct_orders_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = orders.groupBy("o_orderstatus").agg(
         F.countDistinct("o_orderkey").alias("n_exact")
     )
-
-    def est(n_kept: str, m_k: str):
-        # m_k = 0 is unreachable on the estimator branch (ADVICE r13): the
-        # branch only runs with n_kept = K rows, and max(h) = 0 then needs
-        # all K = 64 distinct keys' 32-bit md5 prefixes to be zero
-        # simultaneously (p = 2^-2048). No nullif guard so the oracle's `//`
-        # and Spark's `div` stay textually aligned.
-        return F.when(F.col(n_kept) < KMV_K, F.col("n_exact")).otherwise(
-            F.expr(f"({KMV_K - 1} * 4294967296) div {m_k}")
-        )
-
     return (
         direct.join(merged, "o_orderstatus")
         .join(shards, "o_orderstatus")
@@ -1808,8 +1697,8 @@ def distinct_orders_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderstatus",
             "n_shards",
             "n_exact",
-            est("n_kept_d", "m_k_d").cast("bigint").alias("kmv_direct"),
-            est("n_kept_m", "m_k_m").cast("bigint").alias("kmv_merged"),
+            _kmv_est("n_kept_d", "m_k_d", "n_exact").cast("bigint").alias("kmv_direct"),
+            _kmv_est("n_kept_m", "m_k_m", "n_exact").cast("bigint").alias("kmv_merged"),
             (
                 (F.col("m_k_d") == F.col("m_k_m"))
                 & (F.col("n_kept_d") == F.col("n_kept_m"))
@@ -1837,39 +1726,20 @@ KMV_SETOPS_PAIRS: tuple[tuple[int, int, str], ...] = (
 
 
 def _kmv_setops_pair_sql(i: int, ya: int, yb: int, name: str) -> str:
-    k = KMV_K
-    est = (
-        "CASE WHEN {n} < " + str(k) + " THEN {exact} "
-        "ELSE (" + str(k - 1) + " * 4294967296) // {m} END"
+    both = (
+        "(SELECT DISTINCT o_custkey, h FROM "
+        f"(SELECT * FROM ska{i} UNION ALL SELECT * FROM skb{i}))"
     )
     return f"""keys{i} AS MATERIALIZED (
     SELECT DISTINCT year(o_orderdate) AS yr, o_custkey,
-           CAST(CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 8)
-                AS UBIGINT) AS BIGINT) AS h
+           {hex_int_sql("md5(CAST(o_custkey AS VARCHAR))", 1, 8)} AS h
     FROM orders WHERE year(o_orderdate) IN ({ya}, {yb})
 ),
 a{i} AS MATERIALIZED (SELECT o_custkey, h FROM keys{i} WHERE yr = {ya}),
 b{i} AS MATERIALIZED (SELECT o_custkey, h FROM keys{i} WHERE yr = {yb}),
-ska{i} AS MATERIALIZED (
-    SELECT o_custkey, h FROM (
-        SELECT o_custkey, h,
-               ROW_NUMBER() OVER (ORDER BY h ASC, o_custkey ASC) AS rn
-        FROM a{i}) WHERE rn <= {k}
-),
-skb{i} AS MATERIALIZED (
-    SELECT o_custkey, h FROM (
-        SELECT o_custkey, h,
-               ROW_NUMBER() OVER (ORDER BY h ASC, o_custkey ASC) AS rn
-        FROM b{i}) WHERE rn <= {k}
-),
-sku{i} AS MATERIALIZED (
-    SELECT o_custkey, h FROM (
-        SELECT o_custkey, h,
-               ROW_NUMBER() OVER (ORDER BY h ASC, o_custkey ASC) AS rn
-        FROM (SELECT DISTINCT o_custkey, h
-              FROM (SELECT * FROM ska{i} UNION ALL SELECT * FROM skb{i})))
-    WHERE rn <= {k}
-),
+ska{i} AS MATERIALIZED ({_bottomk_sql("o_custkey, h", f"a{i}", "o_custkey")}),
+skb{i} AS MATERIALIZED ({_bottomk_sql("o_custkey, h", f"b{i}", "o_custkey")}),
+sku{i} AS MATERIALIZED ({_bottomk_sql("o_custkey, h", both, "o_custkey")}),
 st{i} AS (
     SELECT
         (SELECT COUNT(*) FROM a{i}) AS exact_a,
@@ -1889,9 +1759,9 @@ st{i} AS (
 est{i} AS (
     SELECT '{name}' AS pair, exact_a, exact_b, exact_union,
            exact_a + exact_b - exact_union AS exact_intersection,
-           {est.format(n="ka", exact="exact_a", m="ma")} AS kmv_a,
-           {est.format(n="kb", exact="exact_b", m="mb")} AS kmv_b,
-           {est.format(n="ku", exact="exact_union", m="mu")} AS kmv_union,
+           {_kmv_est_sql("ka", "ma", "exact_a")} AS kmv_a,
+           {_kmv_est_sql("kb", "mb", "exact_b")} AS kmv_b,
+           {_kmv_est_sql("ku", "mu", "exact_union")} AS kmv_union,
            n_both, ku
     FROM st{i}
 ),
@@ -1944,13 +1814,13 @@ def customers_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra across arbitrary period combinations WITHOUT rescanning the
     fact table — the scan cost is paid once per shard, every pairwise
     union/intersection after that touches 2·K = 128 rows. Since r14 the
-    sketch build itself is the production per-shard partial + merge (see
-    ``bottomk``), so no corpus-sized frame ever crosses a single-partition
-    window. The membership probes for the ratio estimator join the 64-row
-    union sketch against the side key sets (broadcast semi-joins of a
-    fixed-size frame).
+    sketch build itself is the production per-shard partial + merge (two
+    ``_bottomk`` steps), so no corpus-sized frame ever crosses a
+    single-partition window. The membership probes for the ratio
+    estimator join the 64-row union sketch against the side key sets
+    (broadcast semi-joins of a fixed-size frame).
     Everything is md5-derived integer arithmetic reproduced bit-for-bit
-    by the oracle, the `distinct_orders_kmv` portability trick.
+    by the oracle, the `distinct_orders_kmv_rollup` portability trick.
 
     Round-19 shape (VERDICT r18 #6 — stage-count collapse): the r18 form
     still built every pair's sketches/aggregates as its own frame graph
@@ -1967,15 +1837,6 @@ def customers_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     string) is trivial, and the cold A/B measured the extra exchange as a
     net loss (sides build 1.25 s with spread vs 0.75 s without, warmed)."""
     orders = load_table(spark, sf_dir, "orders")
-    k = KMV_K
-
-    def est(n_col: str, m_col: str, exact_col: str):
-        # m_col = 0 unreachable on the estimator branch — same 2^-2048
-        # argument as distinct_orders_kmv_rollup's est() above (ADVICE r13).
-        return F.when(F.col(n_col) < k, F.col(exact_col)).otherwise(
-            F.expr(f"({k - 1} * 4294967296) div {m_col}")
-        )
-
     # Round-18 (guide §1.2 step 1): one (yr, custkey, h) frame over the
     # UNION of years feeds every pair — per-year distinct-of-a-subset
     # equals subset-of-distinct, so values are unchanged. Round-19: the
@@ -1996,14 +1857,7 @@ def customers_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.select(F.year("o_orderdate").alias("yr"), "o_custkey")
         .where(F.col("yr").isin(years))
         .distinct()
-        .withColumn(
-            "h",
-            F.conv(
-                F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("bigint"),
-        )
+        .withColumn("h", hex_int(F.md5(F.col("o_custkey").cast("string")), 1, 8))
         .join(F.broadcast(membership), "yr")
         .select("pair", "side", "o_custkey", "h")
         .localCheckpoint()
@@ -2011,27 +1865,19 @@ def customers_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ALL side sketches in one shard-partial + one merge window pass
     # (r14's production build, now (pair, side)-partitioned: the only
     # global-ish window runs per (pair, side) on <= shards*K rows).
-    order_cols = [F.col("h").asc(), F.col("o_custkey").asc()]
-    w_shard = Window.partitionBy("pair", "side", "shard").orderBy(*order_cols)
-    w_side = Window.partitionBy("pair", "side").orderBy(*order_cols)
-    sk_sides = (
-        sides.withColumn("shard", F.spark_partition_id())
-        .withColumn("rn", F.row_number().over(w_shard))
-        .where(F.col("rn") <= k)
-        .withColumn("rn", F.row_number().over(w_side))
-        .where(F.col("rn") <= k)
-        .select("pair", "side", "o_custkey", "h")
+    shard_partials = _bottomk(
+        sides.withColumn("shard", F.spark_partition_id()),
+        ["pair", "side", "shard"],
+        "o_custkey",
+    )
+    sk_sides = _bottomk(shard_partials, ["pair", "side"], "o_custkey").select(
+        "pair", "side", "o_custkey", "h"
     )
     # union sketch per pair: bottom-K of the distinct union of both side
     # sketches (<= 2K rows per pair by construction)
-    w_pair = Window.partitionBy("pair").orderBy(*order_cols)
-    sku = (
-        sk_sides.select("pair", "o_custkey", "h")
-        .distinct()
-        .withColumn("rn", F.row_number().over(w_pair))
-        .where(F.col("rn") <= k)
-        .select("pair", "o_custkey", "h")
-    )
+    sku = _bottomk(
+        sk_sides.select("pair", "o_custkey", "h").distinct(), ["pair"], "o_custkey"
+    ).select("pair", "o_custkey", "h")
     # exact side counts + per-side sketch stats, one groupBy each
     side_is = {"a": F.col("side") == "a", "b": F.col("side") == "b"}
     ex_side = sides.groupBy("pair").agg(
@@ -2052,9 +1898,7 @@ def customers_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex_union = flags.groupBy("pair").agg(
         F.count(F.lit(1)).cast("bigint").alias("exact_union")
     )
-    su = sku.groupBy("pair").agg(
-        F.count(F.lit(1)).alias("ku"), F.max("h").alias("mu")
-    )
+    su = _kmv_stats(sku, ["pair"], "ku", "mu")
     nboth = (
         sku.join(flags, ["pair", "o_custkey"])
         .where(F.col("in_a") & F.col("in_b"))
@@ -2097,9 +1941,9 @@ def customers_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("exact_a") + F.col("exact_b") - F.col("exact_union"))
             .cast("bigint")
             .alias("exact_intersection"),
-            est("ka", "ma", "exact_a").cast("bigint").alias("kmv_a"),
-            est("kb", "mb", "exact_b").cast("bigint").alias("kmv_b"),
-            est("ku", "mu", "exact_union").cast("bigint").alias("kmv_union"),
+            _kmv_est("ka", "ma", "exact_a").cast("bigint").alias("kmv_a"),
+            _kmv_est("kb", "mb", "exact_b").cast("bigint").alias("kmv_b"),
+            _kmv_est("ku", "mu", "exact_union").cast("bigint").alias("kmv_union"),
             F.col("n_both_nn").cast("bigint").alias("n_both"),
             F.col("ku").cast("bigint").alias("ku"),
         )

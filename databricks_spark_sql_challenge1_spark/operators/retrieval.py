@@ -109,7 +109,8 @@ def docs_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     never materializes: scoring is a scalar expression over (dl, tf_t)
     joined to the broadcast stats row.
     """
-    scored = _bm25_scored(spark, sf_dir)
+    dd = _bm25_doc_feats(load_table(spark, sf_dir, "documents", spread=True))
+    scored = _bm25_scored(dd, _bm25_stats(dd))
     raw = F.col("_raw")
     return (
         scored.select(
@@ -150,17 +151,13 @@ def _bm25_stats(dd: DataFrame) -> DataFrame:
     )
 
 
-def _bm25_scored(
-    spark: SparkSession, sf_dir: str, _stats: DataFrame | None = None
-) -> DataFrame:
+def _bm25_scored(dd: DataFrame, st: DataFrame) -> DataFrame:
     """Shared BM25 scoring frame: (doc_id, _raw score) for the fixed query
-    terms — the lexical leg of both ``docs_bm25_topk`` and
-    ``retrieval_hybrid_rrf``. ``_stats`` injects a precomputed 1-row
-    corpus-statistics frame (round 19: ``retrieval_rrf_rerank`` computes
-    the stats once and feeds both its stage-1 lexical leg and its stage-2
-    shortlist scorer — one corpus aggregate instead of two)."""
-    dd = _bm25_doc_feats(load_table(spark, sf_dir, "documents", spread=True))
-    st = _bm25_stats(dd) if _stats is None else _stats
+    terms over the feature frame ``dd`` and the 1-row corpus statistics
+    ``st`` — the lexical leg of ``docs_bm25_topk`` and
+    ``retrieval_hybrid_rrf``, and ``retrieval_rrf_rerank``'s stage-2
+    shortlist scorer (round 19: that query computes the stats once and
+    feeds both of its stages — one corpus aggregate instead of two)."""
     return dd.crossJoin(F.broadcast(st)).select(
         "doc_id", F.expr(_BM25_SCORE_SQL).alias("_raw")
     )
@@ -211,9 +208,7 @@ ORDER BY COALESCE(1.0 / ({RRF_K} + l.lr), 0.0)
 LIMIT {RRF_TOP_K}
 """,
 )
-def retrieval_hybrid_rrf(
-    spark: SparkSession, sf_dir: str, _stats: DataFrame | None = None
-) -> DataFrame:
+def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: BM25 lexical leg + brute-force cosine dense leg
     (probe = the vec_id-{RRF_PROBE_VEC_ID} embedding; the fixture aligns
     vec_id 1:1 with doc_id), top-{RRF_LEG_N} candidates per leg, fused by
@@ -232,9 +227,15 @@ def retrieval_hybrid_rrf(
     arithmetic on both engines — no FP drift surface beyond the legs'
     already-immunized rounding.
     """
+    dd = _bm25_doc_feats(load_table(spark, sf_dir, "documents", spread=True))
+    return _rrf_fused(spark, sf_dir, _bm25_scored(dd, _bm25_stats(dd)))
+
+
+def _rrf_fused(spark: SparkSession, sf_dir: str, scored: DataFrame) -> DataFrame:
+    """``retrieval_hybrid_rrf``'s rows with the BM25 leg's (doc_id, _raw)
+    frame ``scored`` passed in."""
     lex = (
-        _bm25_scored(spark, sf_dir, _stats=_stats)
-        .select(
+        scored.select(
             "doc_id",
             F.row_number()
             .over(
@@ -403,13 +404,14 @@ def retrieval_rrf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers unmaterialized (the feature join + both key probes), so the
     # whole stage-1 plan — BM25 scoring pass, dense leg, fusion — evaluated
     # three times per run. Now the 1-row stats frame is computed once and
-    # injected into stage 1 (`_bm25_scored(_stats=...)`), and the
+    # passed to stage 1 (`_rrf_fused` over `_bm25_scored(dd, st)`), and the
     # {RRF_TOP_K}-row shortlist is localCheckpoint-ed (eager, tiny,
     # recomputed per call), so stage 1 runs exactly once.
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    st = _bm25_stats(_bm25_doc_feats(docs)).localCheckpoint()
+    dd = _bm25_doc_feats(docs)
+    st = _bm25_stats(dd).localCheckpoint()
     short = (
-        retrieval_hybrid_rrf(spark, sf_dir, _stats=st)
+        _rrf_fused(spark, sf_dir, _bm25_scored(dd, st))
         .select(
             "doc_id",
             F.row_number()
@@ -437,11 +439,7 @@ def retrieval_rrf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key-matched rows, not a second corpus-wide scoring pass.
     keys = F.broadcast(short.select("doc_id"))
     emb_hits = e.withColumnRenamed("vec_id", "doc_id").join(keys, "doc_id")
-    bm_hits = (
-        _bm25_doc_feats(docs.join(keys, "doc_id"))
-        .crossJoin(F.broadcast(st))
-        .select("doc_id", F.expr(_BM25_SCORE_SQL).alias("_raw"))
-    )
+    bm_hits = _bm25_scored(_bm25_doc_feats(docs.join(keys, "doc_id")), st)
     feats = (
         short.join(F.broadcast(emb_hits), "doc_id", "left")
         .join(F.broadcast(qv))

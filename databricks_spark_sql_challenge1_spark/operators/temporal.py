@@ -244,7 +244,7 @@ def events_type_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_simhash_methods pattern) is built from the SAME fragments the two
 # retired standalone oracles used, keeping every leg's values verbatim.
 # The obs CTE body is its own constant so the consolidated surface's
-# _obs_view substitution (events_gapfill_interp) replaces the SAME text the
+# obs-CTE substitution (``_interp_leg``) replaces the SAME text the
 # template was built from — a reformat can never silently turn the replace
 # into a no-op (ADVICE r18).
 _GAPFILL_OBS_CTE = """obs AS (
@@ -301,9 +301,7 @@ def _gapfill_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("v"))
 
 
-def events_gapfill_stats(
-    spark: SparkSession, sf_dir: str, _obs: DataFrame | None = None
-) -> DataFrame:
+def events_gapfill_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series gap-fill (hypertable-style `time_bucket_gapfill` +
     `locf`): build each user's dense hourly spine between their first and
     last observed hour, left-join the observed hourly averages, carry the
@@ -329,7 +327,12 @@ def events_gapfill_stats(
     OBSERVED rows (lag over observed hours minus one), avoiding a
     gaps-and-islands pass over the dense spine.
     """
-    obs = _obs if _obs is not None else _gapfill_obs(spark, sf_dir)
+    return _locf_leg(_gapfill_obs(spark, sf_dir))
+
+
+def _locf_leg(obs: DataFrame) -> DataFrame:
+    """``events_gapfill_stats``'s rows over the observed hourly frame
+    ``obs`` (``_gapfill_obs``)."""
     span = obs.groupBy("user_id").agg(
         F.min("hr").alias("h0"), F.max("hr").alias("h1")
     )
@@ -459,9 +462,7 @@ ORDER BY user_id ASC
     )
 
 
-def events_gapfill_interp(
-    spark: SparkSession, sf_dir: str, _obs_view: str | None = None
-) -> DataFrame:
+def events_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear-interpolation gap-fill (hypertable `interpolate()`): for
     every missing hour on each user's dense spine, interpolate between the
     previous and next OBSERVED hourly values, in integer cents with an
@@ -483,6 +484,13 @@ def events_gapfill_interp(
     ``spark.sql`` over registered views — the S7 catalog-scan path — with
     ``div`` as the division operator.
     """
+    return _interp_leg(spark, sf_dir, _GAPFILL_OBS_CTE)
+
+
+def _interp_leg(spark: SparkSession, sf_dir: str, obs_cte: str) -> DataFrame:
+    """``events_gapfill_interp``'s rows with the template's obs CTE
+    replaced by ``obs_cte`` (itself, or a read of a shared materialized
+    aggregate)."""
     import re
 
     from databricks_spark_sql_challenge1_spark.catalog import register_views
@@ -503,21 +511,11 @@ def events_gapfill_interp(
         r"\1(\2, true)",
         sql,
     )
-    if _obs_view is not None:
-        # Consolidated-surface hook (round-18): replace the obs CTE body
-        # with a read of the shared materialized aggregate — the template
-        # re-derived it per reference otherwise (the DataFrame twin is
-        # value-identical by construction, see _gapfill_obs). Built from
-        # the same _GAPFILL_OBS_CTE constant as the template, and asserted
-        # to have fired, so a template reformat can never silently revert
-        # the sharing (ADVICE r18).
-        assert _GAPFILL_OBS_CTE in sql, "gapfill obs CTE drifted from template"
-        sql = sql.replace(
-            _GAPFILL_OBS_CTE,
-            f"obs AS (SELECT user_id, hr, v FROM {_obs_view})",
-        )
-        assert _GAPFILL_OBS_CTE not in sql
-    return spark.sql(sql)
+    # The obs CTE is located by the same _GAPFILL_OBS_CTE constant the
+    # template is built from, and asserted present, so a template reformat
+    # can never silently revert the sharing (ADVICE r18).
+    assert _GAPFILL_OBS_CTE in sql, "gapfill obs CTE drifted from template"
+    return spark.sql(sql.replace(_GAPFILL_OBS_CTE, obs_cte))
 
 
 def _gapfill_methods_sql() -> str:
@@ -573,7 +571,7 @@ def events_gapfill_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = _gapfill_obs(spark, sf_dir).localCheckpoint()
     obs.createOrReplaceTempView("gapfill_obs_shared")
     nl = F.lit(None).cast("long")
-    locf = events_gapfill_stats(spark, sf_dir, _obs=obs).select(
+    locf = _locf_leg(obs).select(
         F.lit("locf").alias("method"),
         "user_id",
         F.col("n_observed").cast("long").alias("n_observed"),
@@ -583,8 +581,11 @@ def events_gapfill_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
         nl.alias("fill_min_cents"),
         nl.alias("fill_max_cents"),
     )
-    interp = events_gapfill_interp(
-        spark, sf_dir, _obs_view="gapfill_obs_shared"
+    # the interp template reads the shared aggregate instead of
+    # re-deriving it per reference (the DataFrame twin is value-identical
+    # by construction, see _gapfill_obs)
+    interp = _interp_leg(
+        spark, sf_dir, "obs AS (SELECT user_id, hr, v FROM gapfill_obs_shared)"
     ).select(
         F.lit("interp").alias("method"),
         "user_id",

@@ -14,6 +14,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.functions.hashing import (
+    TEXT_FINGERPRINT_SQL,
+    hex_int,
+    hex_int_sql,
+    text_fingerprint,
+)
 from databricks_spark_sql_challenge1_spark.registry import query
 
 BPE_PATTERN = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"
@@ -283,24 +289,13 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Round-16 capacity policy: DEREGISTERED as a standalone name — its rows
-# ride verbatim as the rolling-leg columns of ``doc_fingerprint_methods``
-# (VERDICT r15 #6 consolidation). Callable kept importable for the
-# leg-equality pin in tests/test_quality_ops.py.
-def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _rolling_fingerprint_leg(docs: DataFrame) -> DataFrame:
     """Winnowing-style rolling fingerprint: hash every word-3-gram window,
     keep the min/max hash + distinct-gram count per document (the min-hash
     is the classic winnowing selection; identical windows → identical
-    fingerprints across documents)."""
-    return _rolling_fingerprint_leg(
-        load_table(spark, sf_dir, "documents", spread=True)
-    ).orderBy(F.col("doc_id").asc())
-
-
-def _rolling_fingerprint_leg(docs: DataFrame) -> DataFrame:
-    """(doc_id, min_gram_hash, max_gram_hash, n_distinct_grams) — one row
-    per document with ≥ 3 tokens; shorter docs have no 3-gram window on
-    either engine and simply don't appear."""
+    fingerprints across documents). (doc_id, min_gram_hash, max_gram_hash,
+    n_distinct_grams) — one row per document with ≥ 3 tokens; shorter docs
+    have no 3-gram window on either engine and simply don't appear."""
     toks = F.split(F.trim("text"), r"\s+")
     # < 3 tokens: filtered, not clamped — Spark sequence(1, 0) descends
     # through 0 into slice(start=0) (round-13 fuzz-parity find); the
@@ -332,7 +327,7 @@ QUALITY_MAX_PUNCT = 0.10
     oracle=f"""
 WITH stats AS (
     SELECT doc_id, lang,
-           md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
+           {TEXT_FINGERPRINT_SQL} AS fp,
            len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
            CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
                / length(text) AS punct_ratio
@@ -363,7 +358,7 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = docs.select(
         "doc_id",
         "lang",
-        F.md5(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")).alias("fp"),
+        text_fingerprint().alias("fp"),
         F.size(toks).alias("n_tokens"),
         # try_divide: empty doc -> NULL ratio -> filtered by the quality
         # gate on both engines (NULL <= 0.10 is not true), instead of an
@@ -398,36 +393,23 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Round-16 capacity policy: DEREGISTERED as a standalone name — its rows
-# ride verbatim as the md5-leg columns of ``doc_fingerprint_methods``.
-# Callable kept importable for the leg-equality pin.
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stable per-document fingerprint (md5 of normalized text) + a 60-bit
-    integer form for compact joins/bloom filters at scale."""
-    return _md5_fingerprint_leg(
-        load_table(spark, sf_dir, "documents", spread=True)
-    ).orderBy(F.col("doc_id").asc())
-
-
 def _md5_fingerprint_leg(docs: DataFrame) -> DataFrame:
     """(doc_id, fingerprint, fingerprint_int) — every document, the exact
     dedup key family (md5 of whitespace-normalized lowercase text plus its
     60-bit integer form for compact joins/bloom filters)."""
-    norm = F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
-    fp = F.md5(norm)
+    fp = text_fingerprint()
     return docs.select(
         "doc_id",
         fp.alias("fingerprint"),
-        F.conv(F.substring(fp, 1, 15), 16, 10).cast("bigint").alias("fingerprint_int"),
+        hex_int(fp, 1, 15).alias("fingerprint_int"),
     )
 
 
 @query(
     "doc_fingerprint_methods",
-    oracle="""
+    oracle=f"""
 WITH base AS (
-    SELECT doc_id,
-           md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
+    SELECT doc_id, {TEXT_FINGERPRINT_SQL} AS fp
     FROM documents
 ),
 sh AS (
@@ -448,8 +430,7 @@ roll AS (
 )
 SELECT b.doc_id,
        b.fp AS fingerprint,
-       CAST(CAST('0x' || substr(b.fp, 1, 15) AS UBIGINT) AS BIGINT)
-           AS fingerprint_int,
+       {hex_int_sql("b.fp", 1, 15)} AS fingerprint_int,
        r.min_gram_hash,
        r.max_gram_hash,
        r.n_distinct_grams
@@ -459,16 +440,11 @@ ORDER BY b.doc_id ASC
 """,
 )
 def doc_fingerprint_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document-fingerprint method surface (round-16 consolidation of the
-    standalone ``doc_fingerprint`` + ``doc_rolling_fingerprint``
-    registrations): the exact-dedup md5 family and the winnowing-style
-    rolling 3-gram family side by side, one row per document.
-
-    Each leg's values are exactly the retired registration's rows
-    (leg-equality pinned in tests/test_quality_ops.py); documents with
-    fewer than 3 tokens have no 3-gram window on either engine, so their
-    rolling columns are NULL (left join), where the retired rolling query
-    simply omitted them.
+    """Document-fingerprint method surface: the exact-dedup md5 family
+    (``_md5_fingerprint_leg``) and the winnowing-style rolling 3-gram
+    family (``_rolling_fingerprint_leg``) side by side, one row per
+    document. Documents with fewer than 3 tokens have no 3-gram window
+    on either engine, so their rolling columns are NULL (left join).
 
     Scale shape: the md5 leg is a pure narrow projection; the rolling leg
     is one explode + one doc_id aggregation (map-side combinable); the

@@ -7,15 +7,21 @@ Both are pure expression/window pipelines: no shuffle for the split (a map),
 one shuffle for the packing (window over the stratification key) — shapes
 that hold at 100 TB. Determinism matters more than randomness here: split
 membership must be stable across reruns and engines, so bucketing hashes
-md5(doc_id) rather than sampling (same policy as ``doc_fingerprint``).
+md5(doc_id) rather than sampling (the md5 policy of functions/hashing.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.functions.hashing import (
+    TEXT_FINGERPRINT_SQL,
+    hex_int,
+    hex_int_sql,
+    text_fingerprint,
+)
 from databricks_spark_sql_challenge1_spark.operators.dedup import (
     _SHINGLES_SQL,
     _shingles_spark,
@@ -28,6 +34,34 @@ SPLIT_BUCKETS = 100
 TRAIN_UPTO = 80
 VAL_UPTO = 90
 
+
+def _doc_bucket(n_buckets: int) -> Column:
+    """The md5(doc_id) hash bucket in [0, n_buckets): a pure function of
+    doc_id, stable across reruns, engines and partitionings."""
+    return hex_int(F.md5(F.col("doc_id").cast("string")), 1, 4) % n_buckets
+
+
+def _doc_bucket_sql(n_buckets: int) -> str:
+    """The DuckDB twin of ``_doc_bucket``."""
+    return f"{hex_int_sql('md5(CAST(doc_id AS VARCHAR))', 1, 4)} % {n_buckets}"
+
+
+def _split(bucket: Column) -> Column:
+    """train/val/test of a ``_doc_bucket(SPLIT_BUCKETS)`` bucket."""
+    return (
+        F.when(bucket < TRAIN_UPTO, F.lit("train"))
+        .when(bucket < VAL_UPTO, F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+
+
+_SPLIT_BUCKET_SQL = _doc_bucket_sql(SPLIT_BUCKETS)
+_SPLIT_SQL = f"""CASE
+         WHEN {_SPLIT_BUCKET_SQL} < {TRAIN_UPTO} THEN 'train'
+         WHEN {_SPLIT_BUCKET_SQL} < {VAL_UPTO} THEN 'val'
+         ELSE 'test'
+       END"""
+
 # packing: whitespace tokens per pack (tiny budget so fixture docs yield
 # multi-pack groups; production would use the context length)
 PACK_BUDGET = 2048
@@ -37,15 +71,8 @@ PACK_BUDGET = 2048
     "docs_split_assign",
     oracle=f"""
 SELECT doc_id, lang,
-       CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS UBIGINT)
-            % {SPLIT_BUCKETS} AS BIGINT) AS bucket,
-       CASE
-         WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS UBIGINT)
-              % {SPLIT_BUCKETS} < {TRAIN_UPTO} THEN 'train'
-         WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS UBIGINT)
-              % {SPLIT_BUCKETS} < {VAL_UPTO} THEN 'val'
-         ELSE 'test'
-       END AS split
+       {_SPLIT_BUCKET_SQL} AS bucket,
+       {_SPLIT_SQL} AS split
 FROM documents
 ORDER BY doc_id ASC
 """,
@@ -59,19 +86,12 @@ def docs_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a map over the corpus.
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint")
-        % SPLIT_BUCKETS
-    )
+    bucket = _doc_bucket(SPLIT_BUCKETS)
     return docs.select(
         "doc_id",
         "lang",
         bucket.alias("bucket"),
-        F.when(bucket < TRAIN_UPTO, F.lit("train"))
-        .when(bucket < VAL_UPTO, F.lit("val"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
+        _split(bucket).alias("split"),
     ).orderBy(F.col("doc_id").asc())
 
 
@@ -255,9 +275,7 @@ MIX_BUCKETS = 1000
     "docs_lang_rebalance",
     oracle=f"""
 WITH b AS (
-    SELECT doc_id, lang,
-           CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS UBIGINT)
-                % {MIX_BUCKETS} AS BIGINT) AS bucket
+    SELECT doc_id, lang, {_doc_bucket_sql(MIX_BUCKETS)} AS bucket
     FROM documents
 ),
 c AS (SELECT lang, COUNT(*) AS n FROM b GROUP BY lang),
@@ -283,12 +301,7 @@ def docs_lang_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure map at any scale.
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint")
-        % MIX_BUCKETS
-    )
-    b = docs.select("doc_id", "lang", bucket.alias("bucket"))
+    b = docs.select("doc_id", "lang", _doc_bucket(MIX_BUCKETS).alias("bucket"))
     c = b.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
     m = c.agg(F.min("n").alias("mn"))
     rate = F.col("mn").cast("double") / F.col("n")
@@ -433,16 +446,51 @@ BLOOM_WORD = 32
 BLOOM_K = 4  # md5 = 32 hex chars = 4 disjoint 8-char slices
 
 
-@query(
-    "docs_contamination_bloom",
-    oracle=f"""
-WITH sh AS ({_SHINGLES_SQL}),
-bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % {BENCH_MOD} = 0),
-corpus AS (SELECT * FROM sh WHERE doc_id % {BENCH_MOD} <> 0),
-bprobes AS (
-    SELECT CAST(CAST('0x' || substr(md5(shingle), 1 + i * 8, 8) AS UBIGINT)
-                % {BLOOM_BITS} AS BIGINT) AS p
-    FROM bench, unnest(generate_series(0, {BLOOM_K - 1})) AS t(i)
+def _bloom_candidates(bench: DataFrame, probed: DataFrame) -> DataFrame:
+    """(doc_id, shingle, k_hit) rows of ``probed`` whose BLOOM_K probes all
+    hit the Bloom bitmap of the ``bench`` shingles: the exact overlap plus
+    the filter's deterministic false positives."""
+
+    def probes(df, keep):
+        slices = F.array(
+            *[
+                (hex_int(F.md5("shingle"), 1 + i * 8, 8) % BLOOM_BITS).alias(f"p{i}")
+                for i in range(BLOOM_K)
+            ]
+        )
+        return df.select(
+            *keep, F.posexplode(slices).alias("i", "p")
+        ).select(
+            *keep,
+            "i",
+            F.expr(f"p div {BLOOM_WORD}").alias("word"),
+            F.expr(f"CAST(p % {BLOOM_WORD} AS INT)").alias("bit"),
+        )
+
+    bitmap = (
+        probes(bench, [])
+        .groupBy("word")
+        .agg(
+            F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").alias("bits")
+        )
+    )
+    return (
+        probes(probed, ["doc_id", "shingle"])
+        .join(F.broadcast(bitmap), "word")
+        .where(F.expr("(bits >> bit) & 1 = 1"))
+        .groupBy("doc_id", "shingle")
+        .agg(F.count(F.lit(1)).alias("k_hit"))
+        .where(F.col("k_hit") == BLOOM_K)
+    )
+
+
+def _bloom_candidates_sql(bench: str, probed: str) -> str:
+    """The DuckDB twin of ``_bloom_candidates``: CTEs ending in
+    ``cand(doc_id, shingle)``."""
+    p = f"{hex_int_sql('md5(shingle)', '1 + i * 8', 8)} % {BLOOM_BITS}"
+    return f"""bprobes AS (
+    SELECT {p} AS p
+    FROM {bench}, unnest(generate_series(0, {BLOOM_K - 1})) AS t(i)
 ),
 bitmap AS (
     SELECT p // {BLOOM_WORD} AS word,
@@ -450,20 +498,27 @@ bitmap AS (
     FROM bprobes GROUP BY p // {BLOOM_WORD}
 ),
 cprobes AS (
-    SELECT doc_id, shingle, i,
-           CAST(CAST('0x' || substr(md5(shingle), 1 + i * 8, 8) AS UBIGINT)
-                % {BLOOM_BITS} AS BIGINT) AS p
-    FROM corpus, unnest(generate_series(0, {BLOOM_K - 1})) AS t(i)
+    SELECT doc_id, shingle, i, {p} AS p
+    FROM {probed}, unnest(generate_series(0, {BLOOM_K - 1})) AS t(i)
 ),
-matched AS (
+cand AS (
     SELECT c.doc_id, c.shingle
     FROM cprobes c JOIN bitmap b ON b.word = c.p // {BLOOM_WORD}
     WHERE ((b.bits >> CAST(c.p % {BLOOM_WORD} AS INTEGER)) & 1) = 1
     GROUP BY c.doc_id, c.shingle
     HAVING COUNT(*) = {BLOOM_K}
-),
+)"""
+
+
+@query(
+    "docs_contamination_bloom",
+    oracle=f"""
+WITH sh AS ({_SHINGLES_SQL}),
+bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % {BENCH_MOD} = 0),
+corpus AS (SELECT * FROM sh WHERE doc_id % {BENCH_MOD} <> 0),
+{_bloom_candidates_sql("bench", "corpus")},
 tot AS (SELECT doc_id, COUNT(*) AS n FROM corpus GROUP BY doc_id),
-hit AS (SELECT doc_id, COUNT(*) AS c FROM matched GROUP BY doc_id)
+hit AS (SELECT doc_id, COUNT(*) AS c FROM cand GROUP BY doc_id)
 SELECT t.doc_id,
        CAST(t.n AS BIGINT) AS n_shingles,
        CAST(COALESCE(h.c, 0) AS BIGINT) AS n_bloom_overlap,
@@ -503,43 +558,7 @@ def docs_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh.where(F.col("doc_id") % BENCH_MOD == 0).select("shingle").distinct()
     )
     corpus = sh.where(F.col("doc_id") % BENCH_MOD != 0)
-
-    def probes(df, keep):
-        slices = F.array(
-            *[
-                (
-                    F.conv(
-                        F.substring(F.md5("shingle"), 1 + i * 8, 8), 16, 10
-                    ).cast("bigint")
-                    % BLOOM_BITS
-                ).alias(f"p{i}")
-                for i in range(BLOOM_K)
-            ]
-        )
-        return df.select(
-            *keep, F.posexplode(slices).alias("i", "p")
-        ).select(
-            *keep,
-            "i",
-            F.expr(f"p div {BLOOM_WORD}").alias("word"),
-            F.expr(f"CAST(p % {BLOOM_WORD} AS INT)").alias("bit"),
-        )
-
-    bitmap = (
-        probes(bench, [])
-        .groupBy("word")
-        .agg(
-            F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").alias("bits")
-        )
-    )
-    matched = (
-        probes(corpus, ["doc_id", "shingle"])
-        .join(F.broadcast(bitmap), "word")
-        .where(F.expr("(bits >> bit) & 1 = 1"))
-        .groupBy("doc_id", "shingle")
-        .agg(F.count(F.lit(1)).alias("k_hit"))
-        .where(F.col("k_hit") == BLOOM_K)
-    )
+    matched = _bloom_candidates(bench, corpus)
     tot = corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     hit = matched.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
     frac = F.coalesce(F.col("c"), F.lit(0)).cast("double") / F.col("n")
@@ -556,82 +575,91 @@ def docs_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- JSONL interchange round-trip ------------------------------------------
+# --- interchange round-trips ----------------------------------------------
+
+
+def _roundtrip_checksum(spark, sf_dir, fmt, write, read, sums, distinct):
+    """Export the corpus with ``write``, read it back with ``read`` and
+    compute an order-insensitive checksum of the re-scan: row count, the
+    sums ``sums`` ((column, alias) pairs), the sum of 32-bit md5 prefixes
+    of text and the distinct count ``distinct`` (column, alias). The
+    oracle computes the same checksum on the source table directly — a
+    hash match means the round trip dropped, duplicated, or mangled
+    nothing.
+
+    NOTE the deliberate eager side effect: the export runs at query
+    CONSTRUCTION time (the re-scan needs the files on disk before any
+    action on the returned DataFrame). The export path is deterministic
+    per sf_dir and overwritten in place, so repeated bench/driver/test
+    invocations reuse one directory instead of leaking corpus-sized
+    tempdirs (ADVICE r5)."""
+    import hashlib
+    import os
+    import tempfile
+
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    # User-scoped: a fixed world-writable /tmp name could be raced or
+    # squatted by another user on a shared host (ADVICE r6).
+    uid = os.getuid() if hasattr(os, "getuid") else "na"
+    out = os.path.join(
+        tempfile.gettempdir(), f"spark_graft_u{uid}_{fmt}_rt_{tag}", "docs"
+    )
+    write(docs.repartition(4), out, mode="overwrite")
+    return read(spark, out).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        *[F.sum(c).alias(a) for c, a in sums],
+        F.sum(hex_int(F.md5("text"), 1, 8)).alias("text_hash_sum"),
+        F.count_distinct(distinct[0]).alias(distinct[1]),
+    )
+
+
+def _roundtrip_checksum_sql(sums, distinct) -> str:
+    """The DuckDB twin of ``_roundtrip_checksum``, on the source table."""
+    cols = "".join(f"       CAST(SUM({c}) AS BIGINT) AS {a},\n" for c, a in sums)
+    return f"""
+SELECT COUNT(*) AS n_docs,
+{cols}       CAST(SUM({hex_int_sql("md5(text)", 1, 8)}) AS BIGINT) AS text_hash_sum,
+       COUNT(DISTINCT {distinct[0]}) AS {distinct[1]}
+FROM documents
+"""
+
+
+_JSONL_SUMS = (("n_chars", "sum_chars"),)
+_JSONL_DISTINCT = ("lang", "n_langs")
 
 
 @query(
     "jsonl_roundtrip_checksum",
-    oracle="""
-SELECT COUNT(*) AS n_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-       CAST(SUM(CAST(CAST('0x' || substr(md5(text), 1, 8) AS UBIGINT)
-                     AS BIGINT)) AS BIGINT) AS text_hash_sum,
-       COUNT(DISTINCT lang) AS n_langs
-FROM documents
-""",
+    oracle=_roundtrip_checksum_sql(_JSONL_SUMS, _JSONL_DISTINCT),
 )
 def jsonl_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lossless-export proof for the JSONL source/sink (sources/ingest.py
     write_jsonl/read_jsonl): export the corpus as gzip JSONL shards, scan
     them back with an EXPLICIT schema (single-pass, no inference), and
-    compute an order-insensitive corpus checksum (row count, char total,
-    sum of 32-bit md5 prefixes of text, distinct langs). The oracle
-    computes the same checksum on the source table directly — a hash match
-    means the round trip dropped, duplicated, or mangled nothing.
-
-    NOTE the deliberate eager side effect: the gzip export runs at query
-    CONSTRUCTION time (the re-scan needs the files on disk before any
-    action on the returned DataFrame). The export path is deterministic
-    per sf_dir and overwritten in place, so repeated bench/driver/test
-    invocations reuse one directory instead of leaking corpus-sized
-    tempdirs (ADVICE r5).
+    checksum the re-scan (``_roundtrip_checksum``: row count, char total,
+    sum of 32-bit md5 prefixes of text, distinct langs).
 
     Scale: shard count = upstream partitioning (here 4; at 100 TB,
     repartition to task-sized zstd shards); the checksum is one map-side-
     partial aggregate over the re-scan.
     """
-    import hashlib
-    import os
-    import tempfile
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from functools import partial
 
     from databricks_spark_sql_challenge1_spark.sources.ingest import (
         read_jsonl,
         write_jsonl,
     )
 
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    # Deterministic per-sf_dir (rerun = same path, overwrite mode handles
-    # it) but user-scoped: a fixed world-writable /tmp name could be raced
-    # or squatted by another user on a shared host (ADVICE r6).
-    uid = os.getuid() if hasattr(os, "getuid") else "na"
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_u{uid}_jsonl_rt_{tag}", "docs"
-    )
-    write_jsonl(docs.repartition(4), out, mode="overwrite")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
-    back = read_jsonl(spark, out, schema=schema)
-    h = F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("bigint")
-    return back.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.sum(h).alias("text_hash_sum"),
-        F.count_distinct("lang").alias("n_langs"),
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
+    return _roundtrip_checksum(
+        spark,
+        sf_dir,
+        "jsonl",
+        write_jsonl,
+        partial(read_jsonl, schema=schema),
+        _JSONL_SUMS,
+        _JSONL_DISTINCT,
     )
 
 
@@ -649,7 +677,7 @@ from databricks_spark_sql_challenge1_spark.operators.textstats import (  # noqa:
     oracle="""
 WITH stats AS (
     SELECT doc_id, lang,
-           md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
+           {TEXT_FP} AS fp,
            len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
            CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
                / length(text) AS punct_ratio,
@@ -669,14 +697,7 @@ kept AS (
     WHERE c.n_tokens >= {MIN_TOKENS} AND c.punct_ratio <= {MAX_PUNCT}
 ),
 split_assigned AS (
-    SELECT lang, n_tokens,
-           CASE
-             WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-                  AS UBIGINT) % {SPLIT_BUCKETS} < {TRAIN_UPTO} THEN 'train'
-             WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-                  AS UBIGINT) % {SPLIT_BUCKETS} < {VAL_UPTO} THEN 'val'
-             ELSE 'test'
-           END AS split
+    SELECT lang, n_tokens, {SPLIT} AS split
     FROM kept
 )
 SELECT split, lang,
@@ -686,12 +707,11 @@ FROM split_assigned
 GROUP BY split, lang
 ORDER BY split ASC, lang ASC NULLS FIRST
 """.format(
+        TEXT_FP=TEXT_FINGERPRINT_SQL,
         NEAR_PAIRS=_simhash_pairs_sql("wide60", "canon"),
         MIN_TOKENS=QUALITY_MIN_TOKENS,
         MAX_PUNCT=QUALITY_MAX_PUNCT,
-        SPLIT_BUCKETS=SPLIT_BUCKETS,
-        TRAIN_UPTO=TRAIN_UPTO,
-        VAL_UPTO=VAL_UPTO,
+        SPLIT=_SPLIT_SQL,
     ),
 )
 def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -721,7 +741,7 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         "text",
-        F.md5(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")).alias("fp"),
+        text_fingerprint().alias("fp"),
         F.size(toks).alias("n_tokens"),
         # try_divide: empty doc -> NULL ratio -> dropped by the quality
         # gate like the oracle's x/0 (round-13 fuzz-parity find)
@@ -747,18 +767,10 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_tokens") >= QUALITY_MIN_TOKENS)
         & (F.col("punct_ratio") <= QUALITY_MAX_PUNCT)
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint")
-        % SPLIT_BUCKETS
-    )
-    split = (
-        F.when(bucket < TRAIN_UPTO, F.lit("train"))
-        .when(bucket < VAL_UPTO, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     return (
-        kept.select(split.alias("split"), "lang", "n_tokens")
+        kept.select(
+            _split(_doc_bucket(SPLIT_BUCKETS)).alias("split"), "lang", "n_tokens"
+        )
         .groupBy("split", "lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -865,8 +877,7 @@ _WRS_KEY_SQL = f"ln((h + 0.5) / {_WRS_TWO_52!r}) * 1000000.0 / nullif(w, 0)"
     oracle=f"""
 WITH hw AS (
     SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS w,
-           CAST(CAST('0x' || substr(md5('wrs|' || CAST(doc_id AS VARCHAR)), 1, 13)
-                AS UBIGINT) AS BIGINT) AS h
+           {hex_int_sql("md5('wrs|' || CAST(doc_id AS VARCHAR))", 1, 13)} AS h
     FROM documents
 )
 SELECT doc_id, lang, w AS weight, ROUND({_WRS_KEY_SQL}, 4) + 0 AS sample_key_e6
@@ -897,15 +908,9 @@ def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.col("n_chars").cast("bigint").alias("w"),
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("wrs|"), F.col("doc_id").cast("string"))), 1, 13
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("h"),
+        hex_int(
+            F.md5(F.concat(F.lit("wrs|"), F.col("doc_id").cast("string"))), 1, 13
+        ).alias("h"),
     )
     key = F.expr(_WRS_KEY_SQL)
     # Sample MEMBERSHIP is decided on the ROUNDED key (ADVICE r9): ln()
@@ -927,17 +932,13 @@ def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- ORC interchange round-trip --------------------------------------------
 
 
+_ORC_SUMS = (("doc_id", "doc_id_sum"), ("n_chars", "sum_chars"))
+_ORC_DISTINCT = ("source", "n_sources")
+
+
 @query(
     "orc_roundtrip_checksum",
-    oracle="""
-SELECT COUNT(*) AS n_docs,
-       CAST(SUM(doc_id) AS BIGINT) AS doc_id_sum,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-       CAST(SUM(CAST(CAST('0x' || substr(md5(text), 1, 8) AS UBIGINT)
-                     AS BIGINT)) AS BIGINT) AS text_hash_sum,
-       COUNT(DISTINCT source) AS n_sources
-FROM documents
-""",
+    oracle=_roundtrip_checksum_sql(_ORC_SUMS, _ORC_DISTINCT),
 )
 def orc_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lossless-export proof for the ORC source/sink (sources/ingest.py
@@ -946,14 +947,7 @@ def orc_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan them back (schema rides in the ORC footer — no inference pass,
     unlike JSONL), and compute an order-insensitive corpus checksum (row
     count, doc_id and char sums, sum of 32-bit md5 prefixes of text,
-    distinct sources). The oracle computes the same checksum on the
-    source table directly; a hash match means the round trip dropped,
-    duplicated, or mangled nothing.
-
-    Same deliberate eager side effect as the JSONL twin: the export runs
-    at query-construction time into a deterministic per-sf_dir, user-
-    scoped path, overwritten in place (no tempdir leak across bench/
-    driver/test reruns — ADVICE r5/r6).
+    distinct sources; ``_roundtrip_checksum``, eager export included).
 
     Scale: ORC keeps parquet's scan contract (footer schema, column
     pruning, predicate pushdown through the same V1 scan machinery), so
@@ -961,30 +955,13 @@ def orc_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     not plans; the checksum is one map-side-partial aggregate over the
     re-scan.
     """
-    import hashlib
-    import os
-    import tempfile
-
     from databricks_spark_sql_challenge1_spark.sources.ingest import (
         read_orc,
         write_orc,
     )
 
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    uid = os.getuid() if hasattr(os, "getuid") else "na"
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_u{uid}_orc_rt_{tag}", "docs"
-    )
-    write_orc(docs.repartition(4), out, mode="overwrite")
-    back = read_orc(spark, out)
-    h = F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("bigint")
-    return back.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("doc_id").alias("doc_id_sum"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.sum(h).alias("text_hash_sum"),
-        F.count_distinct("source").alias("n_sources"),
+    return _roundtrip_checksum(
+        spark, sf_dir, "orc", write_orc, read_orc, _ORC_SUMS, _ORC_DISTINCT
     )
 
 
@@ -1024,8 +1001,7 @@ bg AS (
 ),
 tb AS (
     SELECT doc_id, lang,
-           CAST(CAST('0x' || substr(md5(bigram), 1, 8) AS UBIGINT) AS BIGINT)
-               % {DSIR_BUCKETS} AS bucket
+           {hex_int_sql("md5(bigram)", 1, 8)} % {DSIR_BUCKETS} AS bucket
     FROM bg
 ),
 spine AS (SELECT unnest(generate_series(0, {DSIR_BUCKETS - 1})) AS bucket),
@@ -1098,10 +1074,7 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     tb = bg.select(
         "doc_id",
         "lang",
-        (
-            F.conv(F.substring(F.md5("bigram"), 1, 8), 16, 10).cast("bigint")
-            % DSIR_BUCKETS
-        ).alias("bucket"),
+        (hex_int(F.md5("bigram"), 1, 8) % DSIR_BUCKETS).alias("bucket"),
     )
     spine = spark.range(DSIR_BUCKETS).select(F.col("id").alias("bucket"))
     tcnt = (
@@ -1176,29 +1149,7 @@ CONTAM_BATCH_RESIDUE = 1  # "today's batch" = doc_id % BENCH_MOD == 1
 WITH sh AS ({_SHINGLES_SQL}),
 bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % {BENCH_MOD} = 0),
 batch AS (SELECT * FROM sh WHERE doc_id % {BENCH_MOD} = {CONTAM_BATCH_RESIDUE}),
-bprobes AS (
-    SELECT CAST(CAST('0x' || substr(md5(shingle), 1 + i * 8, 8) AS UBIGINT)
-                % {BLOOM_BITS} AS BIGINT) AS p
-    FROM bench, unnest(generate_series(0, {BLOOM_K - 1})) AS t(i)
-),
-bitmap AS (
-    SELECT p // {BLOOM_WORD} AS word,
-           bit_or(CAST(1 AS BIGINT) << CAST(p % {BLOOM_WORD} AS INTEGER)) AS bits
-    FROM bprobes GROUP BY p // {BLOOM_WORD}
-),
-cprobes AS (
-    SELECT doc_id, shingle, i,
-           CAST(CAST('0x' || substr(md5(shingle), 1 + i * 8, 8) AS UBIGINT)
-                % {BLOOM_BITS} AS BIGINT) AS p
-    FROM batch, unnest(generate_series(0, {BLOOM_K - 1})) AS t(i)
-),
-cand AS (
-    SELECT c.doc_id, c.shingle
-    FROM cprobes c JOIN bitmap b ON b.word = c.p // {BLOOM_WORD}
-    WHERE ((b.bits >> CAST(c.p % {BLOOM_WORD} AS INTEGER)) & 1) = 1
-    GROUP BY c.doc_id, c.shingle
-    HAVING COUNT(*) = {BLOOM_K}
-),
+{_bloom_candidates_sql("bench", "batch")},
 exact AS (
     SELECT c.doc_id, COUNT(*) AS x
     FROM cand c JOIN bench b ON b.shingle = c.shingle
@@ -1245,43 +1196,7 @@ def docs_contamination_incremental(spark: SparkSession, sf_dir: str) -> DataFram
         sh.where(F.col("doc_id") % BENCH_MOD == 0).select("shingle").distinct()
     )
     batch = sh.where(F.col("doc_id") % BENCH_MOD == CONTAM_BATCH_RESIDUE)
-
-    def probes(df, keep):
-        slices = F.array(
-            *[
-                (
-                    F.conv(
-                        F.substring(F.md5("shingle"), 1 + i * 8, 8), 16, 10
-                    ).cast("bigint")
-                    % BLOOM_BITS
-                ).alias(f"p{i}")
-                for i in range(BLOOM_K)
-            ]
-        )
-        return df.select(
-            *keep, F.posexplode(slices).alias("i", "p")
-        ).select(
-            *keep,
-            "i",
-            F.expr(f"p div {BLOOM_WORD}").alias("word"),
-            F.expr(f"CAST(p % {BLOOM_WORD} AS INT)").alias("bit"),
-        )
-
-    bitmap = (
-        probes(bench, [])
-        .groupBy("word")
-        .agg(
-            F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").alias("bits")
-        )
-    )
-    cand = (
-        probes(batch, ["doc_id", "shingle"])
-        .join(F.broadcast(bitmap), "word")
-        .where(F.expr("(bits >> bit) & 1 = 1"))
-        .groupBy("doc_id", "shingle")
-        .agg(F.count(F.lit(1)).alias("k_hit"))
-        .where(F.col("k_hit") == BLOOM_K)
-    )
+    cand = _bloom_candidates(bench, batch)
     exact = (
         cand.join(bench, "shingle")
         .groupBy("doc_id")

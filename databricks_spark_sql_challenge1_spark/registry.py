@@ -61,7 +61,8 @@ def fill_doc(fn, **values) -> None:
 #     consolidated into 2 dashboard assemblies, and 2 superseded variants
 #     retired — dedup_embedding_lsh, now the adaptive variant's below-knee
 #     twin, and distinct_orders_kmv, byte-identical to the rollup query's
-#     kmv_direct column).
+#     kmv_direct column and since deleted; the rollup query carries its
+#     accuracy pin).
 #   * The 9 rows-only queries ride OUTSIDE the rotation permanently: each
 #     has a registered ORACLE-BACKED stand-in (ROWS_ONLY_STAND_INS below)
 #     that hash-checks the same semantics on the normal cadence, so a
@@ -70,7 +71,9 @@ def fill_doc(fn, **values) -> None:
 #     stand-in invariant.
 #
 # Round-20 window, in priority order (changed-query rule: changed names
-# first):
+# first). The one portable-hash toolkit (functions/hashing.py) moved no
+# name: every registered name keeps its normalized optimized plan and its
+# oracle rows, so it heads nothing.
 #   0. the 6 similarity names whose code now runs on the one ANN toolkit
 #      in operators/similarity.py (one nearest-centroid assignment, one
 #      top-k cut, one PQ encoder, one squared L2) and that the window did

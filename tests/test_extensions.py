@@ -1380,8 +1380,8 @@ def test_embedding_profile_covers_both_legs(spark):
 def test_one_near_dup_family():
     """Structural guard (no Spark): each near-dup building block exists once
     in the package — the md5 token hex slicing (DuckDB ``md5(tok)`` and its
-    Spark twin on the ``hx`` column), the first-agreeing-band CASE, the
-    hyperplane literal renderer and the seeded plane draw — and no oracle
+    Spark twin, ``hex_int`` on the ``hx`` column), the first-agreeing-band
+    CASE, the hyperplane literal renderer and the seeded plane draw — and no oracle
     strips another's ORDER BY by string surgery, so a new SimHash or LSH
     query reuses the pieces instead of growing a copy."""
     import pathlib
@@ -1394,7 +1394,7 @@ def test_one_near_dup_family():
         for p in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py"))
     )
     assert src.count("md5(tok)") == 1
-    assert len(re.findall(r'substring\(\s*"?hx\b', src)) == 1
+    assert len(re.findall(r'(?<!def )hex_int\(\s*"?hx\b', src)) == 1
     assert len(re.findall(r"THEN \{[a-z]\}", src)) == 1
     assert src.count("def plane_lit") == 1
     assert src.count("RandomState(") == 1
@@ -1406,11 +1406,16 @@ def test_one_ann_toolkit():
     building block exists once per engine — the centroid-subset filter,
     the ``row_number`` rank that nearest-centroid assignment and every
     top-k cut share, the squared-L2 fold and the PQ codes frame/CTE — and
-    no function takes a frame-injection hook: the ANN legs take their
-    frames as arguments."""
+    no function under operators/ or streaming/ takes a frame-injection
+    hook (a ``_``-prefixed parameter defaulting to None): legs take their
+    frames as arguments, and the public callables build them."""
+    import importlib
     import inspect
+    import pkgutil
     import re
 
+    import databricks_spark_sql_challenge1_spark.operators as operators
+    import databricks_spark_sql_challenge1_spark.streaming as streaming
     from databricks_spark_sql_challenge1_spark.operators import similarity
 
     src = inspect.getsource(similarity)
@@ -1422,12 +1427,18 @@ def test_one_ann_toolkit():
     assert src.count("- {b}[i]) * ({a}[i] -") == 1
     assert len(re.findall(r"^\s+codes = ", src, re.M)) == 1
     assert src.count("codes AS (") == 1
-    hooks = {
-        name
-        for name, fn in inspect.getmembers(similarity, inspect.isfunction)
-        if fn.__module__ == similarity.__name__
-        and {"_assigned", "_codes", "_dtable"} & set(inspect.signature(fn).parameters)
-    }
+    hooks = set()
+    for pkg in (operators, streaming):
+        for info in pkgutil.iter_modules(pkg.__path__):
+            mod = importlib.import_module(f"{pkg.__name__}.{info.name}")
+            for name, fn in inspect.getmembers(mod, inspect.isfunction):
+                if fn.__module__ != mod.__name__:
+                    continue
+                hooks |= {
+                    f"{mod.__name__}.{name}({p.name})"
+                    for p in inspect.signature(fn).parameters.values()
+                    if p.name.startswith("_") and p.default is None
+                }
     assert hooks == set()
 
 

@@ -154,7 +154,7 @@ def test_fuzz_corpus_covers_the_documents_only_surface():
     # 43 after the r15 consolidation (dedup_ngram_jaccard +
     # dedup_ngram_containment → the single dedup_ngram_methods surface;
     # both legs still run, inside the consolidated query); 42 after the
-    # r16 one (doc_fingerprint + doc_rolling_fingerprint →
+    # r16 one (the md5 and rolling fingerprint legs run inside
     # doc_fingerprint_methods, same both-legs rule)
     assert len(_documents_only_names()) >= 42
 

@@ -155,75 +155,19 @@ def test_multimodal_oracles_guard_empty_documents():
 
 def test_kmv_estimate_accuracy(spark):
     """KMV relative error must stay within the standard 2/sqrt(K) bound
-    on every fixture group (the estimate itself is oracle-hash-checked;
-    this pins that the CONFIG is accurate enough to be useful)."""
+    on every fixture group, for both the direct and the merged sketch
+    (the estimates themselves are oracle-hash-checked; this pins that the
+    CONFIG is accurate enough to be useful)."""
     from databricks_spark_sql_challenge1_spark.operators.analytics_ext import (
         KMV_K,
-        distinct_orders_kmv,
-    )
-
-    bound = 2.0 / KMV_K**0.5
-    for r in distinct_orders_kmv(spark, SF_DIR).collect():
-        rel = abs(r["kmv_estimate"] - r["n_exact"]) / r["n_exact"]
-        assert rel <= bound, (r, rel, bound)
-
-
-def test_retired_kmv_equals_rollup_direct(spark):
-    """The r10 retirement claim, test-enforced: distinct_orders_kmv's
-    estimate column is byte-identical to distinct_orders_kmv_rollup's
-    kmv_direct (same keys, same hash, same integer arithmetic), so the
-    rollup query's driver row hash-checks the retired query's
-    semantics."""
-    from databricks_spark_sql_challenge1_spark.operators.analytics_ext import (
-        distinct_orders_kmv,
         distinct_orders_kmv_rollup,
     )
 
-    kmv = {
-        r["o_orderstatus"]: (r["n_exact"], r["kmv_estimate"])
-        for r in distinct_orders_kmv(spark, SF_DIR).collect()
-    }
-    rollup = {
-        r["o_orderstatus"]: (r["n_exact"], r["kmv_direct"])
-        for r in distinct_orders_kmv_rollup(spark, SF_DIR).collect()
-    }
-    assert kmv == rollup
-
-
-def test_retired_fingerprint_pair_equals_methods_legs(spark):
-    """The r16 consolidation claim, test-enforced: doc_fingerprint_methods'
-    md5 columns are byte-identical to the retired doc_fingerprint's rows,
-    and its rolling columns (where non-NULL) to the retired
-    doc_rolling_fingerprint's rows — so one driver row hash-checks both
-    retired registrations' semantics."""
-    from databricks_spark_sql_challenge1_spark.operators.textstats import (
-        doc_fingerprint,
-        doc_fingerprint_methods,
-        doc_rolling_fingerprint,
-    )
-
-    methods = doc_fingerprint_methods(spark, SF_DIR).collect()
-    md5_leg = {
-        r["doc_id"]: (r["fingerprint"], r["fingerprint_int"])
-        for r in doc_fingerprint(spark, SF_DIR).collect()
-    }
-    assert {
-        r["doc_id"]: (r["fingerprint"], r["fingerprint_int"]) for r in methods
-    } == md5_leg
-    rolling_leg = {
-        r["doc_id"]: (r["min_gram_hash"], r["max_gram_hash"], r["n_distinct_grams"])
-        for r in doc_rolling_fingerprint(spark, SF_DIR).collect()
-    }
-    assert {
-        r["doc_id"]: (r["min_gram_hash"], r["max_gram_hash"], r["n_distinct_grams"])
-        for r in methods
-        if r["min_gram_hash"] is not None
-    } == rolling_leg
-    # a doc outside the rolling leg (< 3 tokens) carries NULLs, never rows
-    assert all(
-        (r["min_gram_hash"] is None) == (r["doc_id"] not in rolling_leg)
-        for r in methods
-    )
+    bound = 2.0 / KMV_K**0.5
+    for r in distinct_orders_kmv_rollup(spark, SF_DIR).collect():
+        for col in ("kmv_direct", "kmv_merged"):
+            rel = abs(r[col] - r["n_exact"]) / r["n_exact"]
+            assert rel <= bound, (r, col, rel, bound)
 
 
 def test_rfm_approx_bounds_oracle_is_falsifiable(spark):
