@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.functions.text import ws_tokens, ws_tokens_sql
 from databricks_spark_sql_challenge1_spark.operators.abandonment import (
     TOP_ABANDONED_PAIRS_SQL,
 )
@@ -215,8 +216,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_keep_best",
     oracle=f"""{_CC_LAB_SQL},
 tok AS (
-    SELECT doc_id, len(string_split_regex(trim(text), '\\s+')) AS n_tokens
-    FROM documents
+    SELECT doc_id, len({ws_tokens_sql()}) AS n_tokens FROM documents
 ),
 j AS (
     SELECT l.doc_id, l.cluster_id, t.n_tokens
@@ -251,10 +251,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = _cluster_labels(spark, sf_dir)
     tok = (
         load_table(spark, sf_dir, "documents", spread=True)
-        .select(
-            "doc_id",
-            F.size(F.split(F.trim("text"), r"\s+")).alias("n_tokens"),
-        )
+        .select("doc_id", F.size(ws_tokens()).alias("n_tokens"))
     )
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("n_tokens").desc(), F.col("doc_id").asc()

@@ -20,6 +20,12 @@ from databricks_spark_sql_challenge1_spark.functions.hashing import (
     hex_int_sql,
     text_fingerprint,
 )
+from databricks_spark_sql_challenge1_spark.functions.text import (
+    ngrams,
+    ngrams_sql,
+    ws_tokens,
+    ws_tokens_sql,
+)
 from databricks_spark_sql_challenge1_spark.registry import fill_doc, query
 
 SHINGLE_N = 3  # word 3-grams
@@ -101,36 +107,13 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingles_spark(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) distinct word-3-grams, all JVM-side array ops.
-
-    Docs with fewer than SHINGLE_N tokens are FILTERED, not clamped
-    (the docs_substring_dedup idiom): Spark's ``sequence(1, 0)`` yields a
-    DESCENDING [1, 0] — its 0 would reach ``slice(start=0)`` and error —
-    while the oracle's ``generate_series(1, 0)`` is empty. Short docs have
-    no shingle on either engine either way (round-13 fuzz-parity find)."""
-    toks = F.split(F.trim("text"), r"\s+")
-    shingles = F.expr(
-        f"transform(sequence(1, size(tokens) - {SHINGLE_N - 1}), "
-        f"i -> array_join(slice(tokens, i, {SHINGLE_N}), ' '))"
-    )
-    return (
-        docs.select("doc_id", toks.alias("tokens"))
-        .where(F.size("tokens") >= SHINGLE_N)
-        .select("doc_id", F.explode(shingles).alias("shingle"))
-        .distinct()
-    )
+    """(doc_id, shingle): each document's distinct word SHINGLE_N-grams
+    (documents with fewer tokens have none, see ``functions.text.ngrams``)."""
+    return ngrams(docs, SHINGLE_N, "shingle").distinct()
 
 
 _SHINGLES_SQL = f"""
-    SELECT DISTINCT doc_id, shingle
-    FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                   generate_series(1, greatest(len(toks) - {SHINGLE_N - 1}, 0)),
-                   i -> array_to_string(toks[i:i+{SHINGLE_N - 1}], ' '))) AS shingle
-        FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-              FROM documents)
-    )
+    SELECT DISTINCT doc_id, shingle FROM ({ngrams_sql(SHINGLE_N, "shingle")})
 """
 
 
@@ -307,9 +290,7 @@ def _distinct_token_md5(docs: DataFrame) -> DataFrame:
     prefix of every SimHash layout (the distinct runs BEFORE hashing, so
     the dedup key is the token itself)."""
     return (
-        docs.select(
-            "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
-        )
+        docs.select("doc_id", F.explode(ws_tokens()).alias("tok"))
         .distinct()
         .select("doc_id", F.md5("tok").alias("hx"))
     )
@@ -347,8 +328,7 @@ def _simhash_sig_sql(layout: str, source: str = "documents") -> str:
     SELECT doc_id, {limbs}
     FROM (
         SELECT doc_id, {hashes}
-        FROM (SELECT DISTINCT doc_id,
-                     unnest(string_split_regex(trim(text), '\\s+')) AS tok
+        FROM (SELECT DISTINCT doc_id, unnest({ws_tokens_sql()}) AS tok
               FROM {source})
     )
     GROUP BY doc_id"""
@@ -1381,15 +1361,7 @@ SUBSTR_WINDOW = 8
 @query(
     "docs_substring_dedup",
     oracle=f"""
-WITH toks AS (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-    FROM documents
-),
-win AS (
-    SELECT doc_id, array_to_string(list_slice(t, i, i + {SUBSTR_WINDOW - 1}), ' ') AS w
-    FROM toks, unnest(generate_series(1, len(t) - {SUBSTR_WINDOW - 1})) AS u(i)
-    WHERE len(t) >= {SUBSTR_WINDOW}
-),
+WITH win AS ({ngrams_sql(SUBSTR_WINDOW, "w", lower=True)}),
 tot AS (SELECT doc_id, COUNT(*) AS n_windows FROM win GROUP BY doc_id),
 shared AS (SELECT w FROM win GROUP BY w HAVING COUNT(DISTINCT doc_id) >= 2),
 dup AS (
@@ -1424,21 +1396,7 @@ def docs_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is byte-identical.
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    w = SUBSTR_WINDOW
-    base = docs.select(
-        "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("t")
-    )
-    # sequence(1, n) with n < 1 would generate a DESCENDING sequence in
-    # Spark, so short docs are filtered instead of clamped
-    win = base.where(F.size("t") >= w).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(t) - {w - 1}),"
-                f" i -> array_join(slice(t, i, {w}), ' '))"
-            )
-        ).alias("w"),
-    )
+    win = ngrams(docs, SUBSTR_WINDOW, "w", lower=True)
     tot = win.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_windows"))
     shared = (
         win.groupBy("w")

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.functions.text import ws_tokens, ws_tokens_sql
 from databricks_spark_sql_challenge1_spark.functions.vectors import cosine
 from databricks_spark_sql_challenge1_spark.operators.similarity import _emb
 from databricks_spark_sql_challenge1_spark.registry import query
@@ -57,8 +58,7 @@ def _bm25_cte() -> str:
         for t in BM25_QUERY_TERMS
     )
     return f"""d AS (
-    SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-    FROM documents
+    SELECT doc_id, {ws_tokens_sql()} AS toks FROM documents
 ),
 dd AS (
     SELECT doc_id, len(toks) AS dl, {tf_cols}
@@ -126,9 +126,7 @@ def _bm25_doc_feats(docs: DataFrame) -> DataFrame:
     expressions over whatever ``docs`` frame is passed — the full corpus
     for the stats/scoring passes, or a K-row shortlist probe for
     ``retrieval_rrf_rerank``'s stage 2."""
-    return docs.select(
-        "doc_id", F.split(F.trim("text"), r"\s+").alias("toks")
-    ).select(
+    return docs.select("doc_id", ws_tokens().alias("toks")).select(
         "doc_id",
         F.size("toks").alias("dl"),
         *[
@@ -378,7 +376,7 @@ def retrieval_rrf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist (stage 1 — ``retrieval_hybrid_rrf``'s exact fused frame,
     reused as a composition) re-scored by an exact per-candidate blend
     (stage 2): rerank_score = {RERANK_ALPHA}*cosine(query, doc) +
-    {1 - RERANK_ALPHA}*BM25/max(BM25 over shortlist). Mirrors
+    (1 - {RERANK_ALPHA})*BM25/max(BM25 over shortlist). Mirrors
     ``similarity_pq_rerank``'s retrieve-then-rerank shape on the text
     side: the stage-2 scorer touches only K rows, so its joins back to
     the embedding and lexical feature sources are broadcast-trivial at

@@ -1343,11 +1343,3 @@ def similarity_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("query_id").asc())
     )
-
-
-fill_doc(
-    similarity_recall_audit,
-    TOP_K=TOP_K,
-    IVFPQ_PROBES=IVFPQ_PROBES,
-    N_QUERIES=N_QUERIES,
-)

@@ -3,8 +3,11 @@ token counting (whitespace + BPE-ish regex), quality scoring, language-ID
 heuristic, and document fingerprinting. All built-in string/array functions
 — JVM-side, oracle-checked.
 
-Regex policy: ASCII character classes only (``[A-Za-z0-9]``) so Spark's Java
-regex and DuckDB's RE2 agree on every boundary.
+Regex policy: ASCII character classes only (``[A-Za-z0-9]``), where Spark's
+Java regex and DuckDB's RE2 agree on every character except the vertical
+tab U+000B, which Java's ``\\s`` matches and RE2's does not (out of the
+oracle contract; see functions/text.py). Tokens, n-grams and quality
+signals come from functions/text.py.
 """
 
 from __future__ import annotations
@@ -20,6 +23,21 @@ from databricks_spark_sql_challenge1_spark.functions.hashing import (
     hex_int_sql,
     text_fingerprint,
 )
+from databricks_spark_sql_challenge1_spark.functions.text import (
+    PUNCT_RATIO_SQL,
+    QUALITY_SCORE_SQL,
+    ngrams,
+    ngrams_sql,
+    punct_ratio,
+    quality_gate,
+    quality_gate_sql,
+    quality_score,
+    quality_stats,
+    quality_stats_sql,
+    ws_tokens,
+    ws_tokens_expr,
+    ws_tokens_sql,
+)
 from databricks_spark_sql_challenge1_spark.registry import query
 
 BPE_PATTERN = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"
@@ -33,16 +51,12 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def _tokens(col: str = "text") -> Column:
-    return F.split(F.trim(col), r"\s+")
-
-
 @query(
     "text_token_stats",
-    oracle="""
+    oracle=f"""
 SELECT doc_id,
-       len(string_split_regex(trim(text), '\\s+')) AS n_ws_tokens,
-       len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS n_bpe_tokens,
+       len({ws_tokens_sql()}) AS n_ws_tokens,
+       len(regexp_extract_all(text, '{BPE_PATTERN}')) AS n_bpe_tokens,
        length(text) AS n_chars_measured
 FROM documents
 ORDER BY doc_id ASC
@@ -53,7 +67,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True)
     return docs.select(
         "doc_id",
-        F.size(_tokens()).alias("n_ws_tokens"),
+        F.size(ws_tokens()).alias("n_ws_tokens"),
         F.size(F.regexp_extract_all("text", F.lit(BPE_PATTERN), 0)).alias(
             "n_bpe_tokens"
         ),
@@ -63,22 +77,14 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_quality_stats",
-    oracle="""
-WITH t AS (
-    SELECT doc_id,
-           string_split_regex(trim(text), '\\s+') AS toks,
-           length(text) AS n_chars,
-           length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS n_punct,
-           length(regexp_replace(text, '\\s', '', 'g')) AS n_nonspace
-    FROM documents
-)
+    oracle=f"""
 SELECT doc_id,
-       len(toks) AS n_tokens,
-       ROUND(CAST(n_nonspace AS DOUBLE) / len(toks), 4) AS avg_token_len,
-       ROUND(CAST(n_punct AS DOUBLE) / n_chars, 4) AS punct_ratio,
-       ROUND(least(1.0, len(toks) / 100.0)
-             * (1.0 - CAST(n_punct AS DOUBLE) / n_chars), 4) AS quality_score
-FROM t
+       len({ws_tokens_sql()}) AS n_tokens,
+       ROUND(CAST(length(regexp_replace(text, '\\s', '', 'g')) AS DOUBLE)
+             / len({ws_tokens_sql()}), 4) AS avg_token_len,
+       ROUND({PUNCT_RATIO_SQL}, 4) AS punct_ratio,
+       ROUND({QUALITY_SCORE_SQL}, 4) AS quality_score
+FROM documents
 ORDER BY doc_id ASC
 """,
 )
@@ -87,24 +93,14 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     punctuation ratio, and a composite quality score (length-saturating ×
     punctuation-penalty) — the standard pretraining-filter features."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    toks = _tokens()
-    n_tokens = F.size(toks)
-    n_chars = F.length("text")
-    n_punct = F.length(F.regexp_replace("text", r"[A-Za-z0-9\s]", ""))
+    n_tokens = F.size(ws_tokens())
     n_nonspace = F.length(F.regexp_replace("text", r"\s", ""))
-    # try_divide: an empty document (n_chars = 0) must yield NULL ratios
-    # like the oracle's x/0, not an ANSI DIVIDE_BY_ZERO job abort
-    # (round-13 fuzz-parity find; fixtures never exercise the path)
-    punct_ratio = F.try_divide(n_punct.cast("double"), n_chars)
     return docs.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
         F.round(n_nonspace.cast("double") / n_tokens, 4).alias("avg_token_len"),
-        F.round(punct_ratio, 4).alias("punct_ratio"),
-        F.round(
-            F.least(F.lit(1.0), n_tokens / F.lit(100.0)) * (F.lit(1.0) - punct_ratio),
-            4,
-        ).alias("quality_score"),
+        F.round(punct_ratio(), 4).alias("punct_ratio"),
+        F.round(quality_score(), 4).alias("quality_score"),
     ).orderBy(F.col("doc_id").asc())
 
 
@@ -119,8 +115,7 @@ def _lang_score_sql(lang: str) -> str:
     "lang_id_heuristic",
     oracle=f"""
 WITH t AS (
-    SELECT doc_id, lang,
-           string_split_regex(lower(trim(text)), '\\s+') AS toks
+    SELECT doc_id, lang, {ws_tokens_sql(lower=True)} AS toks
     FROM documents
 ),
 scored AS (
@@ -147,7 +142,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataflow (per-doc array scoring, no shuffle) is identical.
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    toks = F.split(F.lower(F.trim("text")), r"\s+")
+    toks = ws_tokens(lower=True)
 
     def stopword_hits(words: tuple[str, ...]) -> Column:
         wordlist = F.array(*[F.lit(w) for w in words])
@@ -179,13 +174,13 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lang_stats",
-    oracle="""
+    oracle=f"""
 SELECT lang,
        COUNT(*) AS n_docs,
        CAST(SUM(n_chars) AS BIGINT) AS total_chars,
        ROUND(CAST(SUM(n_chars) * 100 AS DOUBLE) / COUNT(*)) / 100.0
            AS avg_chars,
-       ROUND(CAST(SUM(len(string_split_regex(trim(text), '\\s+'))) * 100
+       ROUND(CAST(SUM(len({ws_tokens_sql()})) * 100
                   AS DOUBLE) / COUNT(*)) / 100.0
            AS avg_tokens
 FROM documents
@@ -217,7 +212,7 @@ def lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("avg_chars"),
             (
                 F.round(
-                    (F.sum(F.size(_tokens()).cast("long")) * 100)
+                    (F.sum(F.size(ws_tokens()).cast("long")) * 100)
                     .cast("double") / n
                 ) / 100.0
             ).alias("avg_tokens"),
@@ -233,7 +228,7 @@ TFIDF_TOP_K = 5
     "text_tfidf_top_terms",
     oracle=f"""
 WITH toks AS (
-    SELECT lang, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
+    SELECT lang, unnest({ws_tokens_sql(lower=True)}) AS term
     FROM documents
 ),
 tf AS (SELECT lang, term, COUNT(*) AS tf FROM toks GROUP BY lang, term),
@@ -262,7 +257,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True)
     toks = docs.select(
         "lang",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("term"),
+        F.explode(ws_tokens(lower=True)).alias("term"),
     )
     tf = toks.groupBy("lang", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.countDistinct("lang").alias("df"))
@@ -278,8 +273,6 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tfidf"),
         )
     )
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("lang").orderBy(F.col("tfidf").desc(), F.col("term").asc())
     return (
         scored.withColumn("rk", F.row_number().over(w))
@@ -296,19 +289,8 @@ def _rolling_fingerprint_leg(docs: DataFrame) -> DataFrame:
     fingerprints across documents). (doc_id, min_gram_hash, max_gram_hash,
     n_distinct_grams) — one row per document with ≥ 3 tokens; shorter docs
     have no 3-gram window on either engine and simply don't appear."""
-    toks = F.split(F.trim("text"), r"\s+")
-    # < 3 tokens: filtered, not clamped — Spark sequence(1, 0) descends
-    # through 0 into slice(start=0) (round-13 fuzz-parity find); the
-    # oracle's generate_series(1, 0) is empty, so such docs have no gram
-    # on either engine.
-    grams = F.expr(
-        "transform(sequence(1, size(tokens) - 2), "
-        "i -> md5(array_join(slice(tokens, i, 3), ' ')))"
-    )
     return (
-        docs.select("doc_id", toks.alias("tokens"))
-        .where(F.size("tokens") >= 3)
-        .select("doc_id", F.explode(grams).alias("h"))
+        ngrams(docs, 3, "h", md5=True)
         .groupBy("doc_id")
         .agg(
             F.min("h").alias("min_gram_hash"),
@@ -318,21 +300,10 @@ def _rolling_fingerprint_leg(docs: DataFrame) -> DataFrame:
     )
 
 
-QUALITY_MIN_TOKENS = 30
-QUALITY_MAX_PUNCT = 0.10
-
-
 @query(
     "corpus_filter_pipeline",
     oracle=f"""
-WITH stats AS (
-    SELECT doc_id, lang,
-           {TEXT_FINGERPRINT_SQL} AS fp,
-           len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
-           CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-               / length(text) AS punct_ratio
-    FROM documents
-),
+WITH stats AS ({quality_stats_sql(("doc_id", "lang"))}),
 canonical AS (
     SELECT fp, MIN(doc_id) AS canonical_doc_id FROM stats GROUP BY fp
 )
@@ -341,8 +312,7 @@ SELECT s.lang,
        CAST(SUM(s.n_tokens) AS BIGINT) AS kept_tokens
 FROM stats s
 JOIN canonical c ON s.fp = c.fp AND s.doc_id = c.canonical_doc_id
-WHERE s.n_tokens >= {QUALITY_MIN_TOKENS}
-  AND s.punct_ratio <= {QUALITY_MAX_PUNCT}
+WHERE {quality_gate_sql("s")}
 GROUP BY s.lang
 ORDER BY s.lang ASC NULLS FIRST
 """,
@@ -353,37 +323,18 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical copy per normalized fingerprint) → per-language kept-document
     and kept-token counts. One expression pipeline + one dedup shuffle +
     one small aggregate — the 100 TB shape."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim("text"), r"\s+")
-    stats = docs.select(
-        "doc_id",
-        "lang",
-        text_fingerprint().alias("fp"),
-        F.size(toks).alias("n_tokens"),
-        # try_divide: empty doc -> NULL ratio -> filtered by the quality
-        # gate on both engines (NULL <= 0.10 is not true), instead of an
-        # ANSI job abort (round-13 fuzz-parity find)
-        F.try_divide(
-            F.length(F.regexp_replace("text", r"[A-Za-z0-9\s]", "")).cast("double"),
-            F.length("text"),
-        ).alias("punct_ratio"),
-    )
+    stats = quality_stats(load_table(spark, sf_dir, "documents"), ("doc_id", "lang"))
     # Canonical-copy selection as a window min over fp: ONE shuffle, no join.
     # (A groupBy(fp) + self-join re-keys on fp twice and — at corpus scale —
     # the canonical side has ~one row per distinct document, far past
     # broadcast range, forcing a second full shuffle. The original unaliased
     # self-join also collapsed to a trivially-true ``fp == fp`` predicate
     # under Spark's lineage resolution; tests/test_plans.py pins this shape.)
-    from pyspark.sql import Window
-
     w = Window.partitionBy("fp")
     return (
         stats.withColumn("canonical_doc_id", F.min("doc_id").over(w))
         .where(F.col("doc_id") == F.col("canonical_doc_id"))
-        .where(
-            (F.col("n_tokens") >= QUALITY_MIN_TOKENS)
-            & (F.col("punct_ratio") <= QUALITY_MAX_PUNCT)
-        )
+        .where(quality_gate())
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_kept"),
@@ -412,14 +363,7 @@ WITH base AS (
     SELECT doc_id, {TEXT_FINGERPRINT_SQL} AS fp
     FROM documents
 ),
-sh AS (
-    SELECT doc_id,
-           unnest(list_transform(
-               generate_series(1, greatest(len(toks) - 2, 0)),
-               i -> md5(array_to_string(toks[i:i+2], ' ')))) AS h
-    FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-          FROM documents)
-),
+sh AS ({ngrams_sql(3, "h", md5=True)}),
 roll AS (
     SELECT doc_id,
            MIN(h) AS min_gram_hash,
@@ -470,8 +414,7 @@ VOCAB_MIN_FREQ = 2
     "corpus_vocabulary",
     oracle=f"""
 WITH toks AS (
-    SELECT unnest(string_split_regex(trim(text), '\\s+')) AS term
-    FROM documents
+    SELECT unnest({ws_tokens_sql()}) AS term FROM documents
 ),
 freq AS (
     SELECT term, COUNT(*) AS freq FROM toks GROUP BY term
@@ -497,11 +440,9 @@ def corpus_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any corpus scale. LIMIT keeps the vocab bounded; the HAVING floor
     drops hapax noise before ranking.
     """
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents", spread=True)
     freq = (
-        docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("term"))
+        docs.select(F.explode(ws_tokens()).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("freq"))
         .where(F.col("freq") >= VOCAB_MIN_FREQ)
@@ -517,11 +458,8 @@ def corpus_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_entropy",
-    oracle="""
-WITH t AS (
-    SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
-    FROM documents
-),
+    oracle=f"""
+WITH t AS (SELECT doc_id, unnest({ws_tokens_sql()}) AS tok FROM documents),
 c AS (SELECT doc_id, tok, COUNT(*) AS cnt FROM t GROUP BY doc_id, tok),
 tot AS (SELECT doc_id, SUM(cnt) AS n FROM c GROUP BY doc_id)
 SELECT c.doc_id,
@@ -544,13 +482,9 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded to 4 decimals on both engines so float summation order can't
     flip the value hash.
     """
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents", spread=True)
     c = (
-        docs.select(
-            "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
-        )
+        docs.select("doc_id", F.explode(ws_tokens()).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -589,14 +523,7 @@ REP_TOP_FRAC_MAX = 0.1
 @query(
     "docs_repetition_stats",
     oracle=f"""
-WITH sh AS (
-    SELECT doc_id,
-           unnest(list_transform(
-               generate_series(1, greatest(len(toks) - 2, 0)),
-               i -> array_to_string(toks[i:i+2], ' '))) AS shingle
-    FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-          FROM documents)
-),
+WITH sh AS ({ngrams_sql(3, "shingle")}),
 c AS (SELECT doc_id, shingle, COUNT(*) AS cnt FROM sh GROUP BY doc_id, shingle),
 d AS (
     SELECT doc_id,
@@ -626,16 +553,8 @@ def docs_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines.
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    # < 3 tokens: filtered, not clamped (same rule and reason as
-    # _shingles_spark — Spark sequence(1, 0) descends into slice(0))
-    shingles = F.expr(
-        "transform(sequence(1, size(tokens) - 2), "
-        "i -> array_join(slice(tokens, i, 3), ' '))"
-    )
     c = (
-        docs.select("doc_id", F.split(F.trim("text"), r"\s+").alias("tokens"))
-        .where(F.size("tokens") >= 3)
-        .select("doc_id", F.explode(shingles).alias("shingle"))
+        ngrams(docs, 3, "shingle")
         .groupBy("doc_id", "shingle")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -675,8 +594,7 @@ TFIDF_POSTING_CAP = 128
     "tfidf_doc_neighbors",
     oracle=f"""
 WITH toks AS (
-    SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
-    FROM documents
+    SELECT doc_id, unnest({ws_tokens_sql(lower=True)}) AS term FROM documents
 ),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
 dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
@@ -763,12 +681,8 @@ def tfidf_doc_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the value hash and the neighbor ranking (neighbor_id breaks
     ties).
     """
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("term")
-    )
+    toks = docs.select("doc_id", F.explode(ws_tokens(lower=True)).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -858,10 +772,7 @@ PPL_ROUND = 4
 @query(
     "docs_perplexity_buckets",
     oracle=f"""
-WITH t AS (
-    SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
-    FROM documents
-),
+WITH t AS (SELECT doc_id, unnest({ws_tokens_sql()}) AS tok FROM documents),
 freq AS (SELECT tok, COUNT(*) AS f FROM t GROUP BY tok),
 tot AS (SELECT COUNT(*) AS n FROM t),
 nll AS (
@@ -900,9 +811,7 @@ def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison so bucket membership cannot drift.
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    t = docs.select(
-        "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
-    )
+    t = docs.select("doc_id", F.explode(ws_tokens()).alias("tok"))
     freq = t.groupBy("tok").agg(F.count(F.lit(1)).alias("f"))
     tot = t.agg(F.count(F.lit(1)).alias("n"))
     nll = (
@@ -945,20 +854,10 @@ QUALITY_TIERS = 4
 @query(
     "docs_quality_tiers",
     oracle=f"""
-WITH t AS (
-    SELECT doc_id,
-           string_split_regex(trim(text), '\\s+') AS toks,
-           length(text) AS n_chars,
-           length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS n_punct
+WITH s AS (
+    SELECT doc_id, len({ws_tokens_sql()}) AS n_tokens,
+           CAST(ROUND({QUALITY_SCORE_SQL} * 10000) AS BIGINT) AS micro
     FROM documents
-),
-s AS (
-    SELECT doc_id, len(toks) AS n_tokens,
-           CAST(ROUND(least(1.0, len(toks) / 100.0)
-                 * (1.0 - CAST(n_punct AS DOUBLE) / n_chars)
-                 * 10000) AS BIGINT)
-               AS micro
-    FROM t
 ),
 cut AS (
     SELECT quantile_cont(micro, 0.25) AS q1,
@@ -1011,18 +910,11 @@ def docs_quality_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     MIN/MAX divide exactly.
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    toks = F.split(F.trim("text"), r"\s+")
-    n_tokens = F.size(toks)
-    n_punct = F.length(F.regexp_replace("text", r"[A-Za-z0-9\s]", ""))
-    # try_divide: NULL score for an empty doc, like the oracle's x/0
-    # (round-13 fuzz-parity find) — it then CASE-falls to tier 4 on both
-    # engines and is skipped by the percentile/SUM/MIN/MAX on both
-    raw = F.least(F.lit(1.0), n_tokens / F.lit(100.0)) * (
-        F.lit(1.0) - F.try_divide(n_punct.cast("double"), F.length("text"))
-    )
-    micro = F.round(raw * 10000).cast("long")
+    # an empty doc's NULL score CASE-falls to tier 4 on both engines and
+    # is skipped by the percentile/SUM/MIN/MAX on both
+    micro = F.round(quality_score() * 10000).cast("long")
     s = docs.select(
-        "doc_id", n_tokens.alias("n_tokens"), micro.alias("micro")
+        "doc_id", F.size(ws_tokens()).alias("n_tokens"), micro.alias("micro")
     )
     cut = s.agg(
         F.expr("percentile(micro, 0.25d)").alias("q1"),
@@ -1092,6 +984,19 @@ def _pii_clean(col: Column) -> Column:
     )
 
 
+_PII_PATTERNS = (PII_EMAIL_RE, PII_PHONE_RE, PII_IP_RE)
+
+
+def _pii_counts(col: str) -> list[Column]:
+    """The email, phone and IPv4 span counts of column ``col``."""
+    return [F.size(F.regexp_extract_all(col, F.lit(p), 0)) for p in _PII_PATTERNS]
+
+
+def _pii_counts_sql(col: str) -> list[str]:
+    """The DuckDB twin of ``_pii_counts``."""
+    return [f"len(regexp_extract_all({col}, '{p}'))" for p in _PII_PATTERNS]
+
+
 _PII_AUG_SQL = """
     text
     || CASE WHEN doc_id % 3 = 0
@@ -1107,6 +1012,13 @@ _PII_AUG_SQL = """
 """
 
 
+_PII_COUNT_COLS = ("n_emails", "n_phones", "n_ips")
+_PII_COUNT_COLS_SQL = ",\n       ".join(
+    f"CAST({c} AS BIGINT) AS {a}"
+    for c, a in zip(_pii_counts_sql("t"), _PII_COUNT_COLS)
+)
+
+
 @query(
     "docs_pii_redact",
     oracle=f"""
@@ -1118,11 +1030,7 @@ red AS (
     FROM aug
 )
 SELECT doc_id,
-       CAST(len(regexp_extract_all(t, '{PII_EMAIL_RE}')) AS BIGINT)
-           AS n_emails,
-       CAST(len(regexp_extract_all(t, '{PII_PHONE_RE}')) AS BIGINT)
-           AS n_phones,
-       CAST(len(regexp_extract_all(t, '{PII_IP_RE}')) AS BIGINT) AS n_ips,
+       {_PII_COUNT_COLS_SQL},
        CAST(length(clean) AS BIGINT) AS clean_len,
        md5(clean) AS clean_md5
 FROM red
@@ -1149,15 +1057,10 @@ def docs_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         aug.select(
             "doc_id",
-            F.size(F.regexp_extract_all("t", F.lit(PII_EMAIL_RE), 0))
-            .cast("long")
-            .alias("n_emails"),
-            F.size(F.regexp_extract_all("t", F.lit(PII_PHONE_RE), 0))
-            .cast("long")
-            .alias("n_phones"),
-            F.size(F.regexp_extract_all("t", F.lit(PII_IP_RE), 0))
-            .cast("long")
-            .alias("n_ips"),
+            *[
+                c.cast("long").alias(a)
+                for c, a in zip(_pii_counts("t"), _PII_COUNT_COLS)
+            ],
             F.length(clean).cast("long").alias("clean_len"),
             F.md5(clean).alias("clean_md5"),
         )
@@ -1174,10 +1077,7 @@ WITH aug AS (
 red AS (
     SELECT doc_id, lang, t,
            {_pii_red_sql("t")} AS clean,
-           CAST(len(regexp_extract_all(t, '{PII_EMAIL_RE}'))
-                + len(regexp_extract_all(t, '{PII_PHONE_RE}'))
-                + len(regexp_extract_all(t, '{PII_IP_RE}')) AS BIGINT)
-               AS pii_spans
+           CAST({" + ".join(_pii_counts_sql("t"))} AS BIGINT) AS pii_spans
     FROM aug
 ),
 ranked AS (
@@ -1221,11 +1121,8 @@ def corpus_privacy_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_PII_AUG_SQL.replace("VARCHAR", "STRING")).alias("t"),
     )
     clean = _pii_clean(F.col("t"))
-    spans = (
-        F.size(F.regexp_extract_all("t", F.lit(PII_EMAIL_RE), 0))
-        + F.size(F.regexp_extract_all("t", F.lit(PII_PHONE_RE), 0))
-        + F.size(F.regexp_extract_all("t", F.lit(PII_IP_RE), 0))
-    ).cast("long")
+    n_emails, n_phones, n_ips = _pii_counts("t")
+    spans = (n_emails + n_phones + n_ips).cast("long")
     red = aug.select(
         "doc_id", "lang", "t", clean.alias("clean"), spans.alias("pii_spans")
     )
@@ -1272,6 +1169,7 @@ _QUALITY_CLF_LOGIT_SQL = (
     " - 0.1 * (n_chars_m / CAST(n_toks AS DOUBLE)))"
 )
 _QUALITY_CLF_PROB_SQL = f"1.0 / (1.0 + exp(-{_QUALITY_CLF_LOGIT_SQL}))"
+_STOPSET = ", ".join(f"'{w}'" for w in LANG_STOPWORDS["en"])
 
 
 @query(
@@ -1279,12 +1177,10 @@ _QUALITY_CLF_PROB_SQL = f"1.0 / (1.0 + exp(-{_QUALITY_CLF_LOGIT_SQL}))"
     oracle=f"""
 WITH feat AS (
     SELECT doc_id, lang,
-           len(string_split_regex(lower(trim(text)), '\\s+')) AS n_toks,
-           len(list_distinct(string_split_regex(lower(trim(text)), '\\s+')))
-               AS n_distinct,
-           len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                           t -> list_contains(['the', 'and', 'of', 'to', 'a'], t)))
-               AS n_stop,
+           len({ws_tokens_sql(lower=True)}) AS n_toks,
+           len(list_distinct({ws_tokens_sql(lower=True)})) AS n_distinct,
+           len(list_filter({ws_tokens_sql(lower=True)},
+                           t -> list_contains([{_STOPSET}], t))) AS n_stop,
            length(text) AS n_chars_m
     FROM documents
 )
@@ -1313,16 +1209,15 @@ def docs_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's probability, not a sample.
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    toks = F.split(F.lower(F.trim("text")), r"\s+")
-    stopset = ", ".join(f"'{w}'" for w in LANG_STOPWORDS["en"])
+    toks = ws_tokens(lower=True)
     feat = docs.select(
         "doc_id",
         "lang",
         F.size(toks).alias("n_toks"),
         F.size(F.array_distinct(toks)).alias("n_distinct"),
         F.expr(
-            "size(filter(split(lower(trim(text)), '\\\\s+'),"
-            f" t -> array_contains(array({stopset}), t)))"
+            f"size(filter({ws_tokens_expr(lower=True)},"
+            f" t -> array_contains(array({_STOPSET}), t)))"
         ).alias("n_stop"),
         F.length("text").alias("n_chars_m"),
     )
@@ -1424,8 +1319,7 @@ def _bpe_cte_chain(rounds: int = BPE_ROUNDS) -> list:
         f"""words AS MATERIALIZED (
     SELECT word, freq FROM (
         SELECT term AS word, CAST(COUNT(*) AS BIGINT) AS freq
-        FROM (SELECT unnest(string_split_regex(trim(text), '\\s+')) AS term
-              FROM documents)
+        FROM (SELECT unnest({ws_tokens_sql()}) AS term FROM documents)
         WHERE term <> ''
         GROUP BY term
     )
@@ -1502,7 +1396,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list:
     ORDER BY, since UTF-8 byte order equals codepoint order."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
     top = (
-        docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("word"))
+        docs.select(F.explode(ws_tokens()).alias("word"))
         # ADVICE r12: an empty token (whitespace-only text) would diverge —
         # Spark's sequence(1, 0) yields [1, 0] where DuckDB's
         # generate_series(1, 0) yields no rows. Guard both sides.
@@ -1566,10 +1460,9 @@ def _bpe_encode_oracle_sql(rounds: int = BPE_ROUNDS) -> str:
     argmax CTEs from _bpe_cte_chain) over the FULL corpus vocabulary, then
     join per-word token stats back to per-occurrence rows."""
     ctes = _bpe_cte_chain(rounds)
-    ctes.append("""dwords AS MATERIALIZED (
+    ctes.append(f"""dwords AS MATERIALIZED (
     SELECT doc_id, w AS word
-    FROM (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
-          FROM documents)
+    FROM (SELECT doc_id, unnest({ws_tokens_sql()}) AS w FROM documents)
     WHERE w <> ''
 )""")
     ctes.append("vocab AS MATERIALIZED (SELECT DISTINCT word FROM dwords)")
@@ -1618,9 +1511,7 @@ def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     best-pair argmax CTEs feed the vocabulary-side merge chain)."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
     dwords = (
-        docs.select(
-            "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("word")
-        )
+        docs.select("doc_id", F.explode(ws_tokens()).alias("word"))
         .where(F.col("word") != "")
     )
     vocab = dwords.select("word").distinct()

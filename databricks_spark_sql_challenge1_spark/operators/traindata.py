@@ -16,16 +16,23 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
-from databricks_spark_sql_challenge1_spark.functions.hashing import (
-    TEXT_FINGERPRINT_SQL,
-    hex_int,
-    hex_int_sql,
-    text_fingerprint,
+from databricks_spark_sql_challenge1_spark.functions.hashing import hex_int, hex_int_sql
+from databricks_spark_sql_challenge1_spark.functions.text import (
+    ngrams,
+    ngrams_sql,
+    quality_gate,
+    quality_gate_sql,
+    quality_stats,
+    quality_stats_sql,
+    ws_tokens,
+    ws_tokens_sql,
 )
 from databricks_spark_sql_challenge1_spark.operators.dedup import (
     _SHINGLES_SQL,
+    _distinct_token_md5,
     _shingles_spark,
     _simhash_pairs_sql,
+    _simhash_self_pairs,
 )
 from databricks_spark_sql_challenge1_spark.registry import query
 
@@ -99,9 +106,7 @@ def docs_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "token_budget_pack",
     oracle=f"""
 WITH t AS (
-    SELECT doc_id, lang,
-           len(string_split_regex(trim(text), '\\s+')) AS n_tokens
-    FROM documents
+    SELECT doc_id, lang, len({ws_tokens_sql()}) AS n_tokens FROM documents
 ),
 c AS (
     SELECT doc_id, lang, n_tokens,
@@ -127,7 +132,7 @@ def token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     within shards; the window algebra is identical.
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    n_tokens = F.size(F.split(F.trim("text"), r"\s+"))
+    n_tokens = F.size(ws_tokens())
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -155,10 +160,7 @@ CHUNK_STRIDE = 16
 @query(
     "docs_chunk_windows",
     oracle=f"""
-WITH t AS (
-    SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-    FROM documents
-),
+WITH t AS (SELECT doc_id, {ws_tokens_sql()} AS toks FROM documents),
 s AS (
     SELECT doc_id, toks,
            unnest(generate_series(0, len(toks) - 1, {CHUNK_STRIDE})) AS start
@@ -186,7 +188,7 @@ def docs_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any corpus size.
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    toks = F.split(F.trim("text"), r"\s+")
+    toks = ws_tokens()
     starts = F.expr(f"sequence(0, size(toks) - 1, {CHUNK_STRIDE})")
     chunk = F.expr(f"slice(toks, start + 1, {CHUNK_TOKENS})")
     return (
@@ -209,26 +211,60 @@ BENCH_MOD = 10
 CONTAMINATION_THRESHOLD = 0.5
 
 
+def _bench_shingles(spark: SparkSession, sf_dir: str) -> tuple:
+    """(sh, bench): all distinct shingles, and the benchmark stand-in's set."""
+    sh = _shingles_spark(load_table(spark, sf_dir, "documents", spread=True))
+    return sh, sh.where(F.col("doc_id") % BENCH_MOD == 0).select("shingle").distinct()
+
+
+def _overlap_report(corpus: DataFrame, hit: DataFrame, cols: tuple) -> DataFrame:
+    """Per ``corpus`` document: its shingle count, then its overlap count
+    ``c`` in ``hit``, their ratio and the threshold flag, named ``cols``."""
+    n_hit, ratio, flag = cols
+    tot = corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    frac = F.coalesce(F.col("c"), F.lit(0)).cast("double") / F.col("n")
+    return (
+        tot.join(hit, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.col("n").cast("bigint").alias("n_shingles"),
+            F.coalesce(F.col("c"), F.lit(0)).cast("bigint").alias(n_hit),
+            F.round(frac, 4).alias(ratio),
+            (frac >= CONTAMINATION_THRESHOLD).alias(flag),
+        )
+        .orderBy(F.col("doc_id").asc())
+    )
+
+
+def _overlap_report_sql(cols: tuple) -> str:
+    """The DuckDB twin of ``_overlap_report``, over CTEs corpus and hit."""
+    n_hit, ratio, flag = cols
+    return f"""tot AS (SELECT doc_id, COUNT(*) AS n FROM corpus GROUP BY doc_id)
+SELECT t.doc_id,
+       CAST(t.n AS BIGINT) AS n_shingles,
+       CAST(COALESCE(h.c, 0) AS BIGINT) AS {n_hit},
+       ROUND(CAST(COALESCE(h.c, 0) AS DOUBLE) / t.n, 4) AS {ratio},
+       CAST(COALESCE(h.c, 0) AS DOUBLE) / t.n >= {CONTAMINATION_THRESHOLD} AS {flag}
+FROM tot t LEFT JOIN hit h ON h.doc_id = t.doc_id
+ORDER BY t.doc_id ASC"""
+
+
+_CONTAMINATION_COLS = ("n_overlap", "contamination", "is_contaminated")
+_BLOOM_COLS = ("n_bloom_overlap", "contamination_est", "is_flagged")
+
+
 @query(
     "docs_contamination",
     oracle=f"""
 WITH sh AS ({_SHINGLES_SQL}),
 bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % {BENCH_MOD} = 0),
 corpus AS (SELECT * FROM sh WHERE doc_id % {BENCH_MOD} <> 0),
-tot AS (SELECT doc_id, COUNT(*) AS n FROM corpus GROUP BY doc_id),
 hit AS (
     SELECT c.doc_id, COUNT(*) AS c
     FROM corpus c JOIN bench b ON c.shingle = b.shingle
     GROUP BY c.doc_id
-)
-SELECT t.doc_id,
-       CAST(t.n AS BIGINT) AS n_shingles,
-       CAST(COALESCE(h.c, 0) AS BIGINT) AS n_overlap,
-       ROUND(CAST(COALESCE(h.c, 0) AS DOUBLE) / t.n, 4) AS contamination,
-       CAST(COALESCE(h.c, 0) AS DOUBLE) / t.n >= {CONTAMINATION_THRESHOLD}
-           AS is_contaminated
-FROM tot t LEFT JOIN hit h ON h.doc_id = t.doc_id
-ORDER BY t.doc_id ASC
+),
+{_overlap_report_sql(_CONTAMINATION_COLS)}
 """,
 )
 def docs_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,30 +277,14 @@ def docs_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the per-doc counts, no corpus×corpus term. Flagged docs are what a
     training pipeline drops before packing.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    sh = _shingles_spark(docs)
-    bench = (
-        sh.where(F.col("doc_id") % BENCH_MOD == 0).select("shingle").distinct()
-    )
+    sh, bench = _bench_shingles(spark, sf_dir)
     corpus = sh.where(F.col("doc_id") % BENCH_MOD != 0)
-    tot = corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     hit = (
         corpus.join(F.broadcast(bench), "shingle")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    frac = F.coalesce(F.col("c"), F.lit(0)).cast("double") / F.col("n")
-    return (
-        tot.join(hit, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("n").cast("bigint").alias("n_shingles"),
-            F.coalesce(F.col("c"), F.lit(0)).cast("bigint").alias("n_overlap"),
-            F.round(frac, 4).alias("contamination"),
-            (frac >= CONTAMINATION_THRESHOLD).alias("is_contaminated"),
-        )
-        .orderBy(F.col("doc_id").asc())
-    )
+    return _overlap_report(corpus, hit, _CONTAMINATION_COLS)
 
 
 # rebalancing: hash-bucket granularity for the per-language keep rate
@@ -322,11 +342,11 @@ def docs_lang_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_mixture_weights",
-    oracle="""
+    oracle=f"""
 WITH g AS (
     SELECT lang, source,
            COUNT(*) AS n_docs,
-           SUM(len(string_split_regex(trim(text), '\\s+'))) AS n_tokens
+           SUM(len({ws_tokens_sql()})) AS n_tokens
     FROM documents
     GROUP BY lang, source
 ),
@@ -360,9 +380,7 @@ def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.groupBy("lang", "source")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum(F.size(F.split(F.trim("text"), r"\s+")))
-            .cast("bigint")
-            .alias("n_tokens"),
+            F.sum(F.size(ws_tokens())).cast("bigint").alias("n_tokens"),
         )
     )
     tot = g.agg(
@@ -517,16 +535,8 @@ WITH sh AS ({_SHINGLES_SQL}),
 bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % {BENCH_MOD} = 0),
 corpus AS (SELECT * FROM sh WHERE doc_id % {BENCH_MOD} <> 0),
 {_bloom_candidates_sql("bench", "corpus")},
-tot AS (SELECT doc_id, COUNT(*) AS n FROM corpus GROUP BY doc_id),
-hit AS (SELECT doc_id, COUNT(*) AS c FROM cand GROUP BY doc_id)
-SELECT t.doc_id,
-       CAST(t.n AS BIGINT) AS n_shingles,
-       CAST(COALESCE(h.c, 0) AS BIGINT) AS n_bloom_overlap,
-       ROUND(CAST(COALESCE(h.c, 0) AS DOUBLE) / t.n, 4) AS contamination_est,
-       CAST(COALESCE(h.c, 0) AS DOUBLE) / t.n >= {CONTAMINATION_THRESHOLD}
-           AS is_flagged
-FROM tot t LEFT JOIN hit h ON h.doc_id = t.doc_id
-ORDER BY t.doc_id ASC
+hit AS (SELECT doc_id, COUNT(*) AS c FROM cand GROUP BY doc_id),
+{_overlap_report_sql(_BLOOM_COLS)}
 """,
 )
 def docs_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -552,27 +562,11 @@ def docs_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle) HAVING-k count and the per-doc rollup, which shuffle the
     match candidates only.
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    sh = _shingles_spark(docs)
-    bench = (
-        sh.where(F.col("doc_id") % BENCH_MOD == 0).select("shingle").distinct()
-    )
+    sh, bench = _bench_shingles(spark, sf_dir)
     corpus = sh.where(F.col("doc_id") % BENCH_MOD != 0)
     matched = _bloom_candidates(bench, corpus)
-    tot = corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     hit = matched.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
-    frac = F.coalesce(F.col("c"), F.lit(0)).cast("double") / F.col("n")
-    return (
-        tot.join(hit, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("n").cast("bigint").alias("n_shingles"),
-            F.coalesce(F.col("c"), F.lit(0)).cast("bigint").alias("n_bloom_overlap"),
-            F.round(frac, 4).alias("contamination_est"),
-            (frac >= CONTAMINATION_THRESHOLD).alias("is_flagged"),
-        )
-        .orderBy(F.col("doc_id").asc())
-    )
+    return _overlap_report(corpus, hit, _BLOOM_COLS)
 
 
 # --- interchange round-trips ----------------------------------------------
@@ -666,24 +660,10 @@ def jsonl_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- end-to-end corpus assembly -------------------------------------------
 
 
-from databricks_spark_sql_challenge1_spark.operators.textstats import (  # noqa: E402
-    QUALITY_MAX_PUNCT,
-    QUALITY_MIN_TOKENS,
-)
-
-
 @query(
     "corpus_dedup_pipeline",
     oracle="""
-WITH stats AS (
-    SELECT doc_id, lang,
-           {TEXT_FP} AS fp,
-           len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
-           CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
-               / length(text) AS punct_ratio,
-           text
-    FROM documents
-),
+WITH stats AS ({STATS}),
 canon AS (
     SELECT * FROM (
         SELECT stats.*, MIN(doc_id) OVER (PARTITION BY fp) AS cmin FROM stats
@@ -694,7 +674,7 @@ near_dropped AS (
 ),
 kept AS (
     SELECT c.* FROM canon c ANTI JOIN near_dropped d USING (doc_id)
-    WHERE c.n_tokens >= {MIN_TOKENS} AND c.punct_ratio <= {MAX_PUNCT}
+    WHERE {GATE}
 ),
 split_assigned AS (
     SELECT lang, n_tokens, {SPLIT} AS split
@@ -707,10 +687,9 @@ FROM split_assigned
 GROUP BY split, lang
 ORDER BY split ASC, lang ASC NULLS FIRST
 """.format(
-        TEXT_FP=TEXT_FINGERPRINT_SQL,
+        STATS=quality_stats_sql(("doc_id", "lang", "text")),
         NEAR_PAIRS=_simhash_pairs_sql("wide60", "canon"),
-        MIN_TOKENS=QUALITY_MIN_TOKENS,
-        MAX_PUNCT=QUALITY_MAX_PUNCT,
+        GATE=quality_gate_sql("c"),
         SPLIT=_SPLIT_SQL,
     ),
 )
@@ -730,26 +709,8 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components — `dedup_cluster_components`/`dedup_keep_best`
     remain the tools when cluster-level survivor policies are required.
     """
-    from databricks_spark_sql_challenge1_spark.operators.dedup import (
-        _distinct_token_md5,
-        _simhash_self_pairs,
-    )
-
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    toks = F.split(F.trim("text"), r"\s+")
-    stats = docs.select(
-        "doc_id",
-        "lang",
-        "text",
-        text_fingerprint().alias("fp"),
-        F.size(toks).alias("n_tokens"),
-        # try_divide: empty doc -> NULL ratio -> dropped by the quality
-        # gate like the oracle's x/0 (round-13 fuzz-parity find)
-        F.try_divide(
-            F.length(F.regexp_replace("text", r"[A-Za-z0-9\s]", "")).cast("double"),
-            F.length("text"),
-        ).alias("punct_ratio"),
-    )
+    stats = quality_stats(docs, ("doc_id", "lang", "text"))
     w = Window.partitionBy("fp")
     canon = (
         stats.withColumn("cmin", F.min("doc_id").over(w))
@@ -763,10 +724,7 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_2").alias("doc_id"))
         .distinct()
     )
-    kept = canon.join(near_dropped, "doc_id", "left_anti").where(
-        (F.col("n_tokens") >= QUALITY_MIN_TOKENS)
-        & (F.col("punct_ratio") <= QUALITY_MAX_PUNCT)
-    )
+    kept = canon.join(near_dropped, "doc_id", "left_anti").where(quality_gate())
     return (
         kept.select(
             _split(_doc_bucket(SPLIT_BUCKETS)).alias("split"), "lang", "n_tokens"
@@ -794,8 +752,7 @@ TEMPERATURE_ALPHA = 0.5
     "corpus_temperature_mixture",
     oracle=f"""
 WITH g AS (
-    SELECT lang,
-           SUM(len(string_split_regex(trim(text), '\\s+'))) AS n_tokens
+    SELECT lang, SUM(len({ws_tokens_sql()})) AS n_tokens
     FROM documents GROUP BY lang
 ),
 tot AS (SELECT SUM(n_tokens) AS total_tokens FROM g),
@@ -831,9 +788,7 @@ def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
     g = docs.groupBy("lang").agg(
-        F.sum(F.size(F.split(F.trim("text"), r"\s+")))
-        .cast("bigint")
-        .alias("n_tokens")
+        F.sum(F.size(ws_tokens())).cast("bigint").alias("n_tokens")
     )
     tot = g.agg(F.sum("n_tokens").alias("total_tokens"))
     p = g.crossJoin(F.broadcast(tot)).withColumn(
@@ -988,17 +943,7 @@ DSIR_TARGET_LANG = "en"
 @query(
     "docs_dsir_weights",
     oracle=f"""
-WITH toks AS (
-    SELECT doc_id, lang,
-           string_split_regex(lower(trim(text)), '\\s+') AS t
-    FROM documents
-),
-bg AS (
-    SELECT doc_id, lang,
-           unnest(list_transform(generate_series(1, len(t) - 1),
-                                 i -> t[i] || ' ' || t[i + 1])) AS bigram
-    FROM toks WHERE len(t) >= 2
-),
+WITH bg AS ({ngrams_sql(2, "bigram", ("doc_id", "lang"), lower=True)}),
 tb AS (
     SELECT doc_id, lang,
            {hex_int_sql("md5(bigram)", 1, 8)} % {DSIR_BUCKETS} AS bucket
@@ -1055,22 +1000,7 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     floating-point ever crosses a shuffle boundary.
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    toks = docs.select(
-        "doc_id", "lang", F.split(F.lower(F.trim("text")), r"\s+").alias("t")
-    )
-    bg = (
-        toks.where(F.size("t") >= 2)
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1),"
-                    " i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"
-                )
-            ).alias("bigram"),
-        )
-    )
+    bg = ngrams(docs, 2, "bigram", ("doc_id", "lang"), lower=True)
     tb = bg.select(
         "doc_id",
         "lang",
@@ -1190,11 +1120,7 @@ def docs_contamination_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     candidate relation joins against, and each daily batch pays
     O(batch), not O(corpus).
     """
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    sh = _shingles_spark(docs)
-    bench = (
-        sh.where(F.col("doc_id") % BENCH_MOD == 0).select("shingle").distinct()
-    )
+    sh, bench = _bench_shingles(spark, sf_dir)
     batch = sh.where(F.col("doc_id") % BENCH_MOD == CONTAM_BATCH_RESIDUE)
     cand = _bloom_candidates(bench, batch)
     exact = (

@@ -18,6 +18,7 @@ Alignment rules (enforced by convention in every registered pair):
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +33,7 @@ def query(name: str, oracle: str | None = None):
     """Decorator: register a query and optionally its DuckDB oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
+        fill_doc(fn)
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle.strip()
@@ -41,10 +43,16 @@ def query(name: str, oracle: str | None = None):
 
 
 def fill_doc(fn, **values) -> None:
-    """Fill the ``{name}`` fields of ``fn``'s docstring from ``values``.
-    A no-op when docstrings are stripped (``python -OO``)."""
+    """Fill the ``{name}`` fields of ``fn``'s docstring from ``values``,
+    then from the upper-case constants its module has defined so far;
+    ``query`` calls it on every registered function. Other text, and a
+    docstring stripped by ``python -OO``, is left as is."""
+    fields = {k: v for k, v in fn.__globals__.items() if k.lstrip("_").isupper()}
+    fields.update(values)
     if fn.__doc__:
-        fn.__doc__ = fn.__doc__.format(**values)
+        fn.__doc__ = re.sub(
+            r"\{(\w+)\}", lambda m: str(fields.get(m[1], m[0])), fn.__doc__
+        )
 
 
 # The grading driver verifies only the FIRST 50 entries of ``queries()``
@@ -74,6 +82,9 @@ def fill_doc(fn, **values) -> None:
 # first). The one portable-hash toolkit (functions/hashing.py) moved no
 # name: every registered name keeps its normalized optimized plan and its
 # oracle rows, so it heads nothing.
+#   T. the 2 names whose plan changed with the one text toolkit
+#      (functions/text.py): docs_dsir_weights (bigram now array_join(slice))
+#      and docs_substring_dedup (token array renamed ``tokens``).
 #   0. the 6 similarity names whose code now runs on the one ANN toolkit
 #      in operators/similarity.py (one nearest-centroid assignment, one
 #      top-k cut, one PQ encoder, one squared L2) and that the window did
@@ -96,16 +107,20 @@ def fill_doc(fn, **values) -> None:
 #      for; one memory-sink drain, one scratch dir).
 #   4. the 9 names changed in r18/r19 whose post-change rows never landed
 #      (ROADMAP carry-over, VERDICT r19 #1).
-#   5. the oldest evidence: 4 of the remaining latest-r16 names (heads
+#   5. the oldest evidence: 2 of the remaining latest-r16 names (heads
 #      added this round displaced dedup_semantic_ivf,
 #      distinct_orders_kmv_rollup, docs_bm25_topk, docs_contamination_bloom,
 #      cube_order_summary, customer_rfm_segments_approx,
 #      customer_value_deciles, dashboard_day_assembly,
-#      dedup_embedding_cosine and dedup_ngram_methods into NEXT_WINDOW).
+#      dedup_embedding_cosine, dedup_ngram_methods, corpus_mixture_weights
+#      and corpus_privacy_pipeline into NEXT_WINDOW).
 # 97 oracle-backed names carry r17-or-older evidence against a 50-row
 # window, so the age gate stays red until CORRECTNESS_r20.json lands; the
 # rest go in NEXT_WINDOW, oldest first, as far as its 50 rows reach.
 DRIVER_PRIORITY: tuple[str, ...] = (
+    # T: changed this round (one text toolkit in functions/text.py)
+    "docs_dsir_weights",
+    "docs_substring_dedup",
     # 0: changed this round (one ANN toolkit in similarity.py)
     "similarity_topk",
     "dedup_semantic_ivf",
@@ -160,8 +175,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # 5: latest-r16 evidence
     "corpus_bpe_encode",
     "corpus_bpe_merges",
-    "corpus_mixture_weights",
-    "corpus_privacy_pipeline",
     # --- window boundary: 50 names above (tests/test_registry_order.py) ---
 )
 
@@ -196,7 +209,7 @@ ROWS_ONLY_STAND_INS: dict[str, str] = {
 # Committed round-21 window (the rotation the NEXT round starts from; the
 # phase-aware age gate uses this once CORRECTNESS_r20.json lands): the
 # stale oracle-backed names the r20 window above leaves out, oldest
-# evidence first — the 36 remaining latest-r16 names, then 14 of the 23
+# evidence first — the 37 remaining latest-r16 names, then 13 of the 22
 # latest-r17 names the r20 window does not hold. Fifty rows cannot hold
 # all 59: monthly_order_trend_lag, orders_incremental_merge,
 # orders_no_price, pivot_status_by_priority, price_percentiles,
@@ -205,6 +218,8 @@ ROWS_ONLY_STAND_INS: dict[str, str] = {
 # those nine until a window takes them.
 NEXT_WINDOW: tuple[str, ...] = (
     # latest-r16 evidence
+    "corpus_mixture_weights",
+    "corpus_privacy_pipeline",
     "cube_order_summary",
     "customer_rfm_segments_approx",
     "customer_value_deciles",
@@ -214,7 +229,6 @@ NEXT_WINDOW: tuple[str, ...] = (
     "distinct_orders_kmv_rollup",
     "docs_bm25_topk",
     "docs_contamination_bloom",
-    "docs_dsir_weights",
     "docs_perplexity_buckets",
     "docs_pii_redact",
     "docs_quality_classifier",
@@ -251,7 +265,6 @@ NEXT_WINDOW: tuple[str, ...] = (
     "dedup_minhash_portable",
     "doc_fingerprint_methods",
     "docs_contamination_incremental",
-    "docs_substring_dedup",
     "embedding_centroids",
     "embedding_profile",
     "events_json_nested",

@@ -37,6 +37,7 @@ from databricks_spark_sql_challenge1_spark.catalog import (
     table_path,
     table_schema,
 )
+from databricks_spark_sql_challenge1_spark.functions.text import ws_tokens
 from databricks_spark_sql_challenge1_spark.registry import query
 
 _SCRATCH_BASE = os.path.join(
@@ -385,7 +386,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow32 signed per row: the batch token hash and bit algebra, folded
     # over each doc's distinct-token hash array by aggregate()
     n_bits = 4 * SIMHASH_LAYOUTS["narrow32"][0][1]
-    toks = F.array_distinct(F.split(F.trim("text"), r"\s+"))
+    toks = F.array_distinct(ws_tokens())
     inc_sig = (
         stream.where(F.col("doc_id") % INCREMENTAL_MOD == 0)
         .select(

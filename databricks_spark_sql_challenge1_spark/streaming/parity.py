@@ -472,6 +472,3 @@ def streaming_parity_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("window_start").asc())
     )
-
-
-fill_doc(streaming_parity_lateness, LATE_MOD=LATE_MOD, LATE_RESIDUE=LATE_RESIDUE)

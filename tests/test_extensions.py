@@ -1442,6 +1442,31 @@ def test_one_ann_toolkit():
     assert hooks == set()
 
 
+def test_public_docstrings_are_filled():
+    """No public function under operators/ or streaming/ shows a raw
+    ``{CONSTANT}`` field in its docstring: each template is filled by
+    ``registry.fill_doc``, so ``help()`` and generated catalogs print the
+    values (no Spark session involved)."""
+    import importlib
+    import inspect
+    import pkgutil
+    import re
+
+    import databricks_spark_sql_challenge1_spark.operators as operators
+    import databricks_spark_sql_challenge1_spark.streaming as streaming
+
+    raw = set()
+    for pkg in (operators, streaming):
+        for info in pkgutil.iter_modules(pkg.__path__):
+            mod = importlib.import_module(f"{pkg.__name__}.{info.name}")
+            for name, fn in inspect.getmembers(mod, inspect.isfunction):
+                if fn.__module__ != mod.__name__ or name.startswith("_"):
+                    continue
+                if re.search(r"\{[A-Z][A-Z0-9_]*\}", fn.__doc__ or ""):
+                    raw.add(f"{mod.__name__}.{name}")
+    assert raw == set()
+
+
 def test_package_imports_under_python_OO():
     """``python -OO`` strips docstrings; every docstring fill goes through
     ``registry.fill_doc``, which skips a stripped one, so the package

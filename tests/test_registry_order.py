@@ -25,6 +25,10 @@ DRIVER_WINDOW = 50
 # was accidentally left out of the window). Update this literal whenever
 # a query is added or its output/oracle changes.
 MUST_VERIFY = {
+    # changed round 20 by the one text toolkit in functions/text.py (the
+    # DSIR bigram builder, the substring-dedup token array's name)
+    "docs_dsir_weights",
+    "docs_substring_dedup",
     # changed round 20 by the one ANN toolkit in operators/similarity.py
     # (one nearest-centroid assignment, top-k cut, PQ encoder, squared L2)
     "similarity_topk",
