@@ -6,7 +6,7 @@ of the reference notebook's cell flow for a user switching over.
     eng = Engine.local()                       # or Engine(spark, sf_dir)
     eng.query("top_abandoned_products").show()
     eng.run_pipeline("/tmp/work")              # full notebook-flow analog
-    eng.names()                                # all 66 registered queries
+    eng.names()                                # every registered query name
 """
 
 from __future__ import annotations

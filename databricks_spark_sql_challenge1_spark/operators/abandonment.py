@@ -104,9 +104,7 @@ def clean_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "top_abandoned_products",
-    oracle="""
+TOP_ABANDONED_PRODUCTS_SQL = """
 SELECT l.l_partkey AS partkey,
        COUNT(DISTINCT o.o_orderkey) AS total_abandoned_orders
 FROM lineitem l
@@ -115,8 +113,10 @@ WHERE o.o_orderstatus = 'O'
 GROUP BY l.l_partkey
 ORDER BY total_abandoned_orders DESC, partkey ASC NULLS FIRST
 LIMIT 100
-""",
-)
+"""
+
+
+@query("top_abandoned_products", oracle=TOP_ABANDONED_PRODUCTS_SQL)
 def top_abandoned_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ref #5 (``py:180-188``), the flagship: RIGHT JOIN + IS-NULL-analog
     filter + groupBy + COUNT(DISTINCT) + top-k.
@@ -142,19 +142,7 @@ def top_abandoned_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "top_abandoned_products_salted",
-    oracle="""
-SELECT l.l_partkey AS partkey,
-       COUNT(DISTINCT o.o_orderkey) AS total_abandoned_orders
-FROM lineitem l
-RIGHT JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE o.o_orderstatus = 'O'
-GROUP BY l.l_partkey
-ORDER BY total_abandoned_orders DESC, partkey ASC NULLS FIRST
-LIMIT 100
-""",
-)
+@query("top_abandoned_products_salted", oracle=TOP_ABANDONED_PRODUCTS_SQL)
 def top_abandoned_products_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship through the explicit skew-salted aggregation path.
 

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.functions.cents import cents, cents_sql
 from databricks_spark_sql_challenge1_spark.functions.hashing import (
     hex_int,
     hex_int_sql,
@@ -417,12 +418,12 @@ def cube_order_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_unpivot_metrics",
-    oracle="""
+    oracle=f"""
 WITH s AS (
     SELECT o_orderstatus,
            CAST(COUNT(*) AS DOUBLE) AS n_orders,
            ROUND(CAST(SUM(o_totalprice) AS DOUBLE), 2) AS total_value,
-           ROUND(CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+           ROUND(CAST(SUM({cents_sql("o_totalprice")}) AS DOUBLE)
                  / COUNT(*)) / 100.0 AS avg_value
     FROM orders GROUP BY o_orderstatus
 )
@@ -454,13 +455,9 @@ def orders_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = orders.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("double").alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("total_value"),
-        (
-            F.round(
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-                / F.count(F.lit(1))
-            )
-            / 100.0
-        ).alias("avg_value"),
+        (F.round(F.sum(cents("o_totalprice")) / F.count(F.lit(1))) / 100.0).alias(
+            "avg_value"
+        ),
     )
     return (
         wide.select(
@@ -634,7 +631,7 @@ WITH m AS (
                          (SELECT MAX(o_orderdate) FROM orders)) AS BIGINT)
                AS recency_days,
            COUNT(*) AS frequency,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(SUM({cents_sql("o_totalprice")}) AS BIGINT)
                AS monetary_cents
     FROM orders GROUP BY o_custkey
 )
@@ -678,9 +675,7 @@ def customer_rfm_segments_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max("o_orderdate").alias("last_order"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("monetary_cents"),
+            F.sum(cents("o_totalprice")).cast("bigint").alias("monetary_cents"),
         )
         .crossJoin(F.broadcast(anchor))
         .select(
@@ -892,7 +887,7 @@ _SCD2_FULL_SQL = f"""
 WITH monthly AS (
     SELECT o_custkey AS c_custkey,
            CAST(date_trunc('month', o_orderdate) AS DATE) AS m,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(SUM({cents_sql("o_totalprice")}) AS BIGINT)
                AS spend_cents
     FROM orders
     WHERE o_custkey % {SCD2_CUST_MOD} = 0
@@ -941,9 +936,7 @@ def _scd2_monthly(orders: DataFrame) -> DataFrame:
             F.trunc("o_orderdate", "month").alias("m"),
         )
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("spend_cents")
+            F.sum(cents("o_totalprice")).cast("bigint").alias("spend_cents")
         )
         .withColumn("tier", F.expr(_SCD2_TIER_SQL))
     )

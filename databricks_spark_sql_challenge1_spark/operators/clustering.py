@@ -395,6 +395,22 @@ def pagerank(
     return ranks
 
 
+def _pagerank_rounds_sql() -> str:
+    """The oracle's CTEs ``r1`` .. ``r{PAGERANK_ITERS}``, one synchronous
+    round each over ``edges``/``deg``/``n`` from ``r0``, with the same
+    teleport and damping doubles as ``pagerank``."""
+    return ",\n".join(
+        f"""r{i} AS (
+    SELECT e.dst AS id,
+           CAST({1.0 - PAGERANK_DAMPING!r} AS DOUBLE) / (SELECT n FROM n)
+           + CAST({PAGERANK_DAMPING!r} AS DOUBLE) * SUM(p.r / d.deg) AS r
+    FROM edges e JOIN r{i - 1} p ON p.id = e.src JOIN deg d ON d.src = e.src
+    GROUP BY e.dst
+)"""
+        for i in range(1, PAGERANK_ITERS + 1)
+    )
+
+
 @query(
     "copurchase_pagerank",
     oracle=f"""
@@ -407,51 +423,17 @@ edges AS (
 deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
 n AS (SELECT COUNT(*) AS n FROM deg),
 r0 AS (SELECT src AS id, CAST(1.0 AS DOUBLE) / (SELECT n FROM n) AS r FROM deg),
-r1 AS (
-    SELECT e.dst AS id,
-           CAST(0.15 AS DOUBLE) / (SELECT n FROM n)
-           + CAST(0.85 AS DOUBLE) * SUM(p.r / d.deg) AS r
-    FROM edges e JOIN r0 p ON p.id = e.src JOIN deg d ON d.src = e.src
-    GROUP BY e.dst
-),
-r2 AS (
-    SELECT e.dst AS id,
-           CAST(0.15 AS DOUBLE) / (SELECT n FROM n)
-           + CAST(0.85 AS DOUBLE) * SUM(p.r / d.deg) AS r
-    FROM edges e JOIN r1 p ON p.id = e.src JOIN deg d ON d.src = e.src
-    GROUP BY e.dst
-),
-r3 AS (
-    SELECT e.dst AS id,
-           CAST(0.15 AS DOUBLE) / (SELECT n FROM n)
-           + CAST(0.85 AS DOUBLE) * SUM(p.r / d.deg) AS r
-    FROM edges e JOIN r2 p ON p.id = e.src JOIN deg d ON d.src = e.src
-    GROUP BY e.dst
-),
-r4 AS (
-    SELECT e.dst AS id,
-           CAST(0.15 AS DOUBLE) / (SELECT n FROM n)
-           + CAST(0.85 AS DOUBLE) * SUM(p.r / d.deg) AS r
-    FROM edges e JOIN r3 p ON p.id = e.src JOIN deg d ON d.src = e.src
-    GROUP BY e.dst
-),
-r5 AS (
-    SELECT e.dst AS id,
-           CAST(0.15 AS DOUBLE) / (SELECT n FROM n)
-           + CAST(0.85 AS DOUBLE) * SUM(p.r / d.deg) AS r
-    FROM edges e JOIN r4 p ON p.id = e.src JOIN deg d ON d.src = e.src
-    GROUP BY e.dst
-)
-SELECT r5.id AS partkey,
+{_pagerank_rounds_sql()}
+SELECT r.id AS partkey,
        CAST(d.deg AS BIGINT) AS degree,
-       ROUND(r5.r, 5) AS pagerank
-FROM r5 JOIN deg d ON d.src = r5.id
+       ROUND(r.r, 5) AS pagerank
+FROM r{PAGERANK_ITERS} r JOIN deg d ON d.src = r.id
 ORDER BY partkey ASC
 """,
 )
 def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product influence in the co-abandonment graph: PAGERANK_ITERS
-    synchronous PageRank iterations (damping 0.85, uniform start) over the
+    synchronous PageRank iterations (damping {PAGERANK_DAMPING}, uniform start) over the
     top-100 pair graph — the iterative-algorithm companion to
     ``copurchase_components``'s label propagation.
 
@@ -461,8 +443,9 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops, chained lazily across the fixed PAGERANK_ITERS rounds (plan depth
     bounded by the constant; see ``pagerank``); on a giant graph the
     same loop runs unchanged with edges partitioned by src. The oracle
-    unrolls the 5 iterations as chained CTEs (recursive CTEs cannot
-    aggregate per round), pinning every intermediate against DuckDB.
+    unrolls the {PAGERANK_ITERS} iterations as chained CTEs (recursive
+    CTEs cannot aggregate per round), pinning every intermediate against
+    DuckDB.
     """
     from databricks_spark_sql_challenge1_spark.operators.abandonment import (
         top_abandoned_pairs,

@@ -24,58 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from databricks_spark_sql_challenge1_spark.functions.cents import cents, sum_value_sql
 from databricks_spark_sql_challenge1_spark.operators import marts
-from databricks_spark_sql_challenge1_spark.registry import query
+from databricks_spark_sql_challenge1_spark.registry import QueryFn, query
 from databricks_spark_sql_challenge1_spark.sources.ingest import save_table
 
-_MONTH_MART_SQL = (
-    """
-WITH anchor AS (SELECT max(o_orderdate) AS t FROM orders),
-"""
-    + marts._VIEWS_SQL
-    + """
-SELECT concat(CAST(year(cal.calendar_date) AS VARCHAR), '-',
-              lpad(CAST(month(cal.calendar_date) AS VARCHAR), 2, '0')) AS year_month,
-"""
-    + marts._METRICS_SQL
-    + """
-FROM cal
-LEFT JOIN ca ON cal.calendar_date = ca.d
-LEFT JOIN ia ON ca.d = ia.d
-WHERE cal.calendar_date >= (SELECT CAST(date_trunc('month', t - INTERVAL 11 MONTH) AS DATE) FROM anchor)
-  AND cal.calendar_date <= (SELECT CAST(t AS DATE) FROM anchor)
-GROUP BY year_month
-"""
-)
 
-_DAY_MART_SQL = (
-    """
-WITH anchor AS (SELECT max(o_orderdate) AS t FROM orders),
-"""
-    + marts._VIEWS_SQL
-    + """
-SELECT cal.calendar_date AS date,
-"""
-    + marts._METRICS_SQL
-    + """
-FROM cal
-LEFT JOIN ca ON cal.calendar_date = ca.d
-LEFT JOIN ia ON ca.d = ia.d
-WHERE cal.calendar_date >= (SELECT CAST(date_trunc('month', t - INTERVAL 2 MONTH) AS DATE) FROM anchor)
-  AND cal.calendar_date <= (SELECT CAST(t AS DATE) FROM anchor)
-GROUP BY cal.calendar_date
-"""
-)
-
-_METRIC_CASTS = {
-    "total_abandoned_orders": "CAST(SUM(total_abandoned_orders) AS BIGINT)",
-    "total_value_orders": "ROUND(CAST(SUM(total_value_orders) AS DOUBLE), 2)",
-    "total_abandoned_items": "ROUND(CAST(SUM(total_abandoned_items) AS DOUBLE), 2)",
-    "total_value_items": "ROUND(CAST(SUM(total_value_items) AS DOUBLE), 2)",
-}
-
-
-def _widget(mart_fn, mart_sql: str, key: str, metric: str):
+def _widget(mart_fn, key: str, metric: str):
     """Build one widget: WITH q AS (mart) SELECT key, SUM(metric) GROUP BY key."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,39 +44,34 @@ def _widget(mart_fn, mart_sql: str, key: str, metric: str):
             .orderBy(F.col(key).asc())
         )
 
-    oracle = f"""
-WITH q AS ({mart_sql})
-SELECT {key}, {_METRIC_CASTS[metric]} AS {metric}
-FROM q GROUP BY {key} ORDER BY {key} ASC
-"""
-    return fn, oracle
+    return fn
 
 
 _WIDGET_SPECS = [
-    ("widget_day_value_items", marts.abandonment_by_day, _DAY_MART_SQL, "date", "total_value_items"),       # dbc:cmd3
-    ("widget_day_orders", marts.abandonment_by_day, _DAY_MART_SQL, "date", "total_abandoned_orders"),       # dbc:cmd4
-    ("widget_day_items", marts.abandonment_by_day, _DAY_MART_SQL, "date", "total_abandoned_items"),         # dbc:cmd5
-    ("widget_day_value_orders", marts.abandonment_by_day, _DAY_MART_SQL, "date", "total_value_orders"),     # dbc:cmd36
-    ("widget_month_value_items", marts.abandonment_by_month, _MONTH_MART_SQL, "year_month", "total_value_items"),    # dbc:cmd8
-    ("widget_month_orders", marts.abandonment_by_month, _MONTH_MART_SQL, "year_month", "total_abandoned_orders"),    # dbc:cmd9
-    ("widget_month_items", marts.abandonment_by_month, _MONTH_MART_SQL, "year_month", "total_abandoned_items"),      # dbc:cmd10
-    ("widget_month_value_orders", marts.abandonment_by_month, _MONTH_MART_SQL, "year_month", "total_value_orders"),  # dbc:cmd35
+    ("widget_day_value_items", marts.abandonment_by_day, "date", "total_value_items"),              # dbc:cmd3
+    ("widget_day_orders", marts.abandonment_by_day, "date", "total_abandoned_orders"),              # dbc:cmd4
+    ("widget_day_items", marts.abandonment_by_day, "date", "total_abandoned_items"),                # dbc:cmd5
+    ("widget_day_value_orders", marts.abandonment_by_day, "date", "total_value_orders"),            # dbc:cmd36
+    ("widget_month_value_items", marts.abandonment_by_month, "year_month", "total_value_items"),    # dbc:cmd8
+    ("widget_month_orders", marts.abandonment_by_month, "year_month", "total_abandoned_orders"),    # dbc:cmd9
+    ("widget_month_items", marts.abandonment_by_month, "year_month", "total_abandoned_items"),      # dbc:cmd10
+    ("widget_month_value_orders", marts.abandonment_by_month, "year_month", "total_value_orders"),  # dbc:cmd35
 ]
 
-# Unregistered per-widget callables (name -> (fn, oracle)): the composition
-# helpers and tests keep the per-widget granularity; the driver surface is
-# the two assemblies below.
-WIDGETS: dict[str, tuple] = {}
-for _name, _mart_fn, _sql, _key, _metric in _WIDGET_SPECS:
-    _fn, _oracle = _widget(_mart_fn, _sql, _key, _metric)
+# Unregistered per-widget callables (name -> fn): the composition helpers
+# and tests keep the per-widget granularity; the driver surface is the two
+# assemblies below.
+WIDGETS: dict[str, QueryFn] = {}
+for _name, _mart_fn, _key, _metric in _WIDGET_SPECS:
+    _fn = _widget(_mart_fn, _key, _metric)
     _fn.__name__ = _name
-    WIDGETS[_name] = (_fn, _oracle)
+    WIDGETS[_name] = _fn
 
 
 # --- consolidated dashboard assemblies (round-10 capacity policy) ----------
 
 # Widget metric -> emitted value expression over a mart row. The mart
-# already ROUNDs monetary sums to 2 decimals (marts._METRICS_SQL) and the
+# already ROUNDs monetary sums to 2 decimals (marts._mart_sql) and the
 # marts are keyed uniquely (one row per date / year_month), so the widget
 # re-aggregation is the identity on values; the assembly unpivots the mart
 # directly. metric_value is DOUBLE on both sides (counts are exact in
@@ -158,7 +108,7 @@ def _union_widget_sql(pairs, bucket_expr: str) -> str:
 @query(
     "dashboard_day_assembly",
     oracle=f"""
-WITH q AS ({_DAY_MART_SQL}),
+WITH q AS ({marts._mart_sql("day")}),
 peak AS (
     SELECT CAST(date AS VARCHAR) AS bucket, total_abandoned_orders,
            total_value_orders
@@ -240,22 +190,16 @@ def dashboard_day_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dashboard_month_assembly",
     oracle=f"""
-WITH q AS ({_MONTH_MART_SQL})
+WITH q AS ({marts._mart_sql("month")})
 {_union_widget_sql(_MONTH_WIDGET_METRICS, "year_month")}
 UNION ALL
 SELECT 'widget_month_totals' AS widget, mname AS bucket, metric_value
 FROM (
     SELECT CAST(CAST(SUM(total_abandoned_orders) AS BIGINT) AS DOUBLE)
                AS total_abandoned_orders,
-           CAST(SUM(CAST(ROUND(total_value_orders * 100) AS BIGINT))
-                AS BIGINT) / 100.0
-               AS total_value_orders,
-           CAST(SUM(CAST(ROUND(total_abandoned_items * 100) AS BIGINT))
-                AS BIGINT) / 100.0
-               AS total_abandoned_items,
-           CAST(SUM(CAST(ROUND(total_value_items * 100) AS BIGINT))
-                AS BIGINT) / 100.0
-               AS total_value_items
+           {sum_value_sql("total_value_orders")} AS total_value_orders,
+           {sum_value_sql("total_abandoned_items")} AS total_abandoned_items,
+           {sum_value_sql("total_value_items")} AS total_value_items
     FROM q
 ) UNPIVOT (metric_value FOR mname IN (
     total_abandoned_orders, total_value_orders,
@@ -295,10 +239,7 @@ def dashboard_month_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # last-ulp .xx5-boundary difference in Spark-vs-DuckDB summation order
     # can never flip a cent (the r7 gapfill hazard class at n=12).
     def _cents_total(col: str):
-        return (
-            F.sum(F.round(F.col(col) * 100).cast("bigint")).over(w_all)
-            / 100.0
-        )
+        return F.sum(cents(col)).over(w_all) / 100.0
 
     tot_cols = [
         F.sum("total_abandoned_orders")
@@ -349,7 +290,7 @@ def materialize_marts(spark: SparkSession, sf_dir: str, database: str = "marts")
 def dashboard_by_day(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Dashboard 'Abandonment analytics by day' (dbc:dashboards[0], 4 widgets)."""
     return {
-        n: WIDGETS[n][0](spark, sf_dir)
+        n: WIDGETS[n](spark, sf_dir)
         for n in ("widget_day_value_items", "widget_day_orders",
                   "widget_day_items", "widget_day_value_orders")
     }
@@ -358,7 +299,7 @@ def dashboard_by_day(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 def dashboard_by_month(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Dashboard 'Abandonment analytics by month' (dbc:dashboards[1])."""
     return {
-        n: WIDGETS[n][0](spark, sf_dir)
+        n: WIDGETS[n](spark, sf_dir)
         for n in ("widget_month_value_items", "widget_month_orders",
                   "widget_month_items", "widget_month_value_orders")
     }

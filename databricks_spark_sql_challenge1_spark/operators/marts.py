@@ -93,15 +93,29 @@ def _joined_calendar(spark, sf_dir, months_back: int) -> DataFrame:
     ).join(items_ab, carts_ab.d == items_ab.d, "left")
 
 
-_METRICS_SQL = """
-       CAST(COALESCE(SUM(ca.daily_orders), 0) AS BIGINT) AS total_abandoned_orders,
-       ROUND(CAST(COALESCE(SUM(ca.daily_value_orders), 0) AS DOUBLE), 2) AS total_value_orders,
-       ROUND(CAST(COALESCE(SUM(ia.daily_items), 0) AS DOUBLE), 2) AS total_abandoned_items,
-       ROUND(CAST(COALESCE(SUM(ia.daily_value_items), 0) AS DOUBLE), 2) AS total_value_items
-"""
+# grain -> (months before the anchor's month the window opens, mart key,
+# GROUP BY): ref py:449-474 is the last 12 months by year_month, ref
+# py:490-515 the last 3 months by calendar date.
+_GRAINS = {
+    "month": (
+        11,
+        """concat(CAST(year(cal.calendar_date) AS VARCHAR), '-',
+              lpad(CAST(month(cal.calendar_date) AS VARCHAR), 2, '0')) AS year_month""",
+        "year_month",
+    ),
+    "day": (2, "cal.calendar_date AS date", "cal.calendar_date"),
+}
 
-_VIEWS_SQL = """
-cal AS ({cal}),
+
+def _mart_sql(grain: str) -> str:
+    """The DuckDB month or day mart, unordered: the calendar LEFT JOIN the
+    two daily views (the second on the first's date, the J8 quirk), each
+    metric COALESCEd to 0 and the money sums ROUNDed to 2 decimals. The
+    mart oracles order it; the dashboard oracles select from it."""
+    months_back, key, group = _GRAINS[grain]
+    return f"""
+WITH anchor AS (SELECT max(o_orderdate) AS t FROM orders),
+cal AS ({_CAL_SQL}),
 ca AS (
     SELECT CAST(o_orderdate AS DATE) AS d,
            COUNT(DISTINCT o_orderkey) AS daily_orders,
@@ -115,7 +129,18 @@ ia AS (
     FROM lineitem l RIGHT JOIN orders o ON l.l_orderkey = o.o_orderkey
     WHERE o.o_orderstatus = 'O' GROUP BY 1
 )
-""".format(cal=_CAL_SQL)
+SELECT {key},
+       CAST(COALESCE(SUM(ca.daily_orders), 0) AS BIGINT) AS total_abandoned_orders,
+       ROUND(CAST(COALESCE(SUM(ca.daily_value_orders), 0) AS DOUBLE), 2) AS total_value_orders,
+       ROUND(CAST(COALESCE(SUM(ia.daily_items), 0) AS DOUBLE), 2) AS total_abandoned_items,
+       ROUND(CAST(COALESCE(SUM(ia.daily_value_items), 0) AS DOUBLE), 2) AS total_value_items
+FROM cal
+LEFT JOIN ca ON cal.calendar_date = ca.d
+LEFT JOIN ia ON ca.d = ia.d
+WHERE cal.calendar_date >= (SELECT CAST(date_trunc('month', t - INTERVAL {months_back} MONTH) AS DATE) FROM anchor)
+  AND cal.calendar_date <= (SELECT CAST(t AS DATE) FROM anchor)
+GROUP BY {group}
+"""
 
 
 def _mart_metrics(df: DataFrame) -> list:
@@ -133,30 +158,10 @@ def _mart_metrics(df: DataFrame) -> list:
     ]
 
 
-@query(
-    "abandonment_by_month",
-    oracle="""
-WITH anchor AS (SELECT max(o_orderdate) AS t FROM orders),
-"""
-    + _VIEWS_SQL
-    + """
-SELECT concat(CAST(year(cal.calendar_date) AS VARCHAR), '-',
-              lpad(CAST(month(cal.calendar_date) AS VARCHAR), 2, '0')) AS year_month,
-"""
-    + _METRICS_SQL
-    + """
-FROM cal
-LEFT JOIN ca ON cal.calendar_date = ca.d
-LEFT JOIN ia ON ca.d = ia.d
-WHERE cal.calendar_date >= (SELECT CAST(date_trunc('month', t - INTERVAL 11 MONTH) AS DATE) FROM anchor)
-  AND cal.calendar_date <= (SELECT CAST(t AS DATE) FROM anchor)
-GROUP BY year_month
-ORDER BY year_month DESC
-""",
-)
+@query("abandonment_by_month", oracle=_mart_sql("month") + "ORDER BY year_month DESC")
 def abandonment_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ref #13 monthly mart (``py:449-474``): last 12 months by year_month."""
-    joined = _joined_calendar(spark, sf_dir, months_back=11)
+    joined = _joined_calendar(spark, sf_dir, _GRAINS["month"][0])
     year_month = F.concat(
         F.year("calendar_date").cast("string"),
         F.lit("-"),
@@ -169,31 +174,12 @@ def abandonment_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "abandonment_by_day",
-    oracle="""
-WITH anchor AS (SELECT max(o_orderdate) AS t FROM orders),
-"""
-    + _VIEWS_SQL
-    + """
-SELECT cal.calendar_date AS date,
-"""
-    + _METRICS_SQL
-    + """
-FROM cal
-LEFT JOIN ca ON cal.calendar_date = ca.d
-LEFT JOIN ia ON ca.d = ia.d
-WHERE cal.calendar_date >= (SELECT CAST(date_trunc('month', t - INTERVAL 2 MONTH) AS DATE) FROM anchor)
-  AND cal.calendar_date <= (SELECT CAST(t AS DATE) FROM anchor)
-GROUP BY cal.calendar_date
-ORDER BY date DESC
-""",
-)
+@query("abandonment_by_day", oracle=_mart_sql("day") + "ORDER BY date DESC")
 def abandonment_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ref #13 daily mart (``py:490-515``): last 3 months by calendar date
     (every calendar day appears, zero-filled — the reference's golden daily
     mart spans 86 contiguous rows)."""
-    joined = _joined_calendar(spark, sf_dir, months_back=2)
+    joined = _joined_calendar(spark, sf_dir, _GRAINS["day"][0])
     return (
         joined.groupBy(F.col("calendar_date").alias("date"))
         .agg(*_mart_metrics(joined))
@@ -204,39 +190,10 @@ def abandonment_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- dashboard widget re-aggregations (Q2 CTE analogs, dbc:cmd3-5,8-10) ----
 
 
-# Round-10 capacity policy: widget_month_totals / widget_day_peak are no
-# longer individually registered — their rows are hash-checked inside the
-# consolidated dashboards.dashboard_month_assembly / dashboard_day_assembly
-# oracles. The callables (and their former standalone oracles, kept below
-# for reference/tests) are unchanged.
-_WIDGET_MONTH_TOTALS_SQL = (
-    """
-WITH anchor AS (SELECT max(o_orderdate) AS t FROM orders),
-"""
-    + _VIEWS_SQL
-    + """,
-mart AS (
-    SELECT concat(CAST(year(cal.calendar_date) AS VARCHAR), '-',
-                  lpad(CAST(month(cal.calendar_date) AS VARCHAR), 2, '0')) AS year_month,
-"""
-    + _METRICS_SQL
-    + """
-    FROM cal
-    LEFT JOIN ca ON cal.calendar_date = ca.d
-    LEFT JOIN ia ON ca.d = ia.d
-    WHERE cal.calendar_date >= (SELECT CAST(date_trunc('month', t - INTERVAL 11 MONTH) AS DATE) FROM anchor)
-      AND cal.calendar_date <= (SELECT CAST(t AS DATE) FROM anchor)
-    GROUP BY year_month
-)
-SELECT CAST(SUM(total_abandoned_orders) AS BIGINT) AS total_abandoned_orders,
-       ROUND(CAST(SUM(total_value_orders) AS DOUBLE), 2) AS total_value_orders,
-       ROUND(CAST(SUM(total_abandoned_items) AS DOUBLE), 2) AS total_abandoned_items,
-       ROUND(CAST(SUM(total_value_items) AS DOUBLE), 2) AS total_value_items
-FROM mart
-"""
-)
-
-
+# The two widgets below have no registration of their own: their rows are
+# hash-checked inside dashboards.dashboard_month_assembly /
+# dashboard_day_assembly, and tests/test_dashboards.py pins the assemblies
+# against them.
 def widget_month_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dashboard widget analog (``dbc:cmd3-5``): WITH q AS (mart) → totals."""
     mart = abandonment_by_month(spark, sf_dir)
@@ -246,32 +203,6 @@ def widget_month_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("total_abandoned_items"), 2).alias("total_abandoned_items"),
         F.round(F.sum("total_value_items"), 2).alias("total_value_items"),
     )
-
-
-_WIDGET_DAY_PEAK_SQL = (
-    """
-WITH anchor AS (SELECT max(o_orderdate) AS t FROM orders),
-"""
-    + _VIEWS_SQL
-    + """,
-mart AS (
-    SELECT cal.calendar_date AS date,
-"""
-    + _METRICS_SQL
-    + """
-    FROM cal
-    LEFT JOIN ca ON cal.calendar_date = ca.d
-    LEFT JOIN ia ON ca.d = ia.d
-    WHERE cal.calendar_date >= (SELECT CAST(date_trunc('month', t - INTERVAL 2 MONTH) AS DATE) FROM anchor)
-      AND cal.calendar_date <= (SELECT CAST(t AS DATE) FROM anchor)
-    GROUP BY cal.calendar_date
-)
-SELECT date, total_abandoned_orders, total_value_orders
-FROM mart
-ORDER BY total_abandoned_orders DESC, date DESC
-LIMIT 10
-"""
-)
 
 
 def widget_day_peak(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -174,10 +174,10 @@ RRF_TOP_K = 20
 RRF_PROBE_VEC_ID = 0  # dense probe = this vector (aligned: vec_id == doc_id)
 
 
-@query(
-    "retrieval_hybrid_rrf",
-    oracle=f"""
-WITH {_bm25_cte()},
+def _rrf_fused_sql() -> str:
+    """Oracle CTE chain ending in ``short(doc_id, lr, dr)`` — the RRF
+    top-{RRF_TOP_K} shortlist, ``retrieval_hybrid_rrf``'s rows."""
+    return f"""{_bm25_cte()},
 lex AS (
     SELECT doc_id,
            row_number() OVER (ORDER BY ROUND(raw, 4) DESC, doc_id ASC) AS lr
@@ -193,17 +193,30 @@ den AS (
                         vec_id ASC) AS dr
     FROM e, qv
 ),
-denn AS (SELECT vec_id, dr FROM den WHERE dr <= {RRF_LEG_N})
-SELECT COALESCE(l.doc_id, d.vec_id) AS doc_id,
-       CAST(l.lr AS BIGINT) AS lex_rank,
-       CAST(d.dr AS BIGINT) AS dense_rank,
-       ROUND(COALESCE(1.0 / ({RRF_K} + l.lr), 0.0)
-             + COALESCE(1.0 / ({RRF_K} + d.dr), 0.0), 6) AS rrf_score
-FROM lexn l FULL JOIN denn d ON d.vec_id = l.doc_id
-ORDER BY COALESCE(1.0 / ({RRF_K} + l.lr), 0.0)
-         + COALESCE(1.0 / ({RRF_K} + d.dr), 0.0) DESC,
+denn AS (SELECT vec_id, dr FROM den WHERE dr <= {RRF_LEG_N}),
+short AS (
+    SELECT COALESCE(l.doc_id, d.vec_id) AS doc_id, l.lr, d.dr
+    FROM lexn l FULL JOIN denn d ON d.vec_id = l.doc_id
+    ORDER BY COALESCE(1.0 / ({RRF_K} + l.lr), 0.0)
+             + COALESCE(1.0 / ({RRF_K} + d.dr), 0.0) DESC NULLS LAST,
+             COALESCE(l.doc_id, d.vec_id) ASC NULLS FIRST
+    LIMIT {RRF_TOP_K}
+)"""
+
+
+@query(
+    "retrieval_hybrid_rrf",
+    oracle=f"""
+WITH {_rrf_fused_sql()}
+SELECT doc_id,
+       CAST(lr AS BIGINT) AS lex_rank,
+       CAST(dr AS BIGINT) AS dense_rank,
+       ROUND(COALESCE(1.0 / ({RRF_K} + lr), 0.0)
+             + COALESCE(1.0 / ({RRF_K} + dr), 0.0), 6) AS rrf_score
+FROM short
+ORDER BY COALESCE(1.0 / ({RRF_K} + lr), 0.0)
+         + COALESCE(1.0 / ({RRF_K} + dr), 0.0) DESC,
          doc_id ASC
-LIMIT {RRF_TOP_K}
 """,
 )
 def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -291,38 +304,6 @@ def _rrf_fused(spark: SparkSession, sf_dir: str, scored: DataFrame) -> DataFrame
 # stage 2's cost is O(K) joins against the feature sources regardless of
 # corpus size; only stage 1's already-audited top-k machinery scales with N.
 RERANK_ALPHA = 0.5  # blend weight: alpha * cosine + (1-alpha) * bm25_norm
-
-
-def _rrf_fused_sql() -> str:
-    """Oracle CTE chain ending in ``short(doc_id, lr, dr)`` — the RRF
-    top-{RRF_TOP_K} shortlist, textually mirroring retrieval_hybrid_rrf's
-    oracle (kept separate so that query's committed oracle text stays
-    untouched)."""
-    return f"""{_bm25_cte()},
-lex AS (
-    SELECT doc_id,
-           row_number() OVER (ORDER BY ROUND(raw, 4) DESC, doc_id ASC) AS lr
-    FROM bm
-),
-lexn AS (SELECT doc_id, lr FROM lex WHERE lr <= {RRF_LEG_N}),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-qv AS (SELECT emb AS qemb FROM e WHERE vec_id = {RRF_PROBE_VEC_ID}),
-den AS (
-    SELECT vec_id,
-           row_number() OVER (
-               ORDER BY ROUND(list_cosine_similarity(qemb, emb), 6) DESC,
-                        vec_id ASC) AS dr
-    FROM e, qv
-),
-denn AS (SELECT vec_id, dr FROM den WHERE dr <= {RRF_LEG_N}),
-short AS (
-    SELECT COALESCE(l.doc_id, d.vec_id) AS doc_id, l.lr, d.dr
-    FROM lexn l FULL JOIN denn d ON d.vec_id = l.doc_id
-    ORDER BY COALESCE(1.0 / ({RRF_K} + l.lr), 0.0)
-             + COALESCE(1.0 / ({RRF_K} + d.dr), 0.0) DESC NULLS LAST,
-             COALESCE(l.doc_id, d.vec_id) ASC NULLS FIRST
-    LIMIT {RRF_TOP_K}
-)"""
 
 
 @query(

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.functions.cents import cents, cents_sql
 from databricks_spark_sql_challenge1_spark.registry import query
 
 RANGE_WINDOW_US = 60_000_000  # 60 seconds
@@ -247,9 +248,9 @@ def events_type_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # obs-CTE substitution (``_interp_leg``) replaces the SAME text the
 # template was built from — a reformat can never silently turn the replace
 # into a no-op (ADVICE r18).
-_GAPFILL_OBS_CTE = """obs AS (
+_GAPFILL_OBS_CTE = f"""obs AS (
     SELECT user_id, date_trunc('hour', ts) AS hr,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS v
+           CAST(SUM({cents_sql("value")}) AS BIGINT) AS v
     FROM events GROUP BY user_id, date_trunc('hour', ts)
 )"""
 
@@ -298,7 +299,7 @@ def _gapfill_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events", spread=True)
     return ev.groupBy(
         "user_id", F.date_trunc("hour", "ts").alias("hr")
-    ).agg(F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("v"))
+    ).agg(F.sum(cents("value")).alias("v"))
 
 
 def events_gapfill_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

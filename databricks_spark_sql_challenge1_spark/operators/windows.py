@@ -20,21 +20,55 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.functions.cents import (
+    cents,
+    cents_sql,
+    sum_value,
+    sum_value_sql,
+)
 from databricks_spark_sql_challenge1_spark.registry import query
 
+# The session gap of every session window, batch and streaming, and of the
+# oracle's gaps-and-islands reconstruction (``_sessions_sql``).
+SESSION_GAP = "30 minutes"
 
-@query(
-    "events_tumbling_1h",
-    oracle="""
+
+def _sessions_sql(source: str) -> str:
+    """The gaps-and-islands sessionization of ``source`` (user_id, ts,
+    event_id, value) as two oracle CTEs: ``flagged`` marks a row that
+    opens a session (no earlier row, or more than SESSION_GAP after the
+    previous one: strict, see the module docstring), and ``sessions``
+    (user_id, ts, cents, session_id) numbers the sessions by a running
+    sum of the marks. Both windows order by (ts, event_id), so rows
+    sharing a timestamp get the same order in each."""
+    return f"""flagged AS (
+    SELECT user_id, ts, event_id, {cents_sql("value")} AS cents,
+           CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+                     OR ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                        > INTERVAL '{SESSION_GAP}'
+                THEN 1 ELSE 0 END AS new_session
+    FROM {source}
+),
+sessions AS (
+    SELECT user_id, ts, cents,
+           SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                  ROWS UNBOUNDED PRECEDING) AS session_id
+    FROM flagged
+)"""
+
+
+TUMBLING_1H_SQL = f"""
 SELECT date_trunc('hour', ts) AS window_start,
        event_type,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
+       {sum_value_sql("value")} AS sum_value
 FROM events
 GROUP BY 1, 2
 ORDER BY window_start ASC, event_type ASC NULLS FIRST
-""",
-)
+"""
+
+
+@query("events_tumbling_1h", oracle=TUMBLING_1H_SQL)
 def events_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows per event type (F.window)."""
     events = load_table(spark, sf_dir, "events", spread=True)
@@ -42,9 +76,7 @@ def events_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
+            sum_value("value").alias("sum_value"),
         )
         .select(
             F.col("window.start").alias("window_start"),
@@ -58,7 +90,7 @@ def events_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_sliding_1h_30m",
-    oracle="""
+    oracle=f"""
 WITH w AS (
     SELECT time_bucket(INTERVAL '30 minutes', ts) AS window_start, value FROM events
     UNION ALL
@@ -66,7 +98,7 @@ WITH w AS (
 )
 SELECT window_start,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
+       {sum_value_sql("value")} AS sum_value
 FROM w
 GROUP BY 1
 ORDER BY window_start ASC
@@ -79,9 +111,7 @@ def events_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy(F.window("ts", "1 hour", "30 minutes"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
+            sum_value("value").alias("sum_value"),
         )
         .select(F.col("window.start").alias("window_start"), "n_events", "sum_value")
         .orderBy(F.col("window_start").asc())
@@ -90,12 +120,12 @@ def events_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_time_rollup",
-    oracle="""
+    oracle=f"""
 SELECT CAST(year(ts) AS INTEGER) AS y,
        CAST(month(ts) AS INTEGER) AS m,
        CAST(day(ts) AS INTEGER) AS d,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
+       {sum_value_sql("value")} AS sum_value
 FROM events
 GROUP BY ROLLUP (y, m, d)
 ORDER BY y ASC NULLS FIRST, m ASC NULLS FIRST, d ASC NULLS FIRST
@@ -117,9 +147,7 @@ def events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rollup("y", "m", "d")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
+            sum_value("value").alias("sum_value"),
         )
         .orderBy(
             F.col("y").asc_nulls_first(),
@@ -129,48 +157,33 @@ def events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "events_session_30m",
-    oracle="""
-WITH flagged AS (
-    SELECT user_id, ts, value,
-           CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                     OR ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                        > INTERVAL '30 minutes'
-                THEN 1 ELSE 0 END AS new_session
-    FROM events
-),
-sessions AS (
-    SELECT user_id, ts, value,
-           SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                  ROWS UNBOUNDED PRECEDING) AS session_id
-    FROM flagged
-)
+SESSION_30M_SQL = f"""
+WITH {_sessions_sql("events")}
 SELECT user_id,
        MIN(ts) AS session_start,
-       MAX(ts) + INTERVAL '30 minutes' AS session_end,
+       MAX(ts) + INTERVAL '{SESSION_GAP}' AS session_end,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
+       CAST(SUM(cents) AS BIGINT) / 100.0 AS sum_value
 FROM sessions
 GROUP BY user_id, session_id
 ORDER BY user_id ASC, session_start ASC
-""",
-)
+"""
+
+
+@query("events_session_30m", oracle=SESSION_30M_SQL)
 def events_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows with a 30-minute gap per user (F.session_window).
 
     At scale this is the shuffle-on-user_id + per-key ordered merge Spark
     implements natively; the stateful streaming variant is
-    ``streaming.events_stream.session_counts_stream``.
+    ``streaming.events_stream.streaming_session_30m``.
     """
     events = load_table(spark, sf_dir, "events", spread=True)
     return (
-        events.groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        events.groupBy(F.session_window("ts", SESSION_GAP), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
+            sum_value("value").alias("sum_value"),
         )
         .select(
             "user_id",
@@ -191,7 +204,7 @@ ROLLING_7D_S = 7 * 86400
     oracle=f"""
 WITH e AS (
     SELECT event_id, user_id, ts,
-           CAST(ROUND(value * 100) AS BIGINT) AS cents,
+           {cents_sql("value")} AS cents,
            CAST(floor(epoch(ts)) AS BIGINT) AS es
     FROM events
 ),
@@ -237,7 +250,7 @@ def events_rolling_7d_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
         F.col("ts").cast("long").alias("es"),
     )
     w = (

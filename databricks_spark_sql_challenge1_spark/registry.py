@@ -10,8 +10,10 @@ Alignment rules (enforced by convention in every registered pair):
   - every computed column aliased identically on both sides;
   - integer-kind outputs are BIGINT/long on both sides (oracle CASTs where
     DuckDB widens, e.g. year() -> BIGINT is cast to INT to match F.year);
-  - floating SUM outputs rounded to a fixed scale on BOTH sides so
-    summation-order drift cannot flip the value hash;
+  - money is summed as exact integer cents (``functions/cents.py``), so
+    summation order cannot flip the value hash; a floating output kept
+    as a double (e.g. the reference marts' sums) is ROUNDed to a fixed
+    scale on BOTH sides;
   - every LIMIT query carries a total-order ORDER BY (explicit NULLS
     FIRST/LAST) so the selected row set is deterministic across engines.
 """

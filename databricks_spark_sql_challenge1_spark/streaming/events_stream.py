@@ -37,6 +37,7 @@ from databricks_spark_sql_challenge1_spark.catalog import (
     table_path,
     table_schema,
 )
+from databricks_spark_sql_challenge1_spark.functions.cents import sum_value
 from databricks_spark_sql_challenge1_spark.functions.text import ws_tokens
 from databricks_spark_sql_challenge1_spark.registry import query
 
@@ -118,9 +119,7 @@ def streaming_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
+            sum_value("value").alias("sum_value"),
         )
         .select(
             F.col("window.start").alias("window_start"),
@@ -196,15 +195,16 @@ def streaming_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful session windows (30m gap) per user on the stream — Spark's
     native stateful session operator under a watermark."""
+    # imported at call time: the operators package imports this module
+    from databricks_spark_sql_challenge1_spark.operators.windows import SESSION_GAP
+
     stream = _events_stream(spark, sf_dir)
     windowed = (
         stream.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        .groupBy(F.session_window("ts", SESSION_GAP), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
+            sum_value("value").alias("sum_value"),
         )
         .select(
             "user_id",
@@ -330,9 +330,7 @@ def streaming_nation_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"), "nation")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "sum_value"
-            ),
+            sum_value("value").alias("sum_value"),
         )
         .select(
             F.col("window.start").alias("window_start"),

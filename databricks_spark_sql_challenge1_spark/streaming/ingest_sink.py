@@ -22,6 +22,7 @@ from databricks_spark_sql_challenge1_spark.catalog import (
     ensure_session_confs,
     load_table,
 )
+from databricks_spark_sql_challenge1_spark.functions.cents import cents
 from databricks_spark_sql_challenge1_spark.registry import query
 from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
     _drain_to_memory,
@@ -65,7 +66,7 @@ def _staged_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
 
 
@@ -278,25 +279,20 @@ def stage_skewed_shards(
     return raw_dir
 
 
-# The shared gold-rollup oracle: the gaps-and-islands batch sessionization
-# over the ORIGINAL events table. Both ingest witnesses hash against this
-# same SQL — the landing path differs, the correct end state does not.
-_INGEST_GOLD_ORACLE = """
-WITH flagged AS (
-    SELECT user_id, ts, event_id,
-           CAST(ROUND(value * 100) AS BIGINT) AS cents,
-           CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                     OR ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                        > INTERVAL '30 minutes'
-                THEN 1 ELSE 0 END AS new_session
-    FROM events
-),
-sessions AS (
-    SELECT user_id, cents,
-           SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS session_id
-    FROM flagged
-)
+def _gold_oracle(remap: str = "") -> str:
+    """The gold-rollup oracle: ``windows._sessions_sql``'s gaps-and-islands
+    batch sessionization of the ORIGINAL events table, or of the CTE
+    ``remapped`` that ``remap`` defines over it, rolled up per user like
+    ``_bronze_to_gold``. The landing path differs between the ingest
+    witnesses; the correct end state does not. Imported here, not at the
+    top: the operators package imports this module."""
+    from databricks_spark_sql_challenge1_spark.operators.windows import (
+        _sessions_sql,
+    )
+
+    source = "remapped" if remap else "events"
+    return f"""
+WITH {remap}{_sessions_sql(source)}
 SELECT user_id,
        CAST(COUNT(DISTINCT session_id) AS BIGINT) AS n_sessions,
        CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -308,17 +304,19 @@ ORDER BY user_id ASC
 
 
 def _bronze_to_gold(spark: SparkSession, bronze_dir: str) -> DataFrame:
-    """The shared silver→gold tail of both ingest witnesses: a second
+    """The shared silver→gold tail of the ingest witnesses: a second
     streaming stage over the bronze sink — watermarked 30-minute session
     windows per user (real session state, availableNow drain) — then the
     per-user gold rollup (n_sessions, n_events, sum_cents),
     localCheckpointed before the caller removes the scratch dir so nothing
     lazily re-reads deleted files."""
+    from databricks_spark_sql_challenge1_spark.operators.windows import SESSION_GAP
+
     silver = (
         spark.readStream.schema(RAW_ARRIVAL_SCHEMA)
         .parquet(bronze_dir)
         .withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        .groupBy(F.session_window("ts", SESSION_GAP), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("cents").alias("sum_cents"),
@@ -337,7 +335,7 @@ def _bronze_to_gold(spark: SparkSession, bronze_dir: str) -> DataFrame:
     )
 
 
-@query("streaming_parity_ingest_e2e", oracle=_INGEST_GOLD_ORACLE)
+@query("streaming_parity_ingest_e2e", oracle=_gold_oracle())
 def streaming_parity_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end ingest-pipeline witness (VERDICT r14 #5): the one shape
     the parity twins cover only piecewise, chained for real —
@@ -371,7 +369,7 @@ def streaming_parity_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _bronze_to_gold(spark, bronze_dir)
 
 
-@query("streaming_parity_ingest_adversarial", oracle=_INGEST_GOLD_ORACLE)
+@query("streaming_parity_ingest_adversarial", oracle=_gold_oracle())
 def streaming_parity_ingest_adversarial(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -400,44 +398,20 @@ def streaming_parity_ingest_adversarial(
         return _bronze_to_gold(spark, bronze_dir)
 
 
-# The skew witness's gold oracle: the SAME gaps-and-islands sessionization,
-# computed over the hot-key-REMAPPED events (every even event_id owned by
-# user 1 — pure arithmetic on the fixture, so DuckDB reproduces the staged
-# set exactly).
-_INGEST_SKEW_GOLD_ORACLE = """
-WITH remapped AS (
+# The skew witness's gold oracle: the SAME sessionization over the
+# hot-key-REMAPPED events (every even event_id owned by user 1 — pure
+# arithmetic on the fixture, so DuckDB reproduces the staged set exactly).
+_SKEW_REMAP_SQL = """remapped AS (
     SELECT event_id,
            CASE WHEN event_id % 2 = 0 THEN CAST(1 AS BIGINT)
                 ELSE user_id END AS user_id,
-           ts,
-           CAST(ROUND(value * 100) AS BIGINT) AS cents
+           ts, value
     FROM events
 ),
-flagged AS (
-    SELECT user_id, ts, event_id, cents,
-           CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                     OR ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                        > INTERVAL '30 minutes'
-                THEN 1 ELSE 0 END AS new_session
-    FROM remapped
-),
-sessions AS (
-    SELECT user_id, cents,
-           SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS session_id
-    FROM flagged
-)
-SELECT user_id,
-       CAST(COUNT(DISTINCT session_id) AS BIGINT) AS n_sessions,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(cents) AS BIGINT) AS sum_cents
-FROM sessions
-GROUP BY user_id
-ORDER BY user_id ASC
 """
 
 
-@query("streaming_parity_ingest_skew", oracle=_INGEST_SKEW_GOLD_ORACLE)
+@query("streaming_parity_ingest_skew", oracle=_gold_oracle(_SKEW_REMAP_SQL))
 def streaming_parity_ingest_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-skew ingest witness, driver-checkable (VERDICT r17 #5 — the
     test-only skew witness's oracle-backed registration): the same

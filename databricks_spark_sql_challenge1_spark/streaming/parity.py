@@ -13,11 +13,13 @@ declarative batch semantics. The one exception is the stateful profile:
 ``streaming_parity_user_state`` is its own integer-cents pipeline (below).
 
 Alignment notes (CLAUDE.md rules):
-  - tumbling / session / nation reuse the batch twins' exact agg
-    expressions (COUNT + ROUND(SUM(value), 2)) so the oracle text is the
-    twins' oracle text — proven green since r4;
+  - tumbling / session / nation aggregate with their batch twins' exact
+    expressions (COUNT + the integer-cents ``sum_value`` of
+    ``functions/cents.py``); tumbling and session register the batch
+    twin's oracle constant itself (``windows.TUMBLING_1H_SQL``,
+    ``windows.SESSION_30M_SQL``), not a copy;
   - the stateful-profile parity accumulates integer CENTS inside the
-    ``applyInPandasWithState`` state (per-row ROUND(value*100) computed
+    ``applyInPandasWithState`` state (per-row ``cents`` computed
     JVM-side before the stateful op) so cross-micro-batch float
     accumulation order can never flip a rounding boundary;
   - DuckDB SUM(BIGINT) widens to HUGEINT → CAST back to BIGINT.
@@ -36,6 +38,15 @@ from pyspark.sql import functions as F
 from databricks_spark_sql_challenge1_spark.catalog import (
     ensure_session_confs,
     load_table,
+)
+from databricks_spark_sql_challenge1_spark.functions.cents import (
+    cents,
+    cents_sql,
+    sum_value_sql,
+)
+from databricks_spark_sql_challenge1_spark.operators.windows import (
+    SESSION_30M_SQL,
+    TUMBLING_1H_SQL,
 )
 from databricks_spark_sql_challenge1_spark.registry import fill_doc, query
 from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
@@ -56,18 +67,7 @@ from databricks_spark_sql_challenge1_spark.streaming.ingest_sink import (
 )
 
 
-@query(
-    "streaming_parity_tumbling_1h",
-    oracle="""
-SELECT date_trunc('hour', ts) AS window_start,
-       event_type,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
-FROM events
-GROUP BY 1, 2
-ORDER BY window_start ASC, event_type ASC NULLS FIRST
-""",
-)
+@query("streaming_parity_tumbling_1h", oracle=TUMBLING_1H_SQL)
 def streaming_parity_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drained tumbling-window stream vs the batch oracle: watermarked
     1-hour event-time windows per event type, executed as a real stream
@@ -76,33 +76,7 @@ def streaming_parity_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_tumbling_1h(spark, sf_dir).orderBy("window_start", "event_type")
 
 
-@query(
-    "streaming_parity_session_30m",
-    oracle="""
-WITH flagged AS (
-    SELECT user_id, ts, value,
-           CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                     OR ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                        > INTERVAL '30 minutes'
-                THEN 1 ELSE 0 END AS new_session
-    FROM events
-),
-sessions AS (
-    SELECT user_id, ts, value,
-           SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                  ROWS UNBOUNDED PRECEDING) AS session_id
-    FROM flagged
-)
-SELECT user_id,
-       MIN(ts) AS session_start,
-       MAX(ts) + INTERVAL '30 minutes' AS session_end,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
-FROM sessions
-GROUP BY user_id, session_id
-ORDER BY user_id ASC, session_start ASC
-""",
-)
+@query("streaming_parity_session_30m", oracle=SESSION_30M_SQL)
 def streaming_parity_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drained stateful session-window stream (30-minute gap, native
     streaming session state under a watermark) hash-checked against
@@ -130,10 +104,10 @@ def streaming_parity_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_parity_user_state",
-    oracle="""
+    oracle=f"""
 SELECT user_id,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
+       CAST(SUM({cents_sql("value")}) AS BIGINT) AS sum_cents,
        MAX(ts) AS last_ts
 FROM events
 GROUP BY user_id
@@ -192,7 +166,7 @@ def streaming_parity_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir).select(
         "user_id",
         "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     profiled = stream.groupBy("user_id").applyInPandasWithState(
         update,
@@ -208,11 +182,11 @@ def streaming_parity_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_parity_click_attribution",
-    oracle="""
+    oracle=f"""
 SELECT p.user_id AS user_id,
        p.ts AS purchase_ts,
        c.ts AS click_ts,
-       CAST(ROUND(p.value * 100) AS BIGINT) / 100.0 AS purchase_value
+       {cents_sql("p.value")} / 100.0 AS purchase_value
 FROM events p
 JOIN events c
   ON c.user_id = p.user_id
@@ -232,17 +206,17 @@ def streaming_parity_click_attribution(spark: SparkSession, sf_dir: str) -> Data
     return _click_attribution(
         spark,
         sf_dir,
-        F.round(F.col("purchase_value") * 100).cast("long") / F.lit(100.0),
+        cents("purchase_value") / F.lit(100.0),
     ).orderBy("user_id", "purchase_ts", "click_ts")
 
 
 @query(
     "streaming_parity_nation_activity",
-    oracle="""
+    oracle=f"""
 SELECT date_trunc('hour', e.ts) AS window_start,
        n.n_name AS nation,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(ROUND(e.value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
+       {sum_value_sql("e.value")} AS sum_value
 FROM events e
 JOIN customer c ON c.c_custkey = e.user_id
 JOIN nation n ON n.n_nationkey = c.c_nationkey
@@ -348,7 +322,7 @@ WITH wm AS (
 ),
 e AS (
     SELECT date_trunc('hour', ts) AS window_start,
-           CAST(ROUND(value * 100) AS BIGINT) AS cents,
+           {cents_sql("value")} AS cents,
            (event_id % {LATE_MOD} = {LATE_RESIDUE}) AS is_late
     FROM events
 ),
@@ -415,7 +389,7 @@ def streaming_parity_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
         events = load_table(spark, sf_dir, "events").select(
             "event_id",
             "ts",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            cents("value").alias("cents"),
             (F.col("event_id") % LATE_MOD == LATE_RESIDUE).alias("is_late"),
         )
         stream_dir = os.path.join(scratch, "stream")

@@ -57,7 +57,7 @@ def test_assemblies_match_per_widget_outputs(spark):
     day = by_widget(dashboard_day_assembly(spark, SF_DIR))
     month = by_widget(dashboard_month_assembly(spark, SF_DIR))
 
-    for name, (fn, _oracle) in WIDGETS.items():
+    for name, fn in WIDGETS.items():
         got = day[name] if name.startswith("widget_day") else month[name]
         metric = name.replace("widget_day_", "total_").replace(
             "widget_month_", "total_"

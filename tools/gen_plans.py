@@ -10,7 +10,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_DIR)
 
 REF_SURFACE = [
     "count_distinct_orders",
@@ -103,7 +104,7 @@ def main() -> None:
         out.extend(summarize(df))
         print("done", name)
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO_DIR, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
 
 
