@@ -9,7 +9,8 @@ Layout:
     sources/      ingestion (CSV/parquet/zip), calendar dim, export, overwrite
     operators/    the 14 reference query analogs + LLM-pipeline extensions
     functions/    scalar helpers (date windows, text, vectors)
-    plans/        plan-inspection utilities (pushdown/broadcast assertions)
+    plans/        plan-inspection utilities (pushdown/broadcast assertions,
+                  the per-query operator fingerprint in PLANS.json)
     streaming/    Structured Streaming path over the events table
 """
 

@@ -143,7 +143,7 @@ GROUP BY {group}
 """
 
 
-def _mart_metrics(df: DataFrame) -> list:
+def _mart_metrics() -> list:
     return [
         F.coalesce(F.sum("daily_orders"), F.lit(0)).alias("total_abandoned_orders"),
         F.round(F.coalesce(F.sum("daily_value_orders"), F.lit(0.0)), 2).alias(
@@ -169,7 +169,7 @@ def abandonment_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         joined.groupBy(year_month.alias("year_month"))
-        .agg(*_mart_metrics(joined))
+        .agg(*_mart_metrics())
         .orderBy(F.col("year_month").desc())
     )
 
@@ -182,7 +182,7 @@ def abandonment_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = _joined_calendar(spark, sf_dir, _GRAINS["day"][0])
     return (
         joined.groupBy(F.col("calendar_date").alias("date"))
-        .agg(*_mart_metrics(joined))
+        .agg(*_mart_metrics())
         .orderBy(F.col("date").desc())
     )
 

@@ -70,9 +70,13 @@ def get_spark(app_name: str = "challenge1-engine") -> SparkSession:
         # sorts on both sides of non-broadcastable joins (the outer joins
         # against preserved small dims in the export chain, the band-index
         # self-joins). Not forced — the planner still requires the build
-        # side to fit its local-hash-map bound, and the r18
-        # strategy-invariance campaign pins results identical under either
-        # strategy. Measured (noop, warmed): order_export_denorm
+        # side to fit its local-hash-map bound, autoBroadcastJoinThreshold
+        # x shuffle.partitions, so the choice moves with the partition
+        # count: at sf0.001 launch_cohort_analysis plans two SortMergeJoins
+        # at 2 partitions but a SortMergeJoin and a ShuffledHashJoin at 3,
+        # 4, 8 and 32 (PLANS.json pins 8). The r18 strategy-invariance
+        # campaign pins results identical under either strategy.
+        # Measured (noop, warmed): order_export_denorm
         # 3.72 -> 3.06 s, events_gapfill_methods 2.94 -> 2.59,
         # dedup_incremental 1.31 -> 1.10.
         .config("spark.sql.join.preferSortMergeJoin", "false")

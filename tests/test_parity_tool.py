@@ -3,8 +3,9 @@ r11 code review): the order-sensitive compare must engage exactly when the
 oracle declares an OUTPUT order — an ``ORDER BY`` at paren depth 0 — and
 must NOT be tripped by ORDER BY inside ``OVER (...)`` windows or CTE
 subqueries, which say nothing about output order. Below those pins, the
-runner itself (``run``'s outcome classes, Spark-free) and a structural
-guard that it stays the one Spark-vs-DuckDB comparison."""
+runner itself (``run``'s outcome classes, Spark-free), a structural
+guard that it stays the one Spark-vs-DuckDB comparison, and the conf
+restore of ``session_confs``."""
 
 import os
 import sys
@@ -312,3 +313,16 @@ def test_one_parity_runner():
             ):
                 lookups.append((os.path.relpath(f, root), node.lineno))
     assert lookups == []
+
+
+def test_session_confs_restores_every_key(spark):
+    """After a perturbation block every key reads its pre-block value,
+    including the keys that had no explicit value before it (they are
+    unset again, not left at the probe value for every later test)."""
+    from tools.parity_names import LAYOUT_CONFS, STRATEGY_CONFS, session_confs
+
+    confs = LAYOUT_CONFS + STRATEGY_CONFS
+    before = {k: spark.conf.get(k) for k, _v in confs}
+    with session_confs(spark, confs):
+        assert {k: spark.conf.get(k) for k, _v in confs} == dict(confs)
+    assert {k: spark.conf.get(k) for k, _v in confs} == before

@@ -1,8 +1,12 @@
 """Physical-plan assertions — the 100 TB posture checks (SURVEY.md §4):
 filters reach the parquet scan, scans are column-pruned, dims broadcast,
-nothing degenerates into a cartesian product."""
+nothing degenerates into a cartesian product, and every query's physical
+operator counts equal its committed PLANS.json line."""
 
 from __future__ import annotations
+
+import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,6 +29,7 @@ from databricks_spark_sql_challenge1_spark.plans.explain import (
     uses_broadcast_join,
 )
 from tests.conftest import SF_DIR
+from tools.gen_plans import PLANS_JSON, SWEEP_NAMES, build_and_fingerprint
 
 
 
@@ -317,13 +322,12 @@ def test_rfm_approx_no_global_sort(spark):
 
 # --------------------------------------------------------------------------
 # Registry-wide plan-regression sweep (VERDICT r7 #4): every registered
-# query is plan-checked BY DEFAULT — no more per-round hand lists. The
-# targeted tests above remain as directed regressions for richer
-# invariants (pushdown, broadcast sides, narrowness, no-pair-reshuffle).
+# query is plan-checked BY DEFAULT — no more per-round hand lists — and its
+# physical-operator counts must equal its PLANS.json line (regenerated by
+# tools/gen_plans.py). The targeted tests above remain as directed
+# regressions for richer invariants (pushdown, broadcast sides,
+# narrowness, no-pair-reshuffle).
 # --------------------------------------------------------------------------
-
-import databricks_spark_sql_challenge1_spark.operators  # noqa: F401  (registers)
-from databricks_spark_sql_challenge1_spark.registry import QUERIES
 
 # BroadcastNestedLoopJoin is allowed ONLY where a prior-round audit showed
 # the nested-loop side is broadcast-tiny BY CONSTRUCTION (a 1-row scalar
@@ -405,25 +409,67 @@ def test_round15_operators_plan_shapes(spark):
     assert "band_val" in plan2, plan2
 
 
-# Streaming queries run a real stream to a memory sink; their returned
-# frame is a sink scan, so there is no logical plan to audit here (their
-# plan-relevant batch shapes are covered by the batch twins above and the
-# parity queries' oracles).
-_SWEEP_NAMES = sorted(n for n in QUERIES if not n.startswith("streaming_"))
+@pytest.fixture(scope="module")
+def plans_json():
+    with open(PLANS_JSON) as f:
+        return json.load(f)
 
 
-@pytest.mark.parametrize("name", _SWEEP_NAMES)
-def test_plan_sweep_no_cartesian_no_unaudited_bnlj(name, spark):
-    plan = simple_plan(QUERIES[name](spark, SF_DIR))
-    assert "CartesianProduct" not in plan, f"{name}:\n{plan}"
+@pytest.mark.parametrize("name", SWEEP_NAMES)
+def test_plan_sweep_no_cartesian_no_unaudited_bnlj(name, spark, plans_json):
+    """One build per name, one operator fingerprint (PLANS.json's
+    pinned shuffle partitions) for three checks: no CartesianProduct, no
+    unaudited BroadcastNestedLoopJoin, and the fingerprint equal to the
+    name's committed PLANS.json line."""
+    df, fp = build_and_fingerprint(spark, name, SF_DIR)
+    assert "CartesianProduct" not in fp, f"{name}:\n{simple_plan(df)}"
     if name not in BNLJ_ALLOWED:
-        assert "BroadcastNestedLoopJoin" not in plan, (
+        assert "BroadcastNestedLoopJoin" not in fp, (
             f"{name} plans an unaudited BroadcastNestedLoopJoin — if the "
             f"nested-loop side is broadcast-tiny by construction, audit it "
-            f"and add it to BNLJ_ALLOWED:\n{plan}"
+            f"and add it to BNLJ_ALLOWED:\n{simple_plan(df)}"
         )
+    fixture = os.path.basename(os.path.normpath(SF_DIR))
+    if fixture != plans_json["fixture"]:
+        pytest.skip(
+            f"PLANS.json records the {plans_json['fixture']} fixture; "
+            f"TEST_SF_DIR is {fixture}, so the fingerprint is not compared"
+        )
+    recorded = plans_json["plans"].get(name, {})
+    moved = {
+        op: f"{recorded.get(op, 0)} -> {fp.get(op, 0)}"
+        for op in sorted(set(recorded) | set(fp))
+        if recorded.get(op, 0) != fp.get(op, 0)
+    }
+    assert not moved, (
+        f"{name}'s physical operators moved (PLANS.json -> now): {moved}. "
+        f"If the change is meant, run `python tools/gen_plans.py` and say "
+        f"in CHANGES.md why {name} moved."
+    )
+
+
+def test_plans_json_names_are_the_sweep_names(plans_json):
+    """PLANS.json has one line for every swept name and none for a name
+    that is no longer registered."""
+    recorded = set(plans_json["plans"])
+    assert recorded == set(SWEEP_NAMES), (
+        f"missing: {sorted(set(SWEEP_NAMES) - recorded)}, "
+        f"not registered: {sorted(recorded - set(SWEEP_NAMES))}; "
+        f"run `python tools/gen_plans.py`"
+    )
+
+
+def test_fingerprint_is_stable_within_a_session(spark):
+    """Two builds of the same query in one session count the same
+    operators, although their plan text differs: the multi-distinct
+    Expand orders its projections per build (valid_orders) and Python
+    lambdas take a session-counter variable name (lang_id_heuristic)."""
+    for name in ("valid_orders", "lang_id_heuristic"):
+        _df, first = build_and_fingerprint(spark, name, SF_DIR)
+        _df, second = build_and_fingerprint(spark, name, SF_DIR)
+        assert first == second, name
 
 
 def test_bnlj_allowlist_has_no_dead_names():
-    dead = BNLJ_ALLOWED - set(QUERIES)
-    assert not dead, f"allowlisted but not registered: {dead}"
+    dead = BNLJ_ALLOWED - set(SWEEP_NAMES)
+    assert not dead, f"allowlisted but not swept: {dead}"

@@ -240,7 +240,9 @@ def run(spark, names, spark_dir, duck_dir=None, queries=None, oracles=None):
 
 @contextlib.contextmanager
 def session_confs(spark, confs):
-    """Set runtime SQL confs for the block, restoring the prior values."""
+    """Set runtime SQL confs for the block, restoring the prior values: a
+    key that had no explicit value before is unset again, so it reads its
+    default afterwards rather than the block's value."""
     priors = {k: spark.conf.get(k, None) for k, _v in confs}
     for k, v in confs:
         spark.conf.set(k, v)
@@ -248,7 +250,9 @@ def session_confs(spark, confs):
         yield
     finally:
         for k, v in priors.items():
-            if v is not None:
+            if v is None:
+                spark.conf.unset(k)
+            else:
                 spark.conf.set(k, v)
 
 
