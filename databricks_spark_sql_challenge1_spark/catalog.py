@@ -86,6 +86,36 @@ def load_table(
     return df
 
 
+def share(df: DataFrame, label: str) -> DataFrame:
+    """Materialize ``df`` once: the one way this package shares a frame that
+    is read more than once, that outlives its source (a scratch dir about to
+    be removed) or that cuts a loop's lineage.
+
+    The frame is a local checkpoint, eager: its jobs run here, at build
+    time, with the job description ``share:<label>``. The caller's
+    description comes back afterwards; the job group is never touched, so
+    the jobs stay with whatever layer or query the caller's group names.
+
+    Fault posture, the same for every call site:
+
+    - the checkpointed blocks live only in the executors' block managers;
+    - a task that fails while the checkpoint is built is retried and
+      recomputes its partition from lineage;
+    - once built, the lineage is cut, so a lost executor fails the query
+      loudly ("Checkpoint block ... not found") rather than returning
+      wrong rows;
+    - on a cluster the reliable alternative is ``checkpoint()`` over a
+      checkpoint dir on shared storage, changed here and nowhere else.
+    """
+    sc = df.sparkSession.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", f"share:{label}")
+    try:
+        return df.localCheckpoint()
+    finally:
+        sc.setLocalProperty("spark.job.description", prior)
+
+
 def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
     """The table's schema as stored (``events.ts`` not yet healed), from the
     same per-layout cache as ``load_table``."""

@@ -11,7 +11,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.catalog import load_table, share
 from databricks_spark_sql_challenge1_spark.functions.cents import cents, cents_sql
 from databricks_spark_sql_challenge1_spark.functions.hashing import (
     hex_int,
@@ -699,9 +699,9 @@ def customer_rfm_segments_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     # Round-18: `m` (the per-customer RFM aggregate) feeds both the sketch/
-    # exact-quantile pass and the bound-check pass; materialized once
+    # exact-quantile pass and the bound-check pass; shared once
     # (|customers| rows) instead of re-running the orders aggregation.
-    m = m.localCheckpoint()
+    m = share(m, "rfm_approx.m")
     stats = m.agg(*stats_aggs)
 
     j = m.crossJoin(F.broadcast(stats))
@@ -1050,13 +1050,13 @@ def scd2_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (untouched/extended/closed_now/appended), so the orders scan, the
     # monthly aggregate and the whole gaps-and-islands snapshot build
     # evaluated up to 5x per run (56 Exchange nodes in the r19 before-plan).
-    # Three localCheckpoints — all dimension-sized (custkey%MOD slice),
-    # eager, recomputed per call — pin each subtree to one evaluation:
-    # monthly (feeds snap + batch), snap (feeds open + closed), and j
-    # (feeds the four merge branches). In production monthly/snap are the
-    # stored snapshot tables; the checkpoints stand in for those reads.
-    monthly = _scd2_monthly(orders).localCheckpoint()
-    snap = _scd2_build(monthly.where(F.col("m") < cutoff)).localCheckpoint()
+    # Three shared frames, all dimension-sized (custkey%MOD slice), pin
+    # each subtree to one evaluation: monthly (feeds snap + batch), snap
+    # (feeds open + closed), and j (feeds the four merge branches). In
+    # production monthly/snap are the stored snapshot tables; the shared
+    # frames stand in for those reads.
+    monthly = share(_scd2_monthly(orders), "scd2.monthly")
+    snap = share(_scd2_build(monthly.where(F.col("m") < cutoff)), "scd2.snap")
     batch = monthly.where(F.col("m") == cutoff).select(
         "c_custkey",
         F.col("m").alias("b_m"),
@@ -1065,7 +1065,7 @@ def scd2_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     open_rows = snap.where(F.col("is_current"))
     closed_rows = snap.where(~F.col("is_current"))
-    j = open_rows.join(batch, "c_custkey", "full_outer").localCheckpoint()
+    j = share(open_rows.join(batch, "c_custkey", "full_outer"), "scd2.merge")
     in_batch = F.col("b_m").isNotNull()
     has_open = F.col("version").isNotNull()
     same_tier = F.col("tier") == F.col("b_tier")
@@ -1485,14 +1485,15 @@ def topk_products_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load_table(spark, sf_dir, "orders", spread=True)
     lineitem = load_table(spark, sf_dir, "lineitem", spread=True)
-    ab = (
+    # feeds three aggregations (counters, keys, exact) — unshared, the
+    # fact join executes three times per run
+    ab = share(
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .where(
             (F.col("o_orderstatus") == "O") & F.col("l_partkey").isNotNull()
         )
-        .select(F.col("l_partkey").alias("partkey"))
-        .localCheckpoint()  # feeds three aggregations (counters, keys, exact) —
-        # without this the fact join executes three times per run
+        .select(F.col("l_partkey").alias("partkey")),
+        "cms.ab",
     )
 
     def bucket(key_col: str, d_col: str) -> Column:
@@ -1834,9 +1835,8 @@ def customers_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # UNION of years feeds every pair — per-year distinct-of-a-subset
     # equals subset-of-distinct, so values are unchanged. Round-19: the
     # frame is exploded to (pair, side) grain via a broadcast-joined 6-row
-    # membership map and localCheckpoint-ed ONCE (eager, recomputed per
-    # call — never served across timed runs), so the sketch windows, exact
-    # counts and membership flags all read one materialized input.
+    # membership map and shared ONCE, so the sketch windows, exact counts
+    # and membership flags all read one materialized input.
     years = sorted({y for ya, yb, _n in KMV_SETOPS_PAIRS for y in (ya, yb)})
     membership = spark.createDataFrame(
         [
@@ -1846,14 +1846,14 @@ def customers_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "yr int, pair string, side string",
     )
-    sides = (
+    sides = share(
         orders.select(F.year("o_orderdate").alias("yr"), "o_custkey")
         .where(F.col("yr").isin(years))
         .distinct()
         .withColumn("h", hex_int(F.md5(F.col("o_custkey").cast("string")), 1, 8))
         .join(F.broadcast(membership), "yr")
-        .select("pair", "side", "o_custkey", "h")
-        .localCheckpoint()
+        .select("pair", "side", "o_custkey", "h"),
+        "kmv_setops.sides",
     )
     # ALL side sketches in one shard-partial + one merge window pass
     # (r14's production build, now (pair, side)-partitioned: the only

@@ -14,7 +14,7 @@ in Map-Reduce in Logarithmic Rounds"). Each round is two equi-joins — one
 shuffle on the edge src, one on the label key — and rounds grow as
 O(log diameter), not O(diameter). Near-dup graphs are quasi-cliques
 (diameter 2-3), so 3-4 rounds converge even at corpus scale. The per-round
-``localCheckpoint`` truncates lineage so plans stay bounded, and the
+``catalog.share`` truncates lineage so plans stay bounded, and the
 convergence probe is a single scalar aggregate (labels are monotone
 non-increasing, so an unchanged sum == fixpoint).
 
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.catalog import load_table, share
 from databricks_spark_sql_challenge1_spark.functions.text import ws_tokens, ws_tokens_sql
 from databricks_spark_sql_challenge1_spark.operators.abandonment import (
     TOP_ABANDONED_PAIRS_SQL,
@@ -65,8 +65,9 @@ def connected_components(
     a, b = pairs.columns[:2]
     # symmetrize in ONE scan of pairs (explode, not self-union): pairs is
     # typically an expensive join (e.g. the SimHash band join) and a union
-    # would evaluate it twice inside the materializing action
-    edges = (
+    # would evaluate it twice inside the materializing action; shared
+    # because every round reads it
+    edges = share(
         pairs.select(
             F.explode(
                 F.array(
@@ -74,13 +75,13 @@ def connected_components(
                     F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
                 )
             ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .localCheckpoint()  # materialize once; reused every round
+        ).select("e.src", "e.dst"),
+        "cc.edges",
     )
-    labels = nodes.select(
-        F.col(nid).alias("doc_id"), F.col(nid).alias("cluster_id")
-    ).localCheckpoint()
+    labels = share(
+        nodes.select(F.col(nid).alias("doc_id"), F.col(nid).alias("cluster_id")),
+        "cc.labels0",
+    )
     prev_sum = labels.agg(F.sum("cluster_id")).first()[0]
     for _ in range(max_rounds):
         # round part 1: every node adopts min(own label, neighbors' labels).
@@ -90,16 +91,16 @@ def connected_components(
         # so the whole part-1 subtree evaluated twice per round. Now part 1
         # is one union + one min-aggregate (same algebra: min(own, nbr
         # mins); a node with no in-edges keeps its own label because the
-        # union always carries it), and `stepped` is localCheckpoint-ed so
-        # the jump self-join reads it materialized on both sides.
+        # union always carries it), and `stepped` is shared so the jump
+        # self-join reads it materialized on both sides.
         prop = edges.join(labels, edges["src"] == labels["doc_id"]).select(
             F.col("dst").alias("doc_id"), "cluster_id"
         )
-        stepped = (
+        stepped = share(
             labels.unionByName(prop)
             .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .localCheckpoint()
+            .agg(F.min("cluster_id").alias("cluster_id")),
+            "cc.stepped",
         )
         # round part 2: pointer jump — cluster_id := label(cluster_id).
         # Labels are node ids, so the lookup is a self-join; this is the
@@ -107,14 +108,16 @@ def connected_components(
         jump = stepped.select(
             F.col("doc_id").alias("j_id"), F.col("cluster_id").alias("j_cluster")
         )
-        labels = (
+        # shared: the sum probe and the next round read it, and the loop's
+        # lineage is cut here
+        labels = share(
             stepped.alias("s")
             .join(jump.alias("j"), F.col("s.cluster_id") == F.col("j.j_id"))
             .select(
                 F.col("s.doc_id").alias("doc_id"),
                 F.col("j.j_cluster").alias("cluster_id"),
-            )
-            .localCheckpoint()
+            ),
+            "cc.labels",
         )
         # labels only ever decrease, so an unchanged sum is a fixpoint
         cur_sum = labels.agg(F.sum("cluster_id")).first()[0]
@@ -133,7 +136,7 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries and across a query's own timed repeats — a module-level result
     memo, i.e. measurement inflation of exactly the class VERDICT r18 #1
     decontaminated out of the bench, not an optimization of the query.
-    Within ONE call the loop's localCheckpoints still share every round's
+    Within ONE call the loop's shared frames still share every round's
     work across both plan references, which is the legitimate §5 sharing.
     """
     pairs = dedup_simhash_pairs(spark, sf_dir).select("doc_1", "doc_2")
@@ -311,7 +314,8 @@ def copurchase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pairs = top_abandoned_pairs(spark, sf_dir).select("product_1", "product_2")
-    pairs = pairs.localCheckpoint()  # top-k result: tiny; avoids re-mining per CC round
+    # both node legs and the CC edge list read the mined pairs
+    pairs = share(pairs, "copurchase_components.pairs")
     nodes = (
         pairs.select(F.col("product_1").alias("id"))
         .union(pairs.select("product_2"))
@@ -345,7 +349,7 @@ def pagerank(
     simple non-redistributing convention. Returns (id, r), one row per node.
 
     Each iteration is one equi-join of ranks onto the degree-annotated,
-    localCheckpoint-ed edge list plus one groupBy on dst — the Pregel-style
+    shared edge list plus one groupBy on dst — the Pregel-style
     message pass in DataFrame ops. The rank chain is linear (each round's
     frame is consumed exactly once by the next), so for the FIXED small
     iteration count it runs lazily as one job with bounded plan depth —
@@ -357,12 +361,12 @@ def pagerank(
     e = edges.select(F.col(s).alias("src"), F.col(d).alias("dst"))
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # annotate each edge with its source's out-degree ONCE, outside the loop
-    ew = e.join(deg, "src").localCheckpoint()
-    nodes = (
+    ew = share(e.join(deg, "src"), "pagerank.ew")
+    nodes = share(
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "pagerank.nodes",
     )
     n = nodes.count()
     if n == 0:
@@ -372,8 +376,8 @@ def pagerank(
         return nodes.select("id", F.lit(0.0).alias("r"))
     ranks = nodes.select("id", F.lit(1.0 / n).alias("r"))
     base = (1.0 - damping) / n
-    # Round-18 optimization: the per-iteration localCheckpoint (an eager
-    # job + materialization per round) is unnecessary for a FIXED, small
+    # Round-18 optimization: a per-iteration share (an eager job +
+    # materialization per round) is unnecessary for a FIXED, small
     # iteration count — each `ranks` is referenced exactly once by the next
     # round, so the chain is linear (no re-evaluation blow-up) and the
     # whole loop now executes as one job over PAGERANK_ITERS tiny stages.
@@ -438,7 +442,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``copurchase_components``'s label propagation.
 
     Scale shape: each iteration is one equi-join of ranks onto the
-    (pre-degree-annotated, localCheckpoint-ed) edge list plus one groupBy
+    (pre-degree-annotated, shared) edge list plus one groupBy
     on dst — the standard Pregel-style message pass expressed in DataFrame
     ops, chained lazily across the fixed PAGERANK_ITERS rounds (plan depth
     bounded by the constant; see ``pagerank``); on a giant graph the
@@ -452,7 +456,8 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pairs = top_abandoned_pairs(spark, sf_dir).select("product_1", "product_2")
-    pairs = pairs.localCheckpoint()  # tiny top-k list; mine once, loop many
+    # the edge list feeds the degree table and every PageRank input
+    pairs = share(pairs, "copurchase_pagerank.pairs")
     edges = pairs.select(
         F.explode(
             F.array(
@@ -639,10 +644,10 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         top_abandoned_pairs,
     )
 
-    pairs = (
-        top_abandoned_pairs(spark, sf_dir)
-        .select("product_1", "product_2")
-        .localCheckpoint()  # top-k bounded; avoid re-mining per join branch
+    # three triangle-join branches and both degree legs read the pairs
+    pairs = share(
+        top_abandoned_pairs(spark, sf_dir).select("product_1", "product_2"),
+        "copurchase_triangles.pairs",
     )
     e1, e2, e3 = pairs.alias("e1"), pairs.alias("e2"), pairs.alias("e3")
     tri = (
@@ -731,11 +736,8 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_embedding_lsh_adaptive,
     )
 
-    pairs = (
-        dedup_embedding_lsh_adaptive(spark, sf_dir)
-        .select("vec_1", "vec_2")
-        .localCheckpoint()  # sparse pair set; avoid re-running LSH per CC round
-    )
+    # read once, by connected_components' shared edge list
+    pairs = dedup_embedding_lsh_adaptive(spark, sf_dir).select("vec_1", "vec_2")
     nodes = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id")
     labels = connected_components(nodes, pairs)
     return (

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.catalog import load_table, share
 from databricks_spark_sql_challenge1_spark.functions.hashing import (
     TEXT_FINGERPRINT_SQL,
     hex_int,
@@ -465,7 +465,7 @@ def _simhash_self_pairs(layout: str, toks: DataFrame, trunc: int = 0) -> DataFra
     """Near-dup pairs within one corpus: the layout's signatures over the
     (doc_id, hx) token frame, materialized once (n_docs tiny rows, both
     join sides read them), band-self-joined on ``a.doc_id < b.doc_id``."""
-    sig = _simhash_sig(layout, toks).localCheckpoint()
+    sig = share(_simhash_sig(layout, toks), "simhash_self_pairs.sig")
     return _simhash_band_join(
         layout, sig, sig, F.col("a.doc_id") < F.col("b.doc_id"), trunc
     )
@@ -576,13 +576,12 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round-19 shape (VERDICT r18 #7): the signature frame feeds THREE plan
     references (incoming bands, existing bands, the incoming left-join
-    back). One localCheckpoint of the (doc_id, s0) frame — n_docs tiny
-    rows, eager, recomputed per call — feeds both sides: one corpus pass
-    total. Each colliding (incoming, existing) pair is counted exactly
+    back). One shared (doc_id, s0) frame — n_docs tiny rows — feeds both
+    sides: one corpus pass total. Each colliding (incoming, existing) pair is counted exactly
     once by the band join's first-agreeing-band rule.
     """
     toks = _distinct_token_md5(load_table(spark, sf_dir, "documents", spread=True))
-    sig = _simhash_sig("narrow32", toks).localCheckpoint()
+    sig = share(_simhash_sig("narrow32", toks), "dedup_incremental.sig")
     incoming = sig.where(F.col("doc_id") % INCREMENTAL_MOD == 0)
     existing = sig.where(F.col("doc_id") % INCREMENTAL_MOD != 0)
     hits = (
@@ -882,17 +881,17 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.concat_ws("|", *[F.col(f"m{i}") for i in cols]).alias("band_key"),
             )
         )
-    bands = (
+    # shared: the md5-minhash signature pipeline feeds both sides of the
+    # band self-join below
+    bands = share(
         sig.select(
             "doc_id",
             *[F.col(f"m{i}") for i in range(MINHASH_K)],
             F.explode(F.array(*band_structs)).alias("band"),
         )
         .select("*", "band.band_id", "band.band_key")
-        .drop("band")
-        # materialize once: the md5-minhash signature pipeline feeds both
-        # sides of the band self-join below
-        .localCheckpoint()
+        .drop("band"),
+        "minhash_portable.bands",
     )
     a, b = bands.alias("a"), bands.alias("b")
     est = sum(
@@ -1063,9 +1062,9 @@ def _emb_signatures(
 ) -> DataFrame:
     """Hyperplane signature pass: sign bits of ``v @ planes`` (band-major
     columns: EMB_LSH_BANDS bands × ``bits`` planes each) → one
-    (vec_id, band, band_val) row per band, materialized once via
-    localCheckpoint so the Arrow/numpy kernel never reruns on both sides
-    of the downstream band equi-joins."""
+    (vec_id, band, band_val) row per band, shared so the Arrow/numpy
+    kernel never reruns on both sides of the downstream band
+    equi-joins."""
     import numpy as np
     import pandas as pd
 
@@ -1093,9 +1092,10 @@ def _emb_signatures(
                 )
             yield pd.concat(out)
 
-    return e.mapInPandas(
-        signatures, "vec_id long, band int, band_val long"
-    ).localCheckpoint()
+    return share(
+        e.mapInPandas(signatures, "vec_id long, band int, band_val long"),
+        "emb_lsh.sigs",
+    )
 
 
 def _emb_lsh_pairs(
@@ -1533,7 +1533,7 @@ def dedup_simhash_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     (values unchanged — the distinct runs on the token itself either
     way; 3-scale parity re-proven)."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    toks = _distinct_token_md5(docs).localCheckpoint()
+    toks = share(_distinct_token_md5(docs), "simhash_methods.toks")
     parts = [
         _SIMHASH_METHODS[m](docs, toks).select(
             F.lit(m).alias("method"), "doc_1", "doc_2", "hamming"

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from databricks_spark_sql_challenge1_spark.catalog import last_order_datetime, load_table
+from databricks_spark_sql_challenge1_spark.catalog import last_order_datetime, load_table, share
 from databricks_spark_sql_challenge1_spark.functions.datetime import shift_months
 from databricks_spark_sql_challenge1_spark.registry import query
 
@@ -165,9 +165,9 @@ def launch_cohort_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same 3-level machinery (MIN-derived grouping, self-joined facts).
 
     Round-18: ``launches`` (a full lineitem-join-orders MIN aggregate)
-    feeds both the cohort count and the activity join; materialized once
+    feeds both the cohort count and the activity join; shared once
     (|parts| rows) instead of evaluating the launch subtree twice."""
-    launches = _launch_products(spark, sf_dir).localCheckpoint()
+    launches = share(_launch_products(spark, sf_dir), "launch_cohort.launches")
     cohort = launches.groupBy("launch_year", "launch_month").agg(
         F.count(F.lit(1)).alias("n_parts_launched")
     )

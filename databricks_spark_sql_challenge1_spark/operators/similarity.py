@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.catalog import load_table, share
 from databricks_spark_sql_challenge1_spark.functions.vectors import cosine, l2_norm
 from databricks_spark_sql_challenge1_spark.operators.dedup import EMB_DUP_THRESHOLD
 from databricks_spark_sql_challenge1_spark.registry import fill_doc, query
@@ -538,15 +538,19 @@ def similarity_ann_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The legs overlap — ivf and ivfpq run the identical IVF assignment, and
     ivfpq and pq the identical uncapped PQ encode and query distance table
-    — so the surface materializes each shared frame ONCE (localCheckpoint)
+    — so the surface materializes each shared frame ONCE (``share``)
     and passes it to the legs; the frames are deterministic, so every
     leg's rows are those of its standalone callable."""
     e = _emb(spark, sf_dir)
     _guard_stride_corpus(
         e.count(), "similarity_ann_methods", "similarity_pq_rerank"
     )
-    assigned = _assign(e, _centroids(e), "cos", 1).localCheckpoint()
-    codes, dtable = [f.localCheckpoint() for f in _pq_codes_dtable(e)]
+    assigned = share(_assign(e, _centroids(e), "cos", 1), "ann_methods.assigned")
+    codes, dtable = _pq_codes_dtable(e)
+    codes, dtable = (
+        share(codes, "ann_methods.codes"),
+        share(dtable, "ann_methods.dtable"),
+    )
     legs = {
         "ivf": _ivf_leg(assigned),
         "ivfpq": _ivfpq_leg(e, assigned, codes, dtable),
@@ -767,9 +771,11 @@ def _semantic_dedup(e: DataFrame, stride: int) -> DataFrame:
     """The SemDeDup body both cell-count rules share: multi-probe
     assignment to the ``stride`` centroid subset, within-cell pair pruning,
     keep-lowest-id rank."""
-    assigned = _assign(
-        e, _centroids(e, stride), "cos", SEMANTIC_PROBES
-    ).localCheckpoint()  # feeds both join sides; avoid double assignment
+    # feeds both join sides; avoid double assignment
+    assigned = share(
+        _assign(e, _centroids(e, stride), "cos", SEMANTIC_PROBES),
+        "semantic_dedup.assigned",
+    )
     a, b = assigned.alias("a"), assigned.alias("b")
     # a pair sharing both probed cells would appear twice: aggregate to one
     # row per (vec_id, dup_of), keeping the smallest shared cell. sim is
@@ -936,7 +942,7 @@ def embedding_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     at k = 10⁵), assignment is a narrow crossJoin + rank-1 window (no
     shuffle of the corpus), the update is one shuffle on (centroid_id,
     pos) with map-side partial aggregation — the canonical distributed
-    k-means round. The loop localCheckpoints the k-row centroid table per
+    k-means round. The loop shares the k-row centroid table per
     iteration, so plan depth stays constant in ITERS. Empty clusters keep
     their previous centroid (COALESCE on both engines).
     """
@@ -966,12 +972,11 @@ def _kmeans_refine(e: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
                     lambda x: x["cv"],
                 ).alias("memb")
             )
-            cent = (
-                cent.join(reassembled, "centroid_id", "left")
-                .select(
+            cent = share(
+                cent.join(reassembled, "centroid_id", "left").select(
                     "centroid_id", F.coalesce("memb", "cemb").alias("cemb")
-                )
-                .localCheckpoint()
+                ),
+                "kmeans.cent",
             )
     sizes = assigned.groupBy("centroid_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members")
@@ -1297,20 +1302,15 @@ def similarity_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall audit pays (run on a sampled query set, as here).
     """
     # Each leg feeds two aggregates below (hits + its per-query count);
-    # unmaterialized, the whole leg plan evaluated twice per run — one
-    # materialization per leg halves the audit's cost (Q·k rows each).
-    # Eager localCheckpoint (round 19): each leg runs its own jobs at build
-    # time, once per call — nothing is cached across calls — and both
-    # aggregates read the checkpointed rows.
-    exact = (
-        similarity_topk(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
+    # unshared, the whole leg plan evaluated twice per run — one shared
+    # frame per leg halves the audit's cost (Q·k rows each).
+    exact = share(
+        similarity_topk(spark, sf_dir).select("query_id", "neighbor_id"),
+        "recall_audit.exact",
     )
-    approx = (
-        similarity_ivfpq(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
+    approx = share(
+        similarity_ivfpq(spark, sf_dir).select("query_id", "neighbor_id"),
+        "recall_audit.approx",
     )
     # Explicit broadcasts: unconditional by design, justified by the
     # sampled-query contract (Q·k <= N_QUERIES*TOP_K rows per leg — see the

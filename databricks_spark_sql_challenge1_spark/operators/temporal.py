@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.catalog import load_table, share
 from databricks_spark_sql_challenge1_spark.functions.cents import cents, cents_sql
 from databricks_spark_sql_challenge1_spark.registry import query
 
@@ -566,10 +566,10 @@ def events_gapfill_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-18 optimization: the obs aggregate (events scan + one shuffle)
     # was re-derived FIVE times per run — the locf leg references it three
     # times (spine span, the spine left join, the gap lag) and the interp
-    # template twice (seq, span). Materialize it once and feed both legs
+    # template twice (seq, span). Share it once and feed both legs
     # (the DataFrame twin and the template's obs CTE are value-identical
     # by construction; 3-scale parity re-proven).
-    obs = _gapfill_obs(spark, sf_dir).localCheckpoint()
+    obs = share(_gapfill_obs(spark, sf_dir), "gapfill_methods.obs")
     obs.createOrReplaceTempView("gapfill_obs_shared")
     nl = F.lit(None).cast("long")
     locf = _locf_leg(obs).select(

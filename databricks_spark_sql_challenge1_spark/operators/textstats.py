@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.catalog import load_table, share
 from databricks_spark_sql_challenge1_spark.functions.hashing import (
     TEXT_FINGERPRINT_SQL,
     hex_int,
@@ -676,7 +676,7 @@ def tfidf_doc_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical while leaving the actual weights (dot products, norms)
     untouched. Norms still use each doc's full truncated vector, so
     reported cosines are true values, not renormalized ones. The truncated
-    vectors are localCheckpoint-ed once and the pair expansion runs on
+    vectors are shared once and the pair expansion runs on
     unordered pairs only (mirror after the agg). ROUND(4) on both engines
     pins the value hash and the neighbor ranking (neighbor_id breaks
     ties).
@@ -697,15 +697,15 @@ def tfidf_doc_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     top_w = Window.partitionBy("doc_id").orderBy(
         F.round(F.col("w"), 9).desc(), F.col("term").asc()
     )
-    # materialize the truncated vectors ONCE (N·TFIDF_VEC_TERMS rows): this
+    # share the truncated vectors ONCE (N·TFIDF_VEC_TERMS rows): this
     # tiny relation feeds four consumers (both join sides + both norm
-    # lookups) — without the checkpoint Spark re-runs the whole
+    # lookups) — unshared, Spark re-runs the whole
     # tokenize→tf-idf→window pipeline four times
-    t5 = (
+    t5 = share(
         wgt.withColumn("rk", F.row_number().over(top_w))
         .where(F.col("rk") <= TFIDF_VEC_TERMS)
-        .select("doc_id", "term", "w")
-        .localCheckpoint()
+        .select("doc_id", "term", "w"),
+        "tfidf_neighbors.t5",
     )
     nrm = t5.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nw"))
     # hot-posting cut: cap each term's posting list before the self-join so

@@ -50,11 +50,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in simple_plan(df)
 
 
-def has_cartesian(df: DataFrame) -> bool:
-    p = simple_plan(df)
-    return "CartesianProduct" in p or "BroadcastNestedLoopJoin" in p
-
-
 def fingerprint(df: DataFrame) -> dict[str, int]:
     """The multiset of physical operator names in ``df``'s plan before
     execution: AQE's initial plan and its subqueries, each name stripped

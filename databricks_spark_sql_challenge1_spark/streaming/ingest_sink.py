@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from databricks_spark_sql_challenge1_spark.catalog import (
     ensure_session_confs,
     load_table,
+    share,
 )
 from databricks_spark_sql_challenge1_spark.functions.cents import cents
 from databricks_spark_sql_challenge1_spark.registry import query
@@ -200,18 +201,17 @@ def stage_adversarial_shards(
     stop/resume protocol (one staging definition, no drift)."""
     from pyspark.sql.window import Window
 
-    # localCheckpoint materializes the single-partition ntile split ONCE;
-    # without it every one of the four shard-write jobs re-runs the global
-    # sort and the events scan (r16-end review)
-    halved = (
-        _staged_events(spark, sf_dir)
-        .withColumn(
+    # shared: the single-partition ntile split runs ONCE; unshared, every
+    # one of the four shard-write jobs re-runs the global sort and the
+    # events scan (r16-end review)
+    halved = share(
+        _staged_events(spark, sf_dir).withColumn(
             "half",
             F.ntile(2).over(
                 Window.orderBy(F.col("ts").asc(), F.col("event_id").asc())
             ),
-        )
-        .localCheckpoint()
+        ),
+        "adversarial_shards.halved",
     )
     events = halved.drop("half")
     late = halved.where(F.col("half") == 2).drop("half")
@@ -254,17 +254,16 @@ def stage_skewed_shards(
     the remap is pure arithmetic on event_id, so the staged set is a
     function of the fixture alone and the end state is oracle-checkable.
     """
-    skewed = (
-        _staged_events(spark, sf_dir)
-        .withColumn(
+    # one shared staging frame, three shard writes (the
+    # stage_adversarial_shards lesson, r16-end review)
+    skewed = share(
+        _staged_events(spark, sf_dir).withColumn(
             "user_id",
             F.when(
                 F.col("event_id") % 2 == 0, F.lit(1).cast("bigint")
             ).otherwise(F.col("user_id")),
-        )
-        # one staging materialization, three shard writes (the
-        # stage_adversarial_shards lesson, r16-end review)
-        .localCheckpoint()
+        ),
+        "skewed_shards.skewed",
     )
     hot = skewed.where(F.col("user_id") == 1)
     raw_dir = os.path.join(scratch, "raw")
@@ -307,9 +306,9 @@ def _bronze_to_gold(spark: SparkSession, bronze_dir: str) -> DataFrame:
     """The shared silver→gold tail of the ingest witnesses: a second
     streaming stage over the bronze sink — watermarked 30-minute session
     windows per user (real session state, availableNow drain) — then the
-    per-user gold rollup (n_sessions, n_events, sum_cents),
-    localCheckpointed before the caller removes the scratch dir so nothing
-    lazily re-reads deleted files."""
+    per-user gold rollup (n_sessions, n_events, sum_cents), shared before
+    the caller removes the scratch dir so nothing lazily re-reads deleted
+    files."""
     from databricks_spark_sql_challenge1_spark.operators.windows import SESSION_GAP
 
     silver = (
@@ -323,15 +322,15 @@ def _bronze_to_gold(spark: SparkSession, bronze_dir: str) -> DataFrame:
         )
     )
     drained = _drain_to_memory(silver, spark)
-    return (
+    return share(
         drained.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
             F.sum("n_events").cast("bigint").alias("n_events"),
             F.sum("sum_cents").cast("bigint").alias("sum_cents"),
         )
-        .orderBy(F.col("user_id").asc())
-        .localCheckpoint()
+        .orderBy(F.col("user_id").asc()),
+        "bronze_to_gold.gold",
     )
 
 

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from databricks_spark_sql_challenge1_spark.catalog import (
     ensure_session_confs,
     load_table,
+    share,
 )
 from databricks_spark_sql_challenge1_spark.functions.cents import (
     cents,
@@ -421,10 +422,11 @@ def streaming_parity_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # update mode re-emits a window when batch 2 adds accepted late
         # rows; counts only grow, so the max-n_surv emission is the settled
-        # state. Materialized before the scratch dir is removed.
-        drained = _drain_to_memory(
-            agg, spark, "update", ("window_start", "n_surv")
-        ).localCheckpoint()
+        # state. Shared before the scratch dir is removed.
+        drained = share(
+            _drain_to_memory(agg, spark, "update", ("window_start", "n_surv")),
+            "parity_lateness.drained",
+        )
     batch = load_table(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("window_start"),
         (F.col("event_id") % LATE_MOD == LATE_RESIDUE).alias("is_late"),

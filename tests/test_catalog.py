@@ -10,8 +10,10 @@ deep in a driver run.
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
 import os
+import pathlib
 
 from pyspark.sql import functions as F
 
@@ -141,6 +143,66 @@ def _jobs_in_group(spark, group: str, fn) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _last_job_id(spark, group: str) -> int:
+    """Run one trivial job in ``group`` and return its id: every job id
+    below it was launched before it."""
+    sc = spark.sparkContext
+    _jobs_in_group(spark, group, lambda: sc.parallelize([0], 1).count())
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_share_labels_its_jobs(spark):
+    """``share`` launches its jobs in the caller's job group, describes
+    them ``share:<label>`` and gives the caller's description back."""
+    sc = spark.sparkContext
+    df = spark.range(100).withColumn("sq", F.col("id") * F.col("id"))
+    before = _last_job_id(spark, "share-before")
+    sc.setJobGroup("share-g", "outer")
+    try:
+        shared = catalog.share(df, "x")
+        description = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    after = _last_job_id(spark, "share-after")
+    assert description == "outer"
+    launched = list(range(before + 1, after))
+    assert launched, "share must run its checkpoint jobs eagerly"
+    assert sorted(sc.statusTracker().getJobIdsForGroup("share-g")) == launched
+    store = sc._jsc.sc().statusStore()
+    assert {store.job(j).description().get() for j in launched} == {"share:x"}
+    assert sorted(shared.collect()) == sorted(df.collect())
+
+
+def test_one_shared_frame():
+    """Structural guard (no Spark): the package materializes a shared frame
+    one way. ``.localCheckpoint(`` appears once, inside ``catalog.share``,
+    and every ``share`` call names its frame with a string literal that no
+    other call site uses."""
+    pkg = pathlib.Path(catalog.__file__).parent
+    checkpoints, labels = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        checkpoints += [path.name] * src.count(".localCheckpoint(")
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef) and node.name == "share":
+                assert path.name == "catalog.py"
+                assert ast.get_source_segment(src, node).count(".localCheckpoint(") == 1
+            if isinstance(node, ast.Call) and "share" in (
+                getattr(node.func, "id", None), getattr(node.func, "attr", None)
+            ):
+                label = node.args[1]
+                assert isinstance(label, ast.Constant) and isinstance(label.value, str), (
+                    f"{path.name}:{node.lineno}: share's label must be a string literal"
+                )
+                labels.append(label.value)
+    assert checkpoints == ["catalog.py"]
+    duplicated = sorted({lb for lb in labels if labels.count(lb) > 1})
+    assert not duplicated, f"labels used by more than one share call: {duplicated}"
+    assert len(labels) >= 30
 
 
 def test_unchanged_layout_loads_without_jobs(spark, tmp_path):

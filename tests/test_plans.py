@@ -22,7 +22,6 @@ from databricks_spark_sql_challenge1_spark.operators.export_denorm import (
 from databricks_spark_sql_challenge1_spark.operators.states import nations_by_customer
 from databricks_spark_sql_challenge1_spark.plans.explain import (
     formatted_plan,
-    has_cartesian,
     pushed_filters,
     read_schemas,
     simple_plan,
@@ -105,7 +104,6 @@ def test_contamination_benchmark_broadcasts(spark):
 
     df = docs_contamination(spark, SF_DIR)
     assert uses_broadcast_join(df), simple_plan(df)
-    assert not has_cartesian(df), simple_plan(df)
 
 
 def test_chunk_windows_is_narrow(spark):
@@ -204,23 +202,12 @@ def test_round5_operators_plan_shapes(spark):
 
 
 def test_round6_operators_plan_shapes(spark):
-    """Round-6 operators: the adaptive-band LSH must keep the band
-    equi-join shape (no cartesian); int8 quantization must be a pure
-    narrow expression pipeline (single scan, no join, no aggregate — the
-    only exchange is the presentation sort); the temperature mixture's
-    scalar joins must come in broadcast, never as a CartesianProduct."""
-    from databricks_spark_sql_challenge1_spark.operators.dedup import (
-        dedup_embedding_lsh_adaptive,
-    )
+    """Round-6 operators: int8 quantization must be a pure narrow
+    expression pipeline (single scan, no join, no aggregate — the only
+    exchange is the presentation sort)."""
     from databricks_spark_sql_challenge1_spark.operators.similarity import (
         embedding_quantize_int8,
     )
-    from databricks_spark_sql_challenge1_spark.operators.traindata import (
-        corpus_temperature_mixture,
-    )
-
-    plan = simple_plan(dedup_embedding_lsh_adaptive(spark, SF_DIR))
-    assert "CartesianProduct" not in plan, plan
 
     qplan = simple_plan(embedding_quantize_int8(spark, SF_DIR))
     assert "Join" not in qplan and "HashAggregate" not in qplan, qplan
@@ -229,27 +216,16 @@ def test_round6_operators_plan_shapes(spark):
         "rangepartitioning" in ln or _is_spread_exchange(ln) for ln in exchanges
     ), qplan
 
-    mplan = simple_plan(corpus_temperature_mixture(spark, SF_DIR))
-    assert "CartesianProduct" not in mplan, mplan
-
 
 def test_round6_retrieval_and_skew_plan_shapes(spark):
-    """similarity_pq_rerank's corpus-sized joins must be broadcast/equi
-    (no cartesian); partkey_skew_histogram must push the status filter to
-    the orders scan and never degenerate."""
+    """partkey_skew_histogram must push the status filter to the orders
+    scan."""
     from databricks_spark_sql_challenge1_spark.operators.analytics_ext import (
         partkey_skew_histogram,
     )
-    from databricks_spark_sql_challenge1_spark.operators.similarity import (
-        similarity_pq_rerank,
-    )
-
-    rplan = simple_plan(similarity_pq_rerank(spark, SF_DIR))
-    assert "CartesianProduct" not in rplan, rplan
 
     df = partkey_skew_histogram(spark, SF_DIR)
     assert "o_orderstatus" in " ".join(pushed_filters(df))
-    assert not has_cartesian(df), simple_plan(df)
 
 
 def test_multimodal_raw_kernels_are_narrow(spark):
@@ -274,18 +250,11 @@ def test_multimodal_raw_kernels_are_narrow(spark):
 
 
 def test_round7_operators_plan_shapes(spark):
-    """Round-7 operators: the three corpus-scan-shaped queries (PII scrub,
-    PNG round-trip, JL projection) must be narrow maps — no join at all
-    before the presentation sort — and the gapfill spine join must not
-    degenerate into a CartesianProduct. orders_dq_audit is exempt from the
-    no-BNLJ rule only for its 1-row x 1-row count stitching (by design);
-    it must still contain no CartesianProduct."""
-    from databricks_spark_sql_challenge1_spark.operators.analytics_ext import (
-        orders_dq_audit,
-    )
-    from databricks_spark_sql_challenge1_spark.operators.multimodal import (
-        multimodal_png_roundtrip,
-    )
+    """Round-7 operators: the corpus-scan-shaped PII scrub and JL
+    projection must be narrow maps — no join at all before the
+    presentation sort — and the gapfill spine join must not degenerate
+    into a CartesianProduct (events_gapfill_stats is not registered, so
+    the plan sweep does not cover it)."""
     from databricks_spark_sql_challenge1_spark.operators.similarity import (
         embedding_random_projection,
     )
@@ -299,9 +268,8 @@ def test_round7_operators_plan_shapes(spark):
     for q in (docs_pii_redact, embedding_random_projection):
         plan = simple_plan(q(spark, SF_DIR))
         assert "Join" not in plan, f"{q.__name__} should be join-free:\n{plan}"
-    for q in (multimodal_png_roundtrip, events_gapfill_stats, orders_dq_audit):
-        plan = simple_plan(q(spark, SF_DIR))
-        assert "CartesianProduct" not in plan, f"{q.__name__}:\n{plan}"
+    plan = simple_plan(events_gapfill_stats(spark, SF_DIR))
+    assert "CartesianProduct" not in plan, plan
 
 
 def test_rfm_approx_no_global_sort(spark):
