@@ -11,6 +11,10 @@ BENCH_r*.json unparsed):
     seconds for the BASELINE.md-mappable headline subset — small enough
     (<1.5 KB) to survive the driver's tail capture intact.
 
+Protocol: after one session warm-up (``warm``), every query gets exactly
+one cold timed run (``timed_run``). The same two functions time one query
+in a fresh JVM (``tools/opt_probe.py cold``).
+
 Comparable to BASELINE.md's per-query wall-clock table (reference run on
 Databricks CE; see SURVEY.md §6 — comparison is per-operator relative cost).
 Wall-clock here is the trajectory, not the regression evidence: for
@@ -47,44 +51,35 @@ BASELINE_MAPPABLE = (
     "order_export_denorm",  # 14
 )
 
-# The sweep's result sink: every timed run collects to the driver, the
-# driver's own shape.
+# The sweep's result sink, stamped into the detail file: every timed run
+# collects to the driver, the driver's own shape.
 SINK = "collect"
 
-
-# Result-sink modes (round 7 — VERDICT r6 "Next round" #3): collect() adds
-# a driver-transfer term that is O(result), which for multi-million-row
-# outputs (e.g. dedup_simhash_wide_pairs at 16x: 5.88 M pairs) dominates
-# the measurement and hides the plan's own growth. "parquet" writes the
-# result to a scratch dir instead — the production shape (pair relations
-# are inputs to downstream stages, never driver material) — and "count"
-# materializes without any transfer. Growth-sweep scripts import
-# materialize() so their curves measure the PLAN at every scale.
-def materialize(df, sink: str = "collect", scratch: str | None = None) -> None:
-    if sink == "collect":
-        df.collect()
-    elif sink == "count":
-        df.count()
-    elif sink == "parquet":
-        out = scratch or os.path.join(
-            "/tmp", f"spark_graft_u{os.getuid()}_bench_sink"
-        )
-        df.write.mode("overwrite").parquet(out)
-    else:
-        raise ValueError(f"unknown sink {sink!r}")
-
-
-# Fixed calibration query (round 7): its warmed median is a host-speed stamp
-# recorded with every sweep, carried on the compact line.
+# The compact line's ``calibration`` is this query's reading from the
+# sweep itself.
 CALIBRATION_QUERY = "count_distinct_orders"
-CALIBRATION_REPEATS = 5
 
-# Measurement protocol (round 6): one timed run for the sub-2 s body of the
-# distribution (noise there is absolute-small); for the >= 2 s heavy tail
-# the cold first run is a DISCARDED warmup and the recorded value is the
-# median of the 3 subsequent warmed runs.
-HEAVY_TAIL_SEC = 2.0
-REPEATS = 3
+
+def warm(spark, sf_dir: str) -> None:
+    """Session warm-up outside the timed region: JVM/codegen on the orders
+    scan, plus the per-``sf_dir`` anchor scalar (S11), which later queries
+    read from its cache (the baseline also excludes cluster startup —
+    dbc:cmd32 is a separate setup row)."""
+    from databricks_spark_sql_challenge1_spark.catalog import last_order_datetime
+
+    spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).count()
+    last_order_datetime(spark, sf_dir)
+
+
+def timed_run(spark, sf_dir: str, fn) -> float:
+    """One cold timed run of ``fn``: the SQL cache is dropped before the
+    clock starts, so any in-plan ``.cache()`` frame is recomputed from the
+    parquet inputs and none accumulates executor storage across a sweep;
+    the result is collected inside the timed region."""
+    spark.catalog.clearCache()
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).collect()
+    return round(time.perf_counter() - t0, 3)
 
 
 def detail_name(cpus: int) -> str:
@@ -114,7 +109,7 @@ def summary_line(detail: dict) -> str:
             "unit": detail["unit"],
             "sf": detail["sf"],
             "n_queries": len(timings),
-            "calibration": detail["calibration"]["median_sec"],
+            "calibration": timings.get(CALIBRATION_QUERY),
             "queries": {
                 n: timings[n] for n in BASELINE_MAPPABLE if n in timings
             },
@@ -151,45 +146,8 @@ def main() -> None:
 
     spark = get_spark("challenge1-bench")
     sc = spark.sparkContext
-    # JVM/codegen warmup outside the timed region (baseline timings also
-    # exclude cluster startup — dbc:cmd32 is a separate setup row). The
-    # anchor scalar (S11) is likewise setup: it is cached per sf_dir and in
-    # round 1's ordering was amortized by early queries, so warm it here to
-    # keep per-query times comparable across rounds.
-    from databricks_spark_sql_challenge1_spark.catalog import last_order_datetime
-
-    spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).count()
-    last_order_datetime(spark, sf_dir)
-
-    def timed(fn) -> float:
-        # Cold-cache protocol (round 19 — VERDICT r18 #1): the cache manager
-        # served in-plan .cache() frames across the warmed repeats (computed
-        # in the DISCARDED warmup, read back inside the timed region).
-        # Dropping the SQL cache before the clock starts makes every
-        # recorded run recompute from the parquet inputs and stops cached
-        # frames accumulating executor storage across the sweep session.
-        # localCheckpoint frames are unaffected (each run creates fresh
-        # RDDs — naturally cold).
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        materialize(fn(spark, sf_dir), SINK)
-        return round(time.perf_counter() - t0, 3)
-
-    # Calibration first (after warmup, before the sweep): warmed median of
-    # CALIBRATION_REPEATS runs of the fixed probe query.
-    calib_fn = QUERIES[CALIBRATION_QUERY]
-    timed(calib_fn)  # discarded cold run
-    calib_runs = sorted(timed(calib_fn) for _ in range(CALIBRATION_REPEATS))
-
-    timings: dict[str, float] = {}
-    for name in headline:
-        fn = QUERIES[name]
-        first = timed(fn)
-        if first < HEAVY_TAIL_SEC:
-            timings[name] = first
-        else:
-            runs = sorted(timed(fn) for _ in range(REPEATS))
-            timings[name] = runs[REPEATS // 2]
+    warm(spark, sf_dir)
+    timings = {name: timed_run(spark, sf_dir, QUERIES[name]) for name in headline}
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     detail = {
@@ -203,16 +161,8 @@ def main() -> None:
         "default_parallelism": sc.defaultParallelism,
         "jvm_options": jvm_options(spark),
         "sink": SINK,
-        "calibration": {
-            "query": CALIBRATION_QUERY,
-            "median_sec": calib_runs[CALIBRATION_REPEATS // 2],
-            "runs": calib_runs,
-        },
-        "protocol": "cold-run-discarded median-of-3-warmed for queries "
-        f">= {HEAVY_TAIL_SEC:g}s; single-run below; calibration = warmed "
-        f"median-of-{CALIBRATION_REPEATS} of {CALIBRATION_QUERY} (host-speed "
-        "stamp); spark.catalog.clearCache() before every timed run "
-        "(cold-cache — in-plan .cache() frames never carry across repeats)",
+        "protocol": "one cold run per query after the session warm-up; "
+        "spark.catalog.clearCache() before each run; collect sink",
     }
     spark.stop()
     detail_path = os.path.join(

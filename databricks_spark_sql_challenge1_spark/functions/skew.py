@@ -1,6 +1,7 @@
-"""Skew-handling aggregation helpers (SCALE.md): the explicit salting
-pattern for when a single group key exceeds what AQE's skew splitter can
-rebalance (e.g. the reference's NULL-heavy abandoned-cart keys at 100 TB).
+"""Skew-handling aggregation helpers (SCALE.md §Layout and skew levers):
+the explicit salting pattern for when a single group key exceeds what
+AQE's skew splitter can rebalance (e.g. the reference's NULL-heavy
+abandoned-cart keys at 100 TB).
 
 ``salted_count_distinct`` exploits that hash-partitioning the *distinct
 values* into salt buckets makes per-bucket distinct sets disjoint, so the

@@ -153,7 +153,8 @@ def top_abandoned_products_salted(spark: SparkSession, sf_dir: str) -> DataFrame
     by hash(o_orderkey) into disjoint salt buckets — two balanced shuffles,
     then a SUM of partial distinct counts. Same oracle as
     ``top_abandoned_products``: results must be bit-identical to the direct
-    plan (also pinned by tests/test_skew.py; measured effect in SCALE.md).
+    plan (also pinned by tests/test_skew.py; measured effect in
+    SCALE.md §Layout and skew levers).
     """
     from databricks_spark_sql_challenge1_spark.functions.skew import (
         salted_count_distinct,

@@ -1142,9 +1142,9 @@ def partkey_skew_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram of per-partkey abandoned-order group sizes (bucket b holds
     keys with 2^b <= group < 2^(b+1)), with the NULL hot key called out —
     the measurement you run BEFORE choosing between the direct plan and
-    `top_abandoned_products_salted` (SCALE.md's crossover analysis reads
-    exactly these numbers: where the max bucket sits vs a reducer's
-    capacity).
+    `top_abandoned_products_salted` (the crossover analysis in
+    SCALE.md §Layout and skew levers reads exactly these numbers: where the
+    max bucket sits vs a reducer's capacity).
 
     Scale shape: the same right-join + per-key count-distinct as the
     flagship, then a SECOND tiny aggregate over the key-grain table into

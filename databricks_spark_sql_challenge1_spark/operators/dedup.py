@@ -222,7 +222,8 @@ def _ngram_jaccard(docs: DataFrame, df_cap: int) -> DataFrame:
 # so signed 64-bit arithmetic holds on both engines. Token hashes, bit
 # algebra, Hamming distance and pigeonhole regions all derive from here.
 #   narrow32    the 32-bit fixture baseline;
-#   wide60      the measured 100 TB configuration (SCALE.md round 5);
+#   wide60      the measured 100 TB configuration (SCALE.md §Saturation
+#               knees);
 #   adaptive88  two 44-bit limbs, for the corpus-size-adaptive band keys of
 #               ``dedup_simhash_adaptive``.
 SIMHASH_LAYOUTS = {
@@ -413,7 +414,7 @@ def _simhash_band_join(
     bucket is true-dup-dominated, while the sub-band explode adds 4× rows
     and wider join keys. At a real corpus where hot buckets are
     boilerplate-driven, the sub-band level becomes the right lever
-    (SCALE.md documents the trigger)."""
+    (SCALE.md §Saturation knees documents the trigger)."""
     regions = _simhash_regions(layout)
 
     def region_key(limb: str, r: int) -> str:
@@ -492,9 +493,12 @@ def _narrow32_leg(docs: DataFrame, toks: DataFrame) -> DataFrame:
 # wide60 baseline below is retained as the measured fixture-scale
 # configuration, but its band space is FIXED, so candidate volume
 # Σ|bucket|² goes quadratic once the corpus outgrows it — measured, not
-# hypothesized (SCALE.md r7 addendum §3: knee ≈ 8·10⁴ docs, 1.1 s → 8.4 s
-# in one doubling). A copy-paste user must not be able to run it past the
-# knee: it counts its corpus first (a cheap count-star, the bounded
+# hypothesized. The knee is 8·10⁴ docs: on the decorrelated stress
+# replicas, to a parquet sink, the wide60 pairs took 0.9 / 0.8 / 1.1 /
+# 8.4 s at 1×/4×/8×/16× (5 k → 80 k docs) — 1.1 s → 8.4 s in one
+# doubling while output grew only 1.6× (commit 7d3ddbd; SCALE.md
+# §Saturation knees). A copy-paste user must not be able to run it past
+# the knee: it counts its corpus first (a cheap count-star, the bounded
 # anchor-pull pattern) and raises toward the adaptive sibling — whose band
 # space grows with log₂ N and is measured flat 1×–16× — instead of
 # silently going quadratic.
@@ -522,14 +526,14 @@ def dedup_simhash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs on the 60-bit wide SimHash — the measured 100 TB
     configuration of ``dedup_simhash_pairs``.
 
-    Round 5's growth curve (SCALE.md) showed the 32-bit signature's 8-bit
-    bands saturating: 256 possible band values means every bucket is dense
-    once the corpus passes ~10 k docs, and candidate volume grows
-    quadratically regardless of true-dup density. With 15-bit bands
-    (32,768 values) random band collisions stay rare until ~10⁶ docs per
-    partition-disjoint corpus shard, and the candidate set tracks true
-    pairs again (measured on the decorrelated 4× replica: cross-replica
-    pair count collapses vs the 32-bit variant). Same band join; the exact
+    Round 5's growth curve (SCALE.md §Saturation knees) showed the 32-bit
+    signature's 8-bit bands saturating: 256 possible band values means
+    every bucket is dense once the corpus passes ~10 k docs, and candidate
+    volume grows quadratically regardless of true-dup density. With 15-bit
+    bands (32,768 values) random band collisions stay rare until ~10⁶ docs
+    per partition-disjoint corpus shard, and the candidate set tracks true
+    pairs again (measured on the decorrelated 4× replica: cross-replica pair
+    count collapses vs the 32-bit variant). Same band join; the exact
     Hamming filter makes the result identical to the oracle's quadratic
     all-pairs join.
 
@@ -966,20 +970,21 @@ EMB_LSH_BITS = 6
 # the dim off the data and produces the identical matrix when it is 64.
 EMB_LSH_DIM = 64
 
-# Adaptive-width hyperplane bands: round 5's growth curve (SCALE.md) measured
-# a fixed 6-bit configuration saturating — 64 values/band means every
-# bucket is dense past ~10⁴ vectors and candidate volume grows quadratically
-# (4.9×/doubling at 8×). The fix is the same family as
-# ``dedup_simhash_wide_pairs`` but parameterized by corpus size: bits per
-# band = 2·ceil(log2 N) − EMB_LSH_BITS_OFFSET (clamped to [6, 16]), so the
-# band-value space 2^bits quadruples per corpus doubling — exactly matching
-# the N² growth of random pairs, which pins expected random band collisions
-# (≈ bands · N²/2^(bits+1)) CONSTANT. The offset calibrates the formula to
-# reproduce the fixture-tuned 6-bit configuration at the 2 k-vector 1×
-# fixture. Recall trade: at the production near-dup threshold (cosine 0.99,
-# per-bit agreement p ≈ 0.97) twelve 16-bit bands hold recall ≈ 1−(1−0.97¹⁶)¹²
-# ≈ 0.999997; only the fixture's deliberately loose 0.4 threshold (p ≈ 0.63)
-# loses recall as bits widen — and at fixture sizes bits stays 6.
+# Adaptive-width hyperplane bands: round 5's growth curve (SCALE.md
+# §Saturation knees) measured a fixed 6-bit configuration saturating — 64
+# values/band means every bucket is dense past ~10⁴ vectors and candidate
+# volume grows quadratically (4.9×/doubling at 8×). The fix is the same
+# family as ``dedup_simhash_wide_pairs`` but parameterized by corpus size:
+# bits per band = 2·ceil(log2 N) − EMB_LSH_BITS_OFFSET (clamped to [6, 16]),
+# so the band-value space 2^bits quadruples per corpus doubling — exactly
+# matching the N² growth of random pairs, which pins expected random band
+# collisions (≈ bands · N²/2^(bits+1)) CONSTANT. The offset calibrates the
+# formula to reproduce the fixture-tuned 6-bit configuration at the 2
+# k-vector 1× fixture. Recall trade: at the production near-dup threshold
+# (cosine 0.99, per-bit agreement p ≈ 0.97) twelve 16-bit bands hold recall
+# ≈ 1−(1−0.97¹⁶)¹² ≈ 0.999997; only the fixture's deliberately loose 0.4
+# threshold (p ≈ 0.63) loses recall as bits widen — and at fixture sizes
+# bits stays 6.
 EMB_LSH_MAX_BITS = 16
 EMB_LSH_BITS_OFFSET = 16
 
@@ -1238,8 +1243,8 @@ def dedup_embedding_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows. Expected random band collisions stay ≈ bands·N²/2^(bits+1) =
     constant, so the candidate join is linear in N and the signature GEMM
     (linear, BLAS) dominates — where a fixed 6-bit band space measured
-    4.9×/doubling at 8× from pure band saturation (SCALE.md round-5
-    curve). N is read once via the bounded anchor-pull pattern (a count,
+    4.9×/doubling at 8× from pure band saturation (SCALE.md §Saturation
+    knees). N is read once via the bounded anchor-pull pattern (a count,
     not a collect); the oracle derives the identical width from COUNT(*)
     in its params CTE, so the two sides can never desync. Recall is
     tunable (bands × bits); the subset property (output ⊆ exact all-pairs
@@ -1428,21 +1433,21 @@ def docs_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Adaptive-band SimHash (round 7). The sink-mode growth re-read (SCALE.md
-# round-7 addendum) measured the 60-bit/15-bit-band config's band space
-# saturating at ~8x10^4 docs (1.1 s -> 8.4 s across 8x->16x while output
-# grew only 1.6x). Cure = the family rule proven on the embedding LSH in
-# r6: derive band width from corpus size. SimHash needs one extra move:
-# the pigeonhole argument fixes the BAND COUNT at HAMMING_MAX + 1, so the
-# only lever is total signature width -> the two-limb adaptive88 layout
-# (2 x 44 bits), giving 4 pigeonhole regions of 22 bits. The runtime band
-# KEY is the top `bpb` bits of each region (truncation preserves the
+# Adaptive-band SimHash (round 7). The sink-mode growth re-read (commit
+# 7d3ddbd, SCALE.md §Saturation knees) measured the 60-bit/15-bit-band
+# config's band space saturating at ~8x10^4 docs (1.1 s -> 8.4 s across
+# 8x->16x while output grew only 1.6x). Cure = the family rule proven on the
+# embedding LSH in r6: derive band width from corpus size. SimHash needs one
+# extra move: the pigeonhole argument fixes the BAND COUNT at HAMMING_MAX +
+# 1, so the only lever is total signature width -> the two-limb adaptive88
+# layout (2 x 44 bits), giving 4 pigeonhole regions of 22 bits. The runtime
+# band KEY is the top `bpb` bits of each region (truncation preserves the
 # pigeonhole: if two signatures agree on a whole region they agree on any
-# prefix of it), and bpb = clamp(ceil(log2 N) + 2, 8, 22) keeps the
-# expected random-collision bucket load < 1/4 doc per bucket at every
-# corpus size up to ~10^6 docs per shard. Because the exact Hamming filter
-# decides membership, the RESULT is band-width-invariant — the oracle is
-# the quadratic all-pairs join and cannot desync from the band rule by
+# prefix of it), and bpb = clamp(ceil(log2 N) + 2, 8, 22) keeps the expected
+# random-collision bucket load < 1/4 doc per bucket at every corpus size up
+# to ~10^6 docs per shard. Because the exact Hamming filter decides
+# membership, the RESULT is band-width-invariant — the oracle is the
+# quadratic all-pairs join and cannot desync from the band rule by
 # construction.
 SIMHASH_BPB_MIN = 8
 SIMHASH_BPB_MAX = _simhash_regions("adaptive88")[0][2]
@@ -1458,7 +1463,7 @@ def dedup_simhash_adaptive(
     """Near-dup pairs on an 88-bit two-limb SimHash with corpus-size-
     adaptive band keys — the SimHash family's answer to the band-space
     saturation the round-7 sink-mode curve measured on the 60-bit config
-    (SCALE.md round-7 addendum): band key = top clamp(ceil(log2 N)+2,
+    (SCALE.md §Saturation knees): band key = top clamp(ceil(log2 N)+2,
     8, 22) bits of each of the four 22-bit pigeonhole regions, so random
     band collisions stay O(1) per bucket at every corpus size instead of
     going quadratic past ~10^5 docs. The exact Hamming <= HAMMING_MAX

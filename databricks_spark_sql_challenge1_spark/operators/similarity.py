@@ -44,13 +44,16 @@ N_QUERIES = 10  # query set = vec_id < 10
 TOP_K = 5
 CENTROID_STRIDE = 50  # centroids = vec_id % 50 == 0  → 10 buckets at sf0.01
 
-# Stride-saturation guard (round 8): the fixture rule "every 50th vector
-# is a centroid / code vector" grows K linearly with N, so centroid
-# assignment and PQ encoding each do N·K = N²/50 distance folds — measured
-# quadratic, twice: similarity_pq_rerank's stride codebook at 3.2×/doubling
-# (r6 curve, fixed by the capped codebook), and similarity_ivfpq directly
-# at 2.15 s → 23.1 s → 103.9 s across 1×/4×/8× (r8 re-measure, closing
-# VERDICT r7 #6). The four stride-parameterized fixture baselines below
+# Stride-saturation guard (round 8): the fixture rule "every 50th vector is
+# a centroid / code vector" grows K linearly with N, so centroid assignment
+# and PQ encoding each do N·K = N²/50 distance folds — measured quadratic,
+# twice, on the decorrelated stress replicas: similarity_pq_rerank's stride
+# codebook at 2.5 s → 17.3 s → 83.2 s across 1×/4×/8×, 3.2×/doubling (commit
+# 81b974a, fixed by the capped codebook), and similarity_ivfpq directly at
+# 2.15 s → 23.1 s → 103.9 s across 1×/4×/8×, 3.3–4.5×/doubling (commit
+# 4456f3c, closing VERDICT r7 #6). The knee is set at 5,000 vectors, between
+# the 1× fixture (2,000) and the first quadratic cell (4×, 8,000); SCALE.md
+# §Saturation knees. The four stride-parameterized fixture baselines below
 # therefore guard their corpus size at the knee and raise toward the
 # committed scale configs — same pattern as the fixed-band dedup guards
 # (dedup.py): a copy-paste user cannot silently run a measured-quadratic
@@ -64,7 +67,8 @@ def _guard_stride_corpus(n: int, name: str, scale_config: str) -> None:
             f"{name}: corpus size {n} exceeds the stride-parameterized "
             f"baseline's measured saturation knee ({STRIDE_SATURATION_VECS})"
             " — the every-50th-vector centroid/codebook rule makes "
-            "assignment/encoding O(N^2/50) past it (SCALE.md r6/r8 curves)."
+            "assignment/encoding O(N^2/50) past it "
+            "(SCALE.md §Saturation knees)."
             f" Use {scale_config}, whose index parameters follow a rule "
             "that holds at scale."
         )
@@ -1111,10 +1115,10 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 # retrieval shape (quantized scan for recall, exact math only on candidates).
 RERANK_SHORTLIST = 20
 # FIXED codebook size for the production-shaped path: real PQ keeps K
-# constant (256/subspace typically); the fixture's stride rule would grow
-# K with the corpus and make encoding quadratic (measured 3.2x/doubling,
-# SCALE.md round-6). 40 = exactly the stride-derived count at the 1x
-# stress fixture (2,000 vectors / stride 50), so fixture outputs are
+# constant (256/subspace typically); the fixture's stride rule would grow K
+# with the corpus and make encoding quadratic (measured 3.2x/doubling,
+# SCALE.md §Saturation knees). 40 = exactly the stride-derived count at the
+# 1x stress fixture (2,000 vectors / stride 50), so fixture outputs are
 # unchanged by the cap.
 PQ_CODEBOOK_VECS = 40
 
@@ -1157,9 +1161,9 @@ def similarity_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Codebook rule: FIXED at PQ_CODEBOOK_VECS code vectors (production PQ
     keeps K constant), unlike ``similarity_pq``'s fixture-baseline stride
     rule whose K = N/stride made encoding N·K·M sqdist folds — the round-6
-    growth curve measured 3.2×/doubling before the cap (SCALE.md). At
-    fixture sizes the cap is not binding, so outputs there are identical
-    either way.
+    growth curve measured 3.2×/doubling before the cap (SCALE.md §Saturation
+    knees). At fixture sizes the cap is not binding, so outputs there are
+    identical either way.
     """
     e = _emb(spark, sf_dir)
     shortlist = _topk(

@@ -310,7 +310,8 @@ def events_gapfill_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics (spine size, observed/filled counts, longest gap run, sum
     of the forward-filled series). Since r14 this is the locf LEG of the
     registered ``events_gapfill_methods`` surface (capacity-policy
-    consolidation); kept public for tests and the SCALE.md growth curves. The hourly metric is integer CENTS
+    consolidation); kept public for tests and for measuring the leg alone
+    (SCALE.md §Growth curves). The hourly metric is integer CENTS
     accumulated at the ROW grain (each event's value rounded to cents
     before any sum) — rounding a floating SUM whose addend order differs
     between engines can flip a .5-cent boundary (observed at sf0.001;

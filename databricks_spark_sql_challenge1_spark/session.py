@@ -30,7 +30,7 @@ def get_spark(app_name: str = "challenge1-engine") -> SparkSession:
         .appName(app_name)
         .config("spark.driver.memory", memory)
         .config("spark.driver.maxResultSize", "4g")
-        # Driver JVM policy (SCALE.md "Session posture"): a cold session's
+        # Driver JVM policy (SCALE.md §Session posture): a cold session's
         # CPU went mostly to HotSpot's JIT threads, which in local mode
         # compete with the task threads for the same cores. One C1 + one
         # C2 compiler thread, and the throughput collector instead of G1's

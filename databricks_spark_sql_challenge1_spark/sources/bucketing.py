@@ -1,6 +1,7 @@
-"""Bucketed-table support — the co-located-join lever SCALE.md names as the
-fix for the one recurring big×big shuffle (lineitem ⋈ orders on the order
-key, queries #3/#5/#6/#12-#14).
+"""Bucketed-table support — the co-located-join lever that
+SCALE.md §Layout and skew levers names as the fix for the one recurring
+big×big shuffle (lineitem ⋈ orders on the order key, queries
+#3/#5/#6/#12-#14).
 
 Writing both facts bucketed by the join key into the same bucket count lets
 Spark plan the join with ZERO Exchange on either side (asserted in

@@ -4,10 +4,14 @@ contract is pinned here on a synthetic sweep detail (no Spark needed)."""
 
 from __future__ import annotations
 
+import inspect
 import json
+from pathlib import Path
 
 import bench
 from databricks_spark_sql_challenge1_spark.session import DEFAULT_CPUS
+
+_ROOT = Path(__file__).resolve().parent.parent
 
 KEYS = [
     "metric",
@@ -40,11 +44,6 @@ def _detail(cpus: int = DEFAULT_CPUS, n_queries: int = 137) -> dict:
         "master": f"local[{cpus}]",
         "default_parallelism": cpus,
         "sink": bench.SINK,
-        "calibration": {
-            "query": bench.CALIBRATION_QUERY,
-            "median_sec": 0.512,
-            "runs": [0.5, 0.51, 0.512, 0.52, 0.53],
-        },
         "protocol": "synthetic",
     }
 
@@ -75,7 +74,8 @@ def test_summary_line_stamps_session_and_calibration():
     out = json.loads(bench.summary_line(detail))
     assert out["master"] == f"local[{DEFAULT_CPUS}]"
     assert out["default_parallelism"] == DEFAULT_CPUS
-    assert out["calibration"] == detail["calibration"]["median_sec"]
+    # no calibration runs: the stamp is the sweep's own cold reading
+    assert out["calibration"] == detail["queries"]["count_distinct_orders"]
     assert out["value"] == detail["value"]
 
 
@@ -86,3 +86,18 @@ def test_summary_line_names_the_detail_file_it_wrote():
     scaled = json.loads(bench.summary_line(_detail(cpus=8)))
     assert scaled["detail_file"] == "BENCH_DETAIL_c8.json"
     assert scaled["master"] == "local[8]"
+
+
+def _clock_reads(src: str) -> int:
+    return src.count("time.perf_counter(") + src.count("time.monotonic(")
+
+
+def test_one_clock_one_cold_run():
+    """Structural guard (no Spark): the clock is read in one place, bench's
+    timed-run helper (start and stop), and ``tools/opt_probe.py`` reads
+    none of its own — a second clock would be a second measurement
+    protocol."""
+    helper = inspect.getsource(bench.timed_run)
+    assert _clock_reads(helper) == 2
+    assert _clock_reads((_ROOT / "bench.py").read_text()) == _clock_reads(helper)
+    assert _clock_reads((_ROOT / "tools" / "opt_probe.py").read_text()) == 0

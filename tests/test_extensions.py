@@ -606,7 +606,7 @@ def test_fixed_band_saturation_guards(spark, monkeypatch):
 
 def test_stride_saturation_guards(spark, monkeypatch):
     """The four stride-parameterized fixture baselines refuse corpora past
-    the measured quadratic knee (SCALE.md r6/r8 curves) and direct the
+    the measured quadratic knee (SCALE.md §Saturation knees) and direct the
     caller to the committed scale configs."""
     import pytest
 

@@ -13,11 +13,7 @@ from pyspark.sql import functions as F
 
 from databricks_spark_sql_challenge1_spark.catalog import load_table
 from databricks_spark_sql_challenge1_spark.operators.abandonment import (
-    top_abandoned_pairs,
     top_abandoned_products,
-)
-from databricks_spark_sql_challenge1_spark.operators.export_denorm import (
-    order_export_denorm,
 )
 from databricks_spark_sql_challenge1_spark.operators.states import nations_by_customer
 from databricks_spark_sql_challenge1_spark.plans.explain import (

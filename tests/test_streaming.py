@@ -382,7 +382,7 @@ def test_streaming_attribution_equals_batch_join(spark):
 
 
 def test_streaming_dedup_under_rocksdb_state_store(spark):
-    """SCALE.md claims the streaming state is RocksDB-backed at scale —
+    """SCALE.md §Streaming claims the streaming state is RocksDB-backed at scale —
     prove the operators actually run (and agree with batch) under the
     RocksDB state store provider OSS Spark bundles."""
     from pyspark.sql import functions as F

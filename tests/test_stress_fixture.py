@@ -1,5 +1,5 @@
 """tools/make_stress_fixture.py builds the decorrelated K× replicas the
-SCALE.md growth curves are measured on — pin its invariants."""
+SCALE.md §Growth curves are measured on — pin its invariants."""
 
 from __future__ import annotations
 

@@ -1,14 +1,16 @@
 """Fresh-JVM cold timing of named queries: each run is a new Python
-process and a new JVM, codegen warmed only by the setup counts, and the
-query run once and collected. Prints each name's median of three cold
-runs.
+process and a new JVM, warmed only by ``bench.warm``, and the query timed
+once by ``bench.timed_run`` — the sweep's own protocol. Prints each name's
+median of three cold runs.
 
 Usage:
   python tools/opt_probe.py cold <name> [...]            # fresh-JVM single COLD run x3, median
   python tools/opt_probe.py _cold1 <name>                # (internal subprocess entry)
 
 Environment: ``SPARK_GRAFT_SF_DIR`` (default sf0.1) and
-``SPARK_GRAFT_CPUS`` (default 32). These timings are a diagnostic; the
+``SPARK_GRAFT_CPUS`` (default ``session.DEFAULT_CPUS``). Pointed at a
+stress replica (``tools/make_stress_fixture.py``), ``cold <name>``
+measures one growth cell. These timings are a diagnostic; the
 benchmark's numbers come from perfbench/ and bench.py.
 """
 
@@ -18,37 +20,25 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _COLD_SUBPROC_RUNS = 3
 
 
-def _setup():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def _cold_one(name: str) -> None:
+    """Subprocess entry: ONE cold timed run in a fresh JVM, after the
+    sweep's session warm-up."""
+    import bench
     from databricks_spark_sql_challenge1_spark.session import get_spark
     import databricks_spark_sql_challenge1_spark.operators  # noqa: F401
-    from databricks_spark_sql_challenge1_spark.catalog import last_order_datetime
-
-    spark = get_spark("challenge1-opt-probe")
-    spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).count()
-    last_order_datetime(spark, sf_dir)
-    return spark, sf_dir
-
-
-def _cold_one(name: str) -> None:
-    """Subprocess entry: ONE cold timed run (collect sink — the driver's) in
-    a fresh JVM, codegen warmed by the setup counts only."""
-    spark, sf_dir = _setup()
     from databricks_spark_sql_challenge1_spark.registry import QUERIES
 
-    fn = QUERIES[name]
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).collect()
-    print(json.dumps({"query": name,
-                      "cold_sec": round(time.perf_counter() - t0, 3)}))
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("challenge1-opt-probe")
+    bench.warm(spark, sf_dir)
+    sec = bench.timed_run(spark, sf_dir, QUERIES[name])
+    print(json.dumps({"query": name, "cold_sec": sec}))
 
 
 def _cold_median(name: str) -> float:
