@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,6 +116,29 @@ def share(df: DataFrame, label: str) -> DataFrame:
         return df.localCheckpoint()
     finally:
         sc.setLocalProperty("spark.job.description", prior)
+
+
+_SCRATCH_BASE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "spark-warehouse"
+)
+
+
+@contextmanager
+def scratch_dir(prefix: str):
+    """A fresh directory under the repo's ``spark-warehouse/``, removed on
+    exit: the one place a query writes files while its frame is built.
+    Write inside the block and ``share`` the smallest frame that still
+    reads the files before it exits; the returned plan then reads no
+    scratch path, and a repeat call cannot overwrite files an earlier
+    frame lists. A process killed inside the block leaves its directory."""
+    import tempfile
+
+    os.makedirs(_SCRATCH_BASE, exist_ok=True)
+    scratch = tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_BASE)
+    try:
+        yield scratch
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
@@ -231,9 +256,9 @@ def _heal_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register each fixture table as a temp view (SURVEY.md §2 S4/S7 analog)."""
-    for t in tables:
+    for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 

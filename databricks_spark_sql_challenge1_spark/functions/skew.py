@@ -15,17 +15,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+SALT_BUCKETS = 16
+
 
 def salted_count_distinct(
-    df: DataFrame, group_cols: list[str], count_col: str, buckets: int = 16
+    df: DataFrame, group_cols: list[str], count_col: str
 ) -> DataFrame:
-    """COUNT(DISTINCT count_col) per group_cols, salted into ``buckets``.
+    """COUNT(DISTINCT count_col) per group_cols, salted into SALT_BUCKETS.
 
-    Stage 1 groups on (group_cols, hash(count_col) % buckets) so every
+    Stage 1 groups on (group_cols, hash(count_col) % SALT_BUCKETS) so every
     bucket of a hot key lands on a different reducer; stage 2 sums the
     disjoint partial counts.
     """
-    salt = (F.hash(F.col(count_col)) % buckets + buckets) % buckets
+    salt = (F.hash(F.col(count_col)) % SALT_BUCKETS + SALT_BUCKETS) % SALT_BUCKETS
     partial = df.groupBy(*group_cols, salt.alias("_salt")).agg(
         F.countDistinct(count_col).alias("_partial")
     )
@@ -34,13 +36,11 @@ def salted_count_distinct(
     )
 
 
-def salted_sum(
-    df: DataFrame, group_cols: list[str], sum_col: str, buckets: int = 16
-) -> DataFrame:
+def salted_sum(df: DataFrame, group_cols: list[str], sum_col: str) -> DataFrame:
     """SUM per group_cols through an explicit two-stage salted aggregation
     (what partial aggregation already does implicitly — exposed for the
     cases where the input is pre-shuffled on a skewed key)."""
-    salt = F.floor(F.rand(seed=42) * buckets)
+    salt = F.floor(F.rand(seed=42) * SALT_BUCKETS)
     partial = df.groupBy(*group_cols, salt.alias("_salt")).agg(
         F.sum(sum_col).alias("_partial")
     )

@@ -43,9 +43,7 @@ from databricks_spark_sql_challenge1_spark.registry import query
 CC_MAX_ROUNDS = 20
 
 
-def connected_components(
-    nodes: DataFrame, pairs: DataFrame, max_rounds: int = CC_MAX_ROUNDS
-) -> DataFrame:
+def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Generic distributed connected components.
 
     ``nodes``: one column of integer node ids (first column used);
@@ -83,7 +81,7 @@ def connected_components(
         "cc.labels0",
     )
     prev_sum = labels.agg(F.sum("cluster_id")).first()[0]
-    for _ in range(max_rounds):
+    for _ in range(CC_MAX_ROUNDS):
         # round part 1: every node adopts min(own label, neighbors' labels).
         # Round-18 optimization (guide §2.4 — share/remove exchanges): the
         # former nbr-aggregate + left-join-least shape was three shuffles,
@@ -339,9 +337,7 @@ PAGERANK_ITERS = 5
 PAGERANK_DAMPING = 0.85
 
 
-def pagerank(
-    edges: DataFrame, iters: int = PAGERANK_ITERS, damping: float = PAGERANK_DAMPING
-) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """Generic fixed-iteration synchronous PageRank over a directed edge
     list (first two columns = src, dst; duplicate edges count as parallel
     edges). Node set = every id appearing at either edge end; dangling
@@ -375,15 +371,15 @@ def pagerank(
         # (r15 empty-warehouse probe)
         return nodes.select("id", F.lit(0.0).alias("r"))
     ranks = nodes.select("id", F.lit(1.0 / n).alias("r"))
-    base = (1.0 - damping) / n
+    base = (1.0 - PAGERANK_DAMPING) / n
     # Round-18 optimization: a per-iteration share (an eager job +
     # materialization per round) is unnecessary for a FIXED, small
     # iteration count — each `ranks` is referenced exactly once by the next
     # round, so the chain is linear (no re-evaluation blow-up) and the
     # whole loop now executes as one job over PAGERANK_ITERS tiny stages.
     # The inputs that ARE re-read every round (`ew`, `nodes`) keep their
-    # materialization above; plan depth is bounded by the constant `iters`.
-    for _ in range(iters):
+    # materialization above; plan depth is bounded by PAGERANK_ITERS.
+    for _ in range(PAGERANK_ITERS):
         contrib = (
             ew.join(ranks, ew["src"] == ranks["id"])
             .groupBy(F.col("dst").alias("id"))
@@ -393,7 +389,7 @@ def pagerank(
             "id",
             (
                 F.lit(base)
-                + F.lit(damping) * F.coalesce(F.col("m"), F.lit(0.0))
+                + F.lit(PAGERANK_DAMPING) * F.coalesce(F.col("m"), F.lit(0.0))
             ).alias("r"),
         )
     return ranks

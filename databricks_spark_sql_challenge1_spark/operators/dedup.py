@@ -515,10 +515,11 @@ def _guard_fixed_band_corpus(n: int, knee: int, name: str, adaptive: str) -> Non
         raise ValueError(
             f"{name}: corpus size {n} exceeds the measured band-saturation "
             f"knee ({knee}) of this fixed-band baseline — candidate volume "
-            f"goes quadratic past it (SCALE.md). Use {adaptive}, whose "
-            "band space adapts to corpus size and is measured flat 1x-16x "
-            f"(not auto-delegated: {adaptive}'s signature width differs, "
-            "so its hamming values are a different exact relation)."
+            "goes quadratic past it (SCALE.md §Saturation knees). Use "
+            f"{adaptive}, whose band space adapts to corpus size and is "
+            f"measured flat 1x-16x (not auto-delegated: {adaptive}'s "
+            "signature width differs, so its hamming values are a "
+            "different exact relation)."
         )
 
 

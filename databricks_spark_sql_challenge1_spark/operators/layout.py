@@ -29,10 +29,16 @@ driver-hashable.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from databricks_spark_sql_challenge1_spark.catalog import load_table
+from databricks_spark_sql_challenge1_spark.catalog import (
+    load_table,
+    scratch_dir,
+    share,
+)
 from databricks_spark_sql_challenge1_spark.registry import query
 
 Z_BITS = 7  # each dimension quantized to 0..127
@@ -243,26 +249,6 @@ def zorder_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _prune_audit(spark, files, base)
 
 
-# In-process state for zorder_range_writer's output dirs (ADVICE r14):
-# a monotonic call counter keeps every call's dir distinct, and the atexit
-# hook reaps ONLY this process's dirs at exit — cross-process leftovers
-# (crash before atexit) are handled by the on-entry dead-pid reaper.
-_WRITER_SEQ = [0]
-_WRITER_DIRS: list[str] = []
-
-
-def _reap_own_writer_dirs() -> None:
-    import shutil
-
-    for d in _WRITER_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-import atexit as _atexit  # noqa: E402
-
-_atexit.register(_reap_own_writer_dirs)
-
-
 @query("zorder_range_writer")  # rows-only: see docstring
 def zorder_range_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION Z-order writer the audit above stands in for:
@@ -290,93 +276,35 @@ def zorder_range_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     every other registered query the call itself executes one range
     shuffle + parquet write before the returned audit DataFrame is even
     planned (plan-only consumers like tests/test_plans.py pay that cost
-    once per call). The per-(pid, call-seq) output dir keeps concurrent
-    callers AND repeat same-process calls from racing on overwrite
-    (ADVICE r14: an overwrite would invalidate a previously returned lazy
-    DataFrame mid-read) — every DataFrame this function ever returned
-    stays readable until the process exits (atexit reaps our own dirs);
-    dirs left by exited pids are reaped on entry.
+    once per call). The write lands in a ``catalog.scratch_dir`` and the
+    N_FILES-row zone-map table is shared before the directory goes, so the
+    returned audit reads no written file and a repeat call cannot
+    invalidate an earlier result.
     """
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     orders = load_table(spark, sf_dir, "orders")
     keyed = orders.select(
         "o_orderkey",
         F.expr(_X_SQL).cast("bigint").alias("x"),
         F.expr(_Y_SQL).cast("bigint").alias("y"),
     ).withColumn("z", F.expr(_bit_interleave("x", "y", "div")))
-    # Per-(pid, call-seq, sf) path: the pid suffix isolates concurrent
-    # callers (two processes overwriting one dir would corrupt it); the
-    # monotonic call-seq suffix isolates REPEAT same-process calls, so
-    # every returned (lazy) DataFrame keeps reading valid files until the
-    # process exits — our own dirs are reaped by the atexit hook below.
-    # Reap siblings left by pids that no longer exist so repeated
-    # bench/pytest/plan runs don't grow /tmp monotonically across rounds.
-    tmp = tempfile.gettempdir()
-    prefix = "zorder_range_writer_"
-    for entry in os.listdir(tmp):
-        if not entry.startswith(prefix):
-            continue
-        pid_part = entry[len(prefix):].split("_", 1)[0]
-        # isdecimal, not isdigit: superscript digits pass isdigit() but
-        # make int() raise — a crafted entry in world-writable /tmp must
-        # not crash the reaper (and every caller with it)
-        if not pid_part.isdecimal():
-            continue
-        pid = int(pid_part)
-        if pid == os.getpid():
-            continue
-        # Age backstop (ADVICE r14): a dead owner's pid can be REUSED by a
-        # live unrelated process, making the liveness probe below leak the
-        # dir forever. No caller's dir legitimately outlives a week (bench/
-        # pytest runs are minutes), so reap on age regardless of pid state.
-        try:
-            age_s = _time.time() - os.stat(os.path.join(tmp, entry)).st_mtime
-        except OSError:
-            continue  # raced with another reaper — gone already
-        if age_s > 7 * 86400:
-            shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
-            continue
-        if pid <= 1:
-            # os.kill(0, 0) signals our OWN process group and always
-            # succeeds, and pid 1 is init — neither can be a caller, so
-            # such an entry would otherwise sit unreapable forever
-            shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
-            continue
-        try:
-            os.kill(pid, 0)
-        except (ProcessLookupError, OverflowError):
-            # dead pid, or a decimal string too large to BE a pid: either
-            # way the dir is not a live caller's, reap it
-            shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
-        except PermissionError:
-            pass  # live pid owned by someone else — leave its dir alone
-    _WRITER_SEQ[0] += 1
-    out_dir = os.path.join(
-        tmp,
-        f"{prefix}{os.getpid()}_{_WRITER_SEQ[0]}"
-        f"_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    _WRITER_DIRS.append(out_dir)
-    (
-        keyed.repartitionByRange(N_FILES, "z")
-        .sortWithinPartitions("z")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    back = spark.read.parquet(out_dir).select(
-        F.input_file_name().alias("file_id"), "x", "y"
-    )
-    files = back.groupBy("file_id").agg(
-        F.min("x").alias("min_x"),
-        F.max("x").alias("max_x"),
-        F.min("y").alias("min_y"),
-        F.max("y").alias("max_y"),
-        F.count(F.lit(1)).alias("n_rows"),
-    ).withColumn("layout", F.lit("zorder_range"))
+    with scratch_dir("zorder_range_") as scratch:
+        out_dir = os.path.join(scratch, "orders")
+        (
+            keyed.repartitionByRange(N_FILES, "z")
+            .sortWithinPartitions("z")
+            .write.parquet(out_dir)
+        )
+        back = spark.read.parquet(out_dir).select(
+            F.input_file_name().alias("file_id"), "x", "y"
+        )
+        zone_maps = back.groupBy("file_id").agg(
+            F.min("x").alias("min_x"),
+            F.max("x").alias("max_x"),
+            F.min("y").alias("min_y"),
+            F.max("y").alias("max_y"),
+            F.count(F.lit(1)).alias("n_rows"),
+        ).withColumn("layout", F.lit("zorder_range"))
+        files = share(zone_maps, "zorder_range_files")
     # Fixed (layouts x predicates) row contract (the docstring's claim the
     # driver's rows-only count rides on): preserve a predicate even when no
     # file overlaps or no row matches it, with zero counts.

@@ -138,19 +138,19 @@ def _topk_sql(source: str, keys: str, order: str, k: int, drop: str = "rk") -> s
 ) WHERE rk <= {k}"""
 
 
-def _neighbors(scored: DataFrame, score, k: int = TOP_K) -> DataFrame:
-    """(query_id, neighbor_id, …) → each query's ``k`` best neighbours
+def _neighbors(scored: DataFrame, score) -> DataFrame:
+    """(query_id, neighbor_id, …) → each query's TOP_K best neighbours
     under ``score`` (a sort column) with a neighbor-id tiebreak, sorted
     for output."""
     order = [score, F.col("neighbor_id").asc()]
-    return _topk(scored, ["query_id"], order, k).orderBy(
+    return _topk(scored, ["query_id"], order, TOP_K).orderBy(
         F.col("query_id").asc(), *order
     )
 
 
-def _neighbors_sql(source: str, score: str, k: int = TOP_K) -> str:
+def _neighbors_sql(source: str, score: str) -> str:
     order = f"{score}, neighbor_id ASC"
-    return f"{_topk_sql(source, 'query_id', order, k)}\nORDER BY query_id ASC, {order}"
+    return f"{_topk_sql(source, 'query_id', order, TOP_K)}\nORDER BY query_id ASC, {order}"
 
 
 # Assignment metrics, rounded so float drift cannot flip a rank: cosine is

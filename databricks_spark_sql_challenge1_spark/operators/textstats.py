@@ -1311,7 +1311,7 @@ def _bpe_merge_round_ctes(r: int, prefix: str, carry_freq: bool) -> list:
     ]
 
 
-def _bpe_cte_chain(rounds: int = BPE_ROUNDS) -> list:
+def _bpe_cte_chain() -> list:
     """The trainer's CTE chain (words → syms0 → per-round adj/best/grp/
     mrg/syms), shared by the merge-table oracle and the encoder oracle
     (which consumes the best{r} argmax CTEs to replay the merges)."""
@@ -1332,7 +1332,7 @@ def _bpe_cte_chain(rounds: int = BPE_ROUNDS) -> list:
          AS t(i)
 )""",
     ]
-    for r in range(rounds):
+    for r in range(BPE_ROUNDS):
         adj, grp, mrg, nxt = _bpe_merge_round_ctes(r, "", carry_freq=True)
         ctes.append(adj)
         ctes.append(f"""best{r} AS MATERIALIZED (
@@ -1346,14 +1346,14 @@ def _bpe_cte_chain(rounds: int = BPE_ROUNDS) -> list:
     return ctes
 
 
-def _bpe_oracle_sql(rounds: int = BPE_ROUNDS) -> str:
+def _bpe_oracle_sql() -> str:
     union = "\nUNION ALL\n".join(
         f"SELECT CAST({r + 1} AS BIGINT) AS merge_round, lsym AS left_sym, "
         f"rsym AS right_sym, lsym || rsym AS merged, pair_freq FROM best{r}"
-        for r in range(rounds)
+        for r in range(BPE_ROUNDS)
     )
     return (
-        "WITH " + ",\n".join(_bpe_cte_chain(rounds)) + "\n" + f"""SELECT merge_round, left_sym, right_sym, merged, pair_freq
+        "WITH " + ",\n".join(_bpe_cte_chain()) + "\n" + f"""SELECT merge_round, left_sym, right_sym, merged, pair_freq
 FROM ({union})
 ORDER BY merge_round ASC
 """
@@ -1455,11 +1455,11 @@ def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_TOKEN_WEIGHT_SQL = "100 * length(sym) + ascii(sym)"
 
 
-def _bpe_encode_oracle_sql(rounds: int = BPE_ROUNDS) -> str:
+def _bpe_encode_oracle_sql() -> str:
     """Encoder oracle: replay the trainer's merge sequence (the best{r}
     argmax CTEs from _bpe_cte_chain) over the FULL corpus vocabulary, then
     join per-word token stats back to per-occurrence rows."""
-    ctes = _bpe_cte_chain(rounds)
+    ctes = _bpe_cte_chain()
     ctes.append(f"""dwords AS MATERIALIZED (
     SELECT doc_id, w AS word
     FROM (SELECT doc_id, unnest({ws_tokens_sql()}) AS w FROM documents)
@@ -1471,12 +1471,12 @@ def _bpe_encode_oracle_sql(rounds: int = BPE_ROUNDS) -> str:
     FROM vocab, unnest(generate_series(1, CAST(length(word) AS INTEGER)))
          AS t(i)
 )""")
-    for r in range(rounds):
+    for r in range(BPE_ROUNDS):
         ctes.extend(_bpe_merge_round_ctes(r, "v", carry_freq=False))
     ctes.append(f"""wstats AS MATERIALIZED (
     SELECT word, CAST(COUNT(*) AS BIGINT) AS n_toks,
            CAST(SUM({BPE_TOKEN_WEIGHT_SQL}) AS BIGINT) AS wsum
-    FROM vsyms{rounds} GROUP BY word
+    FROM vsyms{BPE_ROUNDS} GROUP BY word
 )""")
     return (
         "WITH " + ",\n".join(ctes) + "\n" + """SELECT d.doc_id,

@@ -84,6 +84,10 @@ def fill_doc(fn, **values) -> None:
 # first). The one portable-hash toolkit (functions/hashing.py) moved no
 # name: every registered name keeps its normalized optimized plan and its
 # oracle rows, so it heads nothing.
+#   S. the 2 oracle-backed round trips whose export now lands in a
+#      catalog.scratch_dir and whose one-row checksum is shared
+#      (jsonl_roundtrip_checksum, orc_roundtrip_checksum); the third writer,
+#      zorder_range_writer, is rows-only and rides on its stand-in.
 #   T. the 2 names whose plan changed with the one text toolkit
 #      (functions/text.py): docs_dsir_weights (bigram now array_join(slice))
 #      and docs_substring_dedup (token array renamed ``tokens``).
@@ -109,8 +113,8 @@ def fill_doc(fn, **values) -> None:
 #      for; one memory-sink drain, one scratch dir).
 #   4. the 9 names changed in r18/r19 whose post-change rows never landed
 #      (ROADMAP carry-over, VERDICT r19 #1).
-#   5. the oldest evidence: 2 of the remaining latest-r16 names (heads
-#      added this round displaced dedup_semantic_ivf,
+#   5. no slot is left for the oldest evidence: heads added this round
+#      displaced corpus_bpe_encode, corpus_bpe_merges, dedup_semantic_ivf,
 #      distinct_orders_kmv_rollup, docs_bm25_topk, docs_contamination_bloom,
 #      cube_order_summary, customer_rfm_segments_approx,
 #      customer_value_deciles, dashboard_day_assembly,
@@ -120,6 +124,9 @@ def fill_doc(fn, **values) -> None:
 # window, so the age gate stays red until CORRECTNESS_r20.json lands; the
 # rest go in NEXT_WINDOW, oldest first, as far as its 50 rows reach.
 DRIVER_PRIORITY: tuple[str, ...] = (
+    # S: changed this round (one scratch-dir policy for queries that write)
+    "jsonl_roundtrip_checksum",
+    "orc_roundtrip_checksum",
     # T: changed this round (one text toolkit in functions/text.py)
     "docs_dsir_weights",
     "docs_substring_dedup",
@@ -174,9 +181,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "events_gapfill_methods",
     "order_export_denorm",
     "text_simhash",
-    # 5: latest-r16 evidence
-    "corpus_bpe_encode",
-    "corpus_bpe_merges",
     # --- window boundary: 50 names above (tests/test_registry_order.py) ---
 )
 
@@ -220,6 +224,8 @@ ROWS_ONLY_STAND_INS: dict[str, str] = {
 # those nine until a window takes them.
 NEXT_WINDOW: tuple[str, ...] = (
     # latest-r16 evidence
+    "corpus_bpe_encode",
+    "corpus_bpe_merges",
     "corpus_mixture_weights",
     "corpus_privacy_pipeline",
     "cube_order_summary",
@@ -250,9 +256,7 @@ NEXT_WINDOW: tuple[str, ...] = (
     "events_time_rollup",
     "events_tumbling_1h",
     "events_type_transitions",
-    "jsonl_roundtrip_checksum",
     "multimodal_frame_stats",
-    "orc_roundtrip_checksum",
     "orders_dq_audit",
     "retrieval_hybrid_rrf",
     "text_entropy",

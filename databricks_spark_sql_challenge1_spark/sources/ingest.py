@@ -8,7 +8,6 @@ Delta is a config swap when delta-spark is on the classpath).
 
 from __future__ import annotations
 
-import tempfile
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,17 +29,18 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_zipped_parquet(spark: SparkSession, zip_path: str, work_dir: str | None = None) -> DataFrame:
-    """S3 (ref ``py:25-30``): driver-local unzip → distributed parquet scan.
+def read_zipped_parquet(spark: SparkSession, zip_path: str, work_dir: str) -> DataFrame:
+    """S3 (ref ``py:25-30``): driver-local unzip into ``work_dir`` →
+    distributed parquet scan. The caller owns ``work_dir``, which must
+    outlive every read of the returned frame.
 
     The unzip is inherently driver-side (no Spark zip codec); at scale the
     right move is unzipping once into object storage, not per-query — the
     reference does the same (ingest once, then Delta tables).
     """
-    out = work_dir or tempfile.mkdtemp(prefix="unzipped_parquet_")
     with zipfile.ZipFile(zip_path) as zf:
-        zf.extractall(out)
-    return spark.read.parquet(out)
+        zf.extractall(work_dir)
+    return spark.read.parquet(work_dir)
 
 
 def create_database(spark: SparkSession, name: str) -> None:

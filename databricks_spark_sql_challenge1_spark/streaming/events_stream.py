@@ -22,11 +22,7 @@ on every platform, while its Spark-4 successor's state server needs the
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,24 +36,6 @@ from databricks_spark_sql_challenge1_spark.catalog import (
 from databricks_spark_sql_challenge1_spark.functions.cents import sum_value
 from databricks_spark_sql_challenge1_spark.functions.text import ws_tokens
 from databricks_spark_sql_challenge1_spark.registry import query
-
-_SCRATCH_BASE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "spark-warehouse",
-)
-
-
-@contextmanager
-def scratch_dir(prefix: str):
-    """A fresh directory under the repo's ``spark-warehouse/``, removed on
-    exit — anything read lazily from it must be materialized inside the
-    ``with`` block."""
-    os.makedirs(_SCRATCH_BASE, exist_ok=True)
-    scratch = tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_BASE)
-    try:
-        yield scratch
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

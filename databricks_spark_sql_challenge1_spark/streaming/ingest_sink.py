@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from databricks_spark_sql_challenge1_spark.catalog import (
     ensure_session_confs,
     load_table,
+    scratch_dir,
     share,
 )
 from databricks_spark_sql_challenge1_spark.functions.cents import cents
@@ -28,7 +29,6 @@ from databricks_spark_sql_challenge1_spark.registry import query
 from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
     _drain_to_memory,
     _events_stream,
-    scratch_dir,
 )
 
 
@@ -36,21 +36,12 @@ def ingest_events_idempotent(
     spark: SparkSession, sf_dir: str, sink_dir: str, checkpoint_dir: str
 ) -> int:
     """Drain the events stream into ``sink_dir`` exactly once per event_id,
-    surviving batch replay. Returns the number of rows landed.
+    surviving batch replay, through ``make_landing``. Returns the number of
+    rows landed.
     """
-
-    def land(batch: DataFrame, batch_id: int) -> None:
-        out = batch
-        if os.path.isdir(sink_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(sink_dir)
-        ):
-            landed = batch.sparkSession.read.parquet(sink_dir).select("event_id")
-            out = batch.join(landed, "event_id", "left_anti")
-        out.write.mode("append").parquet(sink_dir)
-
     q = (
         _events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(land)
+        .writeStream.foreachBatch(make_landing(sink_dir))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

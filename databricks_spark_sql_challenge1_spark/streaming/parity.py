@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from databricks_spark_sql_challenge1_spark.catalog import (
     ensure_session_confs,
     load_table,
+    scratch_dir,
     share,
 )
 from databricks_spark_sql_challenge1_spark.functions.cents import (
@@ -55,7 +56,6 @@ from databricks_spark_sql_challenge1_spark.streaming.events_stream import (
     _click_attribution,
     _drain_to_memory,
     _events_stream,
-    scratch_dir,
     streaming_dedup_events,
     streaming_gap_monitor,
     streaming_incremental_dedup,

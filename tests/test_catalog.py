@@ -14,6 +14,7 @@ import ast
 import datetime as dt
 import os
 import pathlib
+import re
 
 from pyspark.sql import functions as F
 
@@ -203,6 +204,30 @@ def test_one_shared_frame():
     duplicated = sorted({lb for lb in labels if labels.count(lb) > 1})
     assert not duplicated, f"labels used by more than one share call: {duplicated}"
     assert len(labels) >= 30
+
+
+def test_one_scratch_dir():
+    """Structural guard (no Spark): the package makes a scratch directory
+    one way. ``tempfile``, ``mkdtemp``, ``gettempdir`` and ``atexit``
+    appear only inside ``catalog.scratch_dir``, so no writer keeps its own
+    temp path, module-level cleanup state or exit hook."""
+    home = pathlib.Path(catalog.__file__)
+    src = home.read_text()
+    (fn,) = [
+        node
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef) and node.name == "scratch_dir"
+    ]
+    inside = set(range(fn.lineno, fn.end_lineno + 1))
+    word = re.compile(r"\b(?:tempfile|mkdtemp|gettempdir|atexit)\b")
+    stray = [
+        f"{path.relative_to(home.parent)}:{n}"
+        for path in sorted(home.parent.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if word.search(line) and not (path == home and n in inside)
+    ]
+    assert not stray, f"temp paths outside catalog.scratch_dir: {stray}"
+    assert word.search(ast.get_source_segment(src, fn))
 
 
 def test_unchanged_layout_loads_without_jobs(spark, tmp_path):

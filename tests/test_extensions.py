@@ -3,6 +3,11 @@ against their exact counterparts."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
+import pytest
+
 from databricks_spark_sql_challenge1_spark.operators.abandonment import (
     top_abandoned_products,
 )
@@ -1282,24 +1287,47 @@ def test_zorder_range_writer_keeps_zero_match_predicates(spark, monkeypatch):
     assert ghost.match_rows == 0
 
 
-def test_zorder_range_writer_earlier_result_survives_next_call(spark):
-    """ADVICE r14: a second same-process call must NOT invalidate the
-    DataFrame returned by the first (the old per-pid dir was overwritten
-    in place; now each call writes a per-(pid, call-seq) dir that lives
-    until process exit). Both results must stay independently collectable
-    AFTER the later call ran."""
-    from databricks_spark_sql_challenge1_spark.operators.layout import (
-        zorder_range_writer,
-    )
-    from tests.conftest import SF_DIR
+@pytest.mark.parametrize(
+    "writer",
+    ["zorder_range_writer", "jsonl_roundtrip_checksum", "orc_roundtrip_checksum"],
+)
+def test_zorder_range_writer_earlier_result_survives_next_call(
+    spark, writer, tmp_path, monkeypatch
+):
+    """Every registered query that writes files while its frame is built
+    (catalog.scratch_dir + share): a second call must NOT invalidate the
+    frame the first call returned — an overwrite in place would delete the
+    part files the first frame listed — and the calls leave no entry
+    behind under ``spark-warehouse/`` or the temp dir. The temp dir is a
+    private one for this test, so another process writing to /tmp cannot
+    fail it. Both results are collected AFTER the later call ran."""
+    import databricks_spark_sql_challenge1_spark.operators  # noqa: F401
+    from databricks_spark_sql_challenge1_spark import catalog
+    from databricks_spark_sql_challenge1_spark.registry import QUERIES
 
-    first = zorder_range_writer(spark, SF_DIR)
-    second = zorder_range_writer(spark, SF_DIR)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def entries() -> set[str]:
+        dirs = (catalog._SCRATCH_BASE, tempfile.gettempdir())
+        return {
+            os.path.join(d, e) for d in dirs if os.path.isdir(d) for e in os.listdir(d)
+        }
+
+    before = entries()
+    first = QUERIES[writer](spark, SF_DIR)
+    second = QUERIES[writer](spark, SF_DIR)
     second_rows = sorted(map(tuple, second.collect()))
-    # the first result is collected LAST — with the old overwrite-in-place
-    # layout this read deleted/replaced files
+    # the first result is collected LAST: with an overwrite-in-place
+    # layout this read would hit deleted or replaced files
     first_rows = sorted(map(tuple, first.collect()))
-    assert [r[:2] for r in first_rows] == [r[:2] for r in second_rows]
+    assert entries() <= before
+    if writer == "zorder_range_writer":
+        # files_scanned comes from a sampled range split, so only the
+        # (layout, predicate) keys are compared
+        first_rows, second_rows = (
+            [r[:2] for r in rows] for rows in (first_rows, second_rows)
+        )
+    assert first_rows == second_rows
 
 
 def test_gapfill_methods_covers_both_legs(spark):

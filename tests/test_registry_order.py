@@ -25,6 +25,10 @@ DRIVER_WINDOW = 50
 # was accidentally left out of the window). Update this literal whenever
 # a query is added or its output/oracle changes.
 MUST_VERIFY = {
+    # changed round 20: the export lands in a catalog.scratch_dir and the
+    # one-row checksum is shared before the directory goes
+    "jsonl_roundtrip_checksum",
+    "orc_roundtrip_checksum",
     # changed round 20 by the one text toolkit in functions/text.py (the
     # DSIR bigram builder, the substring-dedup token array's name)
     "docs_dsir_weights",

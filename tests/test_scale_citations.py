@@ -1,5 +1,7 @@
-"""Every ``SCALE.md §<section>`` citation in the package, the tests and the
-tools names a heading SCALE.md still has, and no citation points into a
+"""Every ``SCALE.md`` citation in the package, the tests and the tools
+names a section (``SCALE.md §<section>``) that SCALE.md still has as a
+heading — a bare ``SCALE.md`` points at a whole file of posture sections,
+so it leaves the reader to guess — and no citation points into a
 round-by-round addendum — those were folded into the posture sections, so
 a citation to one resolves to nothing (no Spark needed)."""
 
@@ -47,8 +49,7 @@ def test_section_citations_name_a_heading():
     cited = 0
     for name, after in _citations():
         section = re.match(r"\s*§\s*", after)
-        if not section:
-            continue
+        assert section, f"{name}: 'SCALE.md{after[:40]}' names no § section"
         cited += 1
         rest = after[section.end():]
         assert any(
